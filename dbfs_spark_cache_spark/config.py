@@ -85,7 +85,7 @@ class Settings:
         # Catalog-case drift guard: Spark stores unquoted catalog
         # identifiers lowercased (the managed-table dir is literally
         # <lower(db)>.db in the warehouse), while this name is ALSO
-        # interpolated into filesystem paths (_table_location, the
+        # interpolated into filesystem paths (layout.table_location, the
         # management sweeps) and plan-text regexes (fingerprint, tiering).
         # A mixed-case setting would split those three views: the catalog
         # works (identifiers are case-insensitive) but the path fallback

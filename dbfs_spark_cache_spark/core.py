@@ -19,14 +19,15 @@ from __future__ import annotations
 import hashlib
 import logging
 from datetime import datetime
-from typing import Any, List, Mapping, Optional, Tuple, Union
+from typing import Any, Callable, List, Mapping, NamedTuple, Optional, Tuple, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from . import fs
+from . import fs, layout
 from .config import config
 from .hashing import hash_input_data
+from .layout import table_name_for_hash
 from .plans.fingerprint import (
     INPUT_LISTING_FAILED_KEY,
     SCHEMA_CHANGED_KEY,
@@ -34,6 +35,7 @@ from .plans.fingerprint import (
     find_plain_udfs,
     input_dir_mod_datetime,
     plan_is_uncacheable,
+    pure_scan_entry,
     resolve_table_hash,
     table_cache_info,
 )
@@ -103,10 +105,6 @@ def exc_summary(exc: BaseException, width: int = 120) -> str:
     return (str(exc).splitlines() or [""])[0][:width]
 
 
-def table_name_for_hash(hash_name: str) -> str:
-    return f"{config.CACHE_DATABASE}.{hash_name}"
-
-
 def ensure_cache_database(spark: SparkSession) -> None:
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {config.CACHE_DATABASE}")
 
@@ -128,16 +126,9 @@ def _is_format_missing(exc: Exception) -> bool:
     return "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find data source" in msg
 
 
-def _table_location(spark: SparkSession, hash_name: str) -> str:
-    """Managed-table location for a cache entry (warehouse/<db>.db/<hash>)."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    return f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db/{hash_name}"
-
-
 def _save_as_cache_table(
     df: DataFrame,
     table: str,
-    hash_name: str,
     partition_by: Optional[List[str]] = None,
     bucket_by: Optional[List[str]] = None,
     n_buckets: int = 16,
@@ -155,18 +146,9 @@ def _save_as_cache_table(
     — this is that pre-computation fused into the cache write). Bucketing
     metadata lives in the catalog; the path-read fallback still returns
     correct rows but loses the shuffle elimination.
-
-    Durability note: with Spark's default in-memory catalog the table entry
-    dies with the session while its files survive in the warehouse. A stale
-    location from a previous session would block ``saveAsTable``, so it is
-    cleared first; reads fall back to the path (see ``_read_cache_table``).
     """
-    spark = df.sparkSession
-    ensure_cache_database(spark)
-    if not _table_exists(spark, table):
-        location = _table_location(spark, hash_name)
-        if fs.exists(location):
-            fs.remove(location)
+    ensure_cache_database(df.sparkSession)
+
     def build_writer(fmt: str):
         writer = df.write.mode("overwrite")
         if fmt:
@@ -216,45 +198,14 @@ def _marks_success_jobs(spark: SparkSession) -> bool:
         return True
 
 
-# Sidecar recording the WRITER session's committer marker discipline
-# (ADVICE r15 #4): _SUCCESS presence is a property of the session that
-# WROTE a cache directory, not of the one reading it. Gating the torn-
-# write guard on the READER's conf is wrong in both mixed quadrants — a
-# marksuccessfuljobs=false reader skipped the guard for marker-written
-# dirs (reopening the cross-process partial-read window), and a
-# marker-writing reader required _SUCCESS from markerless-written dirs
-# (one full rewrite per session instead of a hit). The writer records its
-# discipline next to the metadata sidecar at write time; readers prefer
-# the recorded value and fall back to their own conf for pre-recording
-# entries (the old behavior, both asymmetries documented above).
-_COMMITTER_SIDECAR = "writer_committer.txt"
-
-
-def _default_sidecar_dir(hash_name: str) -> str:
-    """Where an entry's sidecars live under the DEFAULT cache base. Write
-    paths derive sidecar locations from the entry's actual metadata path
-    (which honors a custom ``cache_path``); read probes that know that
-    path pass its directory along (r17 — ADVICE r16 #4 closed the
-    write-beside-custom-base / read-from-default-base asymmetry that left
-    both r15/r16 guards silently inactive for custom-path entries)."""
-    base = config.SPARK_CACHE_DIR
-    if not base.endswith("/"):
-        base += "/"
-    return f"{base}{hash_name}"
-
-
-def _committer_sidecar_path(
-    hash_name: str, sidecar_dir: Optional[str] = None
-) -> str:
-    base = (sidecar_dir or _default_sidecar_dir(hash_name)).rstrip("/")
-    return f"{base}/{_COMMITTER_SIDECAR}"
-
-
-def _record_writer_committer(spark: SparkSession, metadata_path: str) -> None:
-    """Record this (writer) session's marker discipline beside the entry's
-    metadata sidecar. Advisory: a failure degrades readers to their own
-    conf (the pre-recording behavior), so it must never fail the write."""
-    sidecar = f"{metadata_path.rsplit('/', 1)[0]}/{_COMMITTER_SIDECAR}"
+def _record_writer_committer(spark: SparkSession, sidecars: str) -> None:
+    """Record this (writer) session's marker discipline in the entry's
+    committer sidecar: _SUCCESS presence is a property of the session that
+    WROTE a cache directory, not of the one reading it, so readers gate
+    their torn-write guard on this record (see ``_writer_marks_success``).
+    Advisory: a failure degrades readers to their own conf, so it must
+    never fail the write."""
+    sidecar = layout.committer_path(sidecars)
     flag = "true" if _marks_success_jobs(spark) else "false"
     try:
         fs.write_text(sidecar, f"marks_success_jobs={flag}")
@@ -266,29 +217,22 @@ def _record_writer_committer(spark: SparkSession, metadata_path: str) -> None:
         )
 
 
-# Data-file inventory recorded at write time (r16 corrupt-committed-data
-# lens): parquet corruption that destroys a footer fails reads LOUDLY,
-# but a part file deleted AFTER commit (partial restore, copy-tool loss,
-# bit-rot quarantine) leaves a directory that scans cleanly and silently
-# serves FEWER rows as a valid hit — the worst read-side failure mode.
-# The writer records how many data files (and bytes) the committed entry
-# holds; readers refuse to serve an entry whose live listing disagrees
-# (miss -> recompute heals and re-records). Transactional formats skip
-# both halves — their commit log is the inventory.
-_INVENTORY_SIDECAR = "data_inventory.txt"
-
-
 def _record_data_inventory(
-    spark: SparkSession, hash_name: str, metadata_path: str
+    spark: SparkSession, hash_name: str, sidecars: str
 ) -> None:
-    """Record the committed entry's data-file inventory beside its
-    metadata sidecar. Advisory like the committer record: on failure,
-    readers simply skip the inventory check for this entry."""
-    sidecar = f"{metadata_path.rsplit('/', 1)[0]}/{_INVENTORY_SIDECAR}"
+    """Record the committed entry's data-file inventory in its inventory
+    sidecar. Parquet corruption that destroys a footer fails reads loudly,
+    but a part file deleted AFTER commit leaves a directory that scans
+    cleanly and serves FEWER rows as a valid hit; readers refuse an entry
+    whose live listing disagrees with this record (miss -> recompute heals
+    and re-records). Transactional formats skip it — their commit log is
+    the inventory. Advisory like the committer record: on failure, readers
+    simply skip the inventory check for this entry."""
+    sidecar = layout.inventory_path(sidecars)
     try:
-        location = _table_location(spark, hash_name)
-        if fs.exists(f"{location.rstrip('/')}/_delta_log"):
-            return  # transactional: the commit log validates itself
+        location = layout.table_location(spark, hash_name)
+        if layout.is_transactional(location):
+            return
         fs.write_text(
             sidecar, fs.render_inventory(*fs.data_file_inventory(location))
         )
@@ -300,30 +244,13 @@ def _record_data_inventory(
         )
 
 
-def _inventory_sidecar_path(
-    hash_name: str, sidecar_dir: Optional[str] = None
-) -> str:
-    base = (sidecar_dir or _default_sidecar_dir(hash_name)).rstrip("/")
-    return f"{base}/{_INVENTORY_SIDECAR}"
-
-
-# Shared "corrupt committed data" definition (read path + management
-# scans): see fs.inventory_matches.
-check_data_inventory = fs.inventory_matches
-
-
 def _writer_marks_success(
-    spark: SparkSession, hash_name: str, sidecar_dir: Optional[str] = None
+    spark: SparkSession, sidecars: str
 ) -> bool:
-    """Marker discipline governing ``hash_name``'s cache directory: the
+    """Marker discipline governing an entry's cache directory: the
     recorded WRITER value when present, else this reader's own conf
-    (pre-recording entries only). ``sidecar_dir`` is the entry's actual
-    sidecar directory — readers that resolved a custom ``cache_path``
-    metadata path pass its directory so custom-base entries read the
-    very sidecars their writer recorded (r17; previously this probe
-    looked only under SPARK_CACHE_DIR and both write-discipline and
-    inventory guards were silently inactive for custom-path entries)."""
-    recorded = fs.read_text(_committer_sidecar_path(hash_name, sidecar_dir))
+    (entries written before the record existed)."""
+    recorded = fs.read_text(layout.committer_path(sidecars))
     if recorded is not None:
         val = recorded.strip().lower().rsplit("=", 1)[-1]
         if val == "true":
@@ -350,35 +277,26 @@ def _read_cache_table(
     layout, which is also where ``create_cached_dataframe`` entries and the
     management scans live.
     """
+    sidecars = sidecar_dir or layout.sidecar_dir(hash_name)
     table = table_name_for_hash(hash_name)
-    # Corrupt-committed-data guard (r16): an entry whose live data-file
-    # listing disagrees with the writer-recorded inventory has lost (or
-    # grown) part files AFTER commit — serving it would return partial
-    # rows as a valid hit through EITHER branch (a parquet scan of a
-    # directory missing files succeeds silently). Refuse and let the
-    # caller recompute; the rewrite re-records a fresh inventory. One
-    # driver-side recursive listing per hit, only for entries carrying a
-    # record — the same cost class as the input-mtime fingerprint scan.
+    # Corrupt-committed-data guard: an entry whose live data-file listing
+    # disagrees with the writer-recorded inventory has lost (or grown) part
+    # files AFTER commit — serving it would return partial rows as a valid
+    # hit through EITHER branch (a parquet scan of a directory missing
+    # files succeeds silently). Refuse and let the caller recompute; the
+    # rewrite re-records a fresh inventory. One driver-side recursive
+    # listing per hit, only for entries carrying a record.
     try:
-        recorded = fs.read_text(_inventory_sidecar_path(hash_name, sidecar_dir))
-        inv_location = _table_location(spark, hash_name)
-        if (
-            recorded is not None
-            and fs.exists(inv_location)
-            and not fs.exists(f"{inv_location.rstrip('/')}/_delta_log")
-            and check_data_inventory(inv_location, recorded) is False
-        ):
+        if layout.inventory_ok(spark, hash_name, sidecars) is False:
             log.warning(
-                "Cache entry %s fails its data-file inventory (recorded "
-                "%r; part files lost or altered after commit — partial "
-                "restore / copy truncation?); treating as a miss",
-                hash_name, recorded.replace("\n", " "),
+                "Cache entry %s fails its data-file inventory (part files "
+                "lost or altered after commit — partial restore / copy "
+                "truncation?); treating as a miss", hash_name,
             )
             return None
     except Exception as exc:
         # The guard is best-effort: a listing failure must not turn a
-        # readable cache into a crash. (Absence of the record already
-        # skips the check; this covers transient listing errors.)
+        # readable cache into a crash.
         log.warning("Inventory check failed for %s (%s); proceeding",
                     hash_name, exc_summary(exc))
     if _table_exists(spark, table):
@@ -389,39 +307,30 @@ def _read_cache_table(
             # as a miss / try the files rather than crash the safe wrapper.
             log.warning("Catalog read failed for %s (%s); trying files",
                         table, exc_summary(exc))
-    location = _table_location(spark, hash_name)
+    location = layout.table_location(spark, hash_name)
     if fs.exists(location):
         # The files may have been written by the configured format OR by the
         # parquet degradation path of a previous session — try both. BUT a
         # transactional-format directory (_delta_log present) must never be
         # read as raw parquet: superseded file versions would surface as
         # duplicated/stale rows presented as a valid hit.
-        is_transactional = fs.exists(f"{location.rstrip('/')}/_delta_log")
-        # Cross-process torn-write guard (r14 follow-on to the in-process
-        # probe lock): _save_as_cache_table's overwrite is remove-then-
-        # rewrite, and _lock_for_key only serializes THIS driver — another
-        # process path-reading mid-rewrite would load a half-written
-        # directory and serve partial rows as a valid hit. Spark's job
-        # committer lands _SUCCESS last, so for non-transactional formats
-        # its absence means "no committed write here" — report a clean
-        # miss (recompute), never partial data. Transactional formats
-        # carry their own commit log and skip this check.
-        # The check only applies when the committer that WROTE this entry
-        # marks success jobs (ADVICE r14 #3 + r15 #4): with mapreduce.
-        # fileoutputcommitter.marksuccessfuljobs=false (common on
-        # S3A/magic-committer platforms) no valid cache ever carries
-        # _SUCCESS, and requiring it would permanently disable the path
-        # fallback — one full distributed rewrite per session instead of
-        # a free hit. Marker-writing discipline is the WRITER's property,
-        # recorded per-entry at write time (_writer_marks_success falls
-        # back to this reader's conf for pre-recording entries).
-        # Markerless-written entries keep the catalog read and accept the
-        # narrower cross-process window the marker would have closed (use
-        # a transactional CACHE_FORMAT for full protection there).
+        is_transactional = layout.is_transactional(location)
+        # Cross-process torn-write guard: the write is remove-then-rewrite,
+        # and _lock_for_key only serializes THIS driver — another process
+        # path-reading mid-rewrite would load a half-written directory.
+        # Spark's job committer lands _SUCCESS last, so for
+        # non-transactional formats its absence means "no committed write
+        # here" — report a clean miss, never partial data. The check
+        # applies only when the committer that WROTE this entry marks
+        # success jobs (marksuccessfuljobs=false, common on S3A/magic-
+        # committer platforms, never writes the marker; requiring it would
+        # permanently disable the path fallback). Markerless-written entries
+        # accept the narrower cross-process window (use a transactional
+        # CACHE_FORMAT for full protection there).
         if (
             not is_transactional
-            and _writer_marks_success(spark, hash_name, sidecar_dir)
-            and not fs.exists(f"{location.rstrip('/')}/_SUCCESS")
+            and _writer_marks_success(spark, sidecars)
+            and not layout.has_success_marker(location)
         ):
             log.warning(
                 "Cache location %s exists but has no _SUCCESS job-commit "
@@ -442,6 +351,50 @@ def _read_cache_table(
                 log.warning("Path read (%s) failed for %s: %s", fmt, location,
                             exc_summary(exc))
     return None
+
+
+def _materialize(
+    df: DataFrame,
+    key: str,
+    sidecars: str,
+    metadata_txt: str,
+    partition_by: Optional[List[str]] = None,
+    bucket_by: Optional[List[str]] = None,
+    n_buckets: int = 16,
+    bucket_sort_by: Optional[List[str]] = None,
+) -> DataFrame:
+    """The write protocol shared by ``write_cache`` and
+    ``create_cached_dataframe``; the caller holds ``key``'s lock.
+
+    1. Clear a stale data location: with Spark's in-memory catalog the
+       table entry dies with the session while its files survive, and they
+       would block ``saveAsTable``.
+    2. Write the table.
+    3. Write the committer sidecar, then the inventory sidecar.
+    4. Write the metadata sidecar LAST: it is the entry's liveness signal,
+       so a write that dies earlier leaves no sidecar and the next call
+       retries it.
+
+    Returns a catalog scan of the table just committed.
+    """
+    spark = df.sparkSession
+    table = table_name_for_hash(key)
+    if not _table_exists(spark, table):
+        location = layout.table_location(spark, key)
+        if fs.exists(location):
+            fs.remove(location)
+    _save_as_cache_table(
+        df,
+        table,
+        partition_by=partition_by,
+        bucket_by=bucket_by,
+        n_buckets=n_buckets,
+        bucket_sort_by=bucket_sort_by,
+    )
+    _record_writer_committer(spark, sidecars)
+    _record_data_inventory(spark, key, sidecars)
+    fs.write_text(layout.metadata_path(sidecars), metadata_txt)
+    return spark.read.table(table)
 
 
 def read_cache_if_exist(
@@ -465,7 +418,7 @@ def read_cache_if_exist(
     plan = query_plan if query_plan is not None else canonical_plan(df)
     info = input_info if input_info is not None else input_dir_mod_datetime(df, plan)
 
-    key, _, metadata_path, metadata_txt = table_cache_info(
+    key, sidecars, metadata_path, metadata_txt = table_cache_info(
         info, plan, hash_name=hash_name, cache_path_base=cache_path
     )
     # The probe runs UNDER the key's write lock (r14 fresh-eyes review):
@@ -495,9 +448,7 @@ def read_cache_if_exist(
         stored = fs.read_text(metadata_path)
         if stored is None or (hash_name is not None and stored != metadata_txt):
             return None
-        cached = _read_cache_table(
-            spark, key, sidecar_dir=metadata_path.rsplit("/", 1)[0]
-        )
+        cached = _read_cache_table(spark, key, sidecar_dir=sidecars)
     if cached is None:
         log.warning("Cache metadata exists but table %s is missing", key)
     return cached
@@ -530,16 +481,15 @@ def write_cache(
     plan = query_plan or canonical_plan(df)
     info = input_info if input_info is not None else input_dir_mod_datetime(df, plan)
 
-    key, _, metadata_path, metadata_txt = table_cache_info(
+    key, sidecars, metadata_path, metadata_txt = table_cache_info(
         info, plan, hash_name=hash_name, cache_path_base=cache_path
     )
-    table = table_name_for_hash(key)
     if verbose:
         # the reference's verbose flag prints the resolved identity; here
         # it surfaces the key/table plus the metadata document driving it
         log.info(
             "write_cache: key=%s table=%s; metadata document:\n%s",
-            key, table, metadata_txt,
+            key, table_name_for_hash(key), metadata_txt,
         )
 
     with _lock_for_key(key):
@@ -547,10 +497,11 @@ def write_cache(
         # winner's (identical, content-addressed) metadata and skips the
         # duplicate distributed write entirely.
         existing = fs.read_text(metadata_path)
-        sidecar_dir = metadata_path.rsplit("/", 1)[0]
-        if existing == metadata_txt and (
-            _read_cache_table(spark, key, sidecar_dir=sidecar_dir) is not None
-        ):
+        cached = (
+            _read_cache_table(spark, key, sidecar_dir=sidecars)
+            if existing == metadata_txt else None
+        )
+        if cached is not None:
             log.info("Cache %s already current; skipping write", key)
             if partition_by or bucket_by:
                 # Layout is not part of the identity: an existing entry is
@@ -565,29 +516,18 @@ def write_cache(
         else:
             if existing is not None and existing != metadata_txt:
                 log.info("Cache %s metadata changed; rewriting", key)
-            _save_as_cache_table(
+            cached = _materialize(
                 df,
-                table,
                 key,
+                sidecars,
+                metadata_txt,
                 partition_by=partition_by,
                 bucket_by=bucket_by,
                 n_buckets=n_buckets,
                 bucket_sort_by=bucket_sort_by,
             )
-            _record_writer_committer(spark, metadata_path)
-            _record_data_inventory(spark, key, metadata_path)
-            fs.write_text(metadata_path, metadata_txt)
             _bump("writes")
-
-    if replace:
-        cached = _read_cache_table(
-            spark, key, sidecar_dir=metadata_path.rsplit("/", 1)[0]
-        )
-        if cached is not None:
-            return cached
-        log.error("Could not read back cache table %s", table)
-        return df
-    return df
+    return cached if replace else df
 
 
 def _table_exists(spark: SparkSession, table: str) -> bool:
@@ -595,6 +535,112 @@ def _table_exists(spark: SparkSession, table: str) -> bool:
         return spark.catalog.tableExists(table)
     except Exception:
         return False
+
+
+# Admission refusal that cache_dataframe counts as a threshold skip.
+BELOW_THRESHOLD = "below the cost threshold"
+
+
+class Admission(NamedTuple):
+    """``admit``'s verdict: the rendered plan and input listing (for the
+    write to reuse), why the frame may not be cached (``refusal``; None =
+    admitted) and the probe's hit, if any."""
+
+    plan: str
+    info: Mapping[str, Any]
+    refusal: Optional[str] = None
+    hit: Optional[DataFrame] = None
+
+
+def _below_threshold(
+    df: DataFrame,
+    complexity_threshold: Optional[float],
+    multiplier_threshold: Optional[float],
+) -> bool:
+    """The cost gate: strict ``<`` against each threshold that is set
+    (not None and > 0). The estimate runs only when one is set, and a
+    failed estimate admits. (Deliberate deviation: the reference's backup
+    path skips on ``<=`` while its cacheToDbfs gate uses ``<`` —
+    caching.py:104 vs dataframe_extensions.py:97; not ported.)"""
+    def is_set(threshold: Optional[float]) -> bool:
+        return threshold is not None and threshold > 0
+
+    if not (is_set(complexity_threshold) or is_set(multiplier_threshold)):
+        return False
+    from .complexity import estimate_compute_complexity
+
+    try:
+        complexity, multiplier, size_gb = estimate_compute_complexity(df)
+    except Exception as exc:
+        log.warning("Complexity estimation failed: %s", exc)
+        return False
+    log.info(
+        "Estimated complexity %.2f (size %.5f GB x multiplier %.2f)",
+        complexity, size_gb, multiplier,
+    )
+    for name, value, threshold in (
+        ("Complexity", complexity, complexity_threshold),
+        ("Multiplier", multiplier, multiplier_threshold),
+    ):
+        if is_set(threshold) and value < threshold:
+            log.info("%s %.2f below threshold %s; not caching",
+                     name, value, threshold)
+            return True
+    return False
+
+
+def admit(
+    df: DataFrame,
+    complexity_threshold: Optional[float] = None,
+    multiplier_threshold: Optional[float] = None,
+    probe: Optional[Callable[[str, Mapping[str, Any]], Optional[DataFrame]]] = None,
+) -> Admission:
+    """May ``df`` be materialized? The one guard in front of every write
+    that fingerprints a live frame (``cache_dataframe`` and
+    ``tiering.backup_spark_cached_to_storage``). Renders the plan and lists
+    the inputs once, and refuses:
+
+    * RDD-backed plans: no stable content identity (reference:
+      dataframe_extensions.py:47-49); two such frames with one schema
+      would share a key;
+    * direct-data frames: they ARE their own materialization (reference:
+      dataframe_extensions.py:54-56);
+    * pure scans of an existing cache entry: already persistent under that
+      key — writing would store a second full copy under another key;
+    * unmatchable fingerprints (input listing failed, or input schema
+      changed): the key embeds now(), so a write would be an orphan no
+      later probe finds;
+    * frames below a set complexity or multiplier threshold.
+
+    ``probe(plan, info)`` runs after the structural checks; a hit it
+    returns ends admission before the cost estimate, so hits never pay
+    for it.
+    """
+    plan = canonical_plan(df)
+    if plan_is_uncacheable(plan):
+        refusal = "RDD-backed plan"
+    elif getattr(df, "_is_direct_data_cache", False):
+        refusal = "direct-data cache source"
+    else:
+        scanned = pure_scan_entry(plan)
+        refusal = None if scanned is None else f"pure scan of cache entry {scanned}"
+    if refusal is not None:
+        log.info("Not caching: %s", refusal)
+        return Admission(plan, {}, refusal)
+
+    info = input_dir_mod_datetime(df, plan)
+    if INPUT_LISTING_FAILED_KEY in info or SCHEMA_CHANGED_KEY in info:
+        log.warning(
+            "Unmatchable fingerprint (input listing failed or schema "
+            "changed); skipping cache for this run"
+        )
+        return Admission(plan, info, "unmatchable fingerprint")
+    hit = probe(plan, info) if probe is not None else None
+    if hit is not None:
+        return Admission(plan, info, hit=hit)
+    if _below_threshold(df, complexity_threshold, multiplier_threshold):
+        return Admission(plan, info, BELOW_THRESHOLD)
+    return Admission(plan, info)
 
 
 def cache_dataframe(
@@ -608,78 +654,28 @@ def cache_dataframe(
     """The flagship entry point (``df.cacheToStorage()``).
 
     Pipeline (reference: dataframe_extensions.py:29-133):
-      plan check -> cache probe -> cost gate -> Spark-cache tier or
-      materialized write. Returns either the original df (skip), the in-memory
-      cached df, or a scan of the materialized table (hit/new write).
+      admission (plan check -> cache probe -> cost gate) -> Spark-cache tier
+      or materialized write. Returns either the original df (refused), the
+      in-memory cached df, or a scan of the materialized table (hit/new
+      write).
     """
-    plan = canonical_plan(df)
-    if plan_is_uncacheable(plan):
-        log.info("RDD-backed plan; skipping cache")
-        return df
+    hash_name, cache_path = kwargs.get("hash_name"), kwargs.get("cache_path")
 
-    # Direct-data caches ARE their own materialization — re-caching would
-    # duplicate content-addressed data (reference: dataframe_extensions.py:54-56).
-    if getattr(df, "_is_direct_data_cache", False):
-        log.info("Direct-data cache source; nothing to cache")
-        return df
-
-    info = input_dir_mod_datetime(df, plan)
-    if INPUT_LISTING_FAILED_KEY in info or SCHEMA_CHANGED_KEY in info:
-        # Both sentinels carry datetime.now(): the fingerprint is
-        # unmatchable, so writing would create an entry no later
-        # (correct) key ever finds — a full distributed write leaked as
-        # an orphan on EVERY call. Skip caching this run instead. (Same
-        # guard as tiering.backup_spark_cached_to_storage.)
-        log.warning(
-            "Unmatchable fingerprint (input listing failed or schema "
-            "changed); skipping cache for this run"
+    def probe(plan: str, info: Mapping[str, Any]) -> Optional[DataFrame]:
+        hit = read_cache_if_exist(
+            df, query_plan=plan, input_info=info,
+            hash_name=hash_name, cache_path=cache_path,
         )
-        return df
-
-    hit = read_cache_if_exist(
-        df,
-        query_plan=plan,
-        input_info=info,
-        hash_name=kwargs.get("hash_name"),
-        cache_path=kwargs.get("cache_path"),
-    )
-    if hit is not None:
-        log.info("Cache hit; replacing plan with table scan")
-        _bump("hits")
+        _bump("misses" if hit is None else "hits")
         return hit
-    _bump("misses")
 
-    from .complexity import estimate_compute_complexity
-
-    complexity = multiplier = None
-    try:
-        complexity, multiplier, size_gb = estimate_compute_complexity(df)
-        log.info(
-            "Estimated complexity %.2f (size %.5f GB x multiplier %.2f)",
-            complexity, size_gb, multiplier,
-        )
-    except Exception as exc:  # pragma: no cover - defensive
-        log.warning("Complexity estimation failed: %s", exc)
-
-    if (
-        complexity is not None
-        and complexity_threshold is not None
-        and complexity_threshold > 0
-        and complexity < complexity_threshold
-    ):
-        log.info("Complexity %.2f below threshold %s; not caching", complexity,
-                 complexity_threshold)
-        _bump("threshold_skips")
-        return df
-    if (
-        multiplier is not None
-        and multiplier_threshold is not None
-        and multiplier_threshold > 0
-        and multiplier < multiplier_threshold
-    ):
-        log.info("Multiplier %.2f below threshold %s; not caching", multiplier,
-                 multiplier_threshold)
-        _bump("threshold_skips")
+    verdict = admit(df, complexity_threshold, multiplier_threshold, probe=probe)
+    if verdict.hit is not None:
+        log.info("Cache hit; replacing plan with table scan")
+        return verdict.hit
+    if verdict.refusal is not None:
+        if verdict.refusal == BELOW_THRESHOLD:
+            _bump("threshold_skips")
         return df
 
     plain_udfs = find_plain_udfs(df)
@@ -706,15 +702,12 @@ def cache_dataframe(
         _bump("spark_cache")
         return df.cache()
 
-    # The probe above used the full mapping; the write keys off the same
-    # document (the former DIRECT_DATA_CACHE_KEY filter here was dead —
-    # input_dir_mod_datetime never emits that sentinel).
     return write_cache(
         df,
-        query_plan=plan,
-        input_info=info,
-        hash_name=kwargs.get("hash_name"),
-        cache_path=kwargs.get("cache_path"),
+        query_plan=verdict.plan,
+        input_info=verdict.info,
+        hash_name=hash_name,
+        cache_path=cache_path,
         partition_by=kwargs.get("partition_by"),
         bucket_by=kwargs.get("bucket_by"),
         n_buckets=kwargs.get("n_buckets", 16),
@@ -762,20 +755,15 @@ def create_cached_dataframe(
             f"{data_hash};schema={schema_repr}".encode("utf-8")
         ).hexdigest()
     cache_hash_name = f"data_{data_hash}"
-    table = table_name_for_hash(cache_hash_name)
-    cache_dir = f"{config.SPARK_CACHE_DIR}{cache_hash_name}/"
-    metadata_path = f"{cache_dir}cache_metadata.txt"
+    sidecars = layout.sidecar_dir(cache_hash_name)
 
     with _lock_for_key(cache_hash_name):
         cached = _read_cache_table(spark, cache_hash_name)
-        if cached is not None and fs.read_text(metadata_path) is not None:
-            log.info("Direct-data cache hit: %s", table)
+        if cached is not None and fs.read_text(layout.metadata_path(sidecars)) is not None:
+            log.info("Direct-data cache hit: %s", cache_hash_name)
         else:
-            log.info("Direct-data cache miss; creating %s", table)
+            log.info("Direct-data cache miss; creating %s", cache_hash_name)
             source = spark.createDataFrame(data, schema=schema, **kwargs)
-            _save_as_cache_table(source, table, cache_hash_name)
-            _record_writer_committer(spark, metadata_path)
-            _record_data_inventory(spark, cache_hash_name, metadata_path)
             # Deterministic document — NO wall-clock line: every racer on
             # this key must produce byte-identical content, because both
             # the per-key lock's re-probe and fs.write_text's lost-rename
@@ -787,10 +775,8 @@ def create_cached_dataframe(
                 f"DATA HASH: {data_hash}\n"
                 f"SCHEMA: {source.schema.simpleString()}"
             )
-            fs.write_text(metadata_path, metadata_txt)
-            cached = spark.read.table(table)
+            cached = _materialize(source, cache_hash_name, sidecars, metadata_txt)
 
-    assert cached is not None
     setattr(cached, "_is_direct_data_cache", True)
     setattr(cached, "_direct_data_cache_hash", cache_hash_name)
     return cached

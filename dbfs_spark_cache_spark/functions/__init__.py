@@ -40,14 +40,6 @@ def vec_cosine(a, b) -> Column:
     return vec_dot(a, b) / (vec_l2_norm(a) * vec_l2_norm(b))
 
 
-def vec_scale(a, s) -> Column:
-    return F.transform(a, lambda x: x.cast("double") * s)
-
-
-def vec_add(a, b) -> Column:
-    return F.zip_with(a, b, lambda x, y: x.cast("double") + y.cast("double"))
-
-
 def sign_bits_str(a, n: int) -> Column:
     """Axis-aligned sign-bit LSH signature as a string: '1' per
     non-negative dim over the first ``n`` dims ('0' otherwise, including

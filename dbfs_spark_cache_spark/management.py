@@ -17,7 +17,7 @@ from typing import List, Optional
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from . import fs
+from . import fs, layout
 from .config import config
 
 log = logging.getLogger(__name__)
@@ -124,15 +124,13 @@ def get_cached_tables(
 
 
 def _tables_from_warehouse_listing(spark: SparkSession) -> pd.DataFrame:
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    db_dir = f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db"
     rows = []
-    for entry in fs.list_dir(db_dir):
+    for entry in fs.list_dir(layout.database_dir(spark)):
         if not entry.is_dir:
             continue
         rows.append(
             {
-                "table_name": f"{config.CACHE_DATABASE}.{entry.name}",
+                "table_name": layout.table_name_for_hash(entry.name),
                 "hash_name": entry.name,
                 "directory_path": entry.path,
                 "creationTime": fs._utc_naive(entry.mtime_ms / 1000),
@@ -149,14 +147,15 @@ def get_cached_dataframe_metadata(num_threads: Optional[int] = None) -> pd.DataF
     entries = [s for s in fs.list_dir(base) if s.is_dir]
 
     def inspect(entry: fs.FileStat) -> Optional[dict]:
-        meta_path = f"{entry.path.rstrip('/')}/cache_metadata.txt"
-        stats = [s for s in fs.list_dir(entry.path) if s.name == "cache_metadata.txt"]
+        stats = [
+            s for s in fs.list_dir(entry.path) if s.name == layout.METADATA_FILE
+        ]
         if not stats:
             return None
         return {
-            "table_name": f"{config.CACHE_DATABASE}.{entry.name}",
+            "table_name": layout.table_name_for_hash(entry.name),
             "hash_name": entry.name,
-            "directory_path": meta_path,
+            "directory_path": layout.metadata_path(entry.path),
             "creationTime": fs._utc_naive(stats[0].mtime_ms / 1000),
         }
 
@@ -236,14 +235,13 @@ def _clear_cache_for_hash_locked(
         )
         return False
     if db == config.CACHE_DATABASE:
-        fs.remove(f"{config.SPARK_CACHE_DIR}{hash_name}/")
+        fs.remove(layout.sidecar_dir(hash_name))
         # A metadata-only orphan has no catalog entry, so the DROP above
         # was a no-op and the table FILES survive in the warehouse —
         # invisible to both registries and all future accounting. Sweep
         # the data directory too (no-op when the managed DROP already
         # removed it).
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        fs.remove(f"{warehouse.rstrip('/')}/{db}.db/{hash_name}")
+        fs.remove(layout.table_location(spark, hash_name))
     return True
 
 
@@ -394,27 +392,15 @@ def find_inconsistent_entries(
 def _entry_inventory_ok(
     spark: SparkSession, hash_name: str, sidecar_dir: Optional[str] = None
 ) -> Optional[bool]:
-    """Does ``hash_name``'s live data listing match its writer-recorded
-    inventory? None when the entry carries no (parseable) record or the
-    table directory is gone (that is the orphan scan's finding, not a
-    corruption finding). False = part files lost or altered AFTER commit
-    — the read path refuses such an entry; the scans below surface it.
-    ``sidecar_dir``: the entry's actual sidecar directory, for entries
-    written under a custom ``cache_path`` (ADVICE r17 #3 — the r17
-    read-path fix made reads refuse corrupt custom-base entries, but the
-    operator scan probed only the default layout, so the cron alert
-    never fired for exactly that class); None = the default
-    SPARK_CACHE_DIR layout."""
-    from .core import _inventory_sidecar_path, _table_location, check_data_inventory
-
-    recorded = fs.read_text(_inventory_sidecar_path(hash_name, sidecar_dir))
-    if recorded is None:
-        return None
-    location = _table_location(spark, hash_name)
-    if not fs.exists(location) or fs.exists(f"{location.rstrip('/')}/_delta_log"):
-        return None
+    """``layout.inventory_ok`` for the operator scans: False = part files
+    lost or altered after commit (the read path refuses such an entry; the
+    scans surface it). A missing table directory is the orphan scan's
+    finding, not a corruption finding, and reads None like a failed
+    listing. ``sidecar_dir``: the entry's sidecar directory when written
+    under a custom ``cache_path``; None = the default SPARK_CACHE_DIR
+    layout."""
     try:
-        return check_data_inventory(location, recorded)
+        return layout.inventory_ok(spark, hash_name, sidecar_dir)
     except Exception as exc:
         log.warning("Inventory scan failed for %s (%s)", hash_name,
                     exc.__class__.__name__)
@@ -423,8 +409,8 @@ def _entry_inventory_ok(
 
 def _custom_base_entries(base: str) -> List[tuple]:
     """(hash_name, sidecar_dir) pairs for cache entries under a custom
-    ``cache_path`` base — the same ``<base>/<hash>/cache_metadata.txt``
-    layout ``table_cache_info`` writes for every base, default or not.
+    ``cache_path`` base — the same sidecar layout (``layout.sidecar_dir``)
+    every base uses, default or not: a directory holding a metadata file.
     A missing/empty base yields no pairs (``fs.list_dir`` ENOENT
     contract)."""
     pairs = []
@@ -432,7 +418,7 @@ def _custom_base_entries(base: str) -> List[tuple]:
         if not entry.is_dir:
             continue
         side = entry.path.rstrip("/")
-        if fs.exists(f"{side}/cache_metadata.txt"):
+        if fs.exists(layout.metadata_path(side)):
             pairs.append((entry.name, side))
     return pairs
 
@@ -476,10 +462,8 @@ def _entry_bytes(spark: SparkSession, hash_name: str) -> int:
     directory (the data — partitioned/bucketed tables nest, hence the
     recursive tree size) PLUS the metadata sidecar directory. Either half
     may be absent (orphans); tree_size of a missing path is 0."""
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    db_root = f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db"
-    return fs.tree_size(f"{db_root}/{hash_name}") + fs.tree_size(
-        f"{config.SPARK_CACHE_DIR}{hash_name}/"
+    return fs.tree_size(layout.table_location(spark, hash_name)) + fs.tree_size(
+        layout.sidecar_dir(hash_name)
     )
 
 

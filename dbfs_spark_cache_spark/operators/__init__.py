@@ -44,9 +44,6 @@ from . import source_scans  # noqa: E402,F401
 from . import analytics2  # noqa: E402,F401
 from . import corpus_analytics  # noqa: E402,F401
 
-# r8: the three pre-built, pytest-pinned queries enter the registry LAST
-# (registration order is the rotation tie-break; the r8 window is then
-# exactly 47 r5-due + these 3 = 50). See pending_r8.register_pending.
+# Imported LAST: registration order is the rotation tie-break, and the
+# three round-8 queries register behind every other module's.
 from . import pending_r8  # noqa: E402,F401
-
-pending_r8.register_pending()

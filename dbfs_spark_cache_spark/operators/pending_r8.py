@@ -1,18 +1,10 @@
-"""The three round-8 queries — pre-built unregistered in r7, LIVE since r8.
+"""The three round-8 queries, registered LAST.
 
-``operators/__init__.py`` now imports this module and calls
-``register_pending()`` as its last registration step (order matters:
-registration order is the rotation tie-break, and last keeps these three
-after the 47 r5-due queries in the stable sort — the r8 window was
-exactly 47 + 3). They are REGISTERED queries under the frozen-at-150
-capacity policy (``__spark_entry__.py``): an implementation change here
-consumes a rotation slot like any other registered query — it is NOT
-slot-free engine code, despite living outside the big operator modules.
-
-History: built in r7 because that round's window had zero slack (50
-r4-vintage queries came due); the local ``_pending`` decorator keeps the
-definitions out of the registry until ``register_pending()`` runs, which
-let r7 pin oracle parity/plan shape by pytest without consuming a slot.
+``operators/__init__.py`` imports this module after every other operator
+module: registration order is the rotation tie-break, and last keeps these
+three behind all earlier queries in the stable sort. They are registered
+queries under the frozen-at-150 capacity policy (``__spark_entry__.py``):
+an implementation change here consumes a rotation slot like any other.
 
 The three shapes (the r6 CHANGELOG ranking, endorsed by the r6 verdict):
 
@@ -31,34 +23,16 @@ The three shapes (the r6 CHANGELOG ranking, endorsed by the r6 verdict):
 """
 from __future__ import annotations
 
-from typing import Callable, Dict
-
-import textwrap
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vec_dot as _dot, vec_sq_norm as _sq_norm
 from ..sources import load_table
+from .registry import register
 from .similarity import DUCK_VEC_USABLE, _vec_usable
 
-QUERIES_R8: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_R8: Dict[str, str] = {}
 
-
-def _pending(name: str, oracle: str):
-    """Local twin of ``registry.register`` that records into the R8 dicts
-    instead of the live registry (keeps these out of the driver window)."""
-
-    def decorator(fn):
-        QUERIES_R8[name] = fn
-        ORACLES_R8[name] = textwrap.dedent(oracle).strip()
-        return fn
-
-    return decorator
-
-
-@_pending(
+@register(
     "similarity_topk_batch",
     oracle=f"""
     WITH emb AS (
@@ -184,7 +158,7 @@ def similarity_topk_batch(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_pending(
+@register(
     "events_anomaly_mad",
     oracle="""
     WITH ev AS (SELECT * FROM events WHERE value IS NOT NULL AND isfinite(value)),
@@ -283,7 +257,7 @@ def events_anomaly_mad(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_pending(
+@register(
     "text_unigram_logprob",
     oracle="""
     WITH toks AS (
@@ -375,16 +349,3 @@ def text_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
             "DIV (2*n_tokens)) AS DOUBLE) / 1000000.0"
         ).alias("mean_logprob"),
     )
-
-
-def register_pending() -> None:
-    """The r8 registration, as one call: add ``from . import pending_r8``
-    + ``pending_r8.register_pending()`` at the END of
-    ``operators/__init__.py`` (registration order = rotation tie-break
-    order; last keeps the three new entries after the 47 due queries in
-    the stable sort). Idempotent; does nothing it hasn't declared above.
-    """
-    from .registry import ORACLES, QUERIES
-
-    QUERIES.update(QUERIES_R8)
-    ORACLES.update(ORACLES_R8)

@@ -27,7 +27,7 @@ from typing import Dict, Mapping, Optional, Tuple, Union
 
 from pyspark.sql import DataFrame
 
-from .. import fs
+from .. import fs, layout
 from ..config import config
 from ..hashing import find_cache_table_in_text
 
@@ -298,21 +298,8 @@ def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputI
 
     dirs = sorted({os.path.dirname(f) for f in files})
     # Cache-entry data directories contribute a mtime-free path line (the
-    # path embeds the cache hash — see CACHED_INPUT_MARKER). Two layouts
-    # qualify: the metadata dir (reference layout) and the warehouse table
-    # dirs (this engine's data location).
-    # Trailing (/.*)? : a partition_by cache's data files live in partition
-    # SUBDIRECTORIES of the hash dir (…/<hash>/day=2026-08-14/), and those
-    # paths must take the mtime-free marker too — anchoring the hash dir at
-    # end-of-path made children of partitioned caches embed volatile
-    # mtimes, spuriously invalidating them on any parent rewrite/repair.
-    cache_base = re.escape(config.SPARK_CACHE_DIR.rstrip("/"))
-    skip_res = [re.compile(rf"^{cache_base}/(data_)?[a-f0-9]{{32}}(/.*)?$")]
-    skip_res.append(
-        re.compile(
-            rf"/{re.escape(config.CACHE_DATABASE)}\.db/(data_)?[a-f0-9]{{32}}(/.*)?$"
-        )
-    )
+    # path embeds the cache hash — see CACHED_INPUT_MARKER).
+    skip_res = layout.cached_input_patterns()
 
     result: Dict[str, Union[datetime, str]] = {}
     for d in dirs:
@@ -361,13 +348,10 @@ def table_cache_info(
     cache_path_base: Optional[str] = None,
 ) -> Tuple[str, str, str, str]:
     """(hash, cache_dir, metadata_file_path, metadata_txt) for a query."""
-    base = cache_path_base or config.SPARK_CACHE_DIR
-    if not base.endswith("/"):
-        base += "/"
     metadata_txt = cache_metadata_document(input_info, plan)
     key = hash_name if hash_name is not None else compute_cache_key(metadata_txt)
-    cache_dir = f"{base}{key}/"
-    return key, cache_dir, f"{cache_dir}cache_metadata.txt", metadata_txt
+    sidecars = layout.sidecar_dir(key, cache_path_base)
+    return key, f"{sidecars}/", layout.metadata_path(sidecars), metadata_txt
 
 
 def _is_pure_scan_of(plan: str, db: str, table: str) -> bool:
@@ -394,14 +378,30 @@ def _is_pure_scan_of(plan: str, db: str, table: str) -> bool:
     return not re.search(r"[A-Z]", remainder)
 
 
+def pure_scan_entry(plan: str) -> Optional[str]:
+    """The cache entry (``data_*`` or 32-hex) that ``plan`` is nothing but
+    a scan of, or None. A plan that merely embeds a cache table (a filter or
+    join on top of a cached scan) is not a pure scan."""
+    db = config.CACHE_DATABASE
+    for prefix in ("data_", ""):
+        table = find_cache_table_in_text(plan, db, prefix)
+        if table is not None and _is_pure_scan_of(plan, db, table):
+            return table
+    return None
+
+
 def resolve_table_hash(df: DataFrame) -> str:
     """Full identity resolution with the reference's short-circuits
     (reference: core_caching.py:527-571):
 
     1. DataFrame tagged as a direct-data cache -> its recorded ``data_*`` hash.
-    2. Plan that is a *pure scan* of a ``data_*`` cache table -> that hash.
-    3. Plan that embeds a standard 32-hex cache table -> that hash.
-    4. Otherwise MD5 of the metadata document.
+    2. Plan that is a *pure scan* of a cache table -> that table's hash.
+    3. Otherwise MD5 of the metadata document.
+
+    A derived frame (filter/join on top of a cached scan) gets its own
+    identity, so clearing it never drops the parent's cache. (The reference
+    returns the embedded hash for any referencing plan — a footgun
+    deliberately not reproduced.)
     """
     if getattr(df, "_is_direct_data_cache", False):
         tagged = getattr(df, "_direct_data_cache_hash", None)
@@ -409,24 +409,9 @@ def resolve_table_hash(df: DataFrame) -> str:
             return tagged
 
     plan = canonical_plan(df)
-    db = config.CACHE_DATABASE
-
-    data_table = find_cache_table_in_text(plan, db, "data_")
-    if data_table and _is_pure_scan_of(plan, db, data_table):
-        return data_table
-
-    # A standard cache table embedded in the plan short-circuits ONLY for a
-    # pure scan — a derived frame (filter/join on top of a cached scan) must
-    # get its own identity, otherwise clearing the derived frame would drop
-    # the parent's cache. (The reference returns the embedded hash for any
-    # referencing plan — a footgun deliberately not reproduced.)
-    embedded = find_cache_table_in_text(plan, db, "")
-    if embedded is not None and _is_pure_scan_of(plan, db, embedded):
-        return embedded
-
-    info = input_dir_mod_datetime(df, plan)
-    # Datetimes AND cached-input path markers both participate in the key
-    # (must match write_cache exactly; input_dir_mod_datetime never emits
-    # the direct-data sentinel, so no filtering is needed here).
-    metadata_txt = cache_metadata_document(info, plan)
-    return compute_cache_key(metadata_txt)
+    scanned = pure_scan_entry(plan)
+    if scanned is not None:
+        return scanned
+    return compute_cache_key(
+        cache_metadata_document(input_dir_mod_datetime(df, plan), plan)
+    )

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import logging
 import os
-from typing import Iterable, List, Optional, Tuple
+from typing import Iterable, List, Mapping, Optional, Tuple
 
 from pyspark.sql import DataFrame
 
@@ -48,114 +48,30 @@ def backup_spark_cached_to_storage(
 ) -> List[DataFrame]:
     """Persist Spark-cached DataFrames to the materialized tier.
 
-    Skips ``data_*`` frames (their content already IS the cache) and, when
-    thresholds are given, frames whose estimated complexity/multiplier fall
-    below them. Returns the successfully backed-up frames.
+    Each frame passes the same admission guard as ``cache_dataframe``
+    (``core.admit``): RDD-backed, direct-data, pure-scan-of-an-entry and
+    unmatchable frames are skipped, and so are frames whose estimated
+    complexity/multiplier fall below the given thresholds. Returns the
+    successfully backed-up frames.
     """
-    from .complexity import estimate_compute_complexity
-    from .core import write_cache
-    from .plans.fingerprint import resolve_table_hash
+    from .core import admit, write_cache
 
-    candidates = list(specific_dfs)
+    candidates = [df for df in specific_dfs if isinstance(df, DataFrame)]
     if process_in_reverse_order:
         candidates.reverse()
 
-    from .plans.fingerprint import (
-        INPUT_LISTING_FAILED_KEY,
-        SCHEMA_CHANGED_KEY,
-        _is_pure_scan_of,
-        canonical_plan,
-        find_cache_table_in_text,
-        input_dir_mod_datetime,
-        plan_is_uncacheable,
-    )
-
-    eligible: List[
-        Tuple[DataFrame, str, dict, Optional[Tuple[float, float, float]]]
-    ] = []
+    eligible: List[Tuple[DataFrame, str, Mapping]] = []
     for df in candidates:
-        if not isinstance(df, DataFrame):
-            continue
-        # Same pre-write guards as cache_dataframe — write_cache is called
-        # directly below, so without these a backup could materialize an
-        # RDD-backed frame under a content-free plan key (two such frames
-        # with the same schema COLLIDE: the second "backup" skip-if-
-        # identicals onto the first frame's rows) or orphan a full
-        # distributed write under an unmatchable listing-failure key.
-        plan = canonical_plan(df)
-        if plan_is_uncacheable(plan):
-            log.info("Skipping RDD-backed frame: content-free plan key")
-            continue
-        info = input_dir_mod_datetime(df, plan)
-        # Both sentinels are UNMATCHABLE keys: the listing-failure marker
-        # by contract, and the schema-change marker because its value is
-        # datetime.now() — a key embedding the current second can never
-        # hit on a later probe, so writing under it orphans the backup.
-        if INPUT_LISTING_FAILED_KEY in info or SCHEMA_CHANGED_KEY in info:
-            log.warning(
-                "Skipping frame: unmatchable fingerprint (input listing "
-                "failed or input schema changed) — writing would orphan "
-                "the backup"
-            )
-            continue
-        # A frame that is a PURE SCAN of an existing cache table (any
-        # prefix) already lives in the persistent tier under that very
-        # key: re-materializing it under the metadata-document key would
-        # write the whole table AGAIN as a stranded duplicate.
-        scanned = find_cache_table_in_text(plan, config.CACHE_DATABASE, "")
-        if scanned is not None and _is_pure_scan_of(
-            plan, config.CACHE_DATABASE, scanned
-        ):
-            log.info(
-                "Skipping %s: frame is a pure scan of an existing cache "
-                "entry — already persistent", scanned,
-            )
-            continue
-        try:
-            df_hash = resolve_table_hash(df)
-        except Exception as exc:
-            log.warning("Could not fingerprint DataFrame: %s; skipping", exc)
-            continue
-        if df_hash.startswith("data_"):
-            log.info("Skipping %s: direct-data caches are already persistent", df_hash)
-            continue
-        estimate = None
-        if min_complexity_threshold is not None or min_multiplier_threshold is not None:
-            try:
-                estimate = estimate_compute_complexity(df)
-            except Exception as exc:
-                log.warning("Complexity estimate failed for %s: %s", df_hash, exc)
-            if estimate is not None:
-                complexity, multiplier, _ = estimate
-                # Strict < on both, matching core.cache_dataframe's gate —
-                # the same thresholds make the same decision in both paths.
-                # (Deliberate deviation: the reference's BACKUP path skips
-                # on complexity <= threshold while its cacheToDbfs gate
-                # uses strict < — caching.py:104 vs
-                # dataframe_extensions.py:97; that internal inconsistency
-                # flips the decision only at exact equality and is not
-                # ported.)
-                if (
-                    min_multiplier_threshold is not None
-                    and multiplier < min_multiplier_threshold
-                ):
-                    continue
-                if (
-                    min_complexity_threshold is not None
-                    and complexity < min_complexity_threshold
-                ):
-                    continue
-        eligible.append((df, plan, info, estimate))
+        verdict = admit(df, min_complexity_threshold, min_multiplier_threshold)
+        if verdict.refusal is None:
+            eligible.append((df, verdict.plan, verdict.info))
 
     backed_up: List[DataFrame] = []
-    for df, plan, info, _ in eligible:
+    for df, plan, info in eligible:
         try:
-            # Reuse the guard's plan + input listing: write_cache would
-            # otherwise re-stringify the plan and re-LIST every input
-            # directory (the O(#directories) remote round-trips this
-            # module's scale notes warn about) — and a listing failure in
-            # that re-run would reintroduce the orphan the guard above
-            # just screened out.
+            # Reuse admission's plan + input listing: re-listing every input
+            # directory costs remote round-trips, and a listing failure in
+            # a re-run would write the orphan admission screened out.
             write_cache(df, replace=False, query_plan=plan, input_info=info)
             backed_up.append(df)
             if unpersist_after_backup:

@@ -276,10 +276,10 @@ def test_path_fallback_derived_frames_do_not_collide(spark, clean_cache, tmp_pat
     # Simulate a session restart: catalog entries gone, files remain.
     # (DROP TABLE on a managed table deletes its files, so stash them.)
     from dbfs_spark_cache_spark import fs
-    from dbfs_spark_cache_spark.core import _table_location
+    from dbfs_spark_cache_spark.layout import table_location
 
     for entry in (h["a"], h["b"]):
-        loc = fs.strip_scheme(_table_location(spark, entry))
+        loc = fs.strip_scheme(table_location(spark, entry))
         shutil.move(loc, f"{loc}__stash")
         spark.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{entry}")
         shutil.move(f"{loc}__stash", loc)

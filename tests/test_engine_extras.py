@@ -378,7 +378,7 @@ def test_cache_format_degradation_roundtrip(extended):
     """CACHE_FORMAT pointing at absent jars: write degrades to parquet, the
     degradation is memoized, and reads resolve the parquet files even with
     the broken format still configured (cross-session path included)."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
     original = config.CACHE_FORMAT
@@ -393,7 +393,7 @@ def test_cache_format_degradation_roundtrip(extended):
         # Simulate the next session's path-fallback read: catalog entry
         # dropped externally, files remain, broken format still configured.
         registry_hash = core.resolve_table_hash(df)
-        loc = core._table_location(extended, registry_hash)
+        loc = layout.table_location(extended, registry_hash)
         extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{registry_hash}")
         import shutil
 
@@ -482,7 +482,7 @@ def test_delta_cache_roundtrip_when_jars_present(extended):
     runs on any Delta-enabled cluster."""
     import pytest
 
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
     probe = extended.range(1).toDF("x")
@@ -505,7 +505,7 @@ def test_delta_cache_roundtrip_when_jars_present(extended):
         assert sorted(map(tuple, cached.collect())) == sorted(map(tuple, df.collect()))
         assert not core._FORMAT_FALLBACK.get("parquet"), "no fallback expected"
         h = core.resolve_table_hash(df)
-        loc = core._table_location(extended, h).replace("file:", "")
+        loc = layout.table_location(extended, h).replace("file:", "")
         import os as _os
 
         assert _os.path.isdir(f"{loc}/_delta_log"), "cache table is not Delta"
@@ -527,13 +527,13 @@ def test_delta_log_guard_blocks_stale_parquet_path_read(extended):
     when it encounters a transactional table."""
     import os as _os
 
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
     df = _agg_query(extended)
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
 
     # Simulate a catalog death with surviving files (the in-memory-catalog
     # scenario the path fallback exists for): stash the data dir, DROP the

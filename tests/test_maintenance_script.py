@@ -266,14 +266,14 @@ def test_cli_scan_corrupt_entries(spark, clean_cache, monkeypatch):
     import glob as _glob
     import sys as _sys
 
-    from dbfs_spark_cache_spark import core, maintenance_cli, session, write_cache
+    from dbfs_spark_cache_spark import core, layout, maintenance_cli, session, write_cache
 
     from tests.conftest import SF_SMOKE
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet").repartition(2)
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(spark, h).replace("file:", "")
+    loc = layout.table_location(spark, h).replace("file:", "")
 
     class _NoStop:
         def __init__(self, real):

@@ -1,5 +1,6 @@
 """The three r8-slot queries (operators/pending_r8.py): oracle parity,
-plan shape, and (since r8) the registered-at-the-150-ceiling contract.
+plan shape, the registered-at-the-150-ceiling contract, and the pinned
+registration order.
 
 Pre-built in r7 (zero r7 window slack), registered at r8 where exactly 3
 slots were free. Parity here runs the same sorted-signature comparison
@@ -28,10 +29,12 @@ from conftest import SF_ORACLE, SF_SMOKE  # noqa: E402
 from selfcheck import compare  # noqa: E402  (same comparator the harness uses)
 
 from dbfs_spark_cache_spark.operators import ORACLES, QUERIES  # noqa: E402
-from dbfs_spark_cache_spark.operators.pending_r8 import (  # noqa: E402
-    ORACLES_R8,
-    QUERIES_R8,
-)
+
+R8_QUERIES = [
+    "similarity_topk_batch",
+    "events_anomaly_mad",
+    "text_unigram_logprob",
+]
 
 _TABLES = (
     "region nation customer supplier part orders lineitem "
@@ -49,19 +52,10 @@ def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 
 def test_r8_queries_are_registered_and_registry_is_at_ceiling():
-    """r8 flipped register_pending() on (operators/__init__.py): the
-    three queries are live, queries and oracles agree, and the registry
-    sits EXACTLY at the 150-query hard ceiling — the frozen-registry
-    capacity policy (see __spark_entry__.py) makes any further growth a
-    policy violation this pin catches."""
-    assert set(QUERIES_R8) == {
-        "similarity_topk_batch",
-        "events_anomaly_mad",
-        "text_unigram_logprob",
-    }
-    assert set(ORACLES_R8) == set(QUERIES_R8)
-    assert set(QUERIES_R8) <= set(QUERIES)
-    assert set(ORACLES_R8) <= set(ORACLES)
+    """The three queries are live, queries and oracles agree, and the
+    registry sits EXACTLY at the 150-query hard ceiling — the frozen-
+    registry capacity policy (see __spark_entry__.py) makes any further
+    growth a policy violation this pin catches."""
     assert set(QUERIES) == set(ORACLES)
     assert len(QUERIES) == 150, (
         f"registry has {len(QUERIES)} queries; the capacity policy "
@@ -70,21 +64,34 @@ def test_r8_queries_are_registered_and_registry_is_at_ceiling():
     )
     # Registration order is the rotation tie-break: the three r8 entries
     # must be LAST so they fill the 3 slack slots behind the 47 due.
-    assert list(QUERIES)[-3:] == [
-        "similarity_topk_batch",
-        "events_anomaly_mad",
-        "text_unigram_logprob",
-    ]
+    assert list(QUERIES)[-3:] == R8_QUERIES
+    assert list(ORACLES)[-3:] == R8_QUERIES
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES_R8))
+def test_registration_order_is_pinned():
+    """``queries()`` order and the rotation tie-break follow registration
+    order: the full ordered name list of both registries is pinned (MD5
+    of the newline-joined names), so moving a module or a registration
+    fails here."""
+    import hashlib
+
+    from dbfs_spark_cache_spark.operators import pending_r8
+
+    assert list(ORACLES) == list(QUERIES)
+    digest = hashlib.md5("\n".join(QUERIES).encode("utf-8")).hexdigest()
+    assert digest == "8910a9ea409182f24bb28730757de2d1", list(QUERIES)
+    for name in R8_QUERIES:
+        assert QUERIES[name] is getattr(pending_r8, name)
+
+
+@pytest.mark.parametrize("name", sorted(R8_QUERIES))
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
 def test_pending_query_matches_oracle(spark, name, sf_dir):
     """Row-count + schema + sorted exact-value parity against the DuckDB
     oracle — the driver's own comparison, via selfcheck's comparator."""
-    spark_pdf = QUERIES_R8[name](spark, sf_dir).toPandas()
+    spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
     con = _duck(sf_dir)
-    duck_pdf = con.execute(ORACLES_R8[name]).df()
+    duck_pdf = con.execute(ORACLES[name]).df()
     problems = compare(name, spark_pdf, duck_pdf, verbose=True)
     assert not problems, f"{name} @ {sf_dir}: {problems}"
     assert len(spark_pdf) > 0, f"{name} returned no rows"
@@ -101,7 +108,7 @@ def test_topk_batch_windows_are_bucketed(spark):
     """The batch top-k must never rank a whole corpus partition-by-q_id:
     the first window carries the vec_id bucket next to q_id, and the
     final window only sees the <= n_buckets x k candidate survivors."""
-    plan = _plan_text(QUERIES_R8["similarity_topk_batch"](spark, SF_SMOKE))
+    plan = _plan_text(QUERIES["similarity_topk_batch"](spark, SF_SMOKE))
     assert "pmod" in plan, "vec_id bucket expression missing from the plan"
     specs = re.findall(r"windowspecdefinition\(([^)]*)", plan)
     assert specs, "expected window specs in the plan"
@@ -120,7 +127,7 @@ def test_anomaly_mad_windows_are_banded(spark):
     """Both median passes ride the grouped distributed-rank helper: every
     window spec must carry the value band (__bucket), never a bare
     partitionBy(event_type) sort of a whole type's population."""
-    plan = _plan_text(QUERIES_R8["events_anomaly_mad"](spark, SF_SMOKE))
+    plan = _plan_text(QUERIES["events_anomaly_mad"](spark, SF_SMOKE))
     specs = re.findall(r"windowspecdefinition\(([^)]*)", plan)
     assert specs, "expected window specs in the plan"
     for spec in specs:
@@ -174,21 +181,6 @@ def test_unigram_logprob_vocab_is_broadcast(spark):
     """The vocabulary join must broadcast the vocab side (vocabulary-sized)
     into the token stream — a shuffle join on token re-shuffles the whole
     exploded corpus for a dictionary-sized build side."""
-    plan = _plan_text(QUERIES_R8["text_unigram_logprob"](spark, SF_SMOKE))
+    plan = _plan_text(QUERIES["text_unigram_logprob"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_register_pending_is_idempotent():
-    """register_pending() already ran at import (operators/__init__.py);
-    calling it again must change nothing — the registry entries ARE the
-    pending-module callables, and a double registration must not grow or
-    reorder the registry (registration order is the rotation tie-break)."""
-    from dbfs_spark_cache_spark.operators.pending_r8 import register_pending
-
-    before_q, before_o = dict(QUERIES), dict(ORACLES)
-    register_pending()
-    assert QUERIES == before_q and ORACLES == before_o
-    assert list(QUERIES) == list(before_q)
-    for name in QUERIES_R8:
-        assert QUERIES[name] is QUERIES_R8[name]

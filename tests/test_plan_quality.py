@@ -278,9 +278,7 @@ _BROADCAST_ALLOWLIST: dict[tuple, str] = {
     # scale.py banded-rank/MAD helpers: one row per (low-cardinality
     # part key × constant n_buckets) per the documented helper contract
     ("scale.py", "bounds"): "per-part-key min/max (bounded part_col contract)",
-    ("scale.py", "counts"): "per-(part,bucket) counts; buckets constant",
     ("scale.py", "offsets"): "per-(part,bucket) prefix offsets",
-    ("scale.py", "totals"): "per-part-key totals",
     ("scale.py", "med"): "per-part-key exact median (MAD helper)",
     # --- the named demo exception (also allowlisted by the test above) ---
     ("relational.py", "part"):

@@ -123,7 +123,7 @@ def test_mixed_case_database_survives_catalog_death(spark):
     recomputing — the exact drift the probe demonstrated."""
     from pyspark.sql import functions as F
 
-    from dbfs_spark_cache_spark import core, fs, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, fs, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config, reconfigure
 
     old_db, old_test = config.CACHE_DATABASE, config.CACHE_DATABASE_TEST
@@ -136,7 +136,7 @@ def test_mixed_case_database_survives_catalog_death(spark):
         )
         write_cache(df)
         h = core.resolve_table_hash(df)
-        loc = core._table_location(spark, h)
+        loc = layout.table_location(spark, h)
         assert fs.exists(loc), "location must agree with the catalog's dir"
         assert fs.exists(f"{loc.rstrip('/')}/_SUCCESS")
         # simulate a catalog death with surviving files (managed-table

@@ -113,13 +113,13 @@ def test_path_fallback_refuses_uncommitted_dir(extended):
     rewrite overwrite). The path fallback must report a clean miss —
     serving the partial part-files as a valid hit is the silent-wrong-
     data class. Restoring the marker restores the hit."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
     df = _agg_query(extended)
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
 
     # survive a catalog death so the probe must use the path fallback
     stash = tempfile.mkdtemp(prefix="crossproc_stash_")
@@ -176,13 +176,13 @@ def test_child_process_write_served_by_parent_path_fallback(spark, tmp_path):
     must serve the hit via the path fallback — committed marker present,
     values exact. The two sessions share nothing but the filesystem,
     which is the DBFS layout the engine documents."""
-    from dbfs_spark_cache_spark import core, fs, read_cache_if_exist
+    from dbfs_spark_cache_spark import core, layout, fs, read_cache_if_exist
     from dbfs_spark_cache_spark.config import config
 
     shared_cache = str(tmp_path / "shared_cache") + "/"
     child_db = "crossproc_child_db"
     # the child gets its OWN warehouse (embedded catalogs don't share),
-    # but _table_location derives from the SESSION's warehouse conf — so
+    # but layout.table_location derives from the SESSION's warehouse conf — so
     # point the parent probe at the child's warehouse via the location
     # the child actually wrote. To keep the probe honest we give both
     # the SAME warehouse dir: the parent's catalog still has no entry
@@ -209,7 +209,7 @@ def test_child_process_write_served_by_parent_path_fallback(spark, tmp_path):
         config.CACHE_DATABASE = child_db
         df = _agg_query(spark)
         h = core.resolve_table_hash(df)
-        loc = core._table_location(spark, h)
+        loc = layout.table_location(spark, h)
         assert fs.exists(f"{loc.rstrip('/')}/_SUCCESS"), (
             "child's committed write must carry the job-commit marker"
         )

@@ -299,7 +299,7 @@ def test_success_guard_gated_on_committer_conf(extended):
     flipped the reader's conf instead, which let a markerless READER
     skip the guard for marker-written dirs). The default-conf guard half
     stays pinned by the r14 crossproc test."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
     df = (
@@ -314,7 +314,7 @@ def test_success_guard_gated_on_committer_conf(extended):
         hconf.set(key, "false")  # the WRITER session's committer conf
         write_cache(df)
         h = core.resolve_table_hash(df)
-        loc = core._table_location(extended, h).replace("file:", "")
+        loc = layout.table_location(extended, h).replace("file:", "")
 
         # survive a catalog death so the probe must use the path fallback
         stash = tempfile.mkdtemp(prefix="confgate_stash_")

@@ -190,14 +190,14 @@ def test_half_written_data_dir_recomputes_never_partial(extended):
     after its partial cleanup). The path fallback must refuse the
     partial dir; write_cache must rewrite and heal to the FULL row
     count — never serve the partial rows as a hit."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
     df = _agg_query(extended)
     expected = df.count()
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
 
     # survive a catalog death so the probe must use the path fallback
     # (managed DROP deletes the files — stash and restore them)

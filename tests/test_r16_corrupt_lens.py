@@ -58,11 +58,11 @@ def _multi_part_agg(extended):
 
 
 def _entry(extended, df):
-    from dbfs_spark_cache_spark import core, write_cache
+    from dbfs_spark_cache_spark import core, layout, write_cache
 
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
     return h, loc
 
 
@@ -136,12 +136,12 @@ def test_same_size_corruption_fails_loudly(extended):
 def test_pre_inventory_entry_unaffected(extended):
     """Entries written before the inventory record existed keep serving
     (back-compat): absence of the record skips the check entirely."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist
 
     df = _multi_part_agg(extended).withColumn("probe", F.lit("legacy"))
     expected = df.count()
     h, loc = _entry(extended, df)
-    os.remove(core._inventory_sidecar_path(h).replace("file:", ""))
+    os.remove(layout.inventory_path(layout.sidecar_dir(h)).replace("file:", ""))
     served = read_cache_if_exist(df)
     assert served is not None and served.count() == expected
 

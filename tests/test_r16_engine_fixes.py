@@ -267,12 +267,12 @@ def _cached_agg(extended):
 def _path_only_entry(extended, df):
     """Write df through the engine, then kill the catalog entry so reads
     must take the path fallback. Returns (hash, location)."""
-    from dbfs_spark_cache_spark import core, write_cache
+    from dbfs_spark_cache_spark import core, layout, write_cache
     from dbfs_spark_cache_spark.config import config
 
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
     stash = tempfile.mkdtemp(prefix="wcommit_stash_")
     shutil.copytree(loc, f"{stash}/data")
     extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{h}")
@@ -287,11 +287,11 @@ def test_writer_record_closes_markerless_reader_quadrant(extended):
     a marksuccessfuljobs=false READER while its _SUCCESS is missing
     (mid-rewrite in another process). The recorded writer discipline
     must keep the torn-write guard ON — a miss, never partial rows."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist
 
     df = _cached_agg(extended)
     h, loc = _path_only_entry(extended, df)
-    record = core.fs.read_text(core._committer_sidecar_path(h))
+    record = core.fs.read_text(layout.committer_path(layout.sidecar_dir(h)))
     assert record is not None and record.endswith("true")
 
     os.remove(f"{loc}/_SUCCESS")  # another process's rewrite in flight
@@ -315,11 +315,11 @@ def test_pre_recording_entries_fall_back_to_reader_conf(extended):
     """Entries written before the writer record existed (no
     writer_committer.txt): the guard keeps the r15 reader-conf gate —
     behavior for old caches is unchanged."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist
 
     df = _cached_agg(extended)
     h, loc = _path_only_entry(extended, df)
-    os.remove(core._committer_sidecar_path(h).replace("file:", ""))
+    os.remove(layout.committer_path(layout.sidecar_dir(h)).replace("file:", ""))
     os.remove(f"{loc}/_SUCCESS")
 
     hconf = extended.sparkContext._jsc.hadoopConfiguration()

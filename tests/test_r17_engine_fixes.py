@@ -65,7 +65,7 @@ def test_custom_base_sidecars_recorded_beside_custom_metadata(
 ):
     """The writer's committer + inventory records land under the custom
     base (beside the metadata sidecar), not under SPARK_CACHE_DIR."""
-    from dbfs_spark_cache_spark import core, write_cache
+    from dbfs_spark_cache_spark import core, layout, write_cache
     from dbfs_spark_cache_spark.config import config
 
     base = f"{tmp_path}/custom_cache/"
@@ -73,25 +73,25 @@ def test_custom_base_sidecars_recorded_beside_custom_metadata(
     write_cache(df, cache_path=base)
     h = core.resolve_table_hash(df)
 
-    assert os.path.exists(f"{base}{h}/{core._COMMITTER_SIDECAR}")
-    assert os.path.exists(f"{base}{h}/{core._INVENTORY_SIDECAR}")
+    assert os.path.exists(f"{base}{h}/{layout.COMMITTER_FILE}")
+    assert os.path.exists(f"{base}{h}/{layout.INVENTORY_FILE}")
     default_dir = f"{config.SPARK_CACHE_DIR}{h}"
-    assert not os.path.exists(f"{default_dir}/{core._COMMITTER_SIDECAR}")
-    assert not os.path.exists(f"{default_dir}/{core._INVENTORY_SIDECAR}")
+    assert not os.path.exists(f"{default_dir}/{layout.COMMITTER_FILE}")
+    assert not os.path.exists(f"{default_dir}/{layout.INVENTORY_FILE}")
 
 
 def test_custom_base_inventory_guard_fires(extended, tmp_path):
     """The r16 corrupt-entry guard must protect custom-base entries: a
     part file deleted after commit degrades to a clean miss, never a
     partial hit; a rewrite through the same base heals in place."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
 
     base = f"{tmp_path}/custom_cache/"
     df = _multi_part_df(extended, "inventory")
     expected = df.count()
     write_cache(df, cache_path=base)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
     parts = _parts(loc)
     assert len(parts) >= 2
 
@@ -115,7 +115,7 @@ def test_custom_base_writer_committer_record_is_read(extended, tmp_path):
     keep serving through the path fallback with no _SUCCESS marker. The
     pre-fix probe missed the custom-base sidecar and fell back to this
     reader's conf (marker-writing in local tests) — a spurious miss."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark import fs
 
     base = f"{tmp_path}/custom_cache/"
@@ -123,13 +123,13 @@ def test_custom_base_writer_committer_record_is_read(extended, tmp_path):
     expected = df.count()
     write_cache(df, cache_path=base)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
 
     # Simulate a markerless-committer writer + a later session: rewrite
     # the record, drop the catalog entry (in-memory catalog death — the
     # managed-table files are snapshotted around the DROP, which deletes
     # them), and strip the marker the committer would not have written.
-    fs.write_text(f"{base}{h}/{core._COMMITTER_SIDECAR}",
+    fs.write_text(f"{base}{h}/{layout.COMMITTER_FILE}",
                   "marks_success_jobs=false")
     snapshot = f"{tmp_path}/loc_snapshot"
     shutil.copytree(loc, snapshot)
@@ -150,15 +150,15 @@ def test_default_base_guards_unchanged(extended):
     """Regression guard: the default-base probes still find their
     sidecars (the r16 lens tests cover the full behavior; this pins that
     the r17 signature change kept the default path identical)."""
-    from dbfs_spark_cache_spark import core, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
 
     df = _multi_part_df(extended, "default")
     expected = df.count()
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
     assert os.path.exists(
-        core._inventory_sidecar_path(h).replace("file:", "")
+        layout.inventory_path(layout.sidecar_dir(h)).replace("file:", "")
     )
     served = read_cache_if_exist(df)
     assert served is not None and served.count() == expected

@@ -334,7 +334,7 @@ def test_stats_and_scans_tolerate_entry_vanishing_between_phases(extended):
     / None verdict / False eviction result), never a crash."""
     import shutil
 
-    from dbfs_spark_cache_spark import core, write_cache
+    from dbfs_spark_cache_spark import core, layout, write_cache
     from dbfs_spark_cache_spark import management as mgmt
     from dbfs_spark_cache_spark.config import config
 
@@ -343,7 +343,7 @@ def test_stats_and_scans_tolerate_entry_vanishing_between_phases(extended):
     h = core.resolve_table_hash(df)
 
     # Phase gap simulated directly: the helpers each entry goes through.
-    loc = core._table_location(extended, h).replace("file:", "")
+    loc = layout.table_location(extended, h).replace("file:", "")
     extended.sql(f"DROP TABLE IF EXISTS {core.table_name_for_hash(h)}")
     shutil.rmtree(loc, ignore_errors=True)
     shutil.rmtree(f"{config.SPARK_CACHE_DIR}{h}", ignore_errors=True)

@@ -103,7 +103,7 @@ def test_find_corrupt_entries_covers_custom_bases(spark, tmp_path, monkeypatch):
     """A corrupt custom-cache_path entry is invisible to the default
     registry walk but flagged once its base is passed via extra_bases —
     the ADVICE r17 #3 operator-signal gap."""
-    from dbfs_spark_cache_spark import config, core, management
+    from dbfs_spark_cache_spark import config, core, layout, management
 
     default_base = str(tmp_path / "default_cache") + "/"
     custom_base = str(tmp_path / "custom_cache")
@@ -118,7 +118,7 @@ def test_find_corrupt_entries_covers_custom_bases(spark, tmp_path, monkeypatch):
     loc = tmp_path / "warehouse" / h
     loc.mkdir(parents=True)
     monkeypatch.setattr(
-        core, "_table_location", lambda _spark, _h: str(loc)
+        layout, "table_location", lambda _spark, _h: str(loc)
     )
 
     assert management.find_corrupt_entries(spark) == []
