@@ -1,9 +1,13 @@
 """Cache lifecycle: registry, age-based eviction, consistency repair.
 
 Same surface as the reference (reference: dbfs_spark_cache/cache_management.py:
-28-379) on top of the Spark catalog + the engine's FS layer. Registry scans
-fan out over a driver-side thread pool — these are metadata calls (DESCRIBE /
-LIST), so threads, not Spark jobs, are the right tool even on a big cluster.
+28-379) on top of the Spark catalog + the engine's FS layer. The catalog
+registry is one listing plus one batched metadata fetch from the session
+catalog, whatever the entry count; only a catalog the session-catalog API
+cannot serve falls back to SHOW TABLES plus one DESCRIBE per entry. The
+per-entry scans (DESCRIBE fallback, sidecar and warehouse listings) fan out
+over a driver-side thread pool — metadata calls, so threads, not Spark jobs,
+are the right tool even on a big cluster.
 """
 from __future__ import annotations
 
@@ -15,6 +19,7 @@ from datetime import timedelta
 from typing import List, Optional
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from . import fs, layout
@@ -75,14 +80,75 @@ def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
 def get_tables_from_database(
     spark: SparkSession, database: Optional[str] = None, num_threads: Optional[int] = None
 ) -> pd.DataFrame:
-    """Registry frame of live cache tables via SHOW TABLES + table detail."""
+    """Registry frame of the live (non-temporary) tables in ``database``
+    (default: the configured cache database).
+
+    Read with one session-catalog listing and one batched metadata fetch,
+    whatever the entry count (:func:`_catalog_rows`). When
+    that read raises (a catalog the JVM session-catalog API does not
+    serve), the frame comes from SHOW TABLES plus one DESCRIBE per entry
+    (:func:`_described_rows`) instead; both give the same rows in the same
+    order. ``num_threads`` sizes that fallback's DESCRIBE pool."""
     db = database or config.CACHE_DATABASE
+    try:
+        rows = _catalog_rows(spark, db)
+    except Exception as exc:
+        log.debug("Batched catalog read of %s failed (%s); using DESCRIBE",
+                  db, exc.__class__.__name__)
+        rows = _described_rows(spark, db, num_threads)
+    if not rows:
+        return empty_registry()
+    return pd.DataFrame(rows, columns=REGISTRY_COLUMNS)
+
+
+def _catalog_rows(spark: SparkSession, db: str) -> List[dict]:
+    """Registry rows of ``db`` from the JVM session catalog: ``listTables``
+    (the SHOW TABLES set without temp views), then ``getTablesByName`` for
+    all of them at once. A table dropped between the two calls is skipped.
+    Rows keep the listing's order, which the batched fetch of some
+    catalogs does not preserve. The Scala sequences are read by index
+    (as IndexedSeq, so each read is O(1)): iterating their py4j list views
+    costs several round trips per item."""
+    jcat = spark._jsparkSession.sessionState().catalog()
+    uri_to_string = (
+        spark._jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.URIToString
+    )
+    idents = jcat.listTables(db, "*", False).toIndexedSeq()
+    order = {idents.apply(i).table(): i for i in range(idents.length())}
+    tables = jcat.getTablesByName(idents).toIndexedSeq()
+    rows = []
+    for i in range(tables.length()):
+        table = tables.apply(i)
+        name = table.identifier().table()
+        try:
+            # The string DESCRIBE prints as "Location"; the URI's own
+            # toString() percent-encodes (a space reads %20).
+            location = uri_to_string(table.location())
+        except AnalysisException:  # a view has no location
+            location = ""
+        rows.append(
+            {
+                "table_name": f"{db}.{name}",
+                "hash_name": name,
+                "directory_path": location,
+                "creationTime": pd.to_datetime(int(table.createTime()), unit="ms"),
+            }
+        )
+    return sorted(rows, key=lambda row: order[row["hash_name"]])
+
+
+def _described_rows(
+    spark: SparkSession, db: str, num_threads: Optional[int]
+) -> List[dict]:
+    """Registry rows of ``db`` via SHOW TABLES plus one DESCRIBE TABLE
+    EXTENDED per entry: the path for catalogs the session-catalog API does
+    not serve. An entry whose DESCRIBE fails is skipped."""
     try:
         tables = spark.sql(f"SHOW TABLES IN {db}").filter("isTemporary = false")
         names = [row.tableName for row in tables.collect()]
     except Exception as exc:
         log.warning("Could not list tables in %s: %s", db, exc)
-        return empty_registry()
+        return []
 
     def describe(name: str) -> Optional[dict]:
         try:
@@ -102,10 +168,7 @@ def get_tables_from_database(
             return None
 
     with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        rows = [r for r in pool.map(describe, names) if r is not None]
-    if not rows:
-        return empty_registry()
-    return pd.DataFrame(rows, columns=REGISTRY_COLUMNS)
+        return [r for r in pool.map(describe, names) if r is not None]
 
 
 def get_cached_tables(

@@ -124,8 +124,13 @@ def test_cli_refuses_unscoped_destructive_stages(
 ):
     """--size-budget-bytes / --repair-inconsistent act on the CONFIGURED
     database; under --database they must refuse instead of silently
-    deleting from the namespace the operator scoped away from."""
-    from dbfs_spark_cache_spark import maintenance_cli, write_cache
+    deleting from the namespace the operator scoped away from.
+
+    The scoped stages (the --database count and
+    ``clear_caches_older_than(specific_database=...)``) read the scoped
+    registry through the batched catalog read: the DESCRIBE fallback is
+    made to fail, and both still see the scoped entry."""
+    from dbfs_spark_cache_spark import maintenance_cli, management, write_cache
     from dbfs_spark_cache_spark.config import config
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
@@ -141,7 +146,13 @@ def test_cli_refuses_unscoped_destructive_stages(
         session_mod, "get_spark", lambda **kw: _NoStopSession(spark)
     )
     spark.sql("CREATE DATABASE IF NOT EXISTS cli_scoped_db")
+
+    def no_fallback(*args, **kwargs):
+        raise AssertionError("scoped scan fell back to DESCRIBE")
+
+    monkeypatch.setattr(management, "_described_rows", no_fallback)
     try:
+        spark.range(1).write.saveAsTable("cli_scoped_db.scoped_entry")
         monkeypatch.setattr(
             sys,
             "argv",
@@ -153,13 +164,20 @@ def test_cli_refuses_unscoped_destructive_stages(
                 "--repair-inconsistent", "--force",
             ],
         )
-        with caplog.at_level(logging.WARNING):
+        with caplog.at_level(logging.INFO):
             # exit 2, not 0: the refused stages must be DETECTABLE by a
             # cron operator (ADVICE r8 #2) — success would hide the skip
             assert maintenance_cli.main() == 2
         assert any("do not honor --database" in r.message for r in caplog.records)
+        messages = [r.getMessage() for r in caplog.records]
+        for when in ("before", "after"):
+            assert f"1 catalog tables in cli_scoped_db {when} maintenance" in messages
         # the configured namespace survives untouched
         assert default_db_tables.count() == 1
+        assert management.clear_caches_older_than(
+            spark, num_days=0, specific_database="cli_scoped_db",
+            confirm_delete=False,
+        ) == ["scoped_entry"]
     finally:
         spark.sql("DROP DATABASE IF EXISTS cli_scoped_db CASCADE")
 
