@@ -49,9 +49,6 @@ class Settings:
     CACHE_DATABASE: str = field(
         default_factory=lambda: _env_str("CACHE_DATABASE", "spark_cache_db")
     )
-    CACHE_DATABASE_TEST: str = field(
-        default_factory=lambda: _env_str("CACHE_DATABASE_TEST", "")
-    )
     # Warehouse base path (where the metastore puts managed tables).
     DATABASE_PATH: str = field(
         default_factory=lambda: _env_str("DATABASE_PATH", "/tmp/spark_warehouse/")
@@ -93,29 +90,17 @@ class Settings:
         # size-budget eviction undercounts to zero. Normalize once, here,
         # to the catalog's canonical form so every consumer agrees.
         self.CACHE_DATABASE = self.CACHE_DATABASE.lower()
-        self.CACHE_DATABASE_TEST = self.CACHE_DATABASE_TEST.lower()
-        if not self.CACHE_DATABASE_TEST:
-            self.CACHE_DATABASE_TEST = f"{self.CACHE_DATABASE}_test"
 
 
 config = Settings()
 
 
 def reconfigure(**overrides) -> Settings:
-    """Replace fields on the global settings object (used by tests)."""
+    """Replace fields on the global settings object (used by tests), then
+    re-apply the normalization every new :class:`Settings` gets."""
     for key, value in overrides.items():
         if not hasattr(config, key):
             raise AttributeError(f"Unknown setting: {key}")
         setattr(config, key, value)
-    if not config.SPARK_CACHE_DIR.endswith("/"):
-        config.SPARK_CACHE_DIR += "/"
-    # Same catalog-case normalization as __post_init__ (see the drift
-    # note there): the canonical lowercase form is what the catalog,
-    # the warehouse paths, and the plan regexes all agree on.
-    config.CACHE_DATABASE = config.CACHE_DATABASE.lower()
-    config.CACHE_DATABASE_TEST = config.CACHE_DATABASE_TEST.lower()
-    # Keep the derived test-database name in sync with a CACHE_DATABASE
-    # override (mirrors __post_init__), unless the caller set it explicitly.
-    if "CACHE_DATABASE" in overrides and "CACHE_DATABASE_TEST" not in overrides:
-        config.CACHE_DATABASE_TEST = f"{config.CACHE_DATABASE}_test"
+    config.__post_init__()
     return config

@@ -285,20 +285,16 @@ def _read_cache_table(
     # hit through EITHER branch (a parquet scan of a directory missing
     # files succeeds silently). Refuse and let the caller recompute; the
     # rewrite re-records a fresh inventory. One driver-side recursive
-    # listing per hit, only for entries carrying a record.
-    try:
-        if layout.inventory_ok(spark, hash_name, sidecars) is False:
-            log.warning(
-                "Cache entry %s fails its data-file inventory (part files "
-                "lost or altered after commit — partial restore / copy "
-                "truncation?); treating as a miss", hash_name,
-            )
-            return None
-    except Exception as exc:
-        # The guard is best-effort: a listing failure must not turn a
-        # readable cache into a crash.
-        log.warning("Inventory check failed for %s (%s); proceeding",
-                    hash_name, exc_summary(exc))
+    # listing per hit, only for entries carrying a record; a failed
+    # listing reads None, so the guard never turns a readable cache into
+    # a crash.
+    if layout.inventory_ok(spark, hash_name, sidecars) is False:
+        log.warning(
+            "Cache entry %s fails its data-file inventory (part files "
+            "lost or altered after commit — partial restore / copy "
+            "truncation?); treating as a miss", hash_name,
+        )
+        return None
     if _table_exists(spark, table):
         try:
             return spark.read.table(table)

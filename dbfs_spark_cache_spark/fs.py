@@ -17,7 +17,7 @@ import os
 import shutil
 from dataclasses import dataclass
 from datetime import datetime
-from typing import List, Optional
+from typing import Iterator, List, Optional
 
 
 @dataclass
@@ -137,21 +137,27 @@ def file_size(path: str) -> Optional[int]:
         return None
 
 
-def tree_size(path: str) -> int:
-    """Total bytes of every file under ``path``, recursing into
-    subdirectories (partitioned/bucketed cache tables nest their data
-    files; a shallow listing under-reports them). Built on
-    :func:`list_dir`, so it works on local and Hadoop-scheme paths alike.
-    """
-    total = 0
+def _walk_files(path: str, skip_hidden: bool = False) -> Iterator[FileStat]:
+    """Every file under ``path``, recursing into subdirectories with one
+    :func:`list_dir` per directory, so it works on local and Hadoop-scheme
+    paths alike. ``skip_hidden`` prunes entries named ``_*`` or ``.*``
+    (files and whole subtrees)."""
     stack = [path]
     while stack:
         for stat in list_dir(stack.pop()):
+            if skip_hidden and stat.name.startswith(("_", ".")):
+                continue
             if stat.is_dir:
                 stack.append(stat.path)
             else:
-                total += stat.size
-    return total
+                yield stat
+
+
+def tree_size(path: str) -> int:
+    """Total bytes of every file under ``path``, recursing into
+    subdirectories (partitioned/bucketed cache tables nest their data
+    files; a shallow listing under-reports them)."""
+    return sum(stat.size for stat in _walk_files(path))
 
 
 def data_file_inventory(path: str) -> tuple:
@@ -161,18 +167,8 @@ def data_file_inventory(path: str) -> tuple:
     are bookkeeping, not data, and are excluded — so the inventory is
     stable across committer/marker differences and changes only when
     data files are lost, truncated, or altered."""
-    files, total = 0, 0
-    stack = [path]
-    while stack:
-        for stat in list_dir(stack.pop()):
-            if stat.name.startswith(("_", ".")):
-                continue
-            if stat.is_dir:
-                stack.append(stat.path)
-            else:
-                files += 1
-                total += stat.size
-    return files, total
+    sizes = [stat.size for stat in _walk_files(path, skip_hidden=True)]
+    return len(sizes), sum(sizes)
 
 
 def render_inventory(files: int, total: int) -> str:

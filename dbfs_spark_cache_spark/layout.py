@@ -20,6 +20,7 @@ orphans every existing entry.
 """
 from __future__ import annotations
 
+import logging
 import re
 from typing import List, Optional
 
@@ -29,6 +30,8 @@ from .config import config
 METADATA_FILE = "cache_metadata.txt"
 COMMITTER_FILE = "writer_committer.txt"
 INVENTORY_FILE = "data_inventory.txt"
+
+log = logging.getLogger(__name__)
 
 
 def table_name_for_hash(hash_name: str) -> str:
@@ -80,14 +83,21 @@ def inventory_ok(spark, hash_name: str, sidecars: Optional[str] = None) -> Optio
     """Does the entry's live data listing match its recorded inventory?
     None when there is nothing to compare: no (parseable) record, no data
     location, or a transactional table. False means data files were lost or
-    altered after commit. Listing errors propagate."""
-    recorded = fs.read_text(inventory_path(sidecars or sidecar_dir(hash_name)))
-    if recorded is None:
+    altered after commit. A failed listing is no finding either: it is
+    logged and reads None, so neither the read path nor an operator scan
+    fails on it."""
+    try:
+        recorded = fs.read_text(inventory_path(sidecars or sidecar_dir(hash_name)))
+        if recorded is None:
+            return None
+        location = table_location(spark, hash_name)
+        if not fs.exists(location) or is_transactional(location):
+            return None
+        return fs.inventory_matches(location, recorded)
+    except Exception as exc:
+        log.warning("Inventory check failed for %s (%s: %s)", hash_name,
+                    exc.__class__.__name__, exc)
         return None
-    location = table_location(spark, hash_name)
-    if not fs.exists(location) or is_transactional(location):
-        return None
-    return fs.inventory_matches(location, recorded)
 
 
 def cached_input_patterns() -> List["re.Pattern[str]"]:

@@ -1,22 +1,27 @@
 """Cache lifecycle: registry, age-based eviction, consistency repair.
 
 Same surface as the reference (reference: dbfs_spark_cache/cache_management.py:
-28-379) on top of the Spark catalog + the engine's FS layer. The catalog
-registry is one listing plus one batched metadata fetch from the session
-catalog, whatever the entry count; only a catalog the session-catalog API
-cannot serve falls back to SHOW TABLES plus one DESCRIBE per entry. The
-per-entry scans (DESCRIBE fallback, sidecar and warehouse listings) fan out
-over a driver-side thread pool — metadata calls, so threads, not Spark jobs,
-are the right tool even on a big cluster.
+28-379) on top of the Spark catalog + the engine's FS layer. An entry is
+known to two registries: the sidecar registry (one walk over a sidecar base,
+:func:`_sidecar_entries`) and the catalog registry, which is one listing plus
+one batched metadata fetch from the session catalog, whatever the entry
+count; only a catalog the session-catalog API cannot serve falls back to
+SHOW TABLES plus one DESCRIBE per entry. Scans that join the two read them
+in one place (:func:`_registries`), and every eviction goes through
+:func:`_evict`, which reports only what was actually evicted. Per-entry work
+(DESCRIBE fallback, sidecar listings, sizes, inventories, evictions) fans
+out over a driver-side thread pool (:func:`_pmap`) — metadata calls, so
+threads, not Spark jobs, are the right tool even on a big cluster.
 """
 from __future__ import annotations
 
 import logging
 import os
+import re
 import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import timedelta
-from typing import List, Optional
+from typing import Callable, Iterable, List, Optional
 
 import pandas as pd
 from pyspark.errors import AnalysisException
@@ -29,13 +34,20 @@ log = logging.getLogger(__name__)
 
 REGISTRY_COLUMNS = ["table_name", "hash_name", "directory_path", "creationTime"]
 
+# java.util.Date.toString, the shape DESCRIBE renders 'Created Time' in:
+# "Fri Aug 15 05:00:00 PST 2025" (wall time, zone abbreviation, year).
+_JAVA_DATE = re.compile(r"(\w{3} \w{3} \d{2} \d{2}:\d{2}:\d{2}) \S+ (\d{4})")
+
 
 def empty_registry() -> pd.DataFrame:
     return pd.DataFrame(columns=REGISTRY_COLUMNS)
 
 
-def _default_threads(num_threads: Optional[int]) -> int:
-    return num_threads or (os.cpu_count() or 4) * 4
+def _pmap(fn: Callable, items: Iterable, num_threads: Optional[int]) -> list:
+    """``list(map(fn, items))`` on a driver-side thread pool of
+    ``num_threads`` workers (default: 4 per CPU)."""
+    with ThreadPoolExecutor(max_workers=num_threads or (os.cpu_count() or 4) * 4) as pool:
+        return list(pool.map(fn, items))
 
 
 def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
@@ -50,10 +62,11 @@ def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
     Fallback (catalog API unavailable): parse DESCRIBE's rendered 'Created
     Time'. The rendering is local wall time in the driver JVM's DEFAULT
     zone, so (a) a tz-aware parse must tz_convert('UTC') BEFORE stripping
-    — bare tz_localize(None) keeps the source wall time; and (b) a naive
-    parse means pandas silently dropped an unrecognized zone abbreviation
-    (e.g. 'PST'), leaving JVM-local wall time — localize it from the JVM's
-    default zone id (full id, so DST resolves correctly), then convert.
+    — bare tz_localize(None) keeps the source wall time; and (b) the
+    ``Date.toString`` shape's zone abbreviation (e.g. 'PST') is ambiguous
+    and not parseable, so it is dropped and the wall time localized from
+    the JVM's default zone id (full id, so DST resolves correctly), then
+    converted.
     """
     try:
         jcat = spark._jsparkSession.sessionState().catalog()
@@ -66,6 +79,9 @@ def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
     except Exception:
         pass
     try:
+        java_date = _JAVA_DATE.fullmatch(rendered.strip())
+        if java_date:
+            rendered = " ".join(java_date.groups())
         creation_time = pd.to_datetime(rendered)
         if getattr(creation_time, "tzinfo", None) is not None:
             return creation_time.tz_convert("UTC").tz_localize(None)
@@ -167,8 +183,7 @@ def _described_rows(
             log.warning("DESCRIBE failed for %s.%s: %s", db, name, exc)
             return None
 
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        return [r for r in pool.map(describe, names) if r is not None]
+    return [r for r in _pmap(describe, names, num_threads) if r is not None]
 
 
 def get_cached_tables(
@@ -204,26 +219,38 @@ def _tables_from_warehouse_listing(spark: SparkSession) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=REGISTRY_COLUMNS)
 
 
+def _sidecar_entries(base: str, num_threads: Optional[int] = None) -> List[tuple]:
+    """(hash_name, sidecar_dir, metadata FileStat) of each cache entry under
+    a sidecar base — the layout every base uses, default or custom
+    ``cache_path`` (``layout.sidecar_dir``): a directory holding a metadata
+    file. One listing of the base, then one listing per directory, in
+    parallel. A missing/empty base, or a directory gone before its listing
+    (a concurrent eviction), yields nothing (``fs.list_dir`` ENOENT
+    contract)."""
+
+    def inspect(entry: fs.FileStat) -> Optional[tuple]:
+        for stat in fs.list_dir(entry.path):
+            if stat.name == layout.METADATA_FILE:
+                return entry.name, entry.path.rstrip("/"), stat
+        return None
+
+    dirs = [s for s in fs.list_dir(base) if s.is_dir]
+    return [e for e in _pmap(inspect, dirs, num_threads) if e is not None]
+
+
 def get_cached_dataframe_metadata(num_threads: Optional[int] = None) -> pd.DataFrame:
     """Registry frame built from metadata sidecars under SPARK_CACHE_DIR."""
-    base = config.SPARK_CACHE_DIR
-    entries = [s for s in fs.list_dir(base) if s.is_dir]
-
-    def inspect(entry: fs.FileStat) -> Optional[dict]:
-        stats = [
-            s for s in fs.list_dir(entry.path) if s.name == layout.METADATA_FILE
-        ]
-        if not stats:
-            return None
-        return {
-            "table_name": layout.table_name_for_hash(entry.name),
-            "hash_name": entry.name,
-            "directory_path": layout.metadata_path(entry.path),
-            "creationTime": fs._utc_naive(stats[0].mtime_ms / 1000),
+    rows = [
+        {
+            "table_name": layout.table_name_for_hash(hash_name),
+            "hash_name": hash_name,
+            "directory_path": layout.metadata_path(sidecars),
+            "creationTime": fs._utc_naive(stat.mtime_ms / 1000),
         }
-
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        rows = [r for r in pool.map(inspect, entries) if r is not None]
+        for hash_name, sidecars, stat in _sidecar_entries(
+            config.SPARK_CACHE_DIR, num_threads
+        )
+    ]
     if not rows:
         return empty_registry()
     return (
@@ -231,6 +258,16 @@ def get_cached_dataframe_metadata(num_threads: Optional[int] = None) -> pd.DataF
         .sort_values("creationTime")
         .reset_index(drop=True)
     )
+
+
+def _registries(spark: SparkSession, num_threads: Optional[int]) -> tuple:
+    """(sidecar registry, catalog registry, sidecar hashes, catalog hashes):
+    what every scan joining the two registries reads. The catalog side
+    includes the warehouse-listing fallback, so an empty catalog doesn't
+    masquerade as "no tables"."""
+    meta = get_cached_dataframe_metadata(num_threads=num_threads)
+    tables = get_cached_tables(spark, num_threads=num_threads)
+    return meta, tables, set(meta["hash_name"]), set(tables["hash_name"])
 
 
 def clear_cache_for_hash(
@@ -308,6 +345,27 @@ def _clear_cache_for_hash_locked(
     return True
 
 
+def _evict(
+    spark: SparkSession,
+    hashes: List[str],
+    num_threads: Optional[int],
+    database: Optional[str] = None,
+) -> List[str]:
+    """Evict ``hashes`` in parallel and return, in order, only those
+    :func:`clear_cache_for_hash` reports as evicted: a DROP-failure skip
+    (entry left live for a later retry) must not be reported as freed."""
+    results = _pmap(
+        lambda h: clear_cache_for_hash(spark, h, database=database),
+        hashes,
+        num_threads,
+    )
+    evicted = [h for h, ok in zip(hashes, results) if ok]
+    if len(evicted) < len(hashes):
+        log.warning("%d entries skipped (DROP failed, still live)",
+                    len(hashes) - len(evicted))
+    return evicted
+
+
 def clear_caches_older_than(
     spark: SparkSession,
     num_days: int = 7,
@@ -326,35 +384,17 @@ def clear_caches_older_than(
         )
     else:
         registry = get_cached_dataframe_metadata(num_threads=num_threads)
-    if registry.empty:
-        return []
     # UTC-naive, matching every registry creationTime (catalog times are
     # tz-stripped UTC, sidecar/warehouse mtimes render via fs._utc_naive):
     # a local-naive now() on a non-UTC driver skewed the age cutoff by the
     # UTC offset (up to 14h on a 7-day policy) and only against the
     # CATALOG-sourced registry — the two sources disagreed about "old".
     cutoff = fs._utc_naive(time.time()) - timedelta(days=num_days)
-    stale = registry[registry["creationTime"] < cutoff]
-    hashes = list(stale["hash_name"])
+    hashes = list(registry.loc[registry["creationTime"] < cutoff, "hash_name"])
     if not confirm_delete:
         log.info("Dry run: would evict %d entries", len(hashes))
         return hashes
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        results = list(
-            pool.map(
-                lambda h: clear_cache_for_hash(
-                    spark, h, database=specific_database
-                ),
-                hashes,
-            )
-        )
-    # Only what was ACTUALLY evicted: a DROP-failure skip (entry left
-    # live for a later retry) must not be reported as freed.
-    evicted = [h for h, ok in zip(hashes, results) if ok]
-    skipped = len(hashes) - len(evicted)
-    if skipped:
-        log.warning("%d entries skipped (DROP failed, still live)", skipped)
-    return evicted
+    return _evict(spark, hashes, num_threads, database=specific_database)
 
 
 def clear_inconsistent_cache(
@@ -364,7 +404,9 @@ def clear_inconsistent_cache(
     force: bool = False,
 ) -> List[str]:
     """Remove half-present entries: metadata without a table, or a table
-    without metadata (reference: cache_management.py:229-288).
+    without metadata (reference: cache_management.py:229-288). Evicts
+    exactly what :func:`find_inconsistent_entries` returns, so a preview
+    and a run agree by construction; returns the evicted hashes.
 
     Safety rails (bypass with ``force=True`` after manual inspection):
 
@@ -376,60 +418,10 @@ def clear_inconsistent_cache(
       while the warehouse still holds valid tables; "repairing" would delete
       every valid entry on both sides.
     """
-    meta = get_cached_dataframe_metadata(num_threads=num_threads)
-    # Include the warehouse-listing fallback so an empty catalog doesn't
-    # masquerade as "no tables".
-    tables = get_cached_tables(spark, num_threads=num_threads)
-    orphans, refusal = _repair_candidates(meta, tables, min_overlap, force)
-    if refusal:
-        log.warning("clear_inconsistent_cache: %s", refusal)
-        return []
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        results = list(pool.map(lambda h: clear_cache_for_hash(spark, h), orphans))
-    return [h for h, ok in zip(orphans, results) if ok]
-
-
-def _repair_candidates(
-    meta: pd.DataFrame,
-    tables: pd.DataFrame,
-    min_overlap: float,
-    force: bool,
-):
-    """(orphans, refusal_reason) with the safety rails applied — ONE
-    decision shared by the real repair and the --dry-run preview, so the
-    preview can never report a mass-delete the actual run would refuse
-    (previewing "would repair 500 entries" in a refused state both
-    misrepresents the run and nudges an operator straight to --force)."""
-    if not force and meta.empty != tables.empty:
-        return [], (
-            f"one registry is empty (metadata={len(meta)}, "
-            f"tables={len(tables)}) — refusing to mass-delete; check "
-            "catalog/cache-dir visibility (or pass force=True)"
-        )
-    if not force and not meta.empty and not tables.empty:
-        overlap = len(
-            set(meta["hash_name"]).intersection(tables["hash_name"])
-        ) / max(len(meta), len(tables))
-        if overlap < min_overlap:
-            return [], (
-                f"registries overlap on only {overlap:.0%} of entries "
-                f"(metadata={len(meta)}, tables={len(tables)}) — looks "
-                "like a diverged cache dir/warehouse, refusing to "
-                "mass-delete (or pass force=True)"
-            )
-    return _orphan_entries(meta, tables), None
-
-
-def _orphan_entries(meta: pd.DataFrame, tables: pd.DataFrame) -> List[str]:
-    """Entries present in exactly one registry (metadata xor catalog)."""
-    merged = pd.merge(
-        meta[["hash_name"]],
-        tables[["hash_name"]],
-        on="hash_name",
-        how="outer",
-        indicator=True,
+    orphans = find_inconsistent_entries(
+        spark, num_threads=num_threads, min_overlap=min_overlap, force=force
     )
-    return list(merged[merged["_merge"] != "both"]["hash_name"])
+    return _evict(spark, orphans, num_threads)
 
 
 def find_inconsistent_entries(
@@ -439,51 +431,32 @@ def find_inconsistent_entries(
     force: bool = False,
 ) -> List[str]:
     """Read-only detection half of :func:`clear_inconsistent_cache`: the
-    half-present entries a repair run WOULD delete, without deleting
-    anything — what ``--dry-run --repair-inconsistent`` previews. Applies
-    the SAME safety rails as the real repair (refused states preview as
-    empty, with the refusal logged), so preview and run always agree."""
-    meta = get_cached_dataframe_metadata(num_threads=num_threads)
-    tables = get_cached_tables(spark, num_threads=num_threads)
-    orphans, refusal = _repair_candidates(meta, tables, min_overlap, force)
+    half-present entries (in exactly one registry) a repair run WOULD
+    delete, sorted, without deleting anything — what ``--dry-run
+    --repair-inconsistent`` previews. A state the safety rails refuse
+    previews as empty, with the refusal logged: previewing "would repair
+    500 entries" in a refused state would both misrepresent the run and
+    nudge an operator straight to --force."""
+    _, _, in_meta, in_tables = _registries(spark, num_threads)
+    counts = f"metadata={len(in_meta)}, tables={len(in_tables)}"
+    refusal = None
+    if not force and bool(in_meta) != bool(in_tables):
+        refusal = (
+            f"one registry is empty ({counts}) — refusing to mass-delete; "
+            "check catalog/cache-dir visibility (or pass force=True)"
+        )
+    elif not force and in_meta:
+        overlap = len(in_meta & in_tables) / max(len(in_meta), len(in_tables))
+        if overlap < min_overlap:
+            refusal = (
+                f"registries overlap on only {overlap:.0%} of entries "
+                f"({counts}) — looks like a diverged cache dir/warehouse, "
+                "refusing to mass-delete (or pass force=True)"
+            )
     if refusal:
-        log.warning("find_inconsistent_entries: %s", refusal)
+        log.warning("inconsistent-cache repair refused: %s", refusal)
         return []
-    return orphans
-
-
-def _entry_inventory_ok(
-    spark: SparkSession, hash_name: str, sidecar_dir: Optional[str] = None
-) -> Optional[bool]:
-    """``layout.inventory_ok`` for the operator scans: False = part files
-    lost or altered after commit (the read path refuses such an entry; the
-    scans surface it). A missing table directory is the orphan scan's
-    finding, not a corruption finding, and reads None like a failed
-    listing. ``sidecar_dir``: the entry's sidecar directory when written
-    under a custom ``cache_path``; None = the default SPARK_CACHE_DIR
-    layout."""
-    try:
-        return layout.inventory_ok(spark, hash_name, sidecar_dir)
-    except Exception as exc:
-        log.warning("Inventory scan failed for %s (%s)", hash_name,
-                    exc.__class__.__name__)
-        return None
-
-
-def _custom_base_entries(base: str) -> List[tuple]:
-    """(hash_name, sidecar_dir) pairs for cache entries under a custom
-    ``cache_path`` base — the same sidecar layout (``layout.sidecar_dir``)
-    every base uses, default or not: a directory holding a metadata file.
-    A missing/empty base yields no pairs (``fs.list_dir`` ENOENT
-    contract)."""
-    pairs = []
-    for entry in fs.list_dir(base):
-        if not entry.is_dir:
-            continue
-        side = entry.path.rstrip("/")
-        if fs.exists(layout.metadata_path(side)):
-            pairs.append((entry.name, side))
-    return pairs
+    return sorted(in_meta ^ in_tables)
 
 
 def find_corrupt_entries(
@@ -502,22 +475,15 @@ def find_corrupt_entries(
     they are invisible to the registry walk — pass each such base via
     ``extra_bases`` to include them (ADVICE r17 #3; the CLI exposes this
     as repeatable ``--scan-corrupt-base``)."""
-    meta = get_cached_dataframe_metadata(num_threads=num_threads)
-    pairs: List[tuple] = (
-        [(h, None) for h in meta["hash_name"]] if not meta.empty else []
+    entries = [
+        entry
+        for base in [config.SPARK_CACHE_DIR, *(extra_bases or [])]
+        for entry in _sidecar_entries(base, num_threads)
+    ]
+    flags = _pmap(
+        lambda e: layout.inventory_ok(spark, e[0], e[1]), entries, num_threads
     )
-    for base in extra_bases or []:
-        pairs.extend(_custom_base_entries(base))
-    if not pairs:
-        return []
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        flags = list(
-            pool.map(
-                lambda p: _entry_inventory_ok(spark, p[0], sidecar_dir=p[1]),
-                pairs,
-            )
-        )
-    return sorted({h for (h, _), ok in zip(pairs, flags) if ok is False})
+    return sorted({e[0] for e, ok in zip(entries, flags) if ok is False})
 
 
 def _entry_bytes(spark: SparkSession, hash_name: str) -> int:
@@ -546,40 +512,24 @@ def cache_stats(
     situations these stats diagnose. Parallelized like every other
     registry scan here.
     """
-    meta = get_cached_dataframe_metadata(num_threads=num_threads)
-    tables = get_cached_tables(spark, num_threads=num_threads)
-    meta_hashes = set(meta["hash_name"]) if not meta.empty else set()
-    table_hashes = set(tables["hash_name"]) if not tables.empty else set()
-    all_hashes = meta_hashes | table_hashes
-
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        sizes = dict(
-            zip(all_hashes, pool.map(lambda h: _entry_bytes(spark, h), all_hashes))
-        )
-        meta_list = sorted(meta_hashes)
-        inventory = dict(
-            zip(
-                meta_list,
-                pool.map(lambda h: _entry_inventory_ok(spark, h), meta_list),
-            )
-        )
-
-    times = list(meta["creationTime"]) if not meta.empty else []
+    meta, _, in_meta, in_tables = _registries(spark, num_threads)
+    sizes = _pmap(lambda h: _entry_bytes(spark, h), in_meta | in_tables, num_threads)
+    checked = sorted(in_meta)
+    flags = _pmap(lambda h: layout.inventory_ok(spark, h), checked, num_threads)
+    times = list(meta["creationTime"])
     return {
-        "n_metadata_entries": len(meta_hashes),
-        "n_catalog_tables": len(table_hashes),
-        "n_consistent": len(meta_hashes & table_hashes),
-        "n_orphans": len(meta_hashes ^ table_hashes),
-        "orphans_metadata_only": sorted(meta_hashes - table_hashes),
-        "orphans_catalog_only": sorted(table_hashes - meta_hashes),
+        "n_metadata_entries": len(in_meta),
+        "n_catalog_tables": len(in_tables),
+        "n_consistent": len(in_meta & in_tables),
+        "n_orphans": len(in_meta ^ in_tables),
+        "orphans_metadata_only": sorted(in_meta - in_tables),
+        "orphans_catalog_only": sorted(in_tables - in_meta),
         # Entries whose live data files no longer match the write-time
         # inventory — the read path refuses these as misses; listed here
         # so the operator sees WHY a "cached" query keeps recomputing.
-        "corrupt_entries": sorted(
-            h for h, ok in inventory.items() if ok is False
-        ),
-        "total_cache_bytes": sum(sizes.values()),
-        "largest_entry_bytes": max(sizes.values(), default=0),
+        "corrupt_entries": [h for h, ok in zip(checked, flags) if ok is False],
+        "total_cache_bytes": sum(sizes),
+        "largest_entry_bytes": max(sizes, default=0),
         "oldest_entry": min(times, default=None),
         "newest_entry": max(times, default=None),
     }
@@ -613,23 +563,17 @@ def evict_to_size_budget(
     Returns evicted (or, with ``confirm_delete=False``, would-evict)
     hashes, oldest first.
     """
-    meta = get_cached_dataframe_metadata(num_threads=num_threads)
-    tables = get_cached_tables(spark, num_threads=num_threads)
-    frames = [f for f in (meta, tables) if not f.empty]
-    if not frames:
-        return []
-    registry = (
-        pd.concat(frames, ignore_index=True)
-        .drop_duplicates("hash_name", keep="first")  # sidecar date wins
-        .sort_values("creationTime", na_position="first")
-        .reset_index(drop=True)
+    meta, tables, in_meta, _ = _registries(spark, num_threads)
+    catalog_only = tables[~tables["hash_name"].isin(in_meta)]
+    # The sidecar's date wins for an entry in both registries.
+    created = list(zip(meta["hash_name"], meta["creationTime"])) + list(
+        zip(catalog_only["hash_name"], catalog_only["creationTime"])
     )
-
-    hashes = list(registry["hash_name"])  # oldest first (sorted by creation)
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        sizes = dict(
-            zip(hashes, pool.map(lambda h: _entry_bytes(spark, h), hashes))
-        )
+    hashes = list(  # oldest first
+        pd.DataFrame(created, columns=["hash_name", "creationTime"])
+        .sort_values("creationTime", na_position="first")["hash_name"]
+    )
+    sizes = dict(zip(hashes, _pmap(lambda h: _entry_bytes(spark, h), hashes, num_threads)))
 
     total = sum(sizes.values())
     to_evict: List[str] = []
@@ -645,6 +589,4 @@ def evict_to_size_budget(
             len(to_evict), sum(sizes[h] for h in to_evict), max_bytes,
         )
         return to_evict
-    with ThreadPoolExecutor(max_workers=_default_threads(num_threads)) as pool:
-        results = list(pool.map(lambda h: clear_cache_for_hash(spark, h), to_evict))
-    return [h for h, ok in zip(to_evict, results) if ok]
+    return _evict(spark, to_evict, num_threads)

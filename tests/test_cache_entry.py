@@ -82,6 +82,29 @@ def test_layout_paths(spark):
     assert layout.inventory_path(side) == f"{side}/data_inventory.txt"
 
 
+def test_failed_inventory_listing_is_no_finding(tmp_path, monkeypatch):
+    """``layout.inventory_ok`` owns "a failed inventory listing is no
+    finding": the read path and the operator scans call it without a
+    guard of their own, so a listing error must read None, not raise."""
+    from types import SimpleNamespace
+
+    from dbfs_spark_cache_spark import fs, layout
+
+    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda *_: str(tmp_path)))
+    h = "ab" * 16
+    side = tmp_path / "sidecars"
+    side.mkdir()
+    (side / layout.INVENTORY_FILE).write_text(fs.render_inventory(1, 10))
+    os.makedirs(layout.table_location(spark, h))
+    assert layout.inventory_ok(spark, h, str(side)) is False  # listing reached
+
+    def denied(path):
+        raise PermissionError(path)
+
+    monkeypatch.setattr(fs, "list_dir", denied)
+    assert layout.inventory_ok(spark, h, str(side)) is None
+
+
 def test_recaching_a_cached_frame_writes_nothing(spark, clean_cache, tmp_path):
     """cache_dataframe on a pure scan of an existing entry returns the
     frame unchanged: one table and one sidecar dir, not two."""

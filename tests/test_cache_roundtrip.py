@@ -312,7 +312,7 @@ def test_clear_inconsistent_refuses_on_diverged_registries(spark, monkeypatch):
     monkeypatch.setattr(
         management,
         "clear_cache_for_hash",
-        lambda s, h: (deleted.append(h), True)[1],  # new contract: True = evicted
+        lambda s, h, database=None: (deleted.append(h), True)[1],  # True = evicted
     )
     assert management.clear_inconsistent_cache(spark) == []
     assert deleted == []

@@ -105,10 +105,14 @@ def test_dry_run_previews_repair(spark, clean_cache):
     refused state (one-registry-empty looks like a visibility problem);
     the preview must show the refusal (empty), not advertise a delete the
     run would never perform. With a second consistent entry the rails
-    pass and the single orphan previews; detection stays read-only."""
+    pass and the single orphan previews; detection stays read-only. A
+    real run then evicts exactly the previewed list, refused or forced."""
     from dbfs_spark_cache_spark import write_cache
     from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.management import find_inconsistent_entries
+    from dbfs_spark_cache_spark.management import (
+        clear_inconsistent_cache,
+        find_inconsistent_entries,
+    )
 
     from tests.conftest import SF_SMOKE
 
@@ -129,7 +133,12 @@ def test_dry_run_previews_repair(spark, clean_cache):
     for row in other:
         spark.sql(f"DROP TABLE {config.CACHE_DATABASE}.{row.tableName}")
     assert find_inconsistent_entries(spark) == []
-    assert len(find_inconsistent_entries(spark, force=True)) == 2
+    previewed = find_inconsistent_entries(spark, force=True)
+    assert len(previewed) == 2
+
+    assert clear_inconsistent_cache(spark) == []
+    assert clear_inconsistent_cache(spark, force=True) == previewed
+    assert not os.listdir(config.SPARK_CACHE_DIR)
 
 
 def test_cli_compact_ledger(tmp_path, monkeypatch, caplog):

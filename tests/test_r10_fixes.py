@@ -53,16 +53,15 @@ def test_created_time_converts_aware_wall_time_to_utc():
     assert got.tzinfo is None
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_created_time_localizes_dropped_abbreviation_from_jvm_zone():
-    """pandas silently DROPS unrecognized zone abbreviations ('PST' ->
-    naive 05:00 wall time). DESCRIBE renders in the driver JVM's default
-    zone, so the fallback localizes the wall time there (full zone id —
-    DST-correct) and converts to UTC."""
+    """DESCRIBE renders 'Created Time' as java.util.Date.toString: wall
+    time in the driver JVM's default zone plus an ambiguous abbreviation
+    ('PST'). The fallback drops the abbreviation itself — pandas' own
+    silent drop is deprecated and will raise — then localizes the wall
+    time in the JVM zone (full zone id — DST-correct) and converts to
+    UTC."""
     from dbfs_spark_cache_spark.management import _created_time_utc_naive
-
-    # pandas really does drop the abbreviation — the bug this guards
-    raw = pd.to_datetime("Fri Aug 15 05:00:00 PST 2025")
-    assert raw.tzinfo is None and raw.hour == 5
 
     got = _created_time_utc_naive(
         _stub_spark_jvm_tz("America/Los_Angeles"),

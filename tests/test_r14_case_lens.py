@@ -101,18 +101,14 @@ def test_mixed_case_cache_database_is_normalized():
     canonical form at both entry points."""
     from dbfs_spark_cache_spark.config import config, reconfigure
 
-    old_db, old_test = config.CACHE_DATABASE, config.CACHE_DATABASE_TEST
+    old_db = config.CACHE_DATABASE
     try:
         got = reconfigure(CACHE_DATABASE="MixedCase_DB")
         assert got.CACHE_DATABASE == "mixedcase_db"
-        assert got.CACHE_DATABASE_TEST == "mixedcase_db_test"
-        got = reconfigure(
-            CACHE_DATABASE="Another_DB", CACHE_DATABASE_TEST="My_TEST"
-        )
+        got = reconfigure(CACHE_DATABASE="Another_DB")
         assert got.CACHE_DATABASE == "another_db"
-        assert got.CACHE_DATABASE_TEST == "my_test"
     finally:
-        reconfigure(CACHE_DATABASE=old_db, CACHE_DATABASE_TEST=old_test)
+        reconfigure(CACHE_DATABASE=old_db)
 
 
 def test_mixed_case_database_survives_catalog_death(spark):
@@ -126,7 +122,7 @@ def test_mixed_case_database_survives_catalog_death(spark):
     from dbfs_spark_cache_spark import core, layout, fs, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config, reconfigure
 
-    old_db, old_test = config.CACHE_DATABASE, config.CACHE_DATABASE_TEST
+    old_db = config.CACHE_DATABASE
     try:
         reconfigure(CACHE_DATABASE="CaseDrift_DB")
         df = (
@@ -158,4 +154,4 @@ def test_mixed_case_database_survives_catalog_death(spark):
         )
     finally:
         spark.sql("DROP DATABASE IF EXISTS casedrift_db CASCADE")
-        reconfigure(CACHE_DATABASE=old_db, CACHE_DATABASE_TEST=old_test)
+        reconfigure(CACHE_DATABASE=old_db)

@@ -135,17 +135,17 @@ def test_find_corrupt_entries_covers_custom_bases(spark, tmp_path, monkeypatch):
 
 
 def test_custom_base_entries_walks_layout(tmp_path):
-    from dbfs_spark_cache_spark.management import _custom_base_entries
+    from dbfs_spark_cache_spark.management import _sidecar_entries
 
     base = str(tmp_path / "b")
     _make_entry(base, "aa" * 16, corrupt=False)
     os.makedirs(os.path.join(base, "not_an_entry"))  # no metadata file
     (tmp_path / "b" / "stray.txt").write_text("x")
-    pairs = _custom_base_entries(base)
+    pairs = _sidecar_entries(base)
     assert [p[0] for p in pairs] == ["aa" * 16]
     assert pairs[0][1].endswith("aa" * 16)
     # missing base: no pairs, no raise (ENOENT contract of fs.list_dir)
-    assert _custom_base_entries(str(tmp_path / "missing")) == []
+    assert _sidecar_entries(str(tmp_path / "missing")) == []
 
 
 def test_cli_scan_corrupt_base_requires_scan_corrupt():
