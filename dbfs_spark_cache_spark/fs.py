@@ -137,7 +137,7 @@ def file_size(path: str) -> Optional[int]:
         return None
 
 
-def _walk_files(path: str, skip_hidden: bool = False) -> Iterator[FileStat]:
+def walk_files(path: str, skip_hidden: bool = False) -> Iterator[FileStat]:
     """Every file under ``path``, recursing into subdirectories with one
     :func:`list_dir` per directory, so it works on local and Hadoop-scheme
     paths alike. ``skip_hidden`` prunes entries named ``_*`` or ``.*``
@@ -157,7 +157,7 @@ def tree_size(path: str) -> int:
     """Total bytes of every file under ``path``, recursing into
     subdirectories (partitioned/bucketed cache tables nest their data
     files; a shallow listing under-reports them)."""
-    return sum(stat.size for stat in _walk_files(path))
+    return sum(stat.size for stat in walk_files(path))
 
 
 def data_file_inventory(path: str) -> tuple:
@@ -167,7 +167,7 @@ def data_file_inventory(path: str) -> tuple:
     are bookkeeping, not data, and are excluded — so the inventory is
     stable across committer/marker differences and changes only when
     data files are lost, truncated, or altered."""
-    sizes = [stat.size for stat in _walk_files(path, skip_hidden=True)]
+    sizes = [stat.size for stat in walk_files(path, skip_hidden=True)]
     return len(sizes), sum(sizes)
 
 

@@ -43,20 +43,16 @@ def read_events_stream(
     (TIMESTAMP_LTZ: watermarks reject NTZ event time; session pinned UTC
     so values align with the batch loader's NTZ output).
     """
-    from ..sources import normalize_event_ts
+    from ..sources import _load_raw, normalize_event_ts
 
     path = f"{sf_dir}/events.parquet"
-    # The self-heal via the batch loader, the SCHEMA via a raw read:
-    # load_table carries the TIMESTAMP(NANOS) retry (sets nanosAsLong)
-    # that a bare spark.read.parquet lacks on sessions built outside
-    # get_spark — but it also normalizes ts to timestamp_ntz, and feeding
-    # that NORMALIZED schema to the file source would declare ntz against
-    # a physical INT64-nanos column (read failure) while starving the
-    # normalize_event_ts call below of the bigint it knows how to heal.
-    from ..sources import load_table as _load_table
-
-    _load_table(spark, sf_dir, "events")  # side effect: nanos conf heal
-    raw_schema = spark.read.parquet(path).schema
+    # The RAW schema, from the batch loader's schema memo (no inference
+    # job on a hit), with its TIMESTAMP(NANOS) self-heal (sets
+    # nanosAsLong on sessions built outside get_spark). Not load_table's
+    # normalized schema: declaring ntz against a physical INT64-nanos
+    # column fails the read, and would starve the normalize_event_ts call
+    # below of the bigint it knows how to heal.
+    raw_schema = _load_raw(spark, sf_dir, "events").schema
     reader = spark.readStream.format("parquet").schema(raw_schema)
     # Layout detection (r10): ``events.parquet`` is a single FILE in the
     # driver fixtures but a DIRECTORY of part files in the standard Spark

@@ -80,6 +80,31 @@ def compare(name, spark_pdf, duck_pdf, verbose=False):
     return problems
 
 
+def codegen_summary(spark) -> str:
+    """Janino compilations so far in this JVM and the entries of Spark's
+    generated-class cache. Compilations far above the distinct classes the
+    run needed mean the cache is too small for its working set and evicts
+    in a cycle (see ``session.CODEGEN_CACHE_ENTRIES``)."""
+    from py4j.protocol import Py4JError
+
+    jvm = spark._jvm
+    compilations = (
+        jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+    try:  # the cache is a private field of Spark's CodeGenerator object
+        gen = jvm.java.lang.Class.forName(
+            "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+        )
+        field = gen.getDeclaredField("cache")
+        field.setAccessible(True)
+        entries = field.get(gen.getField("MODULE$").get(None)).size()
+    except Py4JError:
+        entries = "?"
+    limit = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    return f"codegen: {compilations} compilations, {entries}/{limit} cache entries"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -197,6 +222,7 @@ def main():
         f"\n{n_pass} ok, {n_rows_only} rows-only, {n_fail} FAILED"
         + (f": {failures}" if failures else "")
     )
+    print(codegen_summary(spark))
     spark.stop()
     sys.exit(1 if n_fail else 0)
 
