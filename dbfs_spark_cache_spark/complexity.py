@@ -32,11 +32,13 @@ JSON rendering instead (:func:`count_python_udfs`; one driver call, no
 physical planning). The calibration anchor is preserved: a bare count()
 is one ungrouped aggregate node => multiplier exactly 1.0.
 
-File sizes come from ``df.inputFiles()`` + a per-file stat through the FS
-layer. That is driver-side metadata only — no job runs. **[NS]** note: Spark's
-own CBO stats (``ANALYZE TABLE`` / ``optimizedPlan().stats()``) can replace
-the file-stat path where tables are analyzed; file stats are the portable
-fallback.
+File sizes come from the plan walk that also feeds the cache key
+(``plans.fingerprint.input_files``: analyzed plan plus subqueries, so a
+``.cache()``d frame sizes like the uncached one) and one FS-layer listing
+per input directory (``fs.file_sizes``). That is driver-side metadata
+only — no job runs. **[NS]** note: Spark's own CBO stats (``ANALYZE
+TABLE`` / ``optimizedPlan().stats()``) can replace the file-stat path where
+tables are analyzed; file stats are the portable fallback.
 """
 from __future__ import annotations
 
@@ -47,7 +49,7 @@ from typing import Dict, List, Tuple
 from pyspark.sql import DataFrame
 
 from . import fs
-from .plans.fingerprint import canonical_plan
+from .plans.fingerprint import canonical_plan, input_files
 
 log = logging.getLogger(__name__)
 
@@ -80,37 +82,15 @@ OP_FACTORS: Dict[str, Tuple[float, float]] = {
 
 
 def get_input_file_sizes(df: DataFrame) -> List[float]:
-    """Per-input-file sizes in GB (driver-side metadata calls only).
-
-    One ``list_dir`` per input DIRECTORY, not one stat per file: a table
-    with thousands of files costs thousands of sequential getFileStatus
-    round-trips on remote storage otherwise — a multi-second driver stall
-    ahead of every cache-miss cost gate (the fingerprint path next door
-    already advertises O(#directories) for the same inputs)."""
-    import os
-
+    """Per-input-file sizes in GB (driver-side metadata calls only): the
+    files :func:`~.plans.fingerprint.input_files` names, sized by one
+    listing per input directory (``fs.file_sizes``)."""
     try:
-        files = df.inputFiles()
+        files = input_files(df)
     except Exception as exc:
-        log.warning("inputFiles() failed: %s", exc)
+        log.warning("input listing failed: %s", exc)
         return []
-    wanted: Dict[str, set] = {}
-    for path in files:
-        wanted.setdefault(os.path.dirname(path), set()).add(
-            os.path.basename(path)
-        )
-    sizes: List[float] = []
-    for d, names in wanted.items():
-        listed = {s.name: s for s in fs.list_dir(d)}
-        for name in names:
-            stat = listed.get(name)
-            if stat is not None:
-                sizes.append(stat.size / _GB)
-            else:  # racing compaction/rename: fall back to a direct stat
-                nbytes = fs.file_size(f"{d}/{name}")
-                if nbytes is not None:
-                    sizes.append(nbytes / _GB)
-    return sizes
+    return [size / _GB for size in fs.file_sizes(files)]
 
 
 def _has_grouped_aggregate(plan: str) -> bool:

@@ -17,7 +17,7 @@ import os
 import shutil
 from dataclasses import dataclass
 from datetime import datetime
-from typing import Iterator, List, Optional
+from typing import Dict, Iterable, Iterator, List, Optional
 
 
 @dataclass
@@ -135,6 +135,28 @@ def file_size(path: str) -> Optional[int]:
         return int(jfs.getFileStatus(jpath).getLen())
     except Exception:
         return None
+
+
+def file_sizes(paths: Iterable[str]) -> List[int]:
+    """Byte sizes of the files at ``paths``, with one :func:`list_dir` per
+    distinct parent directory instead of one stat per file: a table of
+    thousands of files on remote storage would otherwise cost thousands of
+    sequential getFileStatus round-trips. A file the listing misses (a
+    racing compaction or rename) gets a direct stat; a file that is gone
+    adds nothing."""
+    wanted: Dict[str, set] = {}
+    for path in paths:
+        wanted.setdefault(os.path.dirname(path), set()).add(os.path.basename(path))
+    sizes: List[int] = []
+    for d, names in wanted.items():
+        listed = {stat.name: stat.size for stat in list_dir(d)}
+        for name in names:
+            size = listed.get(name)
+            if size is None:
+                size = file_size(f"{d}/{name}")
+            if size is not None:
+                sizes.append(size)
+    return sizes
 
 
 def walk_files(path: str, skip_hidden: bool = False) -> Iterator[FileStat]:

@@ -9,6 +9,8 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fs
+from ..plans.fingerprint import input_files
 from .registry import register
 
 
@@ -25,33 +27,6 @@ def _reject_reserved_columns(helper: str, names: tuple, *frames: DataFrame) -> N
                 f"{helper}: input columns {clash} collide with the "
                 "helper's internal bookkeeping names — rename them first"
             )
-
-
-def _input_files_bytes(spark: SparkSession, files: List[str]) -> int:
-    """Summed on-disk size of a scan's input files (driver-side metadata;
-    the caller guarantees ``len(files)`` is below the core target, so
-    this touches a handful of paths). Local ``file:`` URIs go through
-    ``os.stat``; any other scheme through the JVM Hadoop FileSystem. A
-    probe failure raises — the caller's except-identity branch applies."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    total = 0
-    jvm_fs = None
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme in ("", "file"):
-            total += os.path.getsize(unquote(parsed.path))
-        else:
-            if jvm_fs is None:
-                jvm = spark._jvm
-                hconf = spark.sparkContext._jsc.hadoopConfiguration()
-                jvm_fs = (jvm, hconf)
-            jvm, hconf = jvm_fs
-            path = jvm.org.apache.hadoop.fs.Path(uri)
-            fs = path.getFileSystem(hconf)
-            total += int(fs.getFileStatus(path).getLen())
-    return total
 
 
 def spread_unsplittable_scan(
@@ -72,22 +47,20 @@ def spread_unsplittable_scan(
     is file-level metadata only: the spread fires when the frame reads
     FEWER files than the target parallelism AND the summed on-disk size
     of those files is below what `target` scan tasks would each take one
-    split of (target x maxPartitionBytes). Both probes are driver-side
-    metadata — no job, no RDD conversion. (A first cut gated on
-    `df.rdd.getNumPartitions()`; the RDD handle forces a second
-    physical-planning pass per call and measurably destabilized repeated
-    runs, so it was replaced by this metadata gate. A second cut sized
-    the input via `optimizedPlan().stats()`, which runs a full
-    analyze/optimize pass per CALL on the driver — a fixed cost the
-    driver's cold single-pass contract charges to every carrier query
-    (VERDICT r18 issue #2); the file gate already bounds the file count
-    below `target`, so statting those few files directly costs
-    microseconds and needs no extra plan pass.) A well-partitioned
-    corpus (the 100 TB case: thousands of files) takes the identity
-    branch, so this can never ADD a shuffle at scale; under the size cap
-    the moved bytes are bounded by one split per core — less data than
-    one task would otherwise grind through serially. It is the opposite
-    of a constant tuned to one deployment.
+    split of (target x maxPartitionBytes). The files come from
+    `plans.fingerprint.input_files`, the plan walk the cache key and the
+    cost gate read (so a `.cache()`d frame is gated like the uncached
+    one), and are sized with `fs.file_sizes` only after the count check
+    passes — a few files, one listing per directory, no job, no RDD
+    conversion and no extra plan pass. (Gating on
+    `df.rdd.getNumPartitions()` or `optimizedPlan().stats()` was tried
+    and dropped: both charge a physical-planning or optimize pass to
+    every call.) A well-partitioned corpus (the 100 TB case: thousands of
+    files) takes the identity branch, so this can never ADD a shuffle at
+    scale; under the size cap the moved bytes are bounded by one split per
+    core — less data than one task would otherwise grind through serially.
+    It is the opposite of a constant tuned to one deployment. A failed
+    probe leaves the frame alone.
 
     Results are partitioning-invariant for every caller by contract
     (pure per-row map stages feeding set-semantic joins/aggregations;
@@ -103,7 +76,7 @@ def spread_unsplittable_scan(
     spark = df.sparkSession
     target = min_parallelism or spark.sparkContext.defaultParallelism
     try:
-        files = df.inputFiles()
+        files = input_files(df)
         if not files or len(files) >= target:
             return df
         max_split = int(
@@ -111,8 +84,7 @@ def spread_unsplittable_scan(
                 spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
             )
         )
-        size = _input_files_bytes(spark, files)
-        if size > target * max_split:
+        if sum(fs.file_sizes(files)) > target * max_split:
             # Few-but-large files: parquet row groups usually make these
             # splittable to >= target tasks anyway, and moving this many
             # bytes is no longer obviously cheaper than the serial scan.

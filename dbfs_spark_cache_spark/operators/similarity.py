@@ -592,7 +592,8 @@ def embedding_kmeans_assign(spark: SparkSession, sf: str) -> DataFrame:
         SELECT vec_id, dim, scale,
                CASE WHEN scale > 0 THEN
                    list_transform(embedding,
-                                  x -> CAST(round(x * 127.0 / scale) AS BIGINT))
+                                  x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / scale)
+                                            AS BIGINT))
                ELSE list_transform(embedding, x -> CAST(0 AS BIGINT)) END AS qv
         FROM q
     )
@@ -613,9 +614,13 @@ def embedding_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
     cannot hash list-valued columns — r2 finding).
 
     Scale shape: map-only (transform + aggregate inside the row, no
-    explode, no shuffle); fuses into the scan. Float->double promotion is
-    IEEE-identical in Spark and DuckDB, so round() sees the same double on
-    both engines; q_min/q_max also pin the [-127, 127] range.
+    explode, no shuffle); fuses into the scan. The scaling is double
+    arithmetic: Spark promotes the float component to double for
+    ``x * 127.0``, while DuckDB types ``FLOAT * 127.0`` as FLOAT, so the
+    oracle casts the component to DOUBLE first. In float the product can
+    land on the other side of a .5 rounding boundary (0.13007811 scaled by
+    127/scale is 50.4999988 in double, 50.5000010 in float). q_min/q_max
+    also pin the [-127, 127] range.
 
     Usable-vector contract (r11, this query's due slot; r9 third review
     batch + nonfinite lens): on a NULL embedding the engines DIVERGED —

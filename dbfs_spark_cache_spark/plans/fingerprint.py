@@ -8,23 +8,52 @@ canonicalization, :212-297 input fingerprint, :371-406 metadata + key), but
 implemented against the public PySpark API plus the engine's own FS layer so
 it runs identically on local[], YARN, or K8s clusters.
 
-Scale note: everything here is driver-side metadata work — one py4j call for
-``explain``, one for ``inputFiles()``, and one filesystem LIST per distinct
-input *directory* (not per file). At 100 TB with thousands of input files the
-directory-level mtime check stays O(#directories).
+The default analyzed plan prints a file scan as ``Relation [id#L] parquet``
+with no path, so the input block is the only part of the key that tells two
+same-shaped queries over different data apart. :func:`input_files` owns the
+question "which files does this frame read": it walks the leaves of the
+ANALYZED plan and of every subquery plan in it, takes each file relation's
+``location().inputFiles()`` and percent-decodes the URIs into paths the FS
+layer can open. The fingerprint, the cost gate (``complexity``) and the
+spread gate (``operators.scale``) all read it. ``DataFrame.inputFiles()``
+is not used: it reads the optimized plan, where Spark has already swapped a
+``.cache()``d fragment for an in-memory relation (its files vanish), it
+skips scalar subqueries, and it returns escaped URIs (``with%20space``)
+that name no file on disk.
+
+Trust model. The key trusts the file system's modification times, as the
+reference does: a rewrite of an input must change the newest mtime among the
+entries of its directory (second resolution). A directory whose mtime cannot
+be read makes the key unmatchable; it never drops out of the key. The walk
+has three known gaps:
+
+* leaves that are not file relations (in-memory data, RDDs, JDBC, DSv2 and
+  unconverted Hive tables) add no input line, so their identity is the
+  plan text alone (RDD plans are refused as uncacheable);
+* a change that keeps every input directory's newest mtime (deleting a
+  file that was not the newest, restoring an old copy of one) keeps the
+  key;
+* the cost grows with the file count: every file path crosses py4j once,
+  although only the distinct directories enter the key.
+
+Cost otherwise: driver-side metadata only — one py4j call for the plan
+text, a few per plan leaf, and one filesystem LIST per distinct input
+*directory*.
 """
 from __future__ import annotations
 
 import hashlib
 import io
 import logging
+import os
 import re
-import sys
 import time
 from contextlib import redirect_stdout
 from datetime import datetime
-from typing import Dict, Mapping, Optional, Tuple, Union
+from typing import Dict, List, Mapping, Optional, Tuple, Union
+from urllib.parse import unquote
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 from .. import fs, layout
@@ -36,11 +65,12 @@ log = logging.getLogger(__name__)
 # Sentinel keys used in the input-fingerprint mapping.
 SCHEMA_CHANGED_KEY = "<schema_changed_placeholder>"
 DIRECT_DATA_CACHE_KEY = "<direct_data_cache>"
-# inputFiles() failed for a reason OTHER than schema change (transient
-# metastore/FS error). The fingerprint must become unmatchable — degrading
-# to a plan-only key would both WRITE an entry that later (correct) keys
-# never find AND, worse, HIT such an entry after the inputs changed,
-# serving stale data with no warning.
+# Listing the input files failed for a reason OTHER than schema change
+# (transient metastore/FS error), or an input directory's mtime could not be
+# read. The fingerprint must become unmatchable — degrading to a plan-only
+# key would both WRITE an entry that later (correct) keys never find AND,
+# worse, HIT such an entry after the inputs changed, serving stale data
+# with no warning.
 INPUT_LISTING_FAILED_KEY = "<input_listing_failed>"
 # Value recorded for input directories that are themselves cache entries:
 # the *path* (which embeds the 32-hex cache hash) participates in the
@@ -252,7 +282,42 @@ def plan_is_uncacheable(plan: str) -> bool:
     return "Scan ExistingRDD" in plan or "LogicalRDD" in plan
 
 
+def _scala_seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def input_files(df: DataFrame) -> List[str]:
+    """Every file ``df`` reads, as sorted distinct paths the FS layer can
+    open (``file:///dir/part-0.parquet``, ``s3a://b/with space/part-0``).
+
+    Walks the leaves of the analyzed plan and of each plan in its
+    ``subqueriesAll()``; every leaf with a ``relation().location()`` (a
+    file relation) contributes ``location().inputFiles()``, percent-decoded
+    (Spark renders each file as an escaped URI). The analyzed plan precedes
+    Spark's substitution of ``.cache()``d fragments, so a Spark-cached frame
+    lists the same files as the uncached one. Whatever Spark raises while
+    listing propagates to the caller."""
+    analyzed = df._jdf.queryExecution().analyzed()  # type: ignore[attr-defined]
+    files = set()
+    for plan in [analyzed, *_scala_seq(analyzed.subqueriesAll())]:
+        for leaf in _scala_seq(plan.collectLeaves()):
+            try:
+                location = leaf.relation().location()
+            except Py4JError:  # no such method: not a file relation
+                continue
+            files.update(unquote(uri) for uri in location.inputFiles())
+    return sorted(files)
+
+
 _InputInfo = Union[Dict[str, datetime], Dict[str, bool], Dict[str, str]]
+
+
+def _unmatchable(key: str) -> Dict[str, datetime]:
+    """A sentinel input block: the key never matches, and ``core.admit``
+    refuses the write. Sentinel timestamps render through the same
+    UTC-naive form as real mtimes (fs._utc_naive), so the key format stays
+    uniform across zones."""
+    return {key: fs._utc_naive(time.time())}
 
 
 def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputInfo:
@@ -262,8 +327,12 @@ def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputI
 
     * plan reads a ``data_*`` cache table -> ``{}`` (identity comes from the
       plan text, which embeds the content-addressed table name);
-    * schema-changed error from ``inputFiles()`` -> a sentinel entry carrying
-      ``now()`` so the key never matches (forced invalidation);
+    * schema-changed error while listing the inputs -> a sentinel entry
+      carrying ``now()`` so the key never matches (forced invalidation);
+    * any other listing failure, or an input directory whose mtime cannot
+      be read (it vanished after the plan was built) -> the
+      ``INPUT_LISTING_FAILED_KEY`` sentinel: dropping the directory would
+      leave a key that no longer tells this frame's data apart;
     * directories that *are* cache entries (32-hex names under the cache dir)
       contribute their PATH but not their mtime — a cached scan's identity is
       the cache hash embedded in the path (the table name is absent from the
@@ -276,40 +345,34 @@ def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputI
         return {}
 
     try:
-        files = df.inputFiles()
+        files = input_files(df)
     except Exception as exc:
-        # Sentinel timestamps render through the same UTC-naive form as
-        # real mtimes (fs._utc_naive) — unmatchability comes from the
-        # sentinel KEY plus the fresh timestamp, and a consistent
-        # rendering keeps the key format uniform across zones
-        # (ADVICE r8 #5 consistency note).
         if "SCHEMA_CHANGE" in str(exc).upper():
-            return {SCHEMA_CHANGED_KEY: fs._utc_naive(time.time())}
+            return _unmatchable(SCHEMA_CHANGED_KEY)
         log.warning(
-            "inputFiles() failed (%s); fingerprint made unmatchable — "
+            "input listing failed (%s); fingerprint made unmatchable — "
             "this run cannot hit or create a reusable cache entry", exc
         )
-        return {INPUT_LISTING_FAILED_KEY: fs._utc_naive(time.time())}
+        return _unmatchable(INPUT_LISTING_FAILED_KEY)
 
-    if not files:
-        return {}
-
-    import os
-
-    dirs = sorted({os.path.dirname(f) for f in files})
     # Cache-entry data directories contribute a mtime-free path line (the
     # path embeds the cache hash — see CACHED_INPUT_MARKER).
     skip_res = layout.cached_input_patterns()
 
     result: Dict[str, Union[datetime, str]] = {}
-    for d in dirs:
+    for d in sorted({os.path.dirname(f) for f in files}):
         local = fs.strip_scheme(d)
         if any(rx.search(local) for rx in skip_res):
             result[d] = CACHED_INPUT_MARKER
             continue
         mtime = fs.max_mtime(d)
-        if mtime is not None:
-            result[d] = mtime
+        if mtime is None:
+            log.warning(
+                "input directory %s has no readable mtime; fingerprint made "
+                "unmatchable", d,
+            )
+            return _unmatchable(INPUT_LISTING_FAILED_KEY)
+        result[d] = mtime
     return result
 
 

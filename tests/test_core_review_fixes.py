@@ -132,7 +132,7 @@ def test_partitioned_cache_children_get_mtime_free_marker(spark, clean_cache):
 def test_input_listing_failure_is_unmatchable_and_skips_cache(
     spark, clean_cache, monkeypatch
 ):
-    """A transient inputFiles() failure must not degrade the key to
+    """A transient input-listing failure must not degrade the key to
     plan-text-only (which could HIT a stale entry after inputs changed,
     or WRITE an orphan no later key finds) — the fingerprint goes
     unmatchable and cache_dataframe skips caching for the run."""
@@ -141,6 +141,7 @@ def test_input_listing_failure_is_unmatchable_and_skips_cache(
         cache_session_stats,
         reset_cache_session_stats,
     )
+    from dbfs_spark_cache_spark.plans import fingerprint
     from dbfs_spark_cache_spark.plans.fingerprint import (
         INPUT_LISTING_FAILED_KEY,
         input_dir_mod_datetime,
@@ -150,12 +151,10 @@ def test_input_listing_failure_is_unmatchable_and_skips_cache(
         "r_regionkey"
     ).count()
 
-    def boom(self):
+    def boom(frame):
         raise RuntimeError("transient metastore hiccup")
 
-    # patch the concrete class (pyspark 4 routes instances through
-    # pyspark.sql.classic.DataFrame, which shadows the base method)
-    monkeypatch.setattr(type(df), "inputFiles", boom)
+    monkeypatch.setattr(fingerprint, "input_files", boom)
     info = input_dir_mod_datetime(df)
     assert set(info) == {INPUT_LISTING_FAILED_KEY}
 

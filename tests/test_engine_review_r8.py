@@ -62,18 +62,19 @@ def test_find_plain_udfs_reports_only_outer_function(spark):
 
 
 def test_backup_skips_schema_changed_inputs(spark, clean_cache, monkeypatch):
-    """A SCHEMA_CHANGE failure from inputFiles() yields a key embedding
+    """A SCHEMA_CHANGE failure from the input listing yields a key embedding
     now() — unmatchable forever. Backup must skip, like the
     listing-failure guard next to it, instead of orphaning a full write."""
     from dbfs_spark_cache_spark.config import config
+    from dbfs_spark_cache_spark.plans import fingerprint
     from dbfs_spark_cache_spark.tiering import backup_spark_cached_to_storage
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet").select("r_name")
 
-    def boom():
+    def boom(frame):
         raise Exception("SCHEMA_CHANGE detected on source")
 
-    monkeypatch.setattr(df, "inputFiles", boom)
+    monkeypatch.setattr(fingerprint, "input_files", boom)
     backed = backup_spark_cached_to_storage([df])
     assert backed == []
     # nothing materialized: the cache database was never even created
@@ -559,18 +560,19 @@ def test_udtf_null_text_yields_no_rows(spark, tmp_path):
 
 def test_cache_dataframe_skips_schema_changed_inputs(spark, clean_cache, monkeypatch):
     """cache_dataframe must skip (like its listing-failure guard and the
-    tiering twin) when inputFiles() reports a schema change: the sentinel
+    tiering twin) when the input listing reports a schema change: the sentinel
     key embeds now(), so a write would orphan a full materialization on
     EVERY call."""
     from dbfs_spark_cache_spark import cache_dataframe
     from dbfs_spark_cache_spark.config import config
+    from dbfs_spark_cache_spark.plans import fingerprint
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet").select("r_name")
 
-    def boom():
+    def boom(frame):
         raise Exception("SCHEMA_CHANGE detected on source")
 
-    monkeypatch.setattr(df, "inputFiles", boom)
+    monkeypatch.setattr(fingerprint, "input_files", boom)
     out = cache_dataframe(df, override_prefer_spark_cache=True)
     assert out is df, "schema-changed frame must pass through uncached"
     if spark.catalog.databaseExists(config.CACHE_DATABASE):

@@ -204,14 +204,14 @@ def test_simhash_guard_blocks_self_pairs(spark, monkeypatch):
 def test_input_files_bytes_matches_os_stat(spark):
     from urllib.parse import unquote, urlparse
 
-    from dbfs_spark_cache_spark.operators.scale import _input_files_bytes
+    from dbfs_spark_cache_spark import fs
+    from dbfs_spark_cache_spark.plans.fingerprint import input_files
 
     df = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    files = df.inputFiles()
     expect = sum(
-        os.path.getsize(unquote(urlparse(u).path)) for u in files
+        os.path.getsize(unquote(urlparse(u).path)) for u in df.inputFiles()
     )
-    assert _input_files_bytes(spark, files) == expect > 0
+    assert sum(fs.file_sizes(input_files(df))) == expect > 0
 
 
 def test_minhash_spread_false_skips_gate_and_exchange(spark):
