@@ -33,8 +33,10 @@ physical planning). The calibration anchor is preserved: a bare count()
 is one ungrouped aggregate node => multiplier exactly 1.0.
 
 File sizes come from the plan walk that also feeds the cache key
-(``plans.fingerprint.input_files``: analyzed plan plus subqueries, so a
-``.cache()``d frame sizes like the uncached one) and one FS-layer listing
+(``plans.fingerprint.input_files``: optimized plan plus subqueries, seen
+through Spark's cache, so a ``.cache()``d frame sizes like the uncached
+one and a partition filter sizes only the kept partitions) and one
+FS-layer listing
 per input directory (``fs.file_sizes``). That is driver-side metadata
 only — no job runs. **[NS]** note: Spark's own CBO stats (``ANALYZE
 TABLE`` / ``optimizedPlan().stats()``) can replace the file-stat path where

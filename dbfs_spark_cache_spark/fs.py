@@ -40,10 +40,7 @@ def strip_scheme(path: str) -> str:
 
 
 def is_local(path: str) -> bool:
-    p = path
-    if p.startswith("file:"):
-        return True
-    return "://" not in p
+    return path.startswith("file:") or "://" not in path
 
 
 def _active_jvm_fs(path: str):
@@ -109,25 +106,20 @@ def list_dir(path: str) -> List[FileStat]:
     # an exists() pre-check would double the metadata RPCs on every listing
     # (list_dir runs once per micro-batch in _ledger_state and recursively
     # under tree_size) to save nothing the catch doesn't already handle.
-    out = []
     try:
         statuses = jfs.listStatus(jpath)
     except Exception as exc:
         if "FileNotFoundException" in str(exc):
             return []
         raise
-    for status in statuses:
-        p = status.getPath().toString()
-        out.append(FileStat(p, status.getPath().getName(), int(status.getLen()),
-                            int(status.getModificationTime()), status.isDirectory()))
-    return out
+    return [FileStat(s.getPath().toString(), s.getPath().getName(), int(s.getLen()),
+                     int(s.getModificationTime()), s.isDirectory()) for s in statuses]
 
 
 def file_size(path: str) -> Optional[int]:
     if is_local(path):
-        local = strip_scheme(path)
         try:
-            return os.stat(local).st_size
+            return os.stat(strip_scheme(path)).st_size
         except OSError:
             return None
     try:
@@ -151,9 +143,7 @@ def file_sizes(paths: Iterable[str]) -> List[int]:
     for d, names in wanted.items():
         listed = {stat.name: stat.size for stat in list_dir(d)}
         for name in names:
-            size = listed.get(name)
-            if size is None:
-                size = file_size(f"{d}/{name}")
+            size = listed[name] if name in listed else file_size(f"{d}/{name}")
             if size is not None:
                 sizes.append(size)
     return sizes
@@ -241,9 +231,8 @@ def max_mtime(path: str, skip_names: tuple = ("_delta_log",)) -> Optional[dateti
     if stats:
         return _utc_naive(max(s.mtime_ms for s in stats) / 1000)
     if is_local(path):
-        local = strip_scheme(path)
         try:
-            return _utc_naive(os.stat(local).st_mtime)
+            return _utc_naive(os.stat(strip_scheme(path)).st_mtime)
         except OSError:
             return None
     try:

@@ -60,7 +60,8 @@ def spread_unsplittable_scan(
     scale; under the size cap the moved bytes are bounded by one split per
     core — less data than one task would otherwise grind through serially.
     It is the opposite of a constant tuned to one deployment. A failed
-    probe leaves the frame alone.
+    probe (a listing that raises, a file that cannot be sized) leaves the
+    frame alone.
 
     Results are partitioning-invariant for every caller by contract
     (pure per-row map stages feeding set-semantic joins/aggregations;
@@ -84,10 +85,12 @@ def spread_unsplittable_scan(
                 spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
             )
         )
-        if sum(fs.file_sizes(files)) > target * max_split:
-            # Few-but-large files: parquet row groups usually make these
-            # splittable to >= target tasks anyway, and moving this many
-            # bytes is no longer obviously cheaper than the serial scan.
+        sizes = fs.file_sizes(files)
+        if len(sizes) < len(files) or sum(sizes) > target * max_split:
+            # A file went unsized (the probe failed), or few-but-large
+            # files: parquet row groups usually make these splittable to
+            # >= target tasks anyway, and moving this many bytes is no
+            # longer obviously cheaper than the serial scan.
             return df
     except Exception:
         # Non-introspectable plan: leave the frame alone rather than guess.

@@ -12,14 +12,18 @@ The default analyzed plan prints a file scan as ``Relation [id#L] parquet``
 with no path, so the input block is the only part of the key that tells two
 same-shaped queries over different data apart. :func:`input_files` owns the
 question "which files does this frame read": it walks the leaves of the
-ANALYZED plan and of every subquery plan in it, takes each file relation's
-``location().inputFiles()`` and percent-decodes the URIs into paths the FS
-layer can open. The fingerprint, the cost gate (``complexity``) and the
-spread gate (``operators.scale``) all read it. ``DataFrame.inputFiles()``
-is not used: it reads the optimized plan, where Spark has already swapped a
-``.cache()``d fragment for an in-memory relation (its files vanish), it
-skips scalar subqueries, and it returns escaped URIs (``with%20space``)
-that name no file on disk.
+OPTIMIZED plan and of every subquery plan in it, takes the files each
+leaf reads as ``Dataset.inputFiles`` would (a file relation's files, an
+unconverted Hive table's directory, a DSv2 file table's files) and
+percent-decodes the URIs into paths the FS layer can open. The
+fingerprint, the cost gate (``complexity``) and the spread gate
+(``operators.scale``) all read it. ``DataFrame.inputFiles()`` itself is
+not used: it skips scalar subqueries, it lists nothing for a fragment
+Spark swapped for its ``.cache()``d in-memory copy (the walk re-optimizes
+the analyzed plan without that swap instead), and it returns escaped URIs
+(``with%20space``) that name no file on disk. The optimized plan, not the
+analyzed one, is walked because partition pruning of a catalog table
+happens in the optimizer: the analyzed plan lists every partition.
 
 Trust model. The key trusts the file system's modification times, as the
 reference does: a rewrite of an input must change the newest mtime among the
@@ -27,9 +31,11 @@ entries of its directory (second resolution). A directory whose mtime cannot
 be read makes the key unmatchable; it never drops out of the key. The walk
 has three known gaps:
 
-* leaves that are not file relations (in-memory data, RDDs, JDBC, DSv2 and
-  unconverted Hive tables) add no input line, so their identity is the
-  plan text alone (RDD plans are refused as uncacheable);
+* leaves that read no files (in-memory data, RDDs, JDBC, non-file DSv2
+  sources) add no input line, so their identity is the plan text alone
+  (RDD plans are refused as uncacheable); an unconverted Hive table
+  contributes its table directory, so its line reads the newest mtime
+  among the entries of the directory that holds it;
 * a change that keeps every input directory's newest mtime (deleting a
   file that was not the newest, restoring an old copy of one) keeps the
   key;
@@ -37,7 +43,8 @@ has three known gaps:
   although only the distinct directories enter the key.
 
 Cost otherwise: driver-side metadata only — one py4j call for the plan
-text, a few per plan leaf, and one filesystem LIST per distinct input
+text, a few per plan leaf, one more optimizer pass for a frame with a
+Spark-cached fragment, and one filesystem LIST per distinct input
 *directory*.
 """
 from __future__ import annotations
@@ -53,7 +60,7 @@ from datetime import datetime
 from typing import Dict, List, Mapping, Optional, Tuple, Union
 from urllib.parse import unquote
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 
 from .. import fs, layout
@@ -286,27 +293,51 @@ def _scala_seq(seq) -> list:
     return [seq.apply(i) for i in range(seq.size())]
 
 
+def _leaves(plan) -> list:
+    """(class name, node) of every leaf of ``plan`` and of its subqueries."""
+    subs = [plan, *_scala_seq(plan.subqueriesAll())]
+    return [(leaf.getClass().getSimpleName(), leaf)
+            for sub in subs for leaf in _scala_seq(sub.collectLeaves())]
+
+
+def _leaf_files(kind: str, leaf) -> List[str]:
+    """The URIs one plan leaf reads, as ``Dataset.inputFiles`` lists them:
+    a file relation's files, an unconverted Hive table's directory, a DSv2
+    file table's files; nothing for any other leaf."""
+    if kind == "HiveTableRelation":
+        uri = leaf.tableMeta().storage().locationUri()
+        return [uri.get().toString()] if uri.isDefined() else []
+    try:
+        if kind == "LogicalRelation":
+            return list(leaf.relation().location().inputFiles())
+        if kind == "DataSourceV2ScanRelation":
+            return list(leaf.relation().table().fileIndex().inputFiles())
+    except Py4JJavaError:  # the listing itself failed: the caller decides
+        raise
+    except Py4JError:  # no such method: not a file-based relation
+        pass
+    return []
+
+
 def input_files(df: DataFrame) -> List[str]:
     """Every file ``df`` reads, as sorted distinct paths the FS layer can
     open (``file:///dir/part-0.parquet``, ``s3a://b/with space/part-0``).
 
-    Walks the leaves of the analyzed plan and of each plan in its
-    ``subqueriesAll()``; every leaf with a ``relation().location()`` (a
-    file relation) contributes ``location().inputFiles()``, percent-decoded
-    (Spark renders each file as an escaped URI). The analyzed plan precedes
-    Spark's substitution of ``.cache()``d fragments, so a Spark-cached frame
-    lists the same files as the uncached one. Whatever Spark raises while
-    listing propagates to the caller."""
-    analyzed = df._jdf.queryExecution().analyzed()  # type: ignore[attr-defined]
-    files = set()
-    for plan in [analyzed, *_scala_seq(analyzed.subqueriesAll())]:
-        for leaf in _scala_seq(plan.collectLeaves()):
-            try:
-                location = leaf.relation().location()
-            except Py4JError:  # no such method: not a file relation
-                continue
-            files.update(unquote(uri) for uri in location.inputFiles())
-    return sorted(files)
+    Walks the leaves of the optimized plan (so a filter on a catalog
+    table's partition column lists only the kept partitions) and of each
+    plan in its ``subqueriesAll()`` (so a scalar subquery's scan counts),
+    and percent-decodes the URIs Spark renders. Where the optimized plan
+    holds a ``.cache()``d fragment (an in-memory relation, whose files are
+    out of sight), the analyzed plan is optimized again without that
+    substitution, so a Spark-cached frame lists the files of the uncached
+    one. Whatever Spark raises while listing propagates to the caller."""
+    qe = df._jdf.queryExecution()  # type: ignore[attr-defined]
+    leaves = _leaves(qe.optimizedPlan())
+    if any(kind == "InMemoryRelation" for kind, _ in leaves):
+        optimizer = df.sparkSession._jsparkSession.sessionState().optimizer()
+        leaves = _leaves(optimizer.execute(qe.analyzed().clone()))
+    return sorted({unquote(uri) for kind, leaf in leaves
+                   for uri in _leaf_files(kind, leaf)})
 
 
 _InputInfo = Union[Dict[str, datetime], Dict[str, bool], Dict[str, str]]
@@ -349,10 +380,8 @@ def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputI
     except Exception as exc:
         if "SCHEMA_CHANGE" in str(exc).upper():
             return _unmatchable(SCHEMA_CHANGED_KEY)
-        log.warning(
-            "input listing failed (%s); fingerprint made unmatchable — "
-            "this run cannot hit or create a reusable cache entry", exc
-        )
+        log.warning("input listing failed (%s); fingerprint made unmatchable — this "
+                    "run cannot hit or create a reusable cache entry", exc)
         return _unmatchable(INPUT_LISTING_FAILED_KEY)
 
     # Cache-entry data directories contribute a mtime-free path line (the
@@ -361,16 +390,13 @@ def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputI
 
     result: Dict[str, Union[datetime, str]] = {}
     for d in sorted({os.path.dirname(f) for f in files}):
-        local = fs.strip_scheme(d)
-        if any(rx.search(local) for rx in skip_res):
+        if any(rx.search(fs.strip_scheme(d)) for rx in skip_res):
             result[d] = CACHED_INPUT_MARKER
             continue
         mtime = fs.max_mtime(d)
         if mtime is None:
-            log.warning(
-                "input directory %s has no readable mtime; fingerprint made "
-                "unmatchable", d,
-            )
+            log.warning("input directory %s has no readable mtime; fingerprint "
+                        "made unmatchable", d)
             return _unmatchable(INPUT_LISTING_FAILED_KEY)
         result[d] = mtime
     return result

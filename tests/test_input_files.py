@@ -206,3 +206,84 @@ def test_input_files_equals_decoded_input_files_on_every_registered_query(spark)
         if walked != listed:
             mismatched[name] = sorted(walked ^ listed)
     assert not mismatched, mismatched
+
+
+def test_partition_filter_on_a_catalog_table_lists_only_kept_partitions(
+    spark, tmp_path
+):
+    """Spark prunes a catalog table's partitions in the optimizer; the
+    analyzed plan's index lists every partition, so walking it sized the
+    whole table and changed the key of a filtered read."""
+    from dbfs_spark_cache_spark.plans.fingerprint import input_files
+
+    spark.range(40).withColumn("p", F.col("id") % 4).write.partitionBy(
+        "p"
+    ).option("path", str(tmp_path / "pt")).saveAsTable("input_files_pt")
+    try:
+        df = spark.table("input_files_pt").where("p = 1")
+        files = input_files(df)
+        assert files and all("/pt/p=1/" in f for f in files)
+        assert set(files) == {unquote(f) for f in df.inputFiles()}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS input_files_pt")
+
+
+def test_dsv2_file_source_lists_its_files(spark, tmp_path):
+    from dbfs_spark_cache_spark.plans.fingerprint import input_files
+
+    path = _write_ids(str(tmp_path / "v2"), 10)
+    spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    try:
+        df = _q(spark, path)
+        assert "BatchScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert input_files(df) == [f"file://{path}/part-0.parquet"]
+    finally:
+        spark.conf.unset("spark.sql.sources.useV1SourceList")
+
+
+_HIVE_CHILD = r"""
+import json, os, sys, time
+sys.path.insert(0, {repo!r})
+os.chdir({root!r})  # derby.log and metastore_db land here
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.sql.warehouse.dir", {root!r} + "/wh")
+    .config("spark.ui.enabled", "false")
+    .enableHiveSupport()
+    .getOrCreate()
+)
+from dbfs_spark_cache_spark.plans.fingerprint import input_files, resolve_table_hash
+spark.sql("CREATE TABLE t (id INT) STORED AS TEXTFILE")
+spark.sql("INSERT INTO t VALUES (1), (2), (3)")
+build = lambda: spark.table("t").groupBy().count()
+leaf = build()._jdf.queryExecution().optimizedPlan().collectLeaves().apply(0)
+out = {{"leaf": leaf.getClass().getSimpleName(), "files": input_files(build()),
+        "before": resolve_table_hash(build())}}
+time.sleep(1.1)
+spark.sql("INSERT OVERWRITE TABLE t SELECT id FROM range(5)")
+out["after"] = resolve_table_hash(build())
+print("RESULT", json.dumps(out))
+spark.stop()
+"""
+
+
+def test_unconverted_hive_table_rewrite_changes_the_key(tmp_path):
+    """A Hive serde (text) table is a HiveTableRelation, not a file
+    relation: it reads through its table directory, and an INSERT
+    OVERWRITE of it must change the key rather than serve the old rows."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run(
+        [sys.executable, "-c", _HIVE_CHILD.format(repo=repo, root=str(tmp_path))],
+        capture_output=True, text=True, timeout=300,
+    )
+    line = [ln for ln in child.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert line, child.stderr[-2000:]
+    out = json.loads(line[0][len("RESULT "):])
+    assert out["leaf"] == "HiveTableRelation"
+    assert out["after"] != out["before"]
+    assert out["files"] == [f"file:{tmp_path}/wh/t"]

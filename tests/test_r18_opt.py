@@ -185,6 +185,18 @@ def test_spread_identity_when_input_is_large(spark, monkeypatch):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
+def test_spread_identity_when_a_file_cannot_be_sized(spark, monkeypatch):
+    # A file the size probe cannot stat (gone, unreadable) must not count
+    # as 0 bytes and tip the gate into a repartition.
+    from dbfs_spark_cache_spark import fs
+    from dbfs_spark_cache_spark.operators.scale import spread_unsplittable_scan
+
+    df = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet").select("l_orderkey")
+    monkeypatch.setattr(fs, "list_dir", lambda path: [])
+    monkeypatch.setattr(fs, "file_size", lambda path: None)
+    assert spread_unsplittable_scan(df) is df
+
+
 def test_spread_result_invariance_on_minhash(spark):
     # The spread is a pure partitioning change: signatures per doc must be
     # bit-identical with and without it.
