@@ -12,7 +12,7 @@ default to ``/tmp`` paths so tests need zero setup.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 
 def _env_str(name: str, default: str) -> str:
@@ -31,6 +31,9 @@ def _env_bool(name: str, default: bool) -> bool:
     if raw is None or raw == "":
         return default
     return raw.strip().lower() in ("1", "true", "yes", "on")
+
+
+CACHE_FORMATS = ("parquet", "delta")
 
 
 @dataclass
@@ -64,19 +67,20 @@ class Settings:
     PREFER_SPARK_CACHE: bool = field(
         default_factory=lambda: _env_bool("PREFER_SPARK_CACHE", True)
     )
-    # Table format for materialized caches. "delta" when delta jars are on the
-    # classpath; plain parquet otherwise (works everywhere, still columnar).
+    # Table format for materialized caches: "parquet" (works everywhere,
+    # still columnar) or "delta" (transactional; needs the delta jars on the
+    # classpath, else writes degrade to parquet). The read of an entry and
+    # the transactional checks know only these two.
     CACHE_FORMAT: str = field(
         default_factory=lambda: _env_str("CACHE_FORMAT", "parquet")
     )
-    # Plan text used for fingerprinting: "analyzed" (one resolved logical
-    # plan: fast, stable across optimizer/physical changes) or "extended"
-    # (full 4-section explain, byte-compatible with the reference's input).
-    PLAN_FINGERPRINT_MODE: str = field(
-        default_factory=lambda: _env_str("PLAN_FINGERPRINT_MODE", "analyzed")
-    )
 
     def __post_init__(self) -> None:
+        if self.CACHE_FORMAT not in CACHE_FORMATS:
+            raise ValueError(
+                f"CACHE_FORMAT must be one of {CACHE_FORMATS}, "
+                f"not {self.CACHE_FORMAT!r}"
+            )
         if not self.SPARK_CACHE_DIR.endswith("/"):
             self.SPARK_CACHE_DIR += "/"
         # Catalog-case drift guard: Spark stores unquoted catalog
@@ -96,11 +100,11 @@ config = Settings()
 
 
 def reconfigure(**overrides) -> Settings:
-    """Replace fields on the global settings object (used by tests), then
-    re-apply the normalization every new :class:`Settings` gets."""
-    for key, value in overrides.items():
+    """Replace fields on the global settings object (used by tests). The
+    result is validated and normalized like every new :class:`Settings`
+    first, so a rejected value leaves the settings as they were."""
+    for key in overrides:
         if not hasattr(config, key):
             raise AttributeError(f"Unknown setting: {key}")
-        setattr(config, key, value)
-    config.__post_init__()
+    vars(config).update(vars(replace(config, **overrides)))
     return config

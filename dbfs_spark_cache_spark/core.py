@@ -3,13 +3,18 @@
 Re-implements the reference's caching subsystem (reference:
 dbfs_spark_cache/core_caching.py) Spark-first:
 
-* materialized caches are managed tables in ``config.CACHE_DATABASE``
-  (Parquet locally; Delta transparently when its jars are present);
+* materialized caches are written as managed tables in
+  ``config.CACHE_DATABASE`` (parquet, or delta when ``CACHE_FORMAT`` asks
+  for it and its jars are present); the catalog entry serves the registry;
 * metadata sidecars live under ``config.SPARK_CACHE_DIR/<hash>/`` via the
   engine's FS layer (local os / Hadoop FS) instead of ``dbutils``;
-* a cache hit replaces the user's whole logical plan with a columnar table
-  scan — Catalyst then gets predicate pushdown + column pruning on the
-  materialized result for free.
+* a cache hit replaces the user's whole logical plan with a columnar scan
+  of the entry's files — Catalyst then gets predicate pushdown + column
+  pruning on the materialized result for free. The reference reads the
+  catalog table instead; a catalog that dies with the session (Spark's
+  in-memory one) cannot serve that read, and a second read form would
+  give an entry, and every frame built on it, a different plan in the
+  writing session than in later ones.
 
 The reference's double-write bug (saveAsTable called twice per miss,
 core_caching.py:113-114) is intentionally NOT reproduced.
@@ -23,6 +28,7 @@ from typing import Any, Callable, List, Mapping, NamedTuple, Optional, Tuple, Un
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from . import fs, layout
 from .config import config
@@ -109,8 +115,8 @@ def ensure_cache_database(spark: SparkSession) -> None:
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {config.CACHE_DATABASE}")
 
 
-# Session-level memo: once the configured format proved unavailable, go
-# straight to parquet for the rest of the session (writes AND path reads).
+# Session-level memo: once the configured format proved unavailable, write
+# parquet for the rest of the session.
 _FORMAT_FALLBACK: dict = {}
 
 
@@ -127,45 +133,32 @@ def _is_format_missing(exc: Exception) -> bool:
 
 
 def _save_as_cache_table(
-    df: DataFrame,
-    table: str,
-    partition_by: Optional[List[str]] = None,
-    bucket_by: Optional[List[str]] = None,
-    n_buckets: int = 16,
-    bucket_sort_by: Optional[List[str]] = None,
-) -> None:
-    """Materialize a DataFrame as a managed columnar table.
+    df: DataFrame, table: str, partition_by: Optional[List[str]] = None
+) -> str:
+    """Materialize a DataFrame as a managed columnar table and return the
+    format written. The catalog entry serves the registry (``management``
+    lists the cache database); hits read the files (``_scan_entry``).
 
     Unpartitioned overwrite, like the reference. At 100 TB callers should
     pre-``repartition`` on a natural key before caching; the write itself is
-    a single distributed job either way.
-
-    ``bucket_by`` buckets (and optionally sorts) the materialized table by
-    its join key: downstream joins between same-bucketed cached tables run
-    WITHOUT a shuffle on either side (see ``operators.scale.write_bucketed``
-    — this is that pre-computation fused into the cache write). Bucketing
-    metadata lives in the catalog; the path-read fallback still returns
-    correct rows but loses the shuffle elimination.
+    a single distributed job either way. Bucketing is not offered here: a
+    scan of the entry's files carries no bucket spec, so it would buy
+    nothing (``operators.scale.write_bucketed`` writes bucketed tables).
     """
     ensure_cache_database(df.sparkSession)
 
-    def build_writer(fmt: str):
-        writer = df.write.mode("overwrite")
-        if fmt:
-            writer = writer.format(fmt)
+    def save(fmt: str) -> str:
+        writer = df.write.mode("overwrite").format(fmt)
         if partition_by:
             # At 100 TB an unpartitioned cache makes every downstream read a
             # full scan; partitioning on a natural key turns filtered
             # re-reads into partition-pruned scans.
             writer = writer.partitionBy(*partition_by)
-        if bucket_by:
-            writer = writer.bucketBy(n_buckets, *bucket_by)
-            if bucket_sort_by:
-                writer = writer.sortBy(*bucket_sort_by)
-        return writer
+        writer.saveAsTable(table)
+        return fmt
 
     try:
-        build_writer(_effective_cache_format()).saveAsTable(table)
+        return save(_effective_cache_format())
     except Exception as exc:
         # Configured format's jars absent (e.g. CACHE_FORMAT=delta without
         # delta-spark on the classpath): degrade to parquet — still
@@ -173,15 +166,14 @@ def _save_as_cache_table(
         # driver-side format-resolution failures qualify; anything matching
         # mid-job (task failures also mention ClassNotFound) must re-raise
         # rather than silently re-run a huge write.
-        if _effective_cache_format() not in ("", "parquet") and _is_format_missing(exc):
+        if _effective_cache_format() != "parquet" and _is_format_missing(exc):
             log.warning(
                 "Cache format %r unavailable (%s); falling back to parquet",
                 config.CACHE_FORMAT, exc_summary(exc),
             )
             _FORMAT_FALLBACK["parquet"] = True
-            build_writer("parquet").saveAsTable(table)
-        else:
-            raise
+            return save("parquet")
+        raise
 
 
 def _marks_success_jobs(spark: SparkSession) -> bool:
@@ -260,73 +252,74 @@ def _writer_marks_success(
     return _marks_success_jobs(spark)
 
 
+def _scan_entry(
+    spark: SparkSession, location: str, fmt: str, schema: Optional[StructType]
+) -> DataFrame:
+    """The one read of a cache entry: a scan of its files. Every session
+    reads an entry this way, so the entry, and every frame built on it,
+    prints one plan and keys one way whichever session wrote it; the
+    input walk recognises the entry by its directory
+    (``layout.cached_input_patterns``). A parquet scan takes ``schema``,
+    the schema of the frame whose key names the entry, rather than
+    inferring one: inference types a ``partition_by`` column from its
+    directory names (a ``bigint`` column reads back as ``int``, and a
+    frame filtered on it would key differently)."""
+    reader = spark.read.format(fmt)
+    if fmt == "parquet" and schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(location)
+
+
 def _read_cache_table(
     spark: SparkSession,
     hash_name: str,
     sidecar_dir: Optional[str] = None,
+    schema: Optional[StructType] = None,
 ) -> Optional[DataFrame]:
-    """Read a cache entry via the catalog, falling back to its files.
-
-    The path fallback is what makes caches survive session restarts on
-    catalogs without persistence (local in-memory catalog); on a shared
-    metastore the catalog branch always wins.
+    """Scan a cache entry's data location, or None when no committed,
+    intact data is there.
 
     ``sidecar_dir``: the directory holding this entry's metadata/committer/
     inventory sidecars, when the caller resolved it (a custom ``cache_path``
     base relocates them); ``None`` probes the default SPARK_CACHE_DIR
     layout, which is also where ``create_cached_dataframe`` entries and the
-    management scans live.
+    management scans live. ``schema``: see ``_scan_entry``.
     """
     sidecars = sidecar_dir or layout.sidecar_dir(hash_name)
-    table = table_name_for_hash(hash_name)
-    # Corrupt-committed-data guard: an entry whose live data-file listing
-    # disagrees with the writer-recorded inventory has lost (or grown) part
-    # files AFTER commit — serving it would return partial rows as a valid
-    # hit through EITHER branch (a parquet scan of a directory missing
-    # files succeeds silently). Refuse and let the caller recompute; the
-    # rewrite re-records a fresh inventory. One driver-side recursive
-    # listing per hit, only for entries carrying a record; a failed
-    # listing reads None, so the guard never turns a readable cache into
-    # a crash.
-    if layout.inventory_ok(spark, hash_name, sidecars) is False:
-        log.warning(
-            "Cache entry %s fails its data-file inventory (part files "
-            "lost or altered after commit — partial restore / copy "
-            "truncation?); treating as a miss", hash_name,
-        )
-        return None
-    if _table_exists(spark, table):
-        try:
-            return spark.read.table(table)
-        except Exception as exc:
-            # e.g. a delta-written table read in a jar-less session: treat
-            # as a miss / try the files rather than crash the safe wrapper.
-            log.warning("Catalog read failed for %s (%s); trying files",
-                        table, exc_summary(exc))
     location = layout.table_location(spark, hash_name)
-    if fs.exists(location):
-        # The files may have been written by the configured format OR by the
-        # parquet degradation path of a previous session — try both. BUT a
-        # transactional-format directory (_delta_log present) must never be
-        # read as raw parquet: superseded file versions would surface as
-        # duplicated/stale rows presented as a valid hit.
-        is_transactional = layout.is_transactional(location)
+    if not fs.exists(location):
+        return None
+    # A transactional directory (_delta_log present) is read through its
+    # log: a raw parquet scan would surface superseded file versions as
+    # duplicated or stale rows. Its log is also its inventory and its
+    # commit marker, so the two guards below are for parquet only.
+    transactional = layout.is_transactional(location)
+    if not transactional:
+        # Corrupt-committed-data guard: a live data-file listing that
+        # disagrees with the writer-recorded inventory means part files
+        # were lost (or added) AFTER commit, and a scan would serve partial
+        # rows as a valid hit. Refuse; the rewrite re-records the inventory.
+        # A failed listing reads None, so the guard never turns a readable
+        # cache into a crash.
+        if layout.inventory_ok(spark, hash_name, sidecars, location) is False:
+            log.warning(
+                "Cache entry %s fails its data-file inventory (part files "
+                "lost or altered after commit — partial restore / copy "
+                "truncation?); treating as a miss", hash_name,
+            )
+            return None
         # Cross-process torn-write guard: the write is remove-then-rewrite,
-        # and _lock_for_key only serializes THIS driver — another process
-        # path-reading mid-rewrite would load a half-written directory.
-        # Spark's job committer lands _SUCCESS last, so for
-        # non-transactional formats its absence means "no committed write
-        # here" — report a clean miss, never partial data. The check
-        # applies only when the committer that WROTE this entry marks
-        # success jobs (marksuccessfuljobs=false, common on S3A/magic-
-        # committer platforms, never writes the marker; requiring it would
-        # permanently disable the path fallback). Markerless-written entries
-        # accept the narrower cross-process window (use a transactional
-        # CACHE_FORMAT for full protection there).
-        if (
-            not is_transactional
-            and _writer_marks_success(spark, sidecars)
-            and not layout.has_success_marker(location)
+        # and _lock_for_key only serializes THIS driver, so another process
+        # may be mid-rewrite. Spark's job committer lands _SUCCESS last, so
+        # its absence means "no committed write here": a clean miss, never
+        # partial data. Unless the committer that WROTE this entry never
+        # writes the marker (marksuccessfuljobs=false, common on S3A/magic-
+        # committer platforms); those entries accept the narrower
+        # cross-process window (a transactional CACHE_FORMAT closes it).
+        # The marker is probed first: the writer's record matters only
+        # when it is missing.
+        if not layout.has_success_marker(location) and _writer_marks_success(
+            spark, sidecars
         ):
             log.warning(
                 "Cache location %s exists but has no _SUCCESS job-commit "
@@ -335,18 +328,14 @@ def _read_cache_table(
                 location,
             )
             return None
-        formats = [_effective_cache_format() or "parquet"]
-        if "parquet" not in formats and not is_transactional:
-            formats.append("parquet")
-        for fmt in formats:
-            if fmt == "parquet" and is_transactional:
-                continue
-            try:
-                return spark.read.format(fmt).load(location)
-            except Exception as exc:
-                log.warning("Path read (%s) failed for %s: %s", fmt, location,
-                            exc_summary(exc))
-    return None
+    fmt = "delta" if transactional else "parquet"
+    try:
+        return _scan_entry(spark, location, fmt, schema)
+    except Exception as exc:
+        # e.g. a delta entry read in a session without the delta jars
+        log.warning("Scan (%s) failed for %s: %s", fmt, location,
+                    exc_summary(exc))
+        return None
 
 
 def _materialize(
@@ -355,9 +344,6 @@ def _materialize(
     sidecars: str,
     metadata_txt: str,
     partition_by: Optional[List[str]] = None,
-    bucket_by: Optional[List[str]] = None,
-    n_buckets: int = 16,
-    bucket_sort_by: Optional[List[str]] = None,
 ) -> DataFrame:
     """The write protocol shared by ``write_cache`` and
     ``create_cached_dataframe``; the caller holds ``key``'s lock.
@@ -371,26 +357,19 @@ def _materialize(
        so a write that dies earlier leaves no sidecar and the next call
        retries it.
 
-    Returns a catalog scan of the table just committed.
+    Returns a scan of the files just committed, the read every later hit
+    makes.
     """
     spark = df.sparkSession
     table = table_name_for_hash(key)
-    if not _table_exists(spark, table):
-        location = layout.table_location(spark, key)
-        if fs.exists(location):
-            fs.remove(location)
-    _save_as_cache_table(
-        df,
-        table,
-        partition_by=partition_by,
-        bucket_by=bucket_by,
-        n_buckets=n_buckets,
-        bucket_sort_by=bucket_sort_by,
-    )
+    location = layout.table_location(spark, key)
+    if not _table_exists(spark, table) and fs.exists(location):
+        fs.remove(location)
+    fmt = _save_as_cache_table(df, table, partition_by=partition_by)
     _record_writer_committer(spark, sidecars)
     _record_data_inventory(spark, key, sidecars)
     fs.write_text(layout.metadata_path(sidecars), metadata_txt)
-    return spark.read.table(table)
+    return _scan_entry(spark, location, fmt, df.schema)
 
 
 def read_cache_if_exist(
@@ -402,28 +381,27 @@ def read_cache_if_exist(
 ) -> Optional[DataFrame]:
     """Return the materialized cache for ``df``'s fingerprint, or None.
 
-    Hit requires BOTH the metadata sidecar and the catalog table to exist
-    (reference: core_caching.py:409-471). ``hash_name``/``cache_path``
-    must mirror whatever the write used — a custom-keyed cache
-    (``cacheToStorage(hash_name=...)``) is invisible to a default-keyed
-    probe, which previously sent every such call down the miss path
-    (re-materializing or landing in the Spark-cache tier) even though
-    the table existed.
+    A hit requires the metadata sidecar and a committed, intact data
+    location; it is a scan of that location with ``df``'s schema (the
+    reference reads the catalog table, core_caching.py:409-471, which only
+    a metastore that outlives the session can serve). ``hash_name``/
+    ``cache_path`` must mirror whatever the write used — a custom-keyed
+    cache (``cacheToStorage(hash_name=...)``) is invisible to a
+    default-keyed probe.
     """
     spark = df.sparkSession
     plan = query_plan if query_plan is not None else canonical_plan(df)
-    info = input_info if input_info is not None else input_dir_mod_datetime(df, plan)
+    info = input_info if input_info is not None else input_dir_mod_datetime(df)
 
     key, sidecars, metadata_path, metadata_txt = table_cache_info(
         info, plan, hash_name=hash_name, cache_path_base=cache_path
     )
-    # The probe runs UNDER the key's write lock (r14 fresh-eyes review):
-    # writers hold it across saveAsTable + sidecar write, and a custom-
-    # keyed REWRITE ("metadata changed; rewriting") overwrites the table
-    # location non-atomically — an unserialized probe could read the old
-    # sidecar, find the catalog entry mid-overwrite, and fall to the PATH
-    # read of a half-written directory: partial part-files served as a
-    # valid hit (silent wrong data, the worst class). Eviction
+    # The probe runs UNDER the key's write lock: writers hold it across
+    # saveAsTable + sidecar write, and a custom-keyed REWRITE ("metadata
+    # changed; rewriting") overwrites the table location non-atomically —
+    # an unserialized probe could read the old sidecar and scan a
+    # half-written directory: partial part-files served as a valid hit
+    # (silent wrong data, the worst class). Eviction
     # (management.clear_cache_for_hash) takes the same lock, so a probe
     # now sees each entry either fully live or fully gone, never
     # mid-drop. The lock covers only sidecar read + scan CONSTRUCTION
@@ -444,9 +422,11 @@ def read_cache_if_exist(
         stored = fs.read_text(metadata_path)
         if stored is None or (hash_name is not None and stored != metadata_txt):
             return None
-        cached = _read_cache_table(spark, key, sidecar_dir=sidecars)
+        cached = _read_cache_table(
+            spark, key, sidecar_dir=sidecars, schema=df.schema
+        )
     if cached is None:
-        log.warning("Cache metadata exists but table %s is missing", key)
+        log.warning("Cache metadata exists but entry %s has no readable data", key)
     return cached
 
 
@@ -458,9 +438,6 @@ def write_cache(
     hash_name: Optional[str] = None,
     cache_path: Optional[str] = None,
     partition_by: Optional[List[str]] = None,
-    bucket_by: Optional[List[str]] = None,
-    n_buckets: int = 16,
-    bucket_sort_by: Optional[List[str]] = None,
     verbose: bool = False,
 ) -> DataFrame:
     """Materialize ``df`` under its content hash and return the cached scan.
@@ -468,14 +445,12 @@ def write_cache(
     Skips the (expensive, distributed) write when the stored metadata is
     byte-identical — the cache is already current (reference:
     core_caching.py:100-102). ``partition_by`` partitions the materialized
-    table (partition-pruned re-reads at scale) and ``bucket_by``/
-    ``n_buckets``/``bucket_sort_by`` bucket it by a join key (shuffle-free
-    joins between same-bucketed caches); layout options do not participate
-    in the fingerprint — same result, same cache key, regardless of layout.
+    table (partition-pruned re-reads at scale); it does not participate in
+    the fingerprint — same result, same cache key, regardless of layout.
     """
     spark = df.sparkSession
     plan = query_plan or canonical_plan(df)
-    info = input_info if input_info is not None else input_dir_mod_datetime(df, plan)
+    info = input_info if input_info is not None else input_dir_mod_datetime(df)
 
     key, sidecars, metadata_path, metadata_txt = table_cache_info(
         info, plan, hash_name=hash_name, cache_path_base=cache_path
@@ -494,33 +469,24 @@ def write_cache(
         # duplicate distributed write entirely.
         existing = fs.read_text(metadata_path)
         cached = (
-            _read_cache_table(spark, key, sidecar_dir=sidecars)
+            _read_cache_table(spark, key, sidecar_dir=sidecars, schema=df.schema)
             if existing == metadata_txt else None
         )
         if cached is not None:
             log.info("Cache %s already current; skipping write", key)
-            if partition_by or bucket_by:
+            if partition_by:
                 # Layout is not part of the identity: an existing entry is
                 # served as-written. Re-layout by clearing the entry first.
                 log.info(
-                    "Cache %s served with its existing layout; "
-                    "partition_by/bucket_by apply only when the entry is "
-                    "(re)written",
-                    key,
+                    "Cache %s served with its existing layout; partition_by "
+                    "applies only when the entry is (re)written", key,
                 )
             _bump("write_skips")
         else:
             if existing is not None and existing != metadata_txt:
                 log.info("Cache %s metadata changed; rewriting", key)
             cached = _materialize(
-                df,
-                key,
-                sidecars,
-                metadata_txt,
-                partition_by=partition_by,
-                bucket_by=bucket_by,
-                n_buckets=n_buckets,
-                bucket_sort_by=bucket_sort_by,
+                df, key, sidecars, metadata_txt, partition_by=partition_by
             )
             _bump("writes")
     return cached if replace else df
@@ -613,18 +579,19 @@ def admit(
     for it.
     """
     plan = canonical_plan(df)
+    info: Mapping[str, Any] = {}
     if plan_is_uncacheable(plan):
         refusal = "RDD-backed plan"
     elif getattr(df, "_is_direct_data_cache", False):
         refusal = "direct-data cache source"
     else:
-        scanned = pure_scan_entry(plan)
+        info = input_dir_mod_datetime(df)
+        scanned = pure_scan_entry(plan, info)
         refusal = None if scanned is None else f"pure scan of cache entry {scanned}"
     if refusal is not None:
         log.info("Not caching: %s", refusal)
-        return Admission(plan, {}, refusal)
+        return Admission(plan, info, refusal)
 
-    info = input_dir_mod_datetime(df, plan)
     if INPUT_LISTING_FAILED_KEY in info or SCHEMA_CHANGED_KEY in info:
         log.warning(
             "Unmatchable fingerprint (input listing failed or schema "
@@ -645,17 +612,19 @@ def cache_dataframe(
     complexity_threshold: Optional[float] = None,
     multiplier_threshold: Optional[float] = None,
     verbose: bool = False,
-    **kwargs: Any,
+    hash_name: Optional[str] = None,
+    cache_path: Optional[str] = None,
+    partition_by: Optional[List[str]] = None,
 ) -> DataFrame:
     """The flagship entry point (``df.cacheToStorage()``).
 
     Pipeline (reference: dataframe_extensions.py:29-133):
       admission (plan check -> cache probe -> cost gate) -> Spark-cache tier
       or materialized write. Returns either the original df (refused), the
-      in-memory cached df, or a scan of the materialized table (hit/new
-      write).
+      in-memory cached df, or a scan of the materialized entry (hit/new
+      write). ``hash_name``, ``cache_path`` and ``partition_by`` are passed
+      to the probe and the write; any other keyword is a ``TypeError``.
     """
-    hash_name, cache_path = kwargs.get("hash_name"), kwargs.get("cache_path")
 
     def probe(plan: str, info: Mapping[str, Any]) -> Optional[DataFrame]:
         hit = read_cache_if_exist(
@@ -667,7 +636,7 @@ def cache_dataframe(
 
     verdict = admit(df, complexity_threshold, multiplier_threshold, probe=probe)
     if verdict.hit is not None:
-        log.info("Cache hit; replacing plan with table scan")
+        log.info("Cache hit; replacing plan with a scan of the entry")
         return verdict.hit
     if verdict.refusal is not None:
         if verdict.refusal == BELOW_THRESHOLD:
@@ -704,10 +673,7 @@ def cache_dataframe(
         input_info=verdict.info,
         hash_name=hash_name,
         cache_path=cache_path,
-        partition_by=kwargs.get("partition_by"),
-        bucket_by=kwargs.get("bucket_by"),
-        n_buckets=kwargs.get("n_buckets", 16),
-        bucket_sort_by=kwargs.get("bucket_sort_by"),
+        partition_by=partition_by,
         verbose=verbose,
     )
 
@@ -731,8 +697,8 @@ def create_cached_dataframe(
     """Content-addressed ``createDataFrame`` (reference:
     core_caching.py:119-206).
 
-    Hashes the driver-local input; on a hit reads the existing ``data_*``
-    table, on a miss creates + materializes it. The returned DataFrame is
+    Hashes the driver-local input; on a hit scans the existing ``data_*``
+    entry, on a miss creates + materializes it. The returned DataFrame is
     tagged so later fingerprinting short-circuits to the data hash.
 
     An explicit ``schema`` participates in the key (a deviation from the

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import logging
 from functools import partial
-from typing import Optional
+from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,16 +32,21 @@ def cacheToStorage(
     dbfs_cache_complexity_threshold: Optional[float] = None,
     dbfs_cache_multiplier_threshold: Optional[float] = None,
     verbose: bool = False,
-    **kwargs,
+    hash_name: Optional[str] = None,
+    cache_path: Optional[str] = None,
+    partition_by: Optional[List[str]] = None,
 ) -> DataFrame:
-    """Cache this DataFrame by content identity; see core.cache_dataframe."""
+    """Cache this DataFrame by content identity; see core.cache_dataframe.
+    An unknown keyword is a ``TypeError``, not a silently dropped option."""
     return cache_dataframe(
         self,
         override_prefer_spark_cache=override_prefer_spark_cache,
         complexity_threshold=dbfs_cache_complexity_threshold,
         multiplier_threshold=dbfs_cache_multiplier_threshold,
         verbose=verbose,
-        **kwargs,
+        hash_name=hash_name,
+        cache_path=cache_path,
+        partition_by=partition_by,
     )
 
 

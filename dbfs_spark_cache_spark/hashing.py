@@ -11,44 +11,11 @@ from __future__ import annotations
 import hashlib
 import io
 import logging
-import re
-from typing import Any, List, Optional, Tuple, Union
+from typing import Any, List, Tuple, Union
 
 import pandas as pd
 
 log = logging.getLogger(__name__)
-
-# Catalog prefixes a table reference may carry inside a plan, depending on
-# environment (Hive metastore vs in-memory catalog vs Databricks).
-_CATALOGS = ("hive_metastore", "spark_catalog")
-
-
-def find_cache_table_in_text(
-    text: str, db_name: str, table_prefix: str = ""
-) -> Optional[str]:
-    """Find ``<catalog>.<db>.<prefix><32-hex>`` in plan/metadata text.
-
-    Returns the table identifier (prefix + hash) or None. Checks each known
-    catalog name so the same cache resolves under Hive and in-memory catalogs
-    (reference: hashing.py:14-35, utils.py:22-51).
-    """
-    for catalog in _CATALOGS:
-        pattern = (
-            rf"{catalog}\.{re.escape(db_name)}\."
-            rf"({re.escape(table_prefix)}[a-f0-9]{{32}})"
-        )
-        match = re.search(pattern, text)
-        if match:
-            return match.group(1)
-    # Bare db.table (no catalog prefix) — seen in some plan nodes locally.
-    match = re.search(
-        rf"(?:^|[\s`\[])({re.escape(db_name)})\.({re.escape(table_prefix)}[a-f0-9]{{32}})",
-        text,
-    )
-    if match:
-        return match.group(2)
-    return None
-
 
 def hash_input_data(
     data: Union[pd.DataFrame, List[Any], Tuple[Any, ...]]

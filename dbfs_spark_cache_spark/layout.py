@@ -3,8 +3,10 @@
 An entry keyed ``<hash>`` (32-hex plan key, ``data_<32-hex>`` direct-data
 key, or a caller's custom ``hash_name``) has two halves:
 
-* its data: the managed table ``<CACHE_DATABASE>.<hash>``, whose files live
-  at ``<spark.sql.warehouse.dir>/<CACHE_DATABASE>.db/<hash>``;
+* its data: the files at ``<spark.sql.warehouse.dir>/<CACHE_DATABASE>.db/
+  <hash>``, written as the managed table ``<CACHE_DATABASE>.<hash>``. The
+  table stays for the registry (``management`` lists the cache database);
+  every read of the entry scans the location, in every session;
 * its sidecars, in ``<base>/<hash>/`` where ``base`` is ``SPARK_CACHE_DIR``
   or the caller's ``cache_path``:
 
@@ -79,20 +81,27 @@ def has_success_marker(location: str) -> bool:
     return fs.exists(f"{location.rstrip('/')}/_SUCCESS")
 
 
-def inventory_ok(spark, hash_name: str, sidecars: Optional[str] = None) -> Optional[bool]:
+def inventory_ok(
+    spark,
+    hash_name: str,
+    sidecars: Optional[str] = None,
+    location: Optional[str] = None,
+) -> Optional[bool]:
     """Does the entry's live data listing match its recorded inventory?
     None when there is nothing to compare: no (parseable) record, no data
     location, or a transactional table. False means data files were lost or
     altered after commit. A failed listing is no finding either: it is
     logged and reads None, so neither the read path nor an operator scan
-    fails on it."""
+    fails on it. A caller that has already seen the data ``location``
+    exist without a commit log passes it, and it is not probed again."""
     try:
         recorded = fs.read_text(inventory_path(sidecars or sidecar_dir(hash_name)))
         if recorded is None:
             return None
-        location = table_location(spark, hash_name)
-        if not fs.exists(location) or is_transactional(location):
-            return None
+        if location is None:
+            location = table_location(spark, hash_name)
+            if not fs.exists(location) or is_transactional(location):
+                return None
         return fs.inventory_matches(location, recorded)
     except Exception as exc:
         log.warning("Inventory check failed for %s (%s: %s)", hash_name,
@@ -105,10 +114,11 @@ def cached_input_patterns() -> List["re.Pattern[str]"]:
     sidecar dir or its warehouse table dir, and any partition
     subdirectory below either (``(/.*)?``: a ``partition_by`` entry keeps
     its data files in ``<hash>/day=.../``). Matched against
-    scheme-stripped paths."""
+    scheme-stripped paths; the group ``entry`` is the entry's key."""
     cache_base = re.escape(config.SPARK_CACHE_DIR.rstrip("/"))
     db = re.escape(config.CACHE_DATABASE)
+    entry = r"(?P<entry>(?:data_)?[a-f0-9]{32})"
     return [
-        re.compile(rf"^{cache_base}/(data_)?[a-f0-9]{{32}}(/.*)?$"),
-        re.compile(rf"/{db}\.db/(data_)?[a-f0-9]{{32}}(/.*)?$"),
+        re.compile(rf"^{cache_base}/{entry}(/.*)?$"),
+        re.compile(rf"/{db}\.db/{entry}(/.*)?$"),
     ]

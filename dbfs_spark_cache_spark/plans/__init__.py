@@ -7,5 +7,4 @@ from .fingerprint import (  # noqa: F401
     resolve_table_hash,
     table_cache_info,
     SCHEMA_CHANGED_KEY,
-    DIRECT_DATA_CACHE_KEY,
 )

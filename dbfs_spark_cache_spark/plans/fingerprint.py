@@ -2,7 +2,7 @@
 
 A DataFrame's cache identity is MD5 over a plain-text metadata document built
 from (a) its input source directories + their latest modification times and
-(b) the canonicalized logical/physical plan text. Same semantics as the
+(b) the canonicalized analyzed-plan text. Same semantics as the
 reference engine (reference: dbfs_spark_cache/core_caching.py:300-325 plan
 canonicalization, :212-297 input fingerprint, :371-406 metadata + key), but
 implemented against the public PySpark API plus the engine's own FS layer so
@@ -23,7 +23,11 @@ Spark swapped for its ``.cache()``d in-memory copy (the walk re-optimizes
 the analyzed plan without that swap instead), and it returns escaped URIs
 (``with%20space``) that name no file on disk. The optimized plan, not the
 analyzed one, is walked because partition pruning of a catalog table
-happens in the optimizer: the analyzed plan lists every partition.
+happens in the optimizer: the analyzed plan lists every partition. A cache
+entry is read by a scan of its files in every session, so the walk also
+recognises frames built on an entry: the entry's directory enters the key
+as a ``CACHED_INPUT_MARKER`` line, and a frame whose only input is one
+entry and whose plan is a bare scan is that entry (``pure_scan_entry``).
 
 Trust model. The key trusts the file system's modification times, as the
 reference does: a rewrite of an input must change the newest mtime among the
@@ -50,12 +54,10 @@ Spark-cached fragment, and one filesystem LIST per distinct input
 from __future__ import annotations
 
 import hashlib
-import io
 import logging
 import os
 import re
 import time
-from contextlib import redirect_stdout
 from datetime import datetime
 from typing import Dict, List, Mapping, Optional, Tuple, Union
 from urllib.parse import unquote
@@ -64,14 +66,11 @@ from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 
 from .. import fs, layout
-from ..config import config
-from ..hashing import find_cache_table_in_text
 
 log = logging.getLogger(__name__)
 
 # Sentinel keys used in the input-fingerprint mapping.
 SCHEMA_CHANGED_KEY = "<schema_changed_placeholder>"
-DIRECT_DATA_CACHE_KEY = "<direct_data_cache>"
 # Listing the input files failed for a reason OTHER than schema change
 # (transient metastore/FS error), or an input directory's mtime could not be
 # read. The fingerprint must become unmatchable — degrading to a plan-only
@@ -79,13 +78,15 @@ DIRECT_DATA_CACHE_KEY = "<direct_data_cache>"
 # worse, HIT such an entry after the inputs changed, serving stale data
 # with no warning.
 INPUT_LISTING_FAILED_KEY = "<input_listing_failed>"
-# Value recorded for input directories that are themselves cache entries:
-# the *path* (which embeds the 32-hex cache hash) participates in the
-# fingerprint, the mtime does not (cache content is immutable for its key,
-# so including mtimes would spuriously invalidate derived caches on
-# repair/re-writes). Without the path line, two derived frames over
-# different path-read cache entries with the same schema and operators
-# would collide on identical metadata documents.
+# Value recorded for input directories that are themselves cache entries
+# (``layout.cached_input_patterns``): the *path*, which embeds the entry's
+# key, participates in the fingerprint; the mtime does not (cache content
+# is immutable for its key, so including mtimes would spuriously invalidate
+# derived caches on repair/re-writes). A scan of an entry prints no table
+# name, so this line is the only part of the key that names the entry:
+# without it, two derived frames over different entries with the same
+# schema and operators would collide. It is also how a pure scan of an
+# entry is recognised (``pure_scan_entry``).
 CACHED_INPUT_MARKER = "<cached-input>"
 
 _EXPR_ID = re.compile(r"#\d+")
@@ -103,68 +104,56 @@ _PLAN_ID = re.compile(r"\[?plan_id=\d+\]?")
 # No trailing \b: after _EXPR_ID strips `#123` from `lambda x_1#123L`, the
 # counter is followed directly by the attribute's type-suffix letter (x_1L).
 _LAMBDA_VAR = re.compile(r"(?<=\blambda )('?\w+?)_\d+")
+# ``spark.sql(query, name=df)`` registers each DataFrame argument as a view
+# under a fresh ``_pyspark_<uuid hex>`` name on every call, so a frame built
+# that way would get a new key on every build. The analyzed plan prints the
+# view's body under its name, so the name carries no identity of its own.
+_SQL_ARG_VIEW = re.compile(r"_pyspark_[0-9a-f]{32}")
 _WS = re.compile(r"\s+")
 # SparkStringUtils.truncatedString elides long field lists in plan text as
 # "... N more fields" when a node exceeds spark.sql.debug.maxToStringFields
 # (default 25). A truncated rendering is NOT content-addressable: two plans
 # differing only in the elided tail canonicalize IDENTICALLY and would share
-# a cache key — a wrong-data hit (r12 fresh-eyes finding; reproduced with
-# two 41-column projections differing in column 41 only).
+# a cache key — a wrong-data hit (as two 41-column projections that differ
+# only in column 41 do).
 _TRUNCATED_FIELDS = re.compile(r"\.\.\. \d+ more fields")
 _MAX_FIELDS_CONF = "spark.sql.debug.maxToStringFields"
 
 
-def canonical_plan(df: DataFrame, mode: Optional[str] = None) -> str:
-    """Canonicalized logical-plan text for fingerprinting.
+def _uncacheable(text: str, marker: str, why: str) -> str:
+    """Loud and UNMATCHABLE plan text: a uuid salt makes two such texts
+    differ even when their cause reads the same, so the frame recomputes
+    each run instead of risking a hit on another frame's entry."""
+    import uuid
 
-    Default mode "analyzed" stringifies the resolved logical plan — already
-    computed when the DataFrame was built, so this is a single cheap py4j
-    call, and it is invariant under optimizer/physical-planning changes
-    (a Spark upgrade doesn't invalidate every cache). Mode "extended"
-    reproduces the reference's behavior (full explain output, reference:
-    core_caching.py:306-316). Both are normalized the same way: expression
-    IDs (``#123``) and plan ids are stripped, whitespace collapsed, so
-    semantically identical queries hash equal.
+    log.warning("%s — fingerprint made unmatchable; this DataFrame cannot "
+                "hit or create a reusable cache entry", why)
+    return f"{text}\n<{marker};uncacheable;id={uuid.uuid4().hex}>"
+
+
+def canonical_plan(df: DataFrame) -> str:
+    """Canonicalized analyzed-plan text for fingerprinting.
+
+    The resolved logical plan is already computed when the DataFrame was
+    built, so this is a single cheap py4j call, and it is invariant under
+    optimizer/physical-planning changes (a Spark upgrade doesn't invalidate
+    every cache). (The reference fingerprints the full explain output,
+    core_caching.py:306-316.) Expression IDs (``#123``), plan ids, lambda
+    variable counters and the fresh ``_pyspark_<hex>`` view names are
+    stripped and whitespace collapsed, so semantically identical queries
+    hash equal.
     """
-    mode = mode or getattr(config, "PLAN_FINGERPRINT_MODE", "analyzed")
-
-    def _render() -> str:
-        # analyzed: one cheap py4j call on the already-resolved plan.
-        if mode == "analyzed":
-            try:
-                return df._jdf.queryExecution().analyzed().toString()  # type: ignore[attr-defined]
-            except Exception:
-                pass  # fall through to the explain render below
-        # The explain render serves BOTH the documented
-        # PLAN_FINGERPRINT_MODE=extended and the analyzed-failure
-        # fallback. It must live INSIDE _render (ADVICE r12 #2): the
-        # truncation branch below re-invokes _render under a raised
-        # maxToStringFields, and when this path returned None from
-        # _render the re-render could never succeed — every >25-field
-        # plan fell to the uuid-salted uncacheable branch, silently
-        # defeating caching for all wide plans in extended mode.
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain(mode="extended")
-        return buf.getvalue()
+    def render() -> str:
+        return df._jdf.queryExecution().analyzed().toString()  # type: ignore[attr-defined]
 
     try:
-        raw = _render()
-    except Exception as exc:  # pragma: no cover - defensive
-        # ADVICE r13 #3: a bare f"Error: {exc}" is a COLLIDABLE
-        # fingerprint — two different failing plans with identical
-        # exception text would share a cache key (the same wrong-data-hit
-        # class the truncation branch below uuid-salts). Salt the error
-        # return the same way: loud and UNMATCHABLE, so a render failure
-        # can never produce a shared key — the DataFrame recomputes each
-        # run instead of risking a hit on someone else's data.
-        import uuid
-
-        log.warning(
-            "plan render failed (%s) — fingerprint made unmatchable; this "
-            "DataFrame cannot hit or create a reusable cache entry", exc,
-        )
-        return f"Error: {exc}\n<render-failed;uncacheable;id={uuid.uuid4().hex}>"
+        raw = render()
+    except Exception as exc:
+        # A bare f"Error: {exc}" would be a COLLIDABLE fingerprint: two
+        # different failing plans with identical exception text would
+        # share a cache key.
+        return _uncacheable(f"Error: {exc}", "render-failed",
+                            f"plan render failed ({exc})")
 
     if _TRUNCATED_FIELDS.search(raw):
         # The rendering elided fields ("... N more fields"): two plans
@@ -176,7 +165,7 @@ def canonical_plan(df: DataFrame, mode: Optional[str] = None) -> str:
             old = sess.conf.get(_MAX_FIELDS_CONF, None)
             try:
                 sess.conf.set(_MAX_FIELDS_CONF, str(2**31 - 1))
-                full = _render()
+                full = render()
             finally:
                 if old is None:
                     sess.conf.unset(_MAX_FIELDS_CONF)
@@ -189,28 +178,16 @@ def canonical_plan(df: DataFrame, mode: Optional[str] = None) -> str:
             raw = full
         else:
             # Still truncated (foreign session refused the conf, or the
-            # re-render itself failed): loud and UNMATCHABLE, never
-            # a collidable key — this plan misses and rebuilds each run
-            # (conversion cost) instead of risking a wrong-data hit.
-            import uuid
-
-            log.warning(
-                "plan text remains field-truncated after raising %s — "
-                "fingerprint made unmatchable; this DataFrame cannot hit "
-                "or create a reusable cache entry", _MAX_FIELDS_CONF,
+            # re-render itself failed): this plan misses and rebuilds each
+            # run (conversion cost) instead of risking a wrong-data hit.
+            raw = _uncacheable(
+                raw, "truncated-plan",
+                f"plan text remains field-truncated after raising {_MAX_FIELDS_CONF}",
             )
-            raw += f"\n<truncated-plan;uncacheable;id={uuid.uuid4().hex}>"
-    # Reference parity (core_caching.py:320-321): on Photon-enabled
-    # clusters the explain output annotates unsupported operators — surface
-    # that, since a partially-Photon plan caches fine but recomputes slower.
-    if "Photon does not fully support" in raw:
-        log.info(
-            "Photon limitations might affect this plan:%s",
-            raw.split("Photon does not fully support the query because:")[-1][:500],
-        )
     plan = _EXPR_ID.sub("", raw)
     plan = _PLAN_ID.sub("", plan)
     plan = _LAMBDA_VAR.sub(r"\1_", plan)
+    plan = _SQL_ARG_VIEW.sub("_pyspark_", plan)
     plan = _WS.sub(" ", plan).strip()
     return plan
 
@@ -351,30 +328,30 @@ def _unmatchable(key: str) -> Dict[str, datetime]:
     return {key: fs._utc_naive(time.time())}
 
 
-def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputInfo:
+def _entry_of(directory: str) -> Optional[str]:
+    """The cache entry whose data ``directory`` holds, or None."""
+    for rx in layout.cached_input_patterns():
+        match = rx.search(fs.strip_scheme(directory))
+        if match:
+            return match.group("entry")
+    return None
+
+
+def input_dir_mod_datetime(df: DataFrame) -> _InputInfo:
     """Map of input source directory -> latest file modification time.
 
     Special cases (mirroring reference core_caching.py:212-297):
 
-    * plan reads a ``data_*`` cache table -> ``{}`` (identity comes from the
-      plan text, which embeds the content-addressed table name);
     * schema-changed error while listing the inputs -> a sentinel entry
       carrying ``now()`` so the key never matches (forced invalidation);
     * any other listing failure, or an input directory whose mtime cannot
       be read (it vanished after the plan was built) -> the
       ``INPUT_LISTING_FAILED_KEY`` sentinel: dropping the directory would
       leave a key that no longer tells this frame's data apart;
-    * directories that *are* cache entries (32-hex names under the cache dir)
-      contribute their PATH but not their mtime — a cached scan's identity is
-      the cache hash embedded in the path (the table name is absent from the
-      plan on the path-fallback read), and cache content is immutable for its
-      key so the physical mtime is noise.
+    * directories that *are* cache entries (``data_*`` or 32-hex names under
+      the cache dir or the cache database's warehouse dir) contribute their
+      PATH but not their mtime (``CACHED_INPUT_MARKER``).
     """
-    plan_text = plan if plan is not None else canonical_plan(df)
-
-    if find_cache_table_in_text(plan_text, config.CACHE_DATABASE, "data_"):
-        return {}
-
     try:
         files = input_files(df)
     except Exception as exc:
@@ -384,13 +361,9 @@ def input_dir_mod_datetime(df: DataFrame, plan: Optional[str] = None) -> _InputI
                     "run cannot hit or create a reusable cache entry", exc)
         return _unmatchable(INPUT_LISTING_FAILED_KEY)
 
-    # Cache-entry data directories contribute a mtime-free path line (the
-    # path embeds the cache hash — see CACHED_INPUT_MARKER).
-    skip_res = layout.cached_input_patterns()
-
     result: Dict[str, Union[datetime, str]] = {}
     for d in sorted({os.path.dirname(f) for f in files}):
-        if any(rx.search(fs.strip_scheme(d)) for rx in skip_res):
+        if _entry_of(d) is not None:
             result[d] = CACHED_INPUT_MARKER
             continue
         mtime = fs.max_mtime(d)
@@ -443,40 +416,34 @@ def table_cache_info(
     return key, f"{sidecars}/", layout.metadata_path(sidecars), metadata_txt
 
 
-def _is_pure_scan_of(plan: str, db: str, table: str) -> bool:
-    """True when the plan is nothing but a scan of ``db.table`` (possibly
-    under aliases).
+# What a bare scan prints: relation nodes (a path scan prints no table
+# name, a catalog read of the entry's table does) under alias nodes.
+_BARE_SCAN_NODES = re.compile(r"Relation\s*[^\s\[]*\[[^\]]*\]\s*\S+|SubqueryAlias\s+\S+")
 
-    Whitelist formulation: remove the relation node for this exact table,
-    alias nodes, and explain headers — then ANY remaining capitalized token
-    is an operator (Deduplicate, GlobalLimit, Sample, Intersect, Except,
-    Repartition, ...) and disqualifies purity. A blacklist of known operator
-    names misses nodes like Deduplicate/GlobalLimit and lets
+
+def pure_scan_entry(plan: str, input_info: Mapping[str, object]) -> Optional[str]:
+    """The cache entry (``data_*`` or 32-hex) that a frame with this plan
+    and input block is nothing but a scan of, or None.
+
+    The entry comes from the leaves: every input line must be a
+    ``CACHED_INPUT_MARKER`` line of one entry (a ``partition_by`` entry
+    has one per partition directory). The plan must be nothing but
+    relations under aliases. Whitelist formulation: with those nodes
+    removed, ANY remaining capitalized token is an operator (Filter,
+    Deduplicate, GlobalLimit, Sample, Join, ...) and disqualifies purity. A
+    blacklist of known operator names would miss some and let
     ``clearStorageCache()`` on ``df.limit(5)`` silently drop the parent's
-    cache; the whitelist can only err toward "not pure", which merely costs
-    a fresh fingerprint, never a wrong short-circuit."""
-    ident = rf"\S*{re.escape(db)}\.`?{re.escape(table)}`?\S*"
-    # Analyzed-plan layout: `Relation spark_catalog.db.tbl[cols] parquet`
-    remainder = re.sub(rf"Relation\s+{ident}\s*\[[^\]]*\]\s*\S+", "", plan)
-    # Older/bracket-first layout: `Relation [cols] db.tbl parquet`
-    remainder = re.sub(rf"Relation\s*\[[^\]]*\]\s+{ident}", "", remainder)
-    remainder = re.sub(r"SubqueryAlias\s+\S+", "", remainder)
-    remainder = re.sub(
-        r"== (Parsed Logical Plan|Analyzed Logical Plan|Optimized Logical Plan|Physical Plan) ==",
-        "", remainder)
-    return not re.search(r"[A-Z]", remainder)
-
-
-def pure_scan_entry(plan: str) -> Optional[str]:
-    """The cache entry (``data_*`` or 32-hex) that ``plan`` is nothing but
-    a scan of, or None. A plan that merely embeds a cache table (a filter or
-    join on top of a cached scan) is not a pure scan."""
-    db = config.CACHE_DATABASE
-    for prefix in ("data_", ""):
-        table = find_cache_table_in_text(plan, db, prefix)
-        if table is not None and _is_pure_scan_of(plan, db, table):
-            return table
-    return None
+    cache; the whitelist can only err toward "not pure", which merely
+    costs a fresh fingerprint, never a wrong short-circuit."""
+    entries = {
+        _entry_of(path) if value == CACHED_INPUT_MARKER else None
+        for path, value in input_info.items()
+    }
+    if len(entries) != 1 or None in entries:
+        return None
+    if re.search(r"[A-Z]", _BARE_SCAN_NODES.sub("", plan)):
+        return None
+    return entries.pop()
 
 
 def resolve_table_hash(df: DataFrame) -> str:
@@ -484,7 +451,7 @@ def resolve_table_hash(df: DataFrame) -> str:
     (reference: core_caching.py:527-571):
 
     1. DataFrame tagged as a direct-data cache -> its recorded ``data_*`` hash.
-    2. Plan that is a *pure scan* of a cache table -> that table's hash.
+    2. A *pure scan* of a cache entry -> that entry's hash.
     3. Otherwise MD5 of the metadata document.
 
     A derived frame (filter/join on top of a cached scan) gets its own
@@ -498,9 +465,8 @@ def resolve_table_hash(df: DataFrame) -> str:
             return tagged
 
     plan = canonical_plan(df)
-    scanned = pure_scan_entry(plan)
+    info = input_dir_mod_datetime(df)
+    scanned = pure_scan_entry(plan, info)
     if scanned is not None:
         return scanned
-    return compute_cache_key(
-        cache_metadata_document(input_dir_mod_datetime(df, plan), plan)
-    )
+    return compute_cache_key(cache_metadata_document(info, plan))

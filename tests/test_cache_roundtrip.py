@@ -370,6 +370,26 @@ def test_lambda_normalization_spares_real_columns(spark, lineitem_copy):
     assert canonical_plan(hof()) == canonical_plan(hof())
 
 
+def test_sql_argument_view_names_normalized(spark):
+    """``spark.sql(query, t=df)`` registers ``df`` under a fresh
+    ``_pyspark_<hex>`` view name on every call. The name is normalized
+    away, so two builds of a frame built that way share one key, while the
+    view's body (which the plan prints) still tells two arguments apart."""
+    from dbfs_spark_cache_spark import resolve_table_hash
+    from dbfs_spark_cache_spark.operators.extras import udtf_tokenize
+
+    assert resolve_table_hash(udtf_tokenize(spark, SF_SMOKE)) == resolve_table_hash(
+        udtf_tokenize(spark, SF_SMOKE)
+    )
+
+    def q(n):
+        return spark.sql("SELECT x FROM {t}", t=spark.range(n).select(
+            F.col("id").alias("x")))
+
+    assert resolve_table_hash(q(10)) == resolve_table_hash(q(10))
+    assert resolve_table_hash(q(10)) != resolve_table_hash(q(20))
+
+
 def test_corrupt_metadata_sidecar_heals_on_next_write(spark, clean_cache, lineitem_copy):
     """A torn/corrupted cache_metadata.txt (partial upload, truncated copy)
     must not poison the entry: the read path keys on the DataFrame's OWN

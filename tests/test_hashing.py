@@ -2,7 +2,7 @@
 import pandas as pd
 import pytest
 
-from dbfs_spark_cache_spark.hashing import find_cache_table_in_text, hash_input_data
+from dbfs_spark_cache_spark.hashing import hash_input_data
 
 
 def test_deterministic():
@@ -43,15 +43,6 @@ def test_rejects_rdd(spark):
     rdd = spark.sparkContext.parallelize([1, 2, 3])
     with pytest.raises(TypeError):
         hash_input_data(rdd)
-
-
-def test_catalog_pattern():
-    h = "a" * 32
-    text = f"Relation spark_catalog.test_cache_db.data_{h} parquet"
-    assert find_cache_table_in_text(text, "test_cache_db", "data_") == f"data_{h}"
-    assert find_cache_table_in_text(text, "other_db", "data_") is None
-    hive = f"x hive_metastore.cache_db.{h} y"
-    assert find_cache_table_in_text(hive, "cache_db") == h
 
 
 def test_parquet_fallback_index_sensitivity():

@@ -11,6 +11,18 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 
+def _reads_cache_entry(df) -> bool:
+    """Whether one of ``df``'s input directories is a cache entry."""
+    from dbfs_spark_cache_spark import fs, layout
+    from dbfs_spark_cache_spark.plans.fingerprint import input_files
+
+    patterns = layout.cached_input_patterns()
+    return any(
+        rx.search(fs.strip_scheme(os.path.dirname(f)))
+        for f in input_files(df) for rx in patterns
+    )
+
+
 @pytest.fixture(scope="module")
 def planted_docs(spark, tmp_path_factory):
     """Fixture documents + planted near-duplicates: for 20 source docs, a
@@ -252,23 +264,20 @@ def test_hyperplane_signature_buckets(spark):
 
 def test_dedup_funnel_stages_through_cache(spark, clean_cache):
     """The funnel materializes its stages via the cache engine: after one
-    run, the stage tables exist and the funnel's own plan reads them (a
-    cached table scan, not a recompute of the quality/exact-dedup plan);
+    run, the stage entries exist and the funnel reads them (a scan of the
+    entries' files, not a recompute of the quality/exact-dedup plan);
     a second build creates no new entries (pure hit)."""
     import os
 
     from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.hashing import find_cache_table_in_text
     from dbfs_spark_cache_spark.operators.pipeline import pipeline_dedup_survivors
-    from dbfs_spark_cache_spark.plans.fingerprint import canonical_plan
 
     n1 = pipeline_dedup_survivors(spark, SF_SMOKE).count()
     entries = set(os.listdir(config.SPARK_CACHE_DIR))
     assert len(entries) == 2, "expected survivor + signature stage caches"
 
     df2 = pipeline_dedup_survivors(spark, SF_SMOKE)
-    plan = canonical_plan(df2)
-    assert find_cache_table_in_text(plan, config.CACHE_DATABASE), (
+    assert _reads_cache_entry(df2), (
         "funnel plan does not read the stage cache tables"
     )
     assert set(os.listdir(config.SPARK_CACHE_DIR)) == entries  # no rewrites
@@ -279,21 +288,18 @@ def test_multiprobe_consumes_cached_ann_index(spark, clean_cache):
     """The sign-LSH bucket table is the ANN index: the first
     similarity_multiprobe build stages it through the cache engine, and a
     second build (any later query against the unchanged corpus) reads the
-    cached index table instead of recomputing buckets — same results."""
+    cached index entry instead of recomputing buckets — same results."""
     import os
 
     from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.hashing import find_cache_table_in_text
     from dbfs_spark_cache_spark.operators.similarity import similarity_multiprobe
-    from dbfs_spark_cache_spark.plans.fingerprint import canonical_plan
 
     r1 = [tuple(r) for r in similarity_multiprobe(spark, SF_SMOKE).collect()]
     entries = set(os.listdir(config.SPARK_CACHE_DIR))
     assert len(entries) == 1, "expected exactly the staged ANN index"
 
     df2 = similarity_multiprobe(spark, SF_SMOKE)
-    plan = canonical_plan(df2)
-    assert find_cache_table_in_text(plan, config.CACHE_DATABASE), (
+    assert _reads_cache_entry(df2), (
         "second multiprobe build does not read the cached ANN index"
     )
     assert set(os.listdir(config.SPARK_CACHE_DIR)) == entries  # pure hit
@@ -470,12 +476,8 @@ def test_staged_incremental_dedup_matches_one_shot(spark, clean_cache):
     assert got == expected and expected, "staged form diverged from one-shot"
 
     # and the corpus index really staged through the cache engine: a second
-    # build's plan reads a cache table instead of recomputing signatures
-    from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.hashing import find_cache_table_in_text
-    from dbfs_spark_cache_spark.plans.fingerprint import canonical_plan
-
+    # build reads a cache entry instead of recomputing signatures
     again = incremental_near_dup_matches(corpus, incoming)
-    assert find_cache_table_in_text(canonical_plan(again), config.CACHE_DATABASE), (
+    assert _reads_cache_entry(again), (
         "second build does not read the staged corpus index"
     )

@@ -9,17 +9,7 @@
    close). Fixed: visited is keyed by id(val), held alive by the
    globals dict for the duration of the (synchronous) computation; the
    id never enters the digest, so tags stay machine-stable.
-2. plans/fingerprint.canonical_plan: _render() returned None for any
-   mode other than 'analyzed', so under the documented
-   PLAN_FINGERPRINT_MODE=extended (and when the analyzed render threw)
-   the raised-maxToStringFields re-render could never succeed — every
-   >25-field plan fell to the uuid-salted 'uncacheable' branch,
-   silently defeating caching for ALL wide plans in that mode (a
-   never-reused cache entry written per run). Fixed: the explain
-   render lives inside _render, covering both the extended mode and
-   the analyzed-failure fallback; the uuid salt remains only for the
-   truly-unfixable case.
-3. operators/scale.distributed_global_percentiles: the reserved-name
+2. operators/scale.distributed_global_percentiles: the reserved-name
    guard omitted the CALLER-SUPPLIED output names, so an input frame
    already carrying e.g. '__pct' (the name grouped_exact_median passes
    for pct_col) was still silently clobbered by the final select's
@@ -80,59 +70,6 @@ def test_udf_tag_same_function_two_names_still_guarded():
     b = a.replace("x + 1.0", "x + 2.0")
     assert _tag_of(a) == _tag_of(a)
     assert _tag_of(a) != _tag_of(b)
-
-
-def _wide(spark, n_extra: int, last_expr):
-    base = spark.range(10)
-    cols = [(F.col("id") + i).alias(f"c{i}") for i in range(n_extra - 1)]
-    return base.select("id", *cols, last_expr.alias(f"c{n_extra - 1}"))
-
-
-def test_wide_plans_cacheable_in_extended_mode(spark):
-    """Under PLAN_FINGERPRINT_MODE=extended a >25-field plan must (a)
-    render un-truncated after the conf-raise re-render — DETERMINISTIC
-    across calls, i.e. cacheable, not uuid-salted — and (b) still
-    distinguish plans differing only in the elided tail."""
-    from dbfs_spark_cache_spark.plans.fingerprint import canonical_plan
-
-    a = _wide(spark, 40, F.col("id") + 39)
-    b = _wide(spark, 40, F.col("id") * 999)
-    pa_ = canonical_plan(a, mode="extended")
-    pb_ = canonical_plan(b, mode="extended")
-    assert "more fields" not in pa_ and "more fields" not in pb_
-    assert "uncacheable" not in pa_, (
-        "extended-mode wide plan fell to the uuid-salted branch — "
-        "caching is silently defeated for all wide plans in that mode"
-    )
-    assert pa_ != pb_
-    # deterministic: the SAME plan canonicalizes identically on re-render
-    assert canonical_plan(a, mode="extended") == pa_
-    # conf restored
-    assert spark.conf.get("spark.sql.debug.maxToStringFields") == "25"
-
-
-def test_narrow_extended_mode_key_unchanged(spark):
-    """Never-truncated plans keep their exact pre-fix extended-mode key
-    (the fix must introduce no key-format drift for the normal
-    population — the old code path for narrow plans was explain() too)."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    from dbfs_spark_cache_spark.plans.fingerprint import canonical_plan
-
-    df = spark.range(5).select((F.col("id") * 2).alias("x"))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode="extended")
-    raw = buf.getvalue()
-    assert "more fields" not in raw
-    expected = re.sub(r"#\d+", "", raw)
-    expected = re.sub(r"plan_id=\d+", "plan_id=", expected)
-    got = canonical_plan(df, mode="extended")
-    # spot-check: the canonical text is derived from the same render
-    assert got == canonical_plan(df, mode="extended")
-    assert "Parsed Logical Plan" in got or "== Parsed" in got.replace("  ", " ")
 
 
 def test_percentiles_reject_output_name_collisions(spark):

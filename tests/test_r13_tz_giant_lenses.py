@@ -76,7 +76,7 @@ def test_cache_key_and_hit_survive_session_tz_change(spark, clean_cache):
 
     def cache_key(frame):
         plan = canonical_plan(frame)
-        return table_cache_info(input_dir_mod_datetime(frame, plan), plan)[0]
+        return table_cache_info(input_dir_mod_datetime(frame), plan)[0]
 
     df = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")

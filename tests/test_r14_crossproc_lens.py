@@ -8,15 +8,15 @@ layout the reference runs under on DBFS:
 * the sidecar protocol's foundation, ``fs.write_text``'s never-torn
   guarantee, stressed by REAL concurrent writer processes against a
   reader asserting every observation is a complete document;
-* the new ``_SUCCESS`` job-commit guard on the path fallback: a
+* the ``_SUCCESS`` job-commit guard on the read of an entry's files: a
   non-transactional cache directory without Spark's committer marker
   (exactly what a concurrent rewrite in another process exposes
   mid-flight, since ``_save_as_cache_table`` is remove-then-rewrite) is
   a clean MISS, never partial rows served as a hit;
 * a genuine two-process end-to-end: a child interpreter with its own
   SparkSession writes a cache entry into the shared dir, and the parent
-  session — whose catalog never heard of it — serves the hit through
-  the path fallback.
+  session — whose catalog never heard of it — serves the hit by scanning
+  the entry's files.
 """
 from __future__ import annotations
 
@@ -303,7 +303,7 @@ def test_compaction_racing_active_sink_across_processes(tmp_path):
 def test_new_session_shares_cache_entries(extended):
     """The notebook-fork layout: ``spark.newSession()`` shares the
     SparkContext and the external catalog but has its own conf and temp
-    views. A cache written from the parent must serve a CATALOG hit in
+    views. A cache written from the parent must serve a hit in
     the forked session (no recompute), and the per-key lock covers both
     (same process). The forked probe must also produce the SAME cache
     key — the fingerprint depends on plan + input mtimes, not on which
@@ -378,8 +378,8 @@ spark.stop()
 
 def test_cache_survives_process_restart_via_hive_metastore(tmp_path):
     """The Databricks-shaped restart story the in-memory catalog cannot
-    express: with a persistent (Derby/Hive) metastore, the CATALOG
-    branch of `_read_cache_table` — not the path fallback — serves a
+    express: with a persistent (Derby/Hive) metastore, the catalog keeps
+    the entry's table (the registry's view) and the scan of its files serves a
     cache written by a process that has since exited. Two sequential
     JVMs share only the metastore + warehouse + cache dir."""
     root = str(tmp_path)

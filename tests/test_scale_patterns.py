@@ -267,43 +267,22 @@ def test_banded_edit_pairs_rejects_unsound_band_width():
         banded_edit_pairs(None, "k", "blk", "nm", max_dist=4, band_width=4)
 
 
-def test_bucketed_cache_write_joins_without_shuffle(spark, clean_cache):
-    """cache-level bucketing: two caches written bucket_by the same key
-    join shuffle-free through their catalog scans, the fingerprint is
-    layout-independent (same key bucketed or not), and the hit path
-    returns the bucketed table."""
-    from dbfs_spark_cache_spark import resolve_table_hash, write_cache
+def test_cache_layout_option_keeps_key(spark, clean_cache):
+    """A layout option does not participate in the fingerprint: the frame
+    keys the same before and after a ``partition_by`` write, and a probe
+    without the option hits the partitioned entry."""
+    from dbfs_spark_cache_spark import read_cache_if_exist, resolve_table_hash, write_cache
 
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
     li = (
         spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        .select(F.col("l_orderkey").alias("o_orderkey"), "l_quantity")
+        .select("l_orderkey", "l_quantity", "l_returnflag")
     )
-
-    # Layout must not shift the content hash.
-    assert resolve_table_hash(orders) == resolve_table_hash(orders)
-    h_plain = resolve_table_hash(orders)
-
-    c_orders = write_cache(orders, bucket_by=["o_orderkey"], n_buckets=8,
-                           bucket_sort_by=["o_orderkey"])
-    c_li = write_cache(li, bucket_by=["o_orderkey"], n_buckets=8)
-    assert resolve_table_hash(orders) == h_plain
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = c_orders.join(c_li, "o_orderkey")
-        plan = _plan(joined)
-        assert "Exchange hashpartitioning" not in plan, "bucketed caches still shuffle"
-        assert "Bucketed: true" in plan
-        expected = (
-            orders.join(li, "o_orderkey").count()
-        )
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    key = resolve_table_hash(li)
+    cached = write_cache(li, partition_by=["l_returnflag"])
+    assert resolve_table_hash(li) == key
+    assert resolve_table_hash(cached) == key  # a pure scan of the entry
+    hit = read_cache_if_exist(li)
+    assert hit is not None and hit.count() == li.count()
 
 
 def test_distributed_percentiles_randomized_sweep(spark):
