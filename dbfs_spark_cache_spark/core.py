@@ -348,9 +348,9 @@ def _materialize(
     """The write protocol shared by ``write_cache`` and
     ``create_cached_dataframe``; the caller holds ``key``'s lock.
 
-    1. Clear a stale data location: with Spark's in-memory catalog the
-       table entry dies with the session while its files survive, and they
-       would block ``saveAsTable``.
+    1. Clear the data location: files another session left there would
+       block ``saveAsTable``, and for a table this session wrote the
+       overwrite drops its files anyway.
     2. Write the table.
     3. Write the committer sidecar, then the inventory sidecar.
     4. Write the metadata sidecar LAST: it is the entry's liveness signal,
@@ -363,7 +363,7 @@ def _materialize(
     spark = df.sparkSession
     table = table_name_for_hash(key)
     location = layout.table_location(spark, key)
-    if not _table_exists(spark, table) and fs.exists(location):
+    if fs.exists(location):
         fs.remove(location)
     fmt = _save_as_cache_table(df, table, partition_by=partition_by)
     _record_writer_committer(spark, sidecars)
@@ -490,13 +490,6 @@ def write_cache(
             )
             _bump("writes")
     return cached if replace else df
-
-
-def _table_exists(spark: SparkSession, table: str) -> bool:
-    try:
-        return spark.catalog.tableExists(table)
-    except Exception:
-        return False
 
 
 # Admission refusal that cache_dataframe counts as a threshold skip.

@@ -92,8 +92,7 @@ def list_dir(path: str) -> List[FileStat]:
                     # PermissionError (or any other OSError) here would
                     # silently drop a real entry from registry scans and
                     # tree_size, so size-budget eviction would undercount
-                    # the footprint — that must fail loudly instead
-                    # (ADVICE r10 #3).
+                    # the footprint — that must fail loudly instead.
                     continue
                 out.append(FileStat(entry.path, entry.name, st.st_size,
                                     int(st.st_mtime * 1000), is_dir))

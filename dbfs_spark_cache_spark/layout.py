@@ -4,9 +4,10 @@ An entry keyed ``<hash>`` (32-hex plan key, ``data_<32-hex>`` direct-data
 key, or a caller's custom ``hash_name``) has two halves:
 
 * its data: the files at ``<spark.sql.warehouse.dir>/<CACHE_DATABASE>.db/
-  <hash>``, written as the managed table ``<CACHE_DATABASE>.<hash>``. The
-  table stays for the registry (``management`` lists the cache database);
-  every read of the entry scans the location, in every session;
+  <hash>``, written as the managed table ``<CACHE_DATABASE>.<hash>`` so
+  the cache database stays browsable. Nothing reads the catalog table:
+  every read of the entry scans the location, in every session, and
+  ``management`` lists the database directory as its registry;
 * its sidecars, in ``<base>/<hash>/`` where ``base`` is ``SPARK_CACHE_DIR``
   or the caller's ``cache_path``:
 
@@ -40,15 +41,19 @@ def table_name_for_hash(hash_name: str) -> str:
     return f"{config.CACHE_DATABASE}.{hash_name}"
 
 
-def database_dir(spark) -> str:
-    """Warehouse directory holding the cache database's managed tables."""
+def database_dir(spark, database: Optional[str] = None) -> str:
+    """Warehouse directory holding a cache database's entries, one data
+    directory each; ``database`` defaults to ``CACHE_DATABASE`` and is
+    lower-cased like it (Spark names the directory after the lower-cased
+    identifier)."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    return f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db"
+    db = (database or config.CACHE_DATABASE).lower()
+    return f"{warehouse.rstrip('/')}/{db}.db"
 
 
-def table_location(spark, hash_name: str) -> str:
+def table_location(spark, hash_name: str, database: Optional[str] = None) -> str:
     """Data location of an entry: ``<warehouse>/<db>.db/<hash>``."""
-    return f"{database_dir(spark)}/{hash_name}"
+    return f"{database_dir(spark, database)}/{hash_name}"
 
 
 def sidecar_dir(hash_name: str, base: Optional[str] = None) -> str:

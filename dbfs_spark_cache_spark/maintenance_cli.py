@@ -3,9 +3,10 @@
 Evict aged entries, optionally repair half-present ones, or print the
 cache health summary — the cron-able twin of the reference's maintenance
 notebook (reference: scripts/clear_old_caches.py). All the work is
-driver-side metadata operations plus DROP TABLEs — safe to run while jobs
-are reading caches (entries are immutable for their key; a reader of a
-just-dropped entry re-computes and re-writes it).
+driver-side listings of entry directories, DROP TABLEs and removals of
+those directories — safe to run while jobs are reading caches (entries
+are immutable for their key; a reader of a just-removed entry
+re-computes and re-writes it).
 
 Usage:
     spark-cache-maintenance [--days 7] [--threads 16] [--database NAME]
@@ -52,8 +53,8 @@ def main() -> int:
     ap.add_argument("--dry-run", action="store_true",
                     help="report what would be evicted without deleting")
     ap.add_argument("--repair-inconsistent", action="store_true",
-                    help="also remove metadata-without-table / "
-                         "table-without-metadata orphans")
+                    help="also remove metadata-without-data / "
+                         "data-without-metadata orphans")
     ap.add_argument("--force", action="store_true",
                     help="bypass the diverged-registry safety rails during "
                          "--repair-inconsistent")
@@ -251,10 +252,10 @@ def main() -> int:
 
     # Count the database the eviction actually targets, or the scoped
     # before/after numbers never move no matter how much was evicted.
-    # The DEFAULT path sweeps the sidecar registry while tables live in
-    # the catalog — report both counts, because they can legitimately
-    # diverge (manually dropped tables, catalog-only orphans) and a
-    # single number from the wrong registry reads as "nothing happened".
+    # The DEFAULT path sweeps the sidecar registry while the data lives in
+    # the database directory — report both counts, because they can
+    # legitimately diverge (removed data, data-only orphans) and a single
+    # number from the wrong registry reads as "nothing happened".
     def _count_tables() -> str:
         if args.database:
             n = len(
@@ -262,14 +263,14 @@ def main() -> int:
                     spark, database=args.database, num_threads=args.threads
                 )
             )
-            return f"{n} catalog tables in {args.database}"
-        n_cat = len(
+            return f"{n} data directories in {args.database}"
+        n_data = len(
             management.get_cached_tables(spark, num_threads=args.threads)
         )
         n_meta = len(
             management.get_cached_dataframe_metadata(num_threads=args.threads)
         )
-        return f"{n_cat} catalog tables / {n_meta} metadata sidecars"
+        return f"{n_data} data directories / {n_meta} metadata sidecars"
 
     log.info("%s before maintenance", _count_tables())
 

@@ -1,30 +1,30 @@
 """Cache lifecycle: registry, age-based eviction, consistency repair.
 
 Same surface as the reference (reference: dbfs_spark_cache/cache_management.py:
-28-379) on top of the Spark catalog + the engine's FS layer. An entry is
-known to two registries: the sidecar registry (one walk over a sidecar base,
-:func:`_sidecar_entries`) and the catalog registry, which is one listing plus
-one batched metadata fetch from the session catalog, whatever the entry
-count; only a catalog the session-catalog API cannot serve falls back to
-SHOW TABLES plus one DESCRIBE per entry. Scans that join the two read them
-in one place (:func:`_registries`), and every eviction goes through
-:func:`_evict`, which reports only what was actually evicted. Per-entry work
-(DESCRIBE fallback, sidecar listings, sizes, inventories, evictions) fans
-out over a driver-side thread pool (:func:`_pmap`) — metadata calls, so
-threads, not Spark jobs, are the right tool even on a big cluster.
+28-379) on top of the engine's FS layer. An entry has two halves, and each
+half has one registry: its sidecars (one walk over a sidecar base,
+:func:`_sidecar_entries`) and its data directory (one listing of the cache
+database's directory, :func:`get_tables_from_database`), the half a read
+needs. The reference reads the metastore for the table side; here the
+catalog is Spark's in-memory one, which knows only the current session's
+writes, so nothing here reads it to decide about an entry. Scans that
+join the two registries read them in one place (:func:`_registries`), and
+every eviction goes through :func:`_evict`, which reports only what was
+actually evicted. Per-entry work (directory times, sidecar listings,
+sizes, inventories, evictions) fans out over a driver-side thread pool
+(:func:`_pmap`) — metadata calls, so threads, not Spark jobs, are the
+right tool even on a big cluster.
 """
 from __future__ import annotations
 
 import logging
 import os
-import re
 import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import timedelta
 from typing import Callable, Iterable, List, Optional
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from . import fs, layout
@@ -33,10 +33,6 @@ from .config import config
 log = logging.getLogger(__name__)
 
 REGISTRY_COLUMNS = ["table_name", "hash_name", "directory_path", "creationTime"]
-
-# java.util.Date.toString, the shape DESCRIBE renders 'Created Time' in:
-# "Fri Aug 15 05:00:00 PST 2025" (wall time, zone abbreviation, year).
-_JAVA_DATE = re.compile(r"(\w{3} \w{3} \d{2} \d{2}:\d{2}:\d{2}) \S+ (\d{4})")
 
 
 def empty_registry() -> pd.DataFrame:
@@ -50,173 +46,56 @@ def _pmap(fn: Callable, items: Iterable, num_threads: Optional[int]) -> list:
         return list(pool.map(fn, items))
 
 
-def _created_time_utc_naive(spark, db: str, name: str, rendered: str):
-    """The table's creation time as a UTC-NAIVE pandas timestamp — the one
-    convention every registry comparand uses (sidecar/warehouse mtimes via
-    fs._utc_naive, the eviction cutoff too), so catalog rows stay mutually
-    comparable on non-UTC driver hosts (ADVICE r9 #1).
-
-    Primary source: the catalog's epoch-millis ``createTime`` via the JVM
-    session catalog — zone-free by construction, no string parsing at all.
-
-    Fallback (catalog API unavailable): parse DESCRIBE's rendered 'Created
-    Time'. The rendering is local wall time in the driver JVM's DEFAULT
-    zone, so (a) a tz-aware parse must tz_convert('UTC') BEFORE stripping
-    — bare tz_localize(None) keeps the source wall time; and (b) the
-    ``Date.toString`` shape's zone abbreviation (e.g. 'PST') is ambiguous
-    and not parseable, so it is dropped and the wall time localized from
-    the JVM's default zone id (full id, so DST resolves correctly), then
-    converted.
-    """
-    try:
-        jcat = spark._jsparkSession.sessionState().catalog()
-        jid = spark._jvm.org.apache.spark.sql.catalyst.TableIdentifier(
-            name, spark._jvm.scala.Some(db)
-        )
-        return pd.to_datetime(
-            int(jcat.getTableMetadata(jid).createTime()), unit="ms"
-        )
-    except Exception:
-        pass
-    try:
-        java_date = _JAVA_DATE.fullmatch(rendered.strip())
-        if java_date:
-            rendered = " ".join(java_date.groups())
-        creation_time = pd.to_datetime(rendered)
-        if getattr(creation_time, "tzinfo", None) is not None:
-            return creation_time.tz_convert("UTC").tz_localize(None)
-        zone = spark._jvm.java.util.TimeZone.getDefault().getID()
-        return (
-            creation_time.tz_localize(zone).tz_convert("UTC").tz_localize(None)
-        )
-    except Exception:
-        return pd.NaT
-
-
 def get_tables_from_database(
     spark: SparkSession, database: Optional[str] = None, num_threads: Optional[int] = None
 ) -> pd.DataFrame:
-    """Registry frame of the live (non-temporary) tables in ``database``
-    (default: the configured cache database).
+    """Registry frame of the data directories of ``database`` (default: the
+    configured cache database), one row per non-hidden directory under
+    ``layout.database_dir``: the directory every read of an entry scans.
 
-    Read with one session-catalog listing and one batched metadata fetch,
-    whatever the entry count (:func:`_catalog_rows`). When
-    that read raises (a catalog the JVM session-catalog API does not
-    serve), the frame comes from SHOW TABLES plus one DESCRIBE per entry
-    (:func:`_described_rows`) instead; both give the same rows in the same
-    order. ``num_threads`` sizes that fallback's DESCRIBE pool."""
-    db = database or config.CACHE_DATABASE
-    try:
-        rows = _catalog_rows(spark, db)
-    except Exception as exc:
-        log.debug("Batched catalog read of %s failed (%s); using DESCRIBE",
-                  db, exc.__class__.__name__)
-        rows = _described_rows(spark, db, num_threads)
-    if not rows:
-        return empty_registry()
-    return pd.DataFrame(rows, columns=REGISTRY_COLUMNS)
-
-
-def _catalog_rows(spark: SparkSession, db: str) -> List[dict]:
-    """Registry rows of ``db`` from the JVM session catalog: ``listTables``
-    (the SHOW TABLES set without temp views), then ``getTablesByName`` for
-    all of them at once. A table dropped between the two calls is skipped.
-    Rows keep the listing's order, which the batched fetch of some
-    catalogs does not preserve. The Scala sequences are read by index
-    (as IndexedSeq, so each read is O(1)): iterating their py4j list views
-    costs several round trips per item."""
-    jcat = spark._jsparkSession.sessionState().catalog()
-    uri_to_string = (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog.CatalogUtils.URIToString
+    The listing, not the catalog, is the registry: Spark's in-memory
+    catalog holds only the tables the current session wrote, while an
+    entry written by any session is read from its directory. A name
+    starting with ``_`` or ``.`` is a writer's scratch, never an entry.
+    ``creationTime`` is the newest modification time inside the directory
+    (:func:`fs.max_mtime`), read on a pool of ``num_threads``: object
+    stores report a directory's own mtime as 0, which would age out every
+    entry at once. A directory gone before its time is read (a concurrent
+    eviction) is no longer an entry and gets no row."""
+    db = (database or config.CACHE_DATABASE).lower()
+    dirs = sorted(
+        (
+            stat
+            for stat in fs.list_dir(layout.database_dir(spark, db))
+            if stat.is_dir and not stat.name.startswith(("_", "."))
+        ),
+        key=lambda stat: stat.name,
     )
-    idents = jcat.listTables(db, "*", False).toIndexedSeq()
-    order = {idents.apply(i).table(): i for i in range(idents.length())}
-    tables = jcat.getTablesByName(idents).toIndexedSeq()
-    rows = []
-    for i in range(tables.length()):
-        table = tables.apply(i)
-        name = table.identifier().table()
-        try:
-            # The string DESCRIBE prints as "Location"; the URI's own
-            # toString() percent-encodes (a space reads %20).
-            location = uri_to_string(table.location())
-        except AnalysisException:  # a view has no location
-            location = ""
-        rows.append(
+    if not dirs:
+        return empty_registry()
+    times = _pmap(lambda stat: fs.max_mtime(stat.path), dirs, num_threads)
+    return pd.DataFrame(
+        [
             {
-                "table_name": f"{db}.{name}",
-                "hash_name": name,
-                "directory_path": location,
-                "creationTime": pd.to_datetime(int(table.createTime()), unit="ms"),
+                "table_name": f"{db}.{stat.name}",
+                "hash_name": stat.name,
+                "directory_path": stat.path,
+                "creationTime": created,
             }
-        )
-    return sorted(rows, key=lambda row: order[row["hash_name"]])
-
-
-def _described_rows(
-    spark: SparkSession, db: str, num_threads: Optional[int]
-) -> List[dict]:
-    """Registry rows of ``db`` via SHOW TABLES plus one DESCRIBE TABLE
-    EXTENDED per entry: the path for catalogs the session-catalog API does
-    not serve. An entry whose DESCRIBE fails is skipped."""
-    try:
-        tables = spark.sql(f"SHOW TABLES IN {db}").filter("isTemporary = false")
-        names = [row.tableName for row in tables.collect()]
-    except Exception as exc:
-        log.warning("Could not list tables in %s: %s", db, exc)
-        return []
-
-    def describe(name: str) -> Optional[dict]:
-        try:
-            detail = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{name}").collect()
-            props = {row.col_name: row.data_type for row in detail}
-            location = props.get("Location", "")
-            created = props.get("Created Time", "")
-            creation_time = _created_time_utc_naive(spark, db, name, created)
-            return {
-                "table_name": f"{db}.{name}",
-                "hash_name": name,
-                "directory_path": location,
-                "creationTime": creation_time,
-            }
-        except Exception as exc:
-            log.warning("DESCRIBE failed for %s.%s: %s", db, name, exc)
-            return None
-
-    return [r for r in _pmap(describe, names, num_threads) if r is not None]
+            for stat, created in zip(dirs, times)
+            if created is not None
+        ],
+        columns=REGISTRY_COLUMNS,
+    )
 
 
 def get_cached_tables(
     spark: SparkSession, num_threads: Optional[int] = None
 ) -> pd.DataFrame:
-    """Catalog registry sorted by creation time (newest last), with a
-    warehouse-directory listing fallback when the catalog has no entries
-    (reference: cache_management.py:88-155 — e.g. a fresh session over a
-    non-persistent catalog whose warehouse still holds cache tables)."""
+    """The configured cache database's data directories sorted by
+    creation time (newest last)."""
     frame = get_tables_from_database(spark, num_threads=num_threads)
-    if frame.empty:
-        frame = _tables_from_warehouse_listing(spark)
-    if frame.empty:
-        return frame
     return frame.sort_values("creationTime").reset_index(drop=True)
-
-
-def _tables_from_warehouse_listing(spark: SparkSession) -> pd.DataFrame:
-    rows = []
-    for entry in fs.list_dir(layout.database_dir(spark)):
-        if not entry.is_dir:
-            continue
-        rows.append(
-            {
-                "table_name": layout.table_name_for_hash(entry.name),
-                "hash_name": entry.name,
-                "directory_path": entry.path,
-                "creationTime": fs._utc_naive(entry.mtime_ms / 1000),
-            }
-        )
-    if not rows:
-        return empty_registry()
-    return pd.DataFrame(rows, columns=REGISTRY_COLUMNS)
 
 
 def _sidecar_entries(base: str, num_threads: Optional[int] = None) -> List[tuple]:
@@ -261,10 +140,8 @@ def get_cached_dataframe_metadata(num_threads: Optional[int] = None) -> pd.DataF
 
 
 def _registries(spark: SparkSession, num_threads: Optional[int]) -> tuple:
-    """(sidecar registry, catalog registry, sidecar hashes, catalog hashes):
-    what every scan joining the two registries reads. The catalog side
-    includes the warehouse-listing fallback, so an empty catalog doesn't
-    masquerade as "no tables"."""
+    """(sidecar registry, data-directory registry, sidecar hashes, data
+    hashes): what every scan joining the two registries reads."""
     meta = get_cached_dataframe_metadata(num_threads=num_threads)
     tables = get_cached_tables(spark, num_threads=num_threads)
     return meta, tables, set(meta["hash_name"]), set(tables["hash_name"])
@@ -273,13 +150,14 @@ def _registries(spark: SparkSession, num_threads: Optional[int]) -> tuple:
 def clear_cache_for_hash(
     spark: SparkSession, hash_name: str, database: Optional[str] = None
 ) -> bool:
-    """Drop the cache table and remove its metadata directory. Returns
-    True when the entry was actually evicted, False when the DROP failed
-    with the entry possibly still live (sweep skipped for a later retry)
-    — callers aggregating eviction results must not report a False as
-    evicted.
+    """Drop the cache table and remove its data and metadata directories.
+    Returns True when the entry was actually evicted, False when the DROP
+    failed with the entry possibly still live (sweep skipped for a later
+    retry) — callers aggregating eviction results must not report a False
+    as evicted.
 
-    ``database`` scopes the DROP; the metadata sidecar is removed only
+    ``database`` scopes the DROP and the data directory, so an entry the
+    scoped listing shows is the entry removed; the metadata sidecar is removed only
     when clearing the CONFIGURED database, because sidecars live in the
     single ``SPARK_CACHE_DIR`` namespace and the cache key excludes the
     database name — an equivalent query cached in two databases shares
@@ -308,7 +186,7 @@ def clear_cache_for_hash(
 def _clear_cache_for_hash_locked(
     spark: SparkSession, hash_name: str, database: Optional[str] = None
 ) -> bool:
-    db = database or config.CACHE_DATABASE
+    db = (database or config.CACHE_DATABASE).lower()
     table = f"{db}.{hash_name}"
     dropped = False
     try:
@@ -317,9 +195,9 @@ def _clear_cache_for_hash_locked(
     except Exception as exc:
         log.warning("DROP TABLE %s failed: %s", table, exc)
         # A transient metastore error must NOT cascade into deleting the
-        # data files out from under a still-registered catalog entry
-        # (ADVICE r7 #3): sweep below only if the table verifiably does
-        # not exist. An unanswerable catalog stays conservative (skip).
+        # data files out from under a still-registered table: sweep below
+        # only if the table verifiably does not exist. An unanswerable
+        # catalog stays conservative (skip).
         try:
             dropped = not spark.catalog.tableExists(table)
         except Exception:
@@ -336,12 +214,10 @@ def _clear_cache_for_hash_locked(
         return False
     if db == config.CACHE_DATABASE:
         fs.remove(layout.sidecar_dir(hash_name))
-        # A metadata-only orphan has no catalog entry, so the DROP above
-        # was a no-op and the table FILES survive in the warehouse —
-        # invisible to both registries and all future accounting. Sweep
-        # the data directory too (no-op when the managed DROP already
-        # removed it).
-        fs.remove(layout.table_location(spark, hash_name))
+    # The DROP is a no-op for an entry another session wrote (this
+    # session's catalog never held its table), so the data directory is
+    # removed here; a no-op when the managed DROP already removed it.
+    fs.remove(layout.table_location(spark, hash_name, db))
     return True
 
 
@@ -384,11 +260,10 @@ def clear_caches_older_than(
         )
     else:
         registry = get_cached_dataframe_metadata(num_threads=num_threads)
-    # UTC-naive, matching every registry creationTime (catalog times are
-    # tz-stripped UTC, sidecar/warehouse mtimes render via fs._utc_naive):
-    # a local-naive now() on a non-UTC driver skewed the age cutoff by the
-    # UTC offset (up to 14h on a 7-day policy) and only against the
-    # CATALOG-sourced registry — the two sources disagreed about "old".
+    # UTC-naive, matching every registry creationTime (sidecar and data
+    # directory mtimes render via fs._utc_naive): a local-naive now() on a
+    # non-UTC driver would skew the age cutoff by the UTC offset (up to 14h
+    # on a 7-day policy).
     cutoff = fs._utc_naive(time.time()) - timedelta(days=num_days)
     hashes = list(registry.loc[registry["creationTime"] < cutoff, "hash_name"])
     if not confirm_delete:
@@ -403,16 +278,17 @@ def clear_inconsistent_cache(
     min_overlap: float = 0.5,
     force: bool = False,
 ) -> List[str]:
-    """Remove half-present entries: metadata without a table, or a table
-    without metadata (reference: cache_management.py:229-288). Evicts
+    """Remove half-present entries: metadata without a data directory, or
+    a data directory without metadata (reference:
+    cache_management.py:229-288). Evicts
     exactly what :func:`find_inconsistent_entries` returns, so a preview
     and a run agree by construction; returns the evicted hashes.
 
     Safety rails (bypass with ``force=True`` after manual inspection):
 
     * one registry completely empty while the other is not — far more likely
-      a visibility problem (fresh non-persistent catalog, mispointed
-      SPARK_CACHE_DIR) than N simultaneously-orphaned entries;
+      a visibility problem (mispointed warehouse or SPARK_CACHE_DIR) than N
+      simultaneously-orphaned entries;
     * both registries non-empty but overlapping on fewer than
       ``min_overlap`` of their entries — e.g. SPARK_CACHE_DIR repointed
       while the warehouse still holds valid tables; "repairing" would delete
@@ -443,7 +319,7 @@ def find_inconsistent_entries(
     if not force and bool(in_meta) != bool(in_tables):
         refusal = (
             f"one registry is empty ({counts}) — refusing to mass-delete; "
-            "check catalog/cache-dir visibility (or pass force=True)"
+            "check warehouse/cache-dir visibility (or pass force=True)"
         )
     elif not force and in_meta:
         overlap = len(in_meta & in_tables) / max(len(in_meta), len(in_tables))
@@ -473,8 +349,8 @@ def find_corrupt_entries(
     The default scan walks the SPARK_CACHE_DIR registry. Entries written
     with a custom ``cache_path`` keep their sidecars under that base, so
     they are invisible to the registry walk — pass each such base via
-    ``extra_bases`` to include them (ADVICE r17 #3; the CLI exposes this
-    as repeatable ``--scan-corrupt-base``)."""
+    ``extra_bases`` to include them (the CLI exposes this as repeatable
+    ``--scan-corrupt-base``)."""
     entries = [
         entry
         for base in [config.SPARK_CACHE_DIR, *(extra_bases or [])]
@@ -500,14 +376,15 @@ def cache_stats(
     spark: SparkSession, num_threads: Optional[int] = None
 ) -> dict:
     """One-call cache health summary: entry counts from both registries
-    (catalog tables and metadata sidecars), their consistency overlap, and
+    (data directories, reported as ``n_catalog_tables``, and metadata
+    sidecars), their consistency overlap, and
     the storage footprint — the numbers an operator wants before deciding
     whether to run eviction (`clear_caches_older_than`) or repair
     (`clear_inconsistent_cache`). Read-only; safe on a live cache.
 
     Sizes recurse into each entry's directory tree (partitioned/bucketed
     cache tables nest their files), and cover the UNION of both registries
-    — a catalog-only orphan's storage still counts, and the orphans are
+    — a data-only orphan's storage still counts, and the orphans are
     named, so the footprint stays honest in exactly the diverged-registry
     situations these stats diagnose. Parallelized like every other
     registry scan here.
@@ -552,8 +429,8 @@ def evict_to_size_budget(
     recursive listing per entry, driver-side metadata only [NS: the
     reference has no size-based policy].
 
-    The candidate set is the UNION of both registries: a catalog-only
-    orphan (table with no sidecar — a crash between table write and
+    The candidate set is the UNION of both registries: a data-only
+    orphan (data directory with no sidecar — a crash between table write and
     sidecar write, or a wiped SPARK_CACHE_DIR) still occupies billed
     bytes, so it must count toward the footprint and be evictable.
     Orphans with no readable creation time sort FIRST (evicted before any

@@ -15,7 +15,13 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers unpickle UDFs by module name, so they need the package on
+# their path too, whatever directory this script runs from.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+)
 
 import duckdb
 import pandas as pd

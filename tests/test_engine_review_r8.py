@@ -128,9 +128,8 @@ def test_cli_refuses_unscoped_destructive_stages(
     deleting from the namespace the operator scoped away from.
 
     The scoped stages (the --database count and
-    ``clear_caches_older_than(specific_database=...)``) read the scoped
-    registry through the batched catalog read: the DESCRIBE fallback is
-    made to fail, and both still see the scoped entry."""
+    ``clear_caches_older_than(specific_database=...)``) both see the
+    scoped database's data directory."""
     from dbfs_spark_cache_spark import maintenance_cli, management, write_cache
     from dbfs_spark_cache_spark.config import config
 
@@ -148,10 +147,6 @@ def test_cli_refuses_unscoped_destructive_stages(
     )
     spark.sql("CREATE DATABASE IF NOT EXISTS cli_scoped_db")
 
-    def no_fallback(*args, **kwargs):
-        raise AssertionError("scoped scan fell back to DESCRIBE")
-
-    monkeypatch.setattr(management, "_described_rows", no_fallback)
     try:
         spark.range(1).write.saveAsTable("cli_scoped_db.scoped_entry")
         monkeypatch.setattr(
@@ -172,7 +167,7 @@ def test_cli_refuses_unscoped_destructive_stages(
         assert any("do not honor --database" in r.message for r in caplog.records)
         messages = [r.getMessage() for r in caplog.records]
         for when in ("before", "after"):
-            assert f"1 catalog tables in cli_scoped_db {when} maintenance" in messages
+            assert f"1 data directories in cli_scoped_db {when} maintenance" in messages
         # the configured namespace survives untouched
         assert default_db_tables.count() == 1
         assert management.clear_caches_older_than(

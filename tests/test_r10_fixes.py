@@ -1,9 +1,5 @@
-"""Regression pins for the four ADVICE r9 items closed in round 10.
+"""Regression pins for three ADVICE r9 items closed in round 10.
 
-1 (medium): catalog creation times are UTC-naive even on non-UTC hosts —
-   tz-aware renders convert BEFORE stripping, abbreviation-dropped naive
-   parses localize from the JVM default zone, and the primary source is
-   the catalog's zone-free epoch (management._created_time_utc_naive).
 2 (low): the dedup_ngram_jaccard NULL-text oracle predicate injects
    inside _verify_oracle, word-boundary-anchored (no post-hoc string
    surgery that could corrupt a future documents_* relation).
@@ -19,69 +15,7 @@ import os
 import sys
 from types import SimpleNamespace
 
-import pandas as pd
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _stub_spark_jvm_tz(zone: str):
-    """A spark stub with ONLY the JVM default-timezone accessor: touching
-    anything else (the catalog primary path, a parquet read) raises, so a
-    test using it proves the code path under test needs nothing more."""
-    tz = SimpleNamespace(
-        getDefault=lambda: SimpleNamespace(getID=lambda: zone)
-    )
-    jvm = SimpleNamespace(java=SimpleNamespace(util=SimpleNamespace(TimeZone=tz)))
-    return SimpleNamespace(_jvm=jvm)
-
-
-def test_created_time_converts_aware_wall_time_to_utc():
-    """ADVICE r9 #1: a tz-aware parse must tz_convert('UTC') BEFORE
-    stripping — the old bare tz_localize(None) kept the SOURCE wall time,
-    leaving catalog rows up to 14h off against the UTC-naive eviction
-    cutoff on non-UTC hosts."""
-    from dbfs_spark_cache_spark.management import _created_time_utc_naive
-
-    got = _created_time_utc_naive(
-        _stub_spark_jvm_tz("America/Los_Angeles"),
-        "db",
-        "t",
-        "2025-08-15 05:00:00-07:00",
-    )
-    assert got == pd.Timestamp("2025-08-15 12:00:00")
-    assert got.tzinfo is None
-
-
-@pytest.mark.filterwarnings("error::FutureWarning")
-def test_created_time_localizes_dropped_abbreviation_from_jvm_zone():
-    """DESCRIBE renders 'Created Time' as java.util.Date.toString: wall
-    time in the driver JVM's default zone plus an ambiguous abbreviation
-    ('PST'). The fallback drops the abbreviation itself — pandas' own
-    silent drop is deprecated and will raise — then localizes the wall
-    time in the JVM zone (full zone id — DST-correct) and converts to
-    UTC."""
-    from dbfs_spark_cache_spark.management import _created_time_utc_naive
-
-    got = _created_time_utc_naive(
-        _stub_spark_jvm_tz("America/Los_Angeles"),
-        "db",
-        "t",
-        "Fri Aug 15 05:00:00 PST 2025",
-    )
-    # Aug 15 is PDT (UTC-7) in America/Los_Angeles: 05:00 wall -> 12:00 UTC
-    assert got == pd.Timestamp("2025-08-15 12:00:00")
-
-    # a UTC-rendering host (this repo's pinned sessions) stays a no-op
-    utc = _created_time_utc_naive(
-        _stub_spark_jvm_tz("UTC"), "db", "t", "Fri Aug 15 05:00:00 UTC 2025"
-    )
-    assert utc == pd.Timestamp("2025-08-15 05:00:00")
-
-    # unparseable renders stay NaT, as before
-    assert pd.isna(
-        _created_time_utc_naive(_stub_spark_jvm_tz("UTC"), "db", "t", "nonsense")
-    )
 
 
 def test_verify_oracle_source_where_is_boundary_safe():
@@ -235,32 +169,6 @@ def test_temp_sibling_is_unique_per_call():
     names = {_temp_sibling("/x/meta.txt") for _ in range(64)}
     assert len(names) == 64
     assert all(n.startswith("/x/meta.txt.tmp.") for n in names)
-
-
-def test_created_time_primary_path_reads_catalog_epoch(spark):
-    """The PRIMARY source is the JVM catalog's zone-free epoch millis —
-    proven live: the helper returns the correct instant even when handed
-    a garbage rendered string, so the string-parsing fallback is exactly
-    that (a fallback), not the de-facto path."""
-    import time
-
-    from dbfs_spark_cache_spark.management import _created_time_utc_naive
-
-    db = "r10_ct_probe_db"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    try:
-        before = pd.Timestamp.utcnow().tz_localize(None)
-        spark.range(3).write.mode("overwrite").saveAsTable(f"{db}.t")
-        after = pd.Timestamp.utcnow().tz_localize(None)
-        got = _created_time_utc_naive(spark, db, "t", "garbage")
-        assert not pd.isna(got)
-        # the epoch is UTC-naive and inside the creation window (with a
-        # minute of slack for catalog clock skew)
-        assert before - pd.Timedelta(minutes=1) <= got <= after + pd.Timedelta(
-            minutes=1
-        )
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 def test_events_stream_reads_directory_layout(spark, tmp_path):

@@ -363,7 +363,7 @@ if role == "writer":
 else:
     h = core.resolve_table_hash(df)
     table = core.table_name_for_hash(h)
-    assert core._table_exists(spark, table), (
+    assert spark.catalog.tableExists(table), (
         "persistent metastore must remember the table across the restart"
     )
     hit = read_cache_if_exist(df)

@@ -132,9 +132,7 @@ def test_cache_engine_concurrent_triangle(spark, clean_cache, tmp_path):
         _fs.read_text(f"{config.SPARK_CACHE_DIR}{key}/cache_metadata.txt")
         is not None
     )
-    has_table = core._table_exists(
-        spark, core.table_name_for_hash(key)
-    )
+    has_table = spark.catalog.tableExists(core.table_name_for_hash(key))
     assert has_sidecar == has_table, (
         f"half-pair after quiescence: sidecar={has_sidecar} table={has_table}"
     )

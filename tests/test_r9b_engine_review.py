@@ -74,16 +74,19 @@ def test_sidecar_registry_times_are_utc_naive(tmp_path, monkeypatch):
 
 
 def test_warehouse_listing_times_are_utc_naive(tmp_path, monkeypatch):
-    """Same contract for the warehouse-listing fallback registry."""
+    """Same contract for the data-directory registry, which lists the
+    cache database's directory in the warehouse."""
     from dbfs_spark_cache_spark import fs
     from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.management import _tables_from_warehouse_listing
+    from dbfs_spark_cache_spark.management import get_tables_from_database
 
     db_dir = tmp_path / "wh" / f"{config.CACHE_DATABASE}.db"
     table_dir = db_dir / "abc123"
     table_dir.mkdir(parents=True)
+    part = table_dir / "part-00000.parquet"
+    part.write_text("x")
     epoch = 1_700_000_000
-    os.utime(table_dir, (epoch, epoch))
+    os.utime(part, (epoch, epoch))
 
     class _ConfOnly:
         class conf:
@@ -92,7 +95,7 @@ def test_warehouse_listing_times_are_utc_naive(tmp_path, monkeypatch):
                 return f"{tmp_path}/wh"
 
     with _tz("Etc/GMT-14"):
-        frame = _tables_from_warehouse_listing(_ConfOnly())
+        frame = get_tables_from_database(_ConfOnly(), num_threads=2)
     assert len(frame) == 1
     assert frame["creationTime"][0].to_pydatetime() == fs._utc_naive(epoch)
 
