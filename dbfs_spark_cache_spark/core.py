@@ -5,9 +5,10 @@ dbfs_spark_cache/core_caching.py) Spark-first:
 
 * materialized caches are written as managed tables in
   ``config.CACHE_DATABASE`` (parquet, or delta when ``CACHE_FORMAT`` asks
-  for it and its jars are present); the catalog entry serves the registry;
-* metadata sidecars live under ``config.SPARK_CACHE_DIR/<hash>/`` via the
-  engine's FS layer (local os / Hadoop FS) instead of ``dbutils``;
+  for it and its jars are present); a parquet entry's one commit record is
+  the writer's own marker in its data directory (``layout``);
+* the metadata sidecar lives under ``config.SPARK_CACHE_DIR/<hash>/`` via
+  the engine's FS layer (local os / Hadoop FS) instead of ``dbutils``;
 * a cache hit replaces the user's whole logical plan with a columnar scan
   of the entry's files — Catalyst then gets predicate pushdown + column
   pruning on the materialized result for free. The reference reads the
@@ -176,82 +177,6 @@ def _save_as_cache_table(
         raise
 
 
-def _marks_success_jobs(spark: SparkSession) -> bool:
-    """Whether this session's file-output committer writes _SUCCESS
-    markers (mapreduce.fileoutputcommitter.marksuccessfuljobs, default
-    true). Unreadable conf -> assume the default: the guard stays on."""
-    try:
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
-        val = hconf.get(
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "true"
-        )
-        return str(val).strip().lower() != "false"
-    except Exception:
-        return True
-
-
-def _record_writer_committer(spark: SparkSession, sidecars: str) -> None:
-    """Record this (writer) session's marker discipline in the entry's
-    committer sidecar: _SUCCESS presence is a property of the session that
-    WROTE a cache directory, not of the one reading it, so readers gate
-    their torn-write guard on this record (see ``_writer_marks_success``).
-    Advisory: a failure degrades readers to their own conf, so it must
-    never fail the write."""
-    sidecar = layout.committer_path(sidecars)
-    flag = "true" if _marks_success_jobs(spark) else "false"
-    try:
-        fs.write_text(sidecar, f"marks_success_jobs={flag}")
-    except Exception as exc:
-        log.warning(
-            "Could not record writer committer discipline at %s (%s); "
-            "readers will gate the _SUCCESS guard on their own conf",
-            sidecar, exc_summary(exc),
-        )
-
-
-def _record_data_inventory(
-    spark: SparkSession, hash_name: str, sidecars: str
-) -> None:
-    """Record the committed entry's data-file inventory in its inventory
-    sidecar. Parquet corruption that destroys a footer fails reads loudly,
-    but a part file deleted AFTER commit leaves a directory that scans
-    cleanly and serves FEWER rows as a valid hit; readers refuse an entry
-    whose live listing disagrees with this record (miss -> recompute heals
-    and re-records). Transactional formats skip it — their commit log is
-    the inventory. Advisory like the committer record: on failure, readers
-    simply skip the inventory check for this entry."""
-    sidecar = layout.inventory_path(sidecars)
-    try:
-        location = layout.table_location(spark, hash_name)
-        if layout.is_transactional(location):
-            return
-        fs.write_text(
-            sidecar, fs.render_inventory(*fs.data_file_inventory(location))
-        )
-    except Exception as exc:
-        log.warning(
-            "Could not record data inventory at %s (%s); the corrupt-"
-            "entry guard will not cover this entry", sidecar,
-            exc_summary(exc),
-        )
-
-
-def _writer_marks_success(
-    spark: SparkSession, sidecars: str
-) -> bool:
-    """Marker discipline governing an entry's cache directory: the
-    recorded WRITER value when present, else this reader's own conf
-    (entries written before the record existed)."""
-    recorded = fs.read_text(layout.committer_path(sidecars))
-    if recorded is not None:
-        val = recorded.strip().lower().rsplit("=", 1)[-1]
-        if val == "true":
-            return True
-        if val == "false":
-            return False
-    return _marks_success_jobs(spark)
-
-
 def _scan_entry(
     spark: SparkSession, location: str, fmt: str, schema: Optional[StructType]
 ) -> DataFrame:
@@ -273,62 +198,37 @@ def _scan_entry(
 def _read_cache_table(
     spark: SparkSession,
     hash_name: str,
-    sidecar_dir: Optional[str] = None,
     schema: Optional[StructType] = None,
 ) -> Optional[DataFrame]:
     """Scan a cache entry's data location, or None when no committed,
-    intact data is there.
+    intact data is there. ``schema``: see ``_scan_entry``.
 
-    ``sidecar_dir``: the directory holding this entry's metadata/committer/
-    inventory sidecars, when the caller resolved it (a custom ``cache_path``
-    base relocates them); ``None`` probes the default SPARK_CACHE_DIR
-    layout, which is also where ``create_cached_dataframe`` entries and the
-    management scans live. ``schema``: see ``_scan_entry``.
+    A parquet location is committed when it holds its commit marker
+    (``layout.COMMIT_MARKER``). The write is remove-then-rewrite and
+    ``_lock_for_key`` only serializes this driver, so a location without
+    the marker may be another process's write in flight: a miss, never
+    partial rows. The marker's inventory must also match the live data
+    files: a part file lost after commit leaves a directory that scans
+    cleanly and serves fewer rows, and a ``_delta_log`` beside the marker
+    means a Delta write landed after it. Without a marker, a Delta
+    location is read through its log, which is its own commit record; a
+    raw parquet scan of it would surface superseded file versions.
     """
-    sidecars = sidecar_dir or layout.sidecar_dir(hash_name)
     location = layout.table_location(spark, hash_name)
-    if not fs.exists(location):
+    marker = fs.read_text(layout.commit_marker_path(location))
+    if marker is not None:
+        if layout.inventory_ok(location, marker) is False:
+            log.warning(
+                "Cache entry %s fails its data-file inventory (data files "
+                "lost, added or altered after commit); treating as a miss",
+                hash_name,
+            )
+            return None
+        fmt = "parquet"
+    elif layout.is_transactional(location):
+        fmt = "delta"
+    else:
         return None
-    # A transactional directory (_delta_log present) is read through its
-    # log: a raw parquet scan would surface superseded file versions as
-    # duplicated or stale rows. Its log is also its inventory and its
-    # commit marker, so the two guards below are for parquet only.
-    transactional = layout.is_transactional(location)
-    if not transactional:
-        # Corrupt-committed-data guard: a live data-file listing that
-        # disagrees with the writer-recorded inventory means part files
-        # were lost (or added) AFTER commit, and a scan would serve partial
-        # rows as a valid hit. Refuse; the rewrite re-records the inventory.
-        # A failed listing reads None, so the guard never turns a readable
-        # cache into a crash.
-        if layout.inventory_ok(spark, hash_name, sidecars, location) is False:
-            log.warning(
-                "Cache entry %s fails its data-file inventory (part files "
-                "lost or altered after commit — partial restore / copy "
-                "truncation?); treating as a miss", hash_name,
-            )
-            return None
-        # Cross-process torn-write guard: the write is remove-then-rewrite,
-        # and _lock_for_key only serializes THIS driver, so another process
-        # may be mid-rewrite. Spark's job committer lands _SUCCESS last, so
-        # its absence means "no committed write here": a clean miss, never
-        # partial data. Unless the committer that WROTE this entry never
-        # writes the marker (marksuccessfuljobs=false, common on S3A/magic-
-        # committer platforms); those entries accept the narrower
-        # cross-process window (a transactional CACHE_FORMAT closes it).
-        # The marker is probed first: the writer's record matters only
-        # when it is missing.
-        if not layout.has_success_marker(location) and _writer_marks_success(
-            spark, sidecars
-        ):
-            log.warning(
-                "Cache location %s exists but has no _SUCCESS job-commit "
-                "marker (concurrent rewrite in another process, or an "
-                "uncommitted/foreign directory); treating as a miss",
-                location,
-            )
-            return None
-    fmt = "delta" if transactional else "parquet"
     try:
         return _scan_entry(spark, location, fmt, schema)
     except Exception as exc:
@@ -350,15 +250,19 @@ def _materialize(
 
     1. Clear the data location: files another session left there would
        block ``saveAsTable``, and for a table this session wrote the
-       overwrite drops its files anyway.
+       overwrite drops its files anyway. The old commit marker goes with
+       them.
     2. Write the table.
-    3. Write the committer sidecar, then the inventory sidecar.
+    3. Commit parquet data with its marker (``layout.write_commit_marker``,
+       the data-file inventory); a Delta log commits itself.
     4. Write the metadata sidecar LAST: it is the entry's liveness signal,
        so a write that dies earlier leaves no sidecar and the next call
        retries it.
 
     Returns a scan of the files just committed, the read every later hit
-    makes.
+    makes. The lock serializes this driver only: when another process
+    removed the location or is rewriting it before step 3, the marker is
+    refused, nothing is committed and ``df`` itself is returned.
     """
     spark = df.sparkSession
     table = table_name_for_hash(key)
@@ -366,8 +270,11 @@ def _materialize(
     if fs.exists(location):
         fs.remove(location)
     fmt = _save_as_cache_table(df, table, partition_by=partition_by)
-    _record_writer_committer(spark, sidecars)
-    _record_data_inventory(spark, key, sidecars)
+    if fmt == "parquet" and not layout.write_commit_marker(location):
+        log.warning("Cache location %s lost this write's output before its "
+                    "commit (another process removed or is rewriting it); "
+                    "%s not cached", location, key)
+        return df
     fs.write_text(layout.metadata_path(sidecars), metadata_txt)
     return _scan_entry(spark, location, fmt, df.schema)
 
@@ -382,12 +289,12 @@ def read_cache_if_exist(
     """Return the materialized cache for ``df``'s fingerprint, or None.
 
     A hit requires the metadata sidecar and a committed, intact data
-    location; it is a scan of that location with ``df``'s schema (the
-    reference reads the catalog table, core_caching.py:409-471, which only
-    a metastore that outlives the session can serve). ``hash_name``/
-    ``cache_path`` must mirror whatever the write used — a custom-keyed
-    cache (``cacheToStorage(hash_name=...)``) is invisible to a
-    default-keyed probe.
+    location (``_read_cache_table``); it is a scan of that location with
+    ``df``'s schema (the reference reads the catalog table,
+    core_caching.py:409-471, which only a metastore that outlives the
+    session can serve). ``hash_name``/``cache_path`` must mirror whatever
+    the write used — a custom-keyed cache (``cacheToStorage(hash_name=
+    ...)``) is invisible to a default-keyed probe.
     """
     spark = df.sparkSession
     plan = query_plan if query_plan is not None else canonical_plan(df)
@@ -422,9 +329,7 @@ def read_cache_if_exist(
         stored = fs.read_text(metadata_path)
         if stored is None or (hash_name is not None and stored != metadata_txt):
             return None
-        cached = _read_cache_table(
-            spark, key, sidecar_dir=sidecars, schema=df.schema
-        )
+        cached = _read_cache_table(spark, key, schema=df.schema)
     if cached is None:
         log.warning("Cache metadata exists but entry %s has no readable data", key)
     return cached
@@ -469,7 +374,7 @@ def write_cache(
         # duplicate distributed write entirely.
         existing = fs.read_text(metadata_path)
         cached = (
-            _read_cache_table(spark, key, sidecar_dir=sidecars, schema=df.schema)
+            _read_cache_table(spark, key, schema=df.schema)
             if existing == metadata_txt else None
         )
         if cached is not None:

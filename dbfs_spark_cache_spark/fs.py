@@ -148,18 +148,20 @@ def file_sizes(paths: Iterable[str]) -> List[int]:
     return sizes
 
 
-def walk_files(path: str, skip_hidden: bool = False) -> Iterator[FileStat]:
+def walk_files(path: str, skip_hidden: bool = False,
+               listing: Optional[List[FileStat]] = None) -> Iterator[FileStat]:
     """Every file under ``path``, recursing into subdirectories with one
     :func:`list_dir` per directory, so it works on local and Hadoop-scheme
     paths alike. ``skip_hidden`` prunes entries named ``_*`` or ``.*``
-    (files and whole subtrees)."""
-    stack = [path]
-    while stack:
-        for stat in list_dir(stack.pop()):
+    (files and whole subtrees). ``listing`` is ``path``'s own listing
+    when the caller has already made it."""
+    pending = [list_dir(path) if listing is None else listing]
+    while pending:
+        for stat in pending.pop():
             if skip_hidden and stat.name.startswith(("_", ".")):
                 continue
             if stat.is_dir:
-                stack.append(stat.path)
+                pending.append(list_dir(stat.path))
             else:
                 yield stat
 
@@ -171,26 +173,51 @@ def tree_size(path: str) -> int:
     return sum(stat.size for stat in walk_files(path))
 
 
-def data_file_inventory(path: str) -> tuple:
+def data_file_inventory(path: str, listing: Optional[list] = None) -> tuple:
     """(file_count, total_bytes) of the DATA files under ``path``,
     recursing into partition/bucket subdirectories. Hidden entries
     (``_SUCCESS``, ``.crc`` sidecars, ``_delta_log``, commit markers)
     are bookkeeping, not data, and are excluded — so the inventory is
     stable across committer/marker differences and changes only when
-    data files are lost, truncated, or altered."""
-    sizes = [stat.size for stat in walk_files(path, skip_hidden=True)]
+    data files are lost, truncated, or altered. ``listing``: see
+    :func:`walk_files`."""
+    sizes = [stat.size for stat in walk_files(path, True, listing)]
     return len(sizes), sum(sizes)
 
 
 def render_inventory(files: int, total: int) -> str:
-    """The two inventory lines commit markers and sidecars embed."""
+    """The two inventory lines a commit marker carries."""
     return f"files={files}\nbytes={total}"
 
 
+def write_commit_marker(path: str, name: str, extra: str = "") -> bool:
+    """Publish the dataset just written at ``path`` as complete: write
+    ``<path>/<name>`` holding its data-file inventory (plus ``extra``)
+    and return True. The package's own writer marks its datasets this way
+    rather than trusting the job committer's ``_SUCCESS``, which a
+    committer configured with ``marksuccessfuljobs=false`` never writes.
+    The name must start with ``_``: Spark scans skip it and the inventory
+    leaves it out. A later check against the inventory catches files lost
+    or altered after the write.
+
+    The listing must be the caller's own output, so the marker is refused
+    (False, nothing written) when ``path`` lists empty, as it does once
+    the data was removed, or holds a job committer's ``_temporary``, the
+    in-flight output of another writer that removed ``path`` and is
+    rewriting it. Either way a marker would publish an empty or partial
+    dataset as committed."""
+    listing = list_dir(path)
+    if not listing or any(stat.name == "_temporary" for stat in listing):
+        return False
+    inventory = render_inventory(*data_file_inventory(path, listing))
+    write_text(f"{path.rstrip('/')}/{name}", inventory + extra)
+    return True
+
+
 def parse_inventory(text: Optional[str]) -> Optional[tuple]:
-    """(files, bytes) parsed from marker/sidecar text carrying
-    ``files=N`` / ``bytes=M`` lines anywhere in it; None when the text
-    has no complete, parseable inventory (pre-inventory writers)."""
+    """(files, bytes) parsed from marker text carrying ``files=N`` /
+    ``bytes=M`` lines anywhere in it; None when the text has no complete,
+    parseable inventory."""
     if not text:
         return None
     found = {}
@@ -211,34 +238,55 @@ def inventory_matches(path: str, recorded: Optional[str]) -> Optional[bool]:
     True/False when ``recorded`` carries one, None when there is nothing
     to compare. The shared definition of "corrupt committed data" used by
     the cache read path, the fold, and the sink scans — a False means
-    data files were lost, truncated, or altered AFTER commit."""
+    data files were lost, truncated, or altered AFTER commit. A Delta log
+    (``_delta_log``) beside the inventory reads False too: a transactional
+    write landed there after the commit, and its superseded files would
+    scan as rows."""
     want = parse_inventory(recorded)
     if want is None:
         return None
-    return data_file_inventory(path) == want
+    listing = list_dir(path)
+    if any(stat.name == "_delta_log" for stat in listing):
+        return False
+    return data_file_inventory(path, listing) == want
 
 
-def max_mtime(path: str, skip_names: tuple = ("_delta_log",)) -> Optional[datetime]:
-    """Latest modification time of entries directly under ``path``.
+def dir_summary(path: str, skip_names: tuple = ("_delta_log",)) -> Optional[tuple]:
+    """(newest mtime, file count, total file bytes) of the entries
+    directly under ``path``, from one listing; None when no mtime can be
+    read.
 
     Mirrors the reference's per-source-directory fingerprint (reference:
     core_caching.py:217-244): skip transaction-log dirs, fall back to the
-    directory's own mtime when it holds no relevant files.
+    directory's own mtime when it holds no relevant entries. The count and
+    bytes cover files only (a subdirectory's size says nothing of its
+    content), so a deleted or resized file shows even when the newest
+    mtime does not move.
     """
     stats = [s for s in list_dir(path)
              if s.name.rstrip("/") not in skip_names]
-    if stats:
-        return _utc_naive(max(s.mtime_ms for s in stats) / 1000)
-    if is_local(path):
-        try:
-            return _utc_naive(os.stat(strip_scheme(path)).st_mtime)
-        except OSError:
-            return None
+    files = [s.size for s in stats if not s.is_dir]
+    newest = (_utc_naive(max(s.mtime_ms for s in stats) / 1000) if stats
+              else _own_mtime(path))
+    return None if newest is None else (newest, len(files), sum(files))
+
+
+def _own_mtime(path: str) -> Optional[datetime]:
+    """``path``'s own modification time; None when it cannot be read."""
     try:
+        if is_local(path):
+            return _utc_naive(os.stat(strip_scheme(path)).st_mtime)
         jfs, jpath = _active_jvm_fs(path)
         return _utc_naive(jfs.getFileStatus(jpath).getModificationTime() / 1000)
     except Exception:
         return None
+
+
+def max_mtime(path: str, skip_names: tuple = ("_delta_log",)) -> Optional[datetime]:
+    """Latest modification time of entries directly under ``path`` (see
+    :func:`dir_summary`)."""
+    summary = dir_summary(path, skip_names)
+    return None if summary is None else summary[0]
 
 
 def _utc_naive(epoch_seconds: float) -> datetime:
@@ -311,9 +359,9 @@ def write_text(path: str, content: str) -> None:
     must be deleted first the transient state is *absence* (a clean cache
     miss for readers), never a torn read.
 
-    Contract (r17 fresh-eyes): ``path`` must carry a directory component —
-    a bare relative filename ("sidecar.txt") raises ``FileNotFoundError``
-    from ``os.makedirs("")`` rather than guessing a working directory.
+    Contract: ``path`` must carry a directory component — a bare relative
+    filename ("sidecar.txt") raises ``FileNotFoundError`` from
+    ``os.makedirs("")`` rather than guessing a working directory.
     Every internal caller builds paths from a configured base; loud beats
     a sidecar quietly landing in whatever CWD the driver happens to have.
     """
@@ -374,10 +422,10 @@ def rename(src: str, dst: str) -> None:
     ``dst`` must not exist (Hadoop rename does not overwrite; the local
     branch matches that contract for cross-platform parity).
 
-    The local no-overwrite check is best-effort, not a lock (r17
-    fresh-eyes): a ``dst`` created between the ``exists`` probe and
-    ``os.rename`` can still be replaced (POSIX rename overwrites a file
-    target; a directory renames over an empty directory target). The
+    The local no-overwrite check is best-effort, not a lock: a ``dst``
+    created between the ``exists`` probe and ``os.rename`` can still be
+    replaced (POSIX rename overwrites a file target; a directory renames
+    over an empty directory target). The
     maintenance flows that call this are single-owner by contract — the
     fold's uuid temp sibling and ``_FOLDED_OK`` stamp guard the racing-
     owner aftermath — so the probe's job is only to fail FAST on a

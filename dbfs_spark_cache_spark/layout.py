@@ -7,16 +7,17 @@ key, or a caller's custom ``hash_name``) has two halves:
   <hash>``, written as the managed table ``<CACHE_DATABASE>.<hash>`` so
   the cache database stays browsable. Nothing reads the catalog table:
   every read of the entry scans the location, in every session, and
-  ``management`` lists the database directory as its registry;
-* its sidecars, in ``<base>/<hash>/`` where ``base`` is ``SPARK_CACHE_DIR``
-  or the caller's ``cache_path``:
-
-  - ``cache_metadata.txt``: the metadata document the key is the MD5 of
-    (direct-data entries record their data hash and schema). It is written
-    LAST, so its presence means the entry is committed;
-  - ``writer_committer.txt``: whether the writing session's committer
-    marks finished jobs with ``_SUCCESS``;
-  - ``data_inventory.txt``: the committed data-file count and bytes.
+  ``management`` lists the database directory as its registry. A parquet
+  location holds one commit record, the writer's own marker
+  ``_CACHE_COMMITTED`` with the data-file inventory
+  (``fs.write_commit_marker``): written after the data, on every
+  committer, and removed with the old data by a rewrite. A Delta
+  location's log is its commit record instead;
+* its metadata sidecar, ``<base>/<hash>/cache_metadata.txt`` where
+  ``base`` is ``SPARK_CACHE_DIR`` or the caller's ``cache_path``: the
+  metadata document the key is the MD5 of (direct-data entries record
+  their data hash and schema). It is written LAST, so its presence means
+  the entry is committed.
 
 The byte format of every path here is a compatibility interface: a change
 orphans every existing entry.
@@ -31,8 +32,7 @@ from . import fs
 from .config import config
 
 METADATA_FILE = "cache_metadata.txt"
-COMMITTER_FILE = "writer_committer.txt"
-INVENTORY_FILE = "data_inventory.txt"
+COMMIT_MARKER = "_CACHE_COMMITTED"
 
 log = logging.getLogger(__name__)
 
@@ -67,49 +67,38 @@ def metadata_path(sidecars: str) -> str:
     return f"{sidecars.rstrip('/')}/{METADATA_FILE}"
 
 
-def committer_path(sidecars: str) -> str:
-    return f"{sidecars.rstrip('/')}/{COMMITTER_FILE}"
-
-
-def inventory_path(sidecars: str) -> str:
-    return f"{sidecars.rstrip('/')}/{INVENTORY_FILE}"
-
-
 def is_transactional(location: str) -> bool:
     """A transactional format (Delta) keeps a commit log in the data
     location; its files must never be read as raw parquet, and the log is
-    its own inventory."""
+    its own commit record and inventory."""
     return fs.exists(f"{location.rstrip('/')}/_delta_log")
 
 
-def has_success_marker(location: str) -> bool:
-    return fs.exists(f"{location.rstrip('/')}/_SUCCESS")
+def commit_marker_path(location: str) -> str:
+    return f"{location.rstrip('/')}/{COMMIT_MARKER}"
 
 
-def inventory_ok(
-    spark,
-    hash_name: str,
-    sidecars: Optional[str] = None,
-    location: Optional[str] = None,
-) -> Optional[bool]:
-    """Does the entry's live data listing match its recorded inventory?
-    None when there is nothing to compare: no (parseable) record, no data
-    location, or a transactional table. False means data files were lost or
-    altered after commit. A failed listing is no finding either: it is
-    logged and reads None, so neither the read path nor an operator scan
-    fails on it. A caller that has already seen the data ``location``
-    exist without a commit log passes it, and it is not probed again."""
+def write_commit_marker(location: str) -> bool:
+    """Commit the parquet data just written at ``location``; False when
+    the location no longer holds this write's output
+    (``fs.write_commit_marker``)."""
+    return fs.write_commit_marker(location, COMMIT_MARKER)
+
+
+def inventory_ok(location: str, marker: Optional[str] = None) -> Optional[bool]:
+    """Do the data files at ``location`` match the inventory of its commit
+    marker? ``marker`` is the marker's text when the caller has read it;
+    None reads it here. None when there is nothing to compare (no
+    parseable marker: no entry, a Delta entry, or an uncommitted write).
+    False means data files were lost or altered after commit. A failed
+    listing is no finding either: it is logged and reads None, so neither
+    the read path nor an operator scan fails on it."""
     try:
-        recorded = fs.read_text(inventory_path(sidecars or sidecar_dir(hash_name)))
-        if recorded is None:
-            return None
-        if location is None:
-            location = table_location(spark, hash_name)
-            if not fs.exists(location) or is_transactional(location):
-                return None
-        return fs.inventory_matches(location, recorded)
+        if marker is None:
+            marker = fs.read_text(commit_marker_path(location))
+        return fs.inventory_matches(location, marker)
     except Exception as exc:
-        log.warning("Inventory check failed for %s (%s: %s)", hash_name,
+        log.warning("Inventory check failed for %s (%s: %s)", location,
                     exc.__class__.__name__, exc)
         return None
 

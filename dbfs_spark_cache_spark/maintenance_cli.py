@@ -30,8 +30,8 @@ The single-shot stages (--stats / --scan-corrupt / --scan-corrupt-batches
 / --compact-ledger / --fold-growing-index) each run alone and exit:
 combining two of them, or combining one with an eviction-path flag it
 would ignore, is a usage error (exit 2 from argparse, before any work) —
-never a silent partial run (r18 fresh-eyes; previously
-`--dry-run --compact-ledger` performed the REAL compaction).
+never a silent partial run (`--dry-run --compact-ledger` must not
+perform the real compaction).
 """
 from __future__ import annotations
 
@@ -85,15 +85,9 @@ def main() -> int:
                     help="list cache entries whose committed data files no "
                          "longer match their write-time inventory (partial "
                          "restore / copy truncation / bit rot) and exit 1 "
-                         "when any are found; read-only. Scans the default "
-                         "SPARK_CACHE_DIR layout — entries written with a "
-                         "custom cache_path need --scan-corrupt-base")
-    ap.add_argument("--scan-corrupt-base", metavar="BASE", action="append",
-                    default=None,
-                    help="additional custom cache_path base to include in "
-                         "--scan-corrupt (repeatable); sidecars for such "
-                         "entries live under BASE, invisible to the default "
-                         "registry walk")
+                         "when any are found; read-only. Scans every data "
+                         "directory of the cache database, whatever "
+                         "cache_path an entry's sidecar uses")
     ap.add_argument("--scan-corrupt-batches", metavar="PATH", default=None,
                     help="list an exactly-once sink's committed batch ids "
                          "whose data dirs fail their recorded inventory at "
@@ -106,17 +100,15 @@ def main() -> int:
         ap.error("--fold-growing-index requires --fold-out")
     if args.truncate_after_fold and not args.fold_growing_index:
         ap.error("--truncate-after-fold requires --fold-growing-index")
-    if args.scan_corrupt_base and not args.scan_corrupt:
-        ap.error("--scan-corrupt-base requires --scan-corrupt")
 
-    # STAGE EXCLUSIVITY (r18 fresh-eyes): each of these stages runs alone
-    # and exits, so combining two of them — or combining one with an
-    # eviction-path flag — used to SILENTLY ignore the rest of the command
-    # line. The worst shapes were mutating: `--dry-run --compact-ledger`
-    # and `--dry-run --fold-growing-index` performed the REAL compaction/
-    # fold while the operator asked for a preview, and
-    # `--scan-corrupt --repair-inconsistent` skipped the repair while
-    # exiting 0. The documented exit-code contract ("0 = every requested
+    # Stage exclusivity: each of these stages runs alone and exits, so
+    # combining two of them, or one with an eviction-path flag, would
+    # silently ignore the rest of the command line. The worst shapes are
+    # mutating: `--dry-run --compact-ledger` and `--dry-run
+    # --fold-growing-index` would perform the real compaction/fold while
+    # the operator asked for a preview, and `--scan-corrupt
+    # --repair-inconsistent` would skip the repair while exiting 0. The
+    # documented exit-code contract ("0 = every requested
     # stage ran as scoped") requires refusing these loudly: usage error
     # (exit 2) before any work or Spark startup. --threads composes with
     # every stage and stays allowed.
@@ -219,8 +211,7 @@ def main() -> int:
 
     if args.scan_corrupt:
         corrupt = management.find_corrupt_entries(
-            spark, num_threads=args.threads,
-            extra_bases=args.scan_corrupt_base,
+            spark, num_threads=args.threads
         )
         spark.stop()
         if corrupt:
@@ -245,7 +236,7 @@ def main() -> int:
         # Exit 2 when --database was passed: the scope was NOT honored
         # (same contract as the refused eviction stages below — an
         # explicitly requested behavior automation can't see in a log
-        # warning must be detectable in the exit code; ADVICE r9 #4).
+        # warning must be detectable in the exit code).
         # The summary above still printed, so an operator retry without
         # --database needs no re-scoping.
         return 2 if args.database else 0
@@ -305,7 +296,7 @@ def main() -> int:
         spark.stop()
         # Exit 2, not 0: a cron/scripted operator EXPLICITLY requested
         # stages that never ran — success would hide the skip from
-        # automation forever (ADVICE r8 #2). The age eviction above DID
+        # automation forever. The age eviction above DID
         # run (it honors --database and is idempotent on re-run), so
         # partial work plus a detectable failure beats refusing
         # everything.

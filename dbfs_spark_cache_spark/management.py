@@ -46,6 +46,14 @@ def _pmap(fn: Callable, items: Iterable, num_threads: Optional[int]) -> list:
         return list(pool.map(fn, items))
 
 
+def _entry_dirs(spark: SparkSession, db: str) -> list:
+    """The entry directories of ``db``, sorted by name: the non-hidden
+    directories under ``layout.database_dir``, from one listing."""
+    listing = fs.list_dir(layout.database_dir(spark, db))
+    return sorted((s for s in listing if s.is_dir and not s.name.startswith(("_", "."))),
+                  key=lambda s: s.name)
+
+
 def get_tables_from_database(
     spark: SparkSession, database: Optional[str] = None, num_threads: Optional[int] = None
 ) -> pd.DataFrame:
@@ -63,28 +71,13 @@ def get_tables_from_database(
     entry at once. A directory gone before its time is read (a concurrent
     eviction) is no longer an entry and gets no row."""
     db = (database or config.CACHE_DATABASE).lower()
-    dirs = sorted(
-        (
-            stat
-            for stat in fs.list_dir(layout.database_dir(spark, db))
-            if stat.is_dir and not stat.name.startswith(("_", "."))
-        ),
-        key=lambda stat: stat.name,
-    )
+    dirs = _entry_dirs(spark, db)
     if not dirs:
         return empty_registry()
     times = _pmap(lambda stat: fs.max_mtime(stat.path), dirs, num_threads)
     return pd.DataFrame(
-        [
-            {
-                "table_name": f"{db}.{stat.name}",
-                "hash_name": stat.name,
-                "directory_path": stat.path,
-                "creationTime": created,
-            }
-            for stat, created in zip(dirs, times)
-            if created is not None
-        ],
+        [(f"{db}.{stat.name}", stat.name, stat.path, created)
+         for stat, created in zip(dirs, times) if created is not None],
         columns=REGISTRY_COLUMNS,
     )
 
@@ -335,31 +328,27 @@ def find_inconsistent_entries(
     return sorted(in_meta ^ in_tables)
 
 
+def _corrupt(hashes: Iterable[str], paths: Iterable[str],
+             num_threads: Optional[int]) -> List[str]:
+    """The ``hashes`` whose data directories (``paths``) fail their commit
+    marker's inventory (``layout.inventory_ok``), sorted."""
+    flags = _pmap(layout.inventory_ok, paths, num_threads)
+    return sorted(h for h, ok in zip(hashes, flags) if ok is False)
+
+
 def find_corrupt_entries(
-    spark: SparkSession,
-    num_threads: Optional[int] = None,
-    extra_bases: Optional[List[str]] = None,
+    spark: SparkSession, num_threads: Optional[int] = None
 ) -> List[str]:
     """Entries whose committed data files no longer match the inventory
-    recorded at write time (partial restore, copy-tool truncation, bit
-    rot). Read-only; the read path already refuses these as misses, so
-    the operator action is simply to clear them (``clear_cache_for_hash``)
-    or let the next use rewrite them in place.
-
-    The default scan walks the SPARK_CACHE_DIR registry. Entries written
-    with a custom ``cache_path`` keep their sidecars under that base, so
-    they are invisible to the registry walk — pass each such base via
-    ``extra_bases`` to include them (the CLI exposes this as repeatable
-    ``--scan-corrupt-base``)."""
-    entries = [
-        entry
-        for base in [config.SPARK_CACHE_DIR, *(extra_bases or [])]
-        for entry in _sidecar_entries(base, num_threads)
-    ]
-    flags = _pmap(
-        lambda e: layout.inventory_ok(spark, e[0], e[1]), entries, num_threads
-    )
-    return sorted({e[0] for e, ok in zip(entries, flags) if ok is False})
+    their commit marker recorded at write time (partial restore,
+    copy-tool truncation, bit rot). Read-only; the read path already
+    refuses these as misses, so the operator action is simply to clear
+    them (``clear_cache_for_hash``) or let the next use rewrite them in
+    place. Scans the entry directories of the cache database, where every
+    entry's marker lives whatever ``cache_path`` its sidecar was written
+    under."""
+    dirs = _entry_dirs(spark, config.CACHE_DATABASE.lower())
+    return _corrupt([d.name for d in dirs], [d.path for d in dirs], num_threads)
 
 
 def _entry_bytes(spark: SparkSession, hash_name: str) -> int:
@@ -389,10 +378,8 @@ def cache_stats(
     situations these stats diagnose. Parallelized like every other
     registry scan here.
     """
-    meta, _, in_meta, in_tables = _registries(spark, num_threads)
+    meta, tables, in_meta, in_tables = _registries(spark, num_threads)
     sizes = _pmap(lambda h: _entry_bytes(spark, h), in_meta | in_tables, num_threads)
-    checked = sorted(in_meta)
-    flags = _pmap(lambda h: layout.inventory_ok(spark, h), checked, num_threads)
     times = list(meta["creationTime"])
     return {
         "n_metadata_entries": len(in_meta),
@@ -404,7 +391,8 @@ def cache_stats(
         # Entries whose live data files no longer match the write-time
         # inventory — the read path refuses these as misses; listed here
         # so the operator sees WHY a "cached" query keeps recomputing.
-        "corrupt_entries": [h for h, ok in zip(checked, flags) if ok is False],
+        "corrupt_entries": _corrupt(tables["hash_name"],
+                                    tables["directory_path"], num_threads),
         "total_cache_bytes": sum(sizes),
         "largest_entry_bytes": max(sizes, default=0),
         "oldest_entry": min(times, default=None),

@@ -1,12 +1,13 @@
 """Content-addressed identity for DataFrames.
 
 A DataFrame's cache identity is MD5 over a plain-text metadata document built
-from (a) its input source directories + their latest modification times and
-(b) the canonicalized analyzed-plan text. Same semantics as the
-reference engine (reference: dbfs_spark_cache/core_caching.py:300-325 plan
-canonicalization, :212-297 input fingerprint, :371-406 metadata + key), but
-implemented against the public PySpark API plus the engine's own FS layer so
-it runs identically on local[], YARN, or K8s clusters.
+from (a) its input source directories, each with its newest modification
+time, file count and file bytes, and (b) the canonicalized analyzed-plan
+text. The same shape as the reference engine's (reference:
+dbfs_spark_cache/core_caching.py:300-325 plan canonicalization, :212-297
+input fingerprint, :371-406 metadata + key), but implemented against the
+public PySpark API plus the engine's own FS layer so it runs identically
+on local[], YARN, or K8s clusters.
 
 The default analyzed plan prints a file scan as ``Relation [id#L] parquet``
 with no path, so the input block is the only part of the key that tells two
@@ -29,20 +30,22 @@ recognises frames built on an entry: the entry's directory enters the key
 as a ``CACHED_INPUT_MARKER`` line, and a frame whose only input is one
 entry and whose plan is a bare scan is that entry (``pure_scan_entry``).
 
-Trust model. The key trusts the file system's modification times, as the
-reference does: a rewrite of an input must change the newest mtime among the
-entries of its directory (second resolution). A directory whose mtime cannot
-be read makes the key unmatchable; it never drops out of the key. The walk
-has three known gaps:
+Trust model. The key trusts the file system's listing of each input
+directory: a rewrite of an input must change the newest mtime among the
+entries of its directory (second resolution), its file count or its file
+bytes. The reference keys the newest mtime alone, so deleting a file that
+was not the newest kept its key; the count and bytes see that, at no extra
+listing. A directory whose mtime cannot be read makes the key unmatchable;
+it never drops out of the key. The walk has three known gaps:
 
 * leaves that read no files (in-memory data, RDDs, JDBC, non-file DSv2
   sources) add no input line, so their identity is the plan text alone
   (RDD plans are refused as uncacheable); an unconverted Hive table
   contributes its table directory, so its line reads the newest mtime
   among the entries of the directory that holds it;
-* a change that keeps every input directory's newest mtime (deleting a
-  file that was not the newest, restoring an old copy of one) keeps the
-  key;
+* a change that keeps every input directory's newest mtime, file count
+  and bytes (restoring an older copy of a file, of the same size) keeps
+  the key;
 * the cost grows with the file count: every file path crosses py4j once,
   although only the distinct directories enter the key.
 
@@ -338,7 +341,9 @@ def _entry_of(directory: str) -> Optional[str]:
 
 
 def input_dir_mod_datetime(df: DataFrame) -> _InputInfo:
-    """Map of input source directory -> latest file modification time.
+    """Map of input source directory -> its line in the key: ``<newest
+    mtime> files=<n> bytes=<sum>``, all three from one listing
+    (``fs.dir_summary``).
 
     Special cases (mirroring reference core_caching.py:212-297):
 
@@ -366,12 +371,13 @@ def input_dir_mod_datetime(df: DataFrame) -> _InputInfo:
         if _entry_of(d) is not None:
             result[d] = CACHED_INPUT_MARKER
             continue
-        mtime = fs.max_mtime(d)
-        if mtime is None:
+        summary = fs.dir_summary(d)
+        if summary is None:
             log.warning("input directory %s has no readable mtime; fingerprint "
                         "made unmatchable", d)
             return _unmatchable(INPUT_LISTING_FAILED_KEY)
-        result[d] = mtime
+        newest, n_files, n_bytes = summary
+        result[d] = f"{newest:%Y-%m-%d %H:%M:%S} files={n_files} bytes={n_bytes}"
     return result
 
 

@@ -500,15 +500,15 @@ def growing_corpus_dedup_sink(
 
 _FOLD_STAMP = "_folded.txt"  # non-digit stem: invisible to ledger readers
 
-# Completion marker the fold writes ITSELF (fs.write_text, not the Spark
-# job committer) into the dataset dir after the parquet write (ADVICE r15
-# #1): prior-fold detection and crash recovery keyed on the committer's
-# _SUCCESS break on mapreduce.fileoutputcommitter.marksuccessfuljobs=false
-# platforms — a complete prior fold is never recognized, so every cycle
-# would overwrite out_path with only the current ledger's rows (silently
-# destroying earlier cycles' band rows) and the recovery loop would delete
-# a complete-but-markerless temp. Underscore prefix: parquet readers skip
-# it as a hidden file.
+# Commit marker the fold writes ITSELF (fs.write_commit_marker, not the
+# Spark job committer) into the dataset dir after the parquet write, the
+# way a cache entry is committed. Keyed on the committer's _SUCCESS,
+# prior-fold detection and crash recovery would break where
+# mapreduce.fileoutputcommitter.marksuccessfuljobs=false: a complete prior
+# fold would never be recognized, so every cycle would overwrite out_path
+# with only the current ledger's rows (silently destroying earlier cycles'
+# band rows) and the recovery loop would delete a complete temp.
+# Underscore prefix: parquet readers skip it as a hidden file.
 _FOLD_OK = "_FOLDED_OK"
 
 
@@ -595,21 +595,18 @@ def _check_fold_containment(out_path: str, base_path: str) -> None:
 
 
 def _fold_complete(fs, path: str) -> bool:
-    """A dataset dir holds a COMPLETE fold union: the fold's own marker,
-    or (pre-marker folds, written before ADVICE r15 #1) the committer's
-    _SUCCESS — which only marker-writing sessions ever produced, so it
-    still means complete wherever it exists."""
-    p = path.rstrip("/")
-    return fs.exists(f"{p}/{_FOLD_OK}") or fs.exists(f"{p}/_SUCCESS")
+    """A dataset dir holds a COMPLETE fold union only when it carries the
+    fold's own marker: a dataset this package publishes is committed by
+    its own marker, never by the job committer's ``_SUCCESS``."""
+    return fs.exists(f"{path.rstrip('/')}/{_FOLD_OK}")
 
 
 def _require_intact_fold(fs, path: str, what: str) -> None:
     """Refuse — loudly — a complete-looking fold dataset whose live data
-    listing disagrees with the inventory its marker recorded (r16
-    corrupt-committed-data contract): folding FROM it would bake the
-    loss into every future cycle as silent dedup misses, and recovery
-    renaming it would publish a torn union. Pre-inventory markers (bare
-    'complete', or _SUCCESS-only folds) have nothing to compare."""
+    listing disagrees with the inventory its marker recorded: folding
+    FROM it would bake the loss into every future cycle as silent dedup
+    misses, and recovery renaming it would publish a torn union. A marker
+    without an inventory has nothing to compare."""
     ok = fs.inventory_matches(path, fs.read_text(f"{path.rstrip('/')}/{_FOLD_OK}"))
     if ok is False:
         raise RuntimeError(
@@ -627,7 +624,7 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     maintenance the sink's scale note prescribes (the growing sink bounds
     what accumulates BETWEEN folds, not forever).
 
-    ``out_path`` is CUMULATIVE across maintenance cycles (ADVICE r14 #1):
+    ``out_path`` is CUMULATIVE across maintenance cycles:
     a fold unions any previous fold's committed content at ``out_path``
     with the sink's committed batches, distinct-collapses the copies,
     writes the union to a temp sibling, and SWAPS it into place — so
@@ -644,9 +641,12 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     both directions raise. Keep the stream's checkpoint dir outside
     ``out_path`` too — the swap removes ``out_path`` recursively.
     Completeness of a fold dataset is tracked by the fold's OWN
-    ``_FOLDED_OK`` marker (committer-independent — ``_SUCCESS`` detection
-    broke on marksuccessfuljobs=false platforms, where every cycle then
-    overwrote the accumulated union with just the current ledger's rows).
+    ``_FOLDED_OK`` marker, which every committer configuration leaves in
+    place (``_SUCCESS`` is absent under marksuccessfuljobs=false, where
+    every cycle would then overwrite the accumulated union with just the
+    current ledger's rows). An ``out_path`` holding data files but no
+    marker (a fold published before the marker existed) raises rather
+    than being overwritten; the message says how to adopt it.
 
     After the swap, the fold stamps the ledger batch ids it absorbed
     (``index/_committed/_folded.txt``); :func:`truncate_growing_index`
@@ -715,6 +715,16 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     if _fold_complete(fs, out_path):
         _require_intact_fold(fs, out_path, "previous fold")
         prior = spark.read.parquet(out_path)
+    elif fs.data_file_inventory(out_path)[0]:
+        # Data without the marker: a fold published before the marker
+        # existed, or a foreign dataset. The swap would replace it with
+        # only the current ledger's rows, and a fold is not recomputable
+        # once its ledger batches are truncated.
+        raise RuntimeError(
+            f"fold out_path {out_path!r} holds data files but no {_FOLD_OK} "
+            "marker; folding would overwrite it. Adopt it as the previous "
+            f"fold with fs.write_commit_marker({out_path!r}, {_FOLD_OK!r}), "
+            "or remove it to accept losing its rows.")
     ingested = read_exactly_once_output(spark, index_path)
     if ingested is None:
         return prior
@@ -737,12 +747,10 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     # leaves a stamp claiming coverage the published dataset doesn't
     # carry — without the cross-check, truncation would silently forget
     # those documents).
-    fs.write_text(
-        f"{tmp}/{_FOLD_OK}",
-        "complete\n"
-        + fs.render_inventory(*fs.data_file_inventory(tmp))
-        + "\nids=" + ",".join(str(i) for i in folded_ids),
-    )
+    if not fs.write_commit_marker(
+        tmp, _FOLD_OK, "\nids=" + ",".join(str(i) for i in folded_ids)
+    ):
+        raise RuntimeError(f"fold temp {tmp!r} lost its output before commit")
     if fs.exists(out_path):
         fs.remove(out_path)
     fs.rename(tmp, out_path)
@@ -755,7 +763,7 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
 
 def _fold_marker_ids(fs, path: str):
     """The ledger batch ids a fold dataset's own marker says it absorbed;
-    None when there is nothing to read (missing dataset, pre-marker fold,
+    None when there is nothing to read (missing dataset or marker,
     pre-ids marker) — callers skip the cross-check then."""
     marker = fs.read_text(f"{path.rstrip('/')}/{_FOLD_OK}")
     if not marker:

@@ -19,10 +19,11 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 # The storage-touching functions of the fs layer. Nested calls count too:
-# a data-file inventory or an mtime scan shows up with its list_dir.
+# a data-file inventory or an input directory's summary shows up with its
+# list_dir.
 _FS_CALLS = (
     "exists", "list_dir", "file_size", "tree_size", "data_file_inventory",
-    "max_mtime", "read_text", "write_text", "rename", "remove",
+    "dir_summary", "max_mtime", "read_text", "write_text", "rename", "remove",
 )
 
 
@@ -78,31 +79,78 @@ def test_layout_paths(spark):
     assert side == f"{config.SPARK_CACHE_DIR}{h}"
     assert layout.sidecar_dir(h, "/x/base") == f"/x/base/{h}"
     assert layout.metadata_path(side) == f"{side}/cache_metadata.txt"
-    assert layout.committer_path(side + "/") == f"{side}/writer_committer.txt"
-    assert layout.inventory_path(side) == f"{side}/data_inventory.txt"
+    loc = layout.table_location(spark, h)
+    assert layout.commit_marker_path(loc + "/") == f"{loc}/_CACHE_COMMITTED"
 
 
 def test_failed_inventory_listing_is_no_finding(tmp_path, monkeypatch):
     """``layout.inventory_ok`` owns "a failed inventory listing is no
     finding": the read path and the operator scans call it without a
     guard of their own, so a listing error must read None, not raise."""
-    from types import SimpleNamespace
-
     from dbfs_spark_cache_spark import fs, layout
 
-    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda *_: str(tmp_path)))
-    h = "ab" * 16
-    side = tmp_path / "sidecars"
-    side.mkdir()
-    (side / layout.INVENTORY_FILE).write_text(fs.render_inventory(1, 10))
-    os.makedirs(layout.table_location(spark, h))
-    assert layout.inventory_ok(spark, h, str(side)) is False  # listing reached
+    loc = str(tmp_path / ("ab" * 16))
+    os.makedirs(loc)
+    with open(layout.commit_marker_path(loc), "w") as fh:
+        fh.write(fs.render_inventory(1, 10))
+    assert layout.inventory_ok(loc) is False  # listing reached
 
     def denied(path):
         raise PermissionError(path)
 
     monkeypatch.setattr(fs, "list_dir", denied)
-    assert layout.inventory_ok(spark, h, str(side)) is None
+    assert layout.inventory_ok(loc) is None
+
+
+def test_no_commit_when_location_lost_before_marker(
+    spark, clean_cache, tmp_path, monkeypatch
+):
+    """The commit marker must list this write's own output. When another
+    process removes the location between the table write and the marker
+    (a repair evicting a directory that has no metadata sidecar yet), or
+    removed it and is rewriting it (its files still under
+    ``_temporary``), no marker and no metadata sidecar are written: the
+    write returns the frame itself and the entry stays a miss. A marker
+    there would record ``files=0`` and serve an empty hit."""
+    import shutil
+
+    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
+
+    src = _source(spark, tmp_path)
+    real_save = core._save_as_cache_table
+    seen = {}
+
+    def lose_output(aftermath):
+        def save(frame, table, partition_by=None):
+            fmt = real_save(frame, table, partition_by=partition_by)
+            seen["key"] = table.split(".")[-1]
+            loc = layout.table_location(spark, seen["key"]).replace("file:", "")
+            shutil.rmtree(loc)
+            if aftermath == "rewriting":
+                os.makedirs(f"{loc}/_temporary/0")
+                with open(f"{loc}/_temporary/0/part-00000.parquet", "w") as fh:
+                    fh.write("in flight")
+            return fmt
+
+        return save
+
+    for aftermath in ("removed", "rewriting"):
+        monkeypatch.setattr(core, "_save_as_cache_table", lose_output(aftermath))
+        df = _agg(spark, src)
+        assert write_cache(df) is df
+        loc = layout.table_location(spark, seen["key"])
+        assert not os.path.exists(layout.commit_marker_path(loc).replace("file:", ""))
+        assert not os.path.exists(
+            layout.metadata_path(layout.sidecar_dir(seen["key"]))
+        )
+        assert core._read_cache_table(spark, seen["key"]) is None
+        assert read_cache_if_exist(_agg(spark, src)) is None
+
+    monkeypatch.setattr(core, "_save_as_cache_table", real_save)
+    write_cache(_agg(spark, src))
+    hit = read_cache_if_exist(_agg(spark, src))
+    assert hit is not None
+    assert sorted(hit.collect()) == sorted(_agg(spark, src).collect())
 
 
 def test_recaching_a_cached_frame_writes_nothing(spark, clean_cache, tmp_path):
@@ -130,10 +178,11 @@ def test_recaching_a_cached_frame_writes_nothing(spark, clean_cache, tmp_path):
 
 
 def test_cache_dataframe_fs_call_budget(spark, clean_cache, tmp_path):
-    """A miss plus write lists the new entry's data files once (recording
-    its inventory) and serves the committed files without re-listing
-    them; a hit reads two sidecars, probes the data location, its commit
-    log and its _SUCCESS marker once each, and checks the inventory once."""
+    """A miss plus write lists the new entry's data files once (the
+    inventory of its commit marker) and serves the committed files
+    without re-listing them; a hit reads the metadata sidecar and the
+    commit marker, checks the marker's inventory once and probes for no
+    file's existence."""
     from dbfs_spark_cache_spark import cache_dataframe
 
     src = _source(spark, tmp_path)
@@ -143,18 +192,14 @@ def test_cache_dataframe_fs_call_budget(spark, clean_cache, tmp_path):
 
     assert _fs_calls(run) == {
         "read_text": 2,  # probe's metadata sidecar, in-lock re-probe
-        "max_mtime": 1, "list_dir": 2,  # input mtime scan, inventory
-        "exists": 2,  # stale data location, transactional check
+        "dir_summary": 1, "list_dir": 2,  # input directory, inventory
+        "exists": 1,  # stale data location
         "data_file_inventory": 1,
-        "write_text": 3,  # committer, inventory, metadata sidecars
+        "write_text": 2,  # commit marker, metadata sidecar
     }
     assert _fs_calls(run) == {
-        "read_text": 2,  # metadata + inventory sidecars
-        "max_mtime": 1, "list_dir": 2,  # input mtime scan, inventory
-        # data location, transactional check, _SUCCESS marker: every hit
-        # scans the files, so the torn-write guard (which the former
-        # catalog read skipped) runs on every hit
-        "exists": 3,
+        "read_text": 2,  # metadata sidecar, commit marker
+        "dir_summary": 1, "list_dir": 2,  # input directory, inventory
         "data_file_inventory": 1,
     }
 
@@ -167,16 +212,16 @@ def test_create_cached_dataframe_fs_call_budget(spark, clean_cache):
     def run():
         create_cached_dataframe(spark, pdf)
 
-    # The probe looks for the data location first; when it is absent no
-    # sidecar is read (the inventory sidecar read it made before is gone).
+    # The probe reads the commit marker first; when it is absent the
+    # location is a miss unless it holds a Delta log.
     assert _fs_calls(run) == {
-        "exists": 3,  # data location: probe, stale clear; transactional
+        "read_text": 1,  # commit marker
+        "exists": 2,  # transactional check, stale data location
         "list_dir": 1, "data_file_inventory": 1,
-        "write_text": 3,
+        "write_text": 2,  # commit marker, metadata sidecar
     }
     assert _fs_calls(run) == {
-        "read_text": 2,  # inventory + metadata sidecars
-        "exists": 3,  # data location, transactional check, _SUCCESS marker
+        "read_text": 2,  # commit marker, metadata sidecar
         "list_dir": 1, "data_file_inventory": 1,
     }
 

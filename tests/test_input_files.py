@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from datetime import datetime
+import re
 from urllib.parse import unquote
 
 import pyarrow as pa
@@ -27,6 +27,12 @@ def _write_ids(path: str, n: int) -> str:
     pq.write_table(pa.table({"id": pa.array(range(n), pa.int64())}),
                    f"{path}/part-0.parquet")
     return path
+
+
+# An input directory's line in the key: newest mtime, file count, bytes.
+_DIR_LINE = re.compile(
+    r"^\d{4}-\d\d-\d\d \d\d:\d\d:\d\d (?P<tail>files=\d+ bytes=\d+)$"
+)
 
 
 def _counts(df) -> dict:
@@ -59,7 +65,7 @@ def test_spark_cached_frames_keep_their_inputs_in_the_key(spark, clean_cache, tm
         info_b = input_dir_mod_datetime(_q(spark, b))
         assert [d.endswith("/A") for d in info_a] == [True]
         assert [d.endswith("/B") for d in info_b] == [True]
-        assert all(isinstance(v, datetime) for v in [*info_a.values(), *info_b.values()])
+        assert all(_DIR_LINE.match(v) for v in [*info_a.values(), *info_b.values()])
     finally:
         for df in held:
             df.unpersist()
@@ -95,9 +101,46 @@ def test_escaped_input_paths_are_listed_and_sized(spark, tmp_path, name):
     assert input_files(df) == [f"file://{path}/part-0.parquet"]
     info = input_dir_mod_datetime(df)
     assert list(info) == [f"file://{path}"]
-    assert isinstance(info[f"file://{path}"], datetime)
+    size = os.path.getsize(f"{path}/part-0.parquet")
+    assert _DIR_LINE.match(info[f"file://{path}"]).group("tail") == (
+        f"files=1 bytes={size}"
+    )
     sizes = get_input_file_sizes(df)
     assert sizes == [os.path.getsize(f"{path}/part-0.parquet") / 1024**3]
+
+
+def test_deleting_an_older_input_file_changes_the_key(spark, clean_cache, tmp_path):
+    """Deleting an input file that is not the newest keeps the directory's
+    newest mtime, once its whole line in the key: the key stayed and a
+    later cache_dataframe served the stored rows, the deleted file's
+    included. The file count and bytes in the line see the deletion."""
+    from dbfs_spark_cache_spark import cache_dataframe, fs
+    from dbfs_spark_cache_spark.plans.fingerprint import (
+        canonical_plan,
+        input_dir_mod_datetime,
+        table_cache_info,
+    )
+
+    d = str(tmp_path / "two")
+    os.makedirs(d)
+    for i, n in enumerate((70, 140)):
+        part = f"{d}/part-{i}.parquet"
+        pq.write_table(pa.table({"id": pa.array(range(n), pa.int64())}), part)
+        os.utime(part, (1_700_000_000 + 100 * i,) * 2)
+
+    def key(df):
+        return table_cache_info(input_dir_mod_datetime(df), canonical_plan(df))[0]
+
+    before = key(_q(spark, d))
+    newest = fs.max_mtime(d)
+    assert sum(_counts(cache_dataframe(
+        _q(spark, d), override_prefer_spark_cache=True)).values()) == 210
+
+    os.remove(f"{d}/part-0.parquet")
+    assert fs.max_mtime(d) == newest
+    assert key(_q(spark, d)) != before
+    served = cache_dataframe(_q(spark, d), override_prefer_spark_cache=True)
+    assert sum(_counts(served).values()) == 140
 
 
 def test_escaped_inputs_do_not_share_a_key(spark, clean_cache, tmp_path):
@@ -181,7 +224,7 @@ def test_unreadable_input_mtime_makes_the_key_unmatchable(
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet").groupBy(
         "r_regionkey"
     ).count()
-    monkeypatch.setattr(fs, "max_mtime", lambda path, *a, **k: None)
+    monkeypatch.setattr(fs, "dir_summary", lambda path, *a, **k: None)
     assert set(input_dir_mod_datetime(df)) == {INPUT_LISTING_FAILED_KEY}
 
     reset_cache_session_stats()

@@ -225,7 +225,7 @@ def test_cli_fold_growing_index(spark, tmp_path, monkeypatch, caplog):
     )
     with caplog.at_level(logging.INFO):
         assert maintenance_cli.main() == 0
-    assert os.path.exists(f"{out}/_SUCCESS")
+    assert os.path.exists(f"{out}/_FOLDED_OK")
     assert not os.path.exists(f"{base}/index")
     assert any("folded index" in m for m in caplog.messages)
 

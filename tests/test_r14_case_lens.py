@@ -134,7 +134,7 @@ def test_mixed_case_database_survives_catalog_death(spark):
         h = core.resolve_table_hash(df)
         loc = layout.table_location(spark, h)
         assert fs.exists(loc), "location must agree with the catalog's dir"
-        assert fs.exists(f"{loc.rstrip('/')}/_SUCCESS")
+        assert fs.exists(layout.commit_marker_path(loc))
         # simulate a catalog death with surviving files (managed-table
         # DROP deletes them, so stash and restore around it)
         import shutil

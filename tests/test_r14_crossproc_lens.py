@@ -8,11 +8,12 @@ layout the reference runs under on DBFS:
 * the sidecar protocol's foundation, ``fs.write_text``'s never-torn
   guarantee, stressed by REAL concurrent writer processes against a
   reader asserting every observation is a complete document;
-* the ``_SUCCESS`` job-commit guard on the read of an entry's files: a
-  non-transactional cache directory without Spark's committer marker
-  (exactly what a concurrent rewrite in another process exposes
-  mid-flight, since ``_save_as_cache_table`` is remove-then-rewrite) is
-  a clean MISS, never partial rows served as a hit;
+* the commit-marker guard on the read of an entry's files: a
+  non-transactional cache directory without the writer's
+  ``_CACHE_COMMITTED`` marker (exactly what a concurrent rewrite in
+  another process exposes mid-flight, since the write is
+  remove-then-rewrite) is a clean MISS, never partial rows served as a
+  hit;
 * a genuine two-process end-to-end: a child interpreter with its own
   SparkSession writes a cache entry into the shared dir, and the parent
   session — whose catalog never heard of it — serves the hit by scanning
@@ -104,15 +105,15 @@ def test_write_text_never_torn_across_processes(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# the _SUCCESS commit guard on the path fallback
+# the commit-marker guard on the read of an entry's files
 
 
 def test_path_fallback_refuses_uncommitted_dir(extended):
-    """A cache directory without Spark's ``_SUCCESS`` job-commit marker is
-    what a reader in ANOTHER process sees mid-rewrite (remove-then-
-    rewrite overwrite). The path fallback must report a clean miss —
-    serving the partial part-files as a valid hit is the silent-wrong-
-    data class. Restoring the marker restores the hit."""
+    """A cache directory without the writer's ``_CACHE_COMMITTED`` marker
+    is what a reader in ANOTHER process sees mid-rewrite (remove-then-
+    rewrite overwrite). The read must report a clean miss — serving the
+    partial part-files as a valid hit is the silent-wrong-data class.
+    Restoring the marker restores the hit."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
@@ -130,13 +131,17 @@ def test_path_fallback_refuses_uncommitted_dir(extended):
 
     assert read_cache_if_exist(_agg_query(extended)) is not None
 
-    # mid-rewrite view: data files present, committer marker not yet
-    os.remove(f"{loc}/_SUCCESS")
+    # mid-rewrite view: data files present, commit marker not yet
+    marker = layout.commit_marker_path(loc)
+    with open(marker) as fh:
+        recorded = fh.read()
+    os.remove(marker)
     assert read_cache_if_exist(_agg_query(extended)) is None, (
         "an uncommitted directory must be a miss, not a partial-rows hit"
     )
 
-    open(f"{loc}/_SUCCESS", "w").close()
+    with open(marker, "w") as fh:
+        fh.write(recorded)
     served = read_cache_if_exist(_agg_query(extended))
     assert served is not None and served.count() == df.count()
 
@@ -210,8 +215,8 @@ def test_child_process_write_served_by_parent_path_fallback(spark, tmp_path):
         df = _agg_query(spark)
         h = core.resolve_table_hash(df)
         loc = layout.table_location(spark, h)
-        assert fs.exists(f"{loc.rstrip('/')}/_SUCCESS"), (
-            "child's committed write must carry the job-commit marker"
+        assert fs.exists(layout.commit_marker_path(loc)), (
+            "child's committed write must carry its commit marker"
         )
         hit = read_cache_if_exist(df)
         assert hit is not None, "parent must serve the child's entry"

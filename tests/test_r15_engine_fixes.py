@@ -19,10 +19,10 @@
 4. (low) ``claim_sink_checkpoint`` normalizes checkpoint paths before
    comparing (trailing slash, file: scheme, relative-vs-absolute) —
    the same physical checkpoint is never refused as foreign.
-5. (low) the ``_SUCCESS`` path-fallback guard is gated on the session's
-   ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` conf: a cluster
-   whose committer writes no markers keeps the path fallback (one free
-   hit per restart) instead of recomputing every session forever.
+5. (low) a cache entry written where
+   ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` is false still
+   hits in a later session (its commit record is the writer's own
+   marker, not ``_SUCCESS``) instead of recomputing every session.
 6. ``fs.rename`` (new primitive backing the fold swap): moves a
    directory, refuses an existing target, raises on failure.
 """
@@ -285,20 +285,18 @@ def test_claim_relative_path_matches_absolute(tmp_path, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# 5. the _SUCCESS guard honors marksuccessfuljobs=false
+# 5. the commit guard holds under marksuccessfuljobs=false
 
 
 def test_success_guard_gated_on_committer_conf(extended):
     """On a cluster whose committer writes no _SUCCESS markers
-    (marksuccessfuljobs=false), the path fallback must still serve a
-    valid cache — requiring the marker there turns every post-restart
-    session into a full rewrite. Sharpened at r16 (ADVICE r15 #4):
-    marker discipline is the WRITER's property, recorded per-entry at
-    write time — so the entry here is WRITTEN under the markerless conf
-    and must then serve path hits under ANY reader conf (the r15 pin
-    flipped the reader's conf instead, which let a markerless READER
-    skip the guard for marker-written dirs). The default-conf guard half
-    stays pinned by the r14 crossproc test."""
+    (marksuccessfuljobs=false), a later session must still serve a valid
+    cache — requiring the committer's marker there turns every
+    post-restart session into a full rewrite. The entry's commit record
+    is the writer's own ``_CACHE_COMMITTED`` marker, written whatever the
+    committer does, so an entry WRITTEN under the markerless conf serves
+    hits under ANY reader conf. The missing-marker miss is pinned by the
+    crossproc test."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
@@ -326,12 +324,11 @@ def test_success_guard_gated_on_committer_conf(extended):
         if os.path.exists(success):  # markerless committer's output
             os.remove(success)
 
-        # the recorded writer discipline says "no markers": path hit
+        # the writer's own commit marker is there: hit
         served = read_cache_if_exist(df)
         assert served is not None and served.count() == df.count()
-        # ...under a marker-writing READER conf too (the r15 reader-conf
-        # gate would have demanded _SUCCESS here — one full rewrite per
-        # session on mixed fleets)
+        # ...under a marker-writing READER conf too (a reader demanding
+        # _SUCCESS would rewrite once per session on mixed fleets)
         hconf.set(key, prev)
         served = read_cache_if_exist(df)
         assert served is not None and served.count() == df.count()

@@ -186,7 +186,7 @@ def test_sidecar_enospc_degrades_to_miss_then_heals(extended, monkeypatch):
 
 def test_half_written_data_dir_recomputes_never_partial(extended):
     """The inverse torn state: sidecar committed, data dir half-written
-    (some part files gone, no _SUCCESS — what an ENOSPC mid-job leaves
+    (some part files gone, no commit marker — what an ENOSPC mid-job leaves
     after its partial cleanup). The path fallback must refuse the
     partial dir; write_cache must rewrite and heal to the FULL row
     count — never serve the partial rows as a hit."""
@@ -212,7 +212,7 @@ def test_half_written_data_dir_recomputes_never_partial(extended):
 
     # simulate the ENOSPC-mid-job residue: drop the commit marker and
     # half the part files
-    os.remove(f"{loc}/_SUCCESS")
+    os.remove(layout.commit_marker_path(loc))
     parts = sorted(glob.glob(f"{loc}/part-*"))
     assert parts, "expected part files in the cache location"
     for p in parts[: max(1, len(parts) // 2)]:

@@ -7,9 +7,10 @@ restore, copy-tool truncation. The contract under test:
   recompute — NEVER serve partial rows as a valid hit. The dangerous
   shape is a part file DELETED after commit: the directory still scans
   cleanly and silently returns fewer rows through either read branch.
-  The writer now records a data-file inventory (``data_inventory.txt``
-  beside the metadata sidecar); reads refuse an entry whose live listing
-  disagrees, and the next write_cache heals it in place.
+  The writer records a data-file inventory in the entry's commit marker
+  (``_CACHE_COMMITTED`` in the data location); reads refuse an entry
+  whose live listing disagrees, and the next write_cache heals it in
+  place.
 * ``cache_stats`` / ``find_corrupt_entries`` surface such entries so the
   operator sees WHY a "cached" query keeps recomputing.
 * the exactly-once sink's commit markers record each batch's inventory;
@@ -133,15 +134,29 @@ def test_same_size_corruption_fails_loudly(extended):
             served.count()
 
 
-def test_pre_inventory_entry_unaffected(extended):
-    """Entries written before the inventory record existed keep serving
-    (back-compat): absence of the record skips the check entirely."""
-    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist
+def test_markerless_entry_is_miss_and_rewritten(extended):
+    """A parquet entry without its commit marker (written before the
+    marker existed, or mid-rewrite in another process) is a miss, and
+    the next write rewrites it under the same key, marker included."""
+    from dbfs_spark_cache_spark import (
+        cache_session_stats,
+        core,
+        layout,
+        read_cache_if_exist,
+        write_cache,
+    )
 
     df = _multi_part_agg(extended).withColumn("probe", F.lit("legacy"))
     expected = df.count()
     h, loc = _entry(extended, df)
-    os.remove(layout.inventory_path(layout.sidecar_dir(h)).replace("file:", ""))
+    marker = layout.commit_marker_path(loc)
+    os.remove(marker)
+    assert read_cache_if_exist(df) is None
+
+    writes = cache_session_stats()["writes"]
+    write_cache(df)
+    assert cache_session_stats()["writes"] == writes + 1
+    assert core.resolve_table_hash(df) == h and os.path.exists(marker)
     served = read_cache_if_exist(df)
     assert served is not None and served.count() == expected
 

@@ -8,9 +8,9 @@
    maintenance cycle overwrote ``out_path`` with only the current
    ledger's rows, silently destroying earlier cycles' band rows, and the
    crash-recovery loop deleted a complete-but-markerless temp. The fold
-   now writes its OWN ``_FOLDED_OK`` marker (fs.write_text, committer-
-   independent) after the parquet write and keys prior-detection and
-   recovery on it (``_SUCCESS`` still accepted for pre-marker folds).
+   now writes its OWN ``_FOLDED_OK`` marker (fs.write_commit_marker,
+   committer-independent) after the parquet write and keys
+   prior-detection and recovery on it alone.
 2. (medium) the fold's containment guard covers BOTH directions: a sink
    base under ``out_path`` would have the swap's remove(out_path)
    recursively delete the whole sink tree — matches ledger included.
@@ -19,12 +19,10 @@
    has no ``://`` so is_local called it local and os.path.abspath
    prefixed the CWD); only genuinely relative scheme-less paths are
    absolutized.
-4. (low) the ``_SUCCESS`` path-fallback guard gates on the WRITER's
-   committer discipline, recorded per-entry at write time
-   (``writer_committer.txt`` beside the metadata sidecar): a
-   marksuccessfuljobs=false READER no longer skips the torn-write guard
-   for marker-written directories (the dangerous quadrant), and entries
-   written before the record exists keep the reader-conf fallback.
+4. (low) the torn-write guard on a cache entry's files does not depend
+   on any session's committer conf: a marksuccessfuljobs=false READER
+   still refuses a directory without the writer's own
+   ``_CACHE_COMMITTED`` marker (the dangerous quadrant).
 """
 from __future__ import annotations
 
@@ -184,6 +182,46 @@ def test_fold_partial_temp_discarded_without_own_marker(markerless, tmp_path):
     assert glob.glob(out + ".__folding__*") == []
 
 
+def test_fold_refuses_markerless_prior_dataset(spark, tmp_path):
+    """An out_path holding data but no _FOLDED_OK (a fold published
+    before the marker existed) must not be overwritten with only the
+    current ledger's rows: once its ledger batches are truncated it holds
+    the only copy of their band rows. The fold raises and leaves it as it
+    is; committing it by hand adopts it as the previous fold."""
+    from dbfs_spark_cache_spark import fs
+    from dbfs_spark_cache_spark.operators.dedup import corpus_band_index_frame
+    from dbfs_spark_cache_spark.streaming import (
+        fold_growing_index,
+        growing_corpus_dedup_sink,
+        truncate_growing_index,
+    )
+
+    corpus_index = corpus_band_index_frame(_docs_df(spark, [_doc(1, "pm")]))
+    base = str(tmp_path / "grow")
+    out = str(tmp_path / "folded_index")
+    d_a, d_b = _doc(6_300_001, "pmA"), _doc(6_300_002, "pmB")
+
+    sink = growing_corpus_dedup_sink(base, corpus_index, threshold=0.5)
+    sink(_docs_df(spark, [d_a]), 0)
+    fold_growing_index(spark, base, out)
+    assert truncate_growing_index(base) is True
+    os.remove(f"{out}/_FOLDED_OK")  # as a pre-marker fold left it
+
+    sink2 = growing_corpus_dedup_sink(base, corpus_index, threshold=0.5)
+    sink2(_docs_df(spark, [d_b]), 1)
+    with pytest.raises(RuntimeError, match="no _FOLDED_OK marker"):
+        fold_growing_index(spark, base, out)
+    kept = {r.corpus_doc_id for r in
+            spark.read.parquet(out).select("corpus_doc_id").distinct().collect()}
+    assert d_a[0] in kept
+
+    assert fs.write_commit_marker(out, "_FOLDED_OK")
+    folded = fold_growing_index(spark, base, out)
+    ids = {r.corpus_doc_id for r in
+           folded.select("corpus_doc_id").distinct().collect()}
+    assert {d_a[0], d_b[0]} <= ids
+
+
 # ---------------------------------------------------------------------------
 # 2. both containment directions refuse (ADVICE r15 #2, medium)
 
@@ -253,7 +291,7 @@ def test_claim_checkpoint_scheme_uri_cwd_independent(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 4. the _SUCCESS guard gates on the WRITER's discipline (ADVICE r15 #4)
+# 4. the torn-write guard holds under any reader committer conf
 
 
 def _cached_agg(extended):
@@ -282,57 +320,34 @@ def _path_only_entry(extended, df):
 
 
 def test_writer_record_closes_markerless_reader_quadrant(extended):
-    """The DANGEROUS quadrant the reader-conf gate left open: an entry
-    written by a marker-writing session (record says true), path-read by
-    a marksuccessfuljobs=false READER while its _SUCCESS is missing
-    (mid-rewrite in another process). The recorded writer discipline
-    must keep the torn-write guard ON — a miss, never partial rows."""
-    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist
+    """The DANGEROUS quadrant of a committer-conf gate: an entry read by a
+    marksuccessfuljobs=false READER while its commit marker is missing
+    (mid-rewrite in another process). The guard must stay ON — a miss,
+    never partial rows."""
+    from dbfs_spark_cache_spark import layout, read_cache_if_exist
 
     df = _cached_agg(extended)
     h, loc = _path_only_entry(extended, df)
-    record = core.fs.read_text(layout.committer_path(layout.sidecar_dir(h)))
-    assert record is not None and record.endswith("true")
+    marker = layout.commit_marker_path(loc)
+    with open(marker) as fh:
+        recorded = fh.read()
 
-    os.remove(f"{loc}/_SUCCESS")  # another process's rewrite in flight
+    os.remove(marker)  # another process's rewrite in flight
     hconf = extended.sparkContext._jsc.hadoopConfiguration()
     prev = hconf.get(_MARKS_KEY, "true")
     try:
         hconf.set(_MARKS_KEY, "false")
         assert read_cache_if_exist(df) is None, (
-            "a markerless READER skipped the torn-write guard for a "
-            "marker-written directory — partial rows served as a hit"
+            "a markerless READER skipped the torn-write guard — partial "
+            "rows served as a hit"
         )
     finally:
         hconf.set(_MARKS_KEY, prev)
     # restore the marker: the same entry is a hit again
-    open(f"{loc}/_SUCCESS", "w").close()
+    with open(marker, "w") as fh:
+        fh.write(recorded)
     served = read_cache_if_exist(df)
     assert served is not None and served.count() == df.count()
-
-
-def test_pre_recording_entries_fall_back_to_reader_conf(extended):
-    """Entries written before the writer record existed (no
-    writer_committer.txt): the guard keeps the r15 reader-conf gate —
-    behavior for old caches is unchanged."""
-    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist
-
-    df = _cached_agg(extended)
-    h, loc = _path_only_entry(extended, df)
-    os.remove(layout.committer_path(layout.sidecar_dir(h)).replace("file:", ""))
-    os.remove(f"{loc}/_SUCCESS")
-
-    hconf = extended.sparkContext._jsc.hadoopConfiguration()
-    prev = hconf.get(_MARKS_KEY, "true")
-    try:
-        # marker-writing reader: guard on -> miss
-        assert read_cache_if_exist(df) is None
-        # markerless reader: guard off -> path hit (old behavior)
-        hconf.set(_MARKS_KEY, "false")
-        served = read_cache_if_exist(df)
-        assert served is not None and served.count() == df.count()
-    finally:
-        hconf.set(_MARKS_KEY, prev)
 
 
 # ---------------------------------------------------------------------------

@@ -1,15 +1,12 @@
 """r17 engine fixes.
 
-1. Custom-``cache_path`` sidecar-guard symmetry (VERDICT r16 "What's
-   wrong" #3 / ADVICE r16 #4): ``_record_writer_committer`` and
-   ``_record_data_inventory`` always wrote their sidecars beside the
-   entry's metadata file — which a custom ``cache_path`` relocates —
-   while ``_writer_marks_success`` and the read-path inventory probe
-   derived their paths from ``config.SPARK_CACHE_DIR`` only. Custom-base
-   entries therefore recorded sidecars that no reader ever read: the
-   corrupt-entry guard (r16) and the writer-discipline ``_SUCCESS`` gate
-   (r15) were silently inactive for them. The read probes now receive
-   the entry's actual sidecar directory from the resolved metadata path.
+1. Custom-``cache_path`` guard symmetry: a custom ``cache_path``
+   relocates an entry's metadata sidecar, and guard records kept beside
+   it were once read from ``config.SPARK_CACHE_DIR`` only, so the
+   corrupt-entry and torn-write guards were silently inactive for
+   custom-base entries. The entry's one commit record, the
+   ``_CACHE_COMMITTED`` marker with its data-file inventory, now lives in
+   the data location, which no ``cache_path`` moves.
 
 2. ``_containment_norm`` normalizes dot segments in scheme'd URIs too
    (ADVICE r16 #2): ``dbfs:/sink/index/../..`` previously evaded the
@@ -57,14 +54,15 @@ def _parts(loc):
 
 
 # ---------------------------------------------------------------------------
-# 1. custom cache_path sidecar symmetry
+# 1. custom cache_path guard symmetry
 
 
 def test_custom_base_sidecars_recorded_beside_custom_metadata(
     extended, tmp_path
 ):
-    """The writer's committer + inventory records land under the custom
-    base (beside the metadata sidecar), not under SPARK_CACHE_DIR."""
+    """The custom base holds the metadata sidecar only; the commit marker
+    sits in the data location whatever ``cache_path`` is, and nothing
+    lands under SPARK_CACHE_DIR."""
     from dbfs_spark_cache_spark import core, layout, write_cache
     from dbfs_spark_cache_spark.config import config
 
@@ -73,15 +71,14 @@ def test_custom_base_sidecars_recorded_beside_custom_metadata(
     write_cache(df, cache_path=base)
     h = core.resolve_table_hash(df)
 
-    assert os.path.exists(f"{base}{h}/{layout.COMMITTER_FILE}")
-    assert os.path.exists(f"{base}{h}/{layout.INVENTORY_FILE}")
-    default_dir = f"{config.SPARK_CACHE_DIR}{h}"
-    assert not os.path.exists(f"{default_dir}/{layout.COMMITTER_FILE}")
-    assert not os.path.exists(f"{default_dir}/{layout.INVENTORY_FILE}")
+    assert os.listdir(f"{base}{h}") == [layout.METADATA_FILE]
+    loc = layout.table_location(extended, h).replace("file:", "")
+    assert os.path.exists(layout.commit_marker_path(loc))
+    assert not os.path.exists(f"{config.SPARK_CACHE_DIR}{h}")
 
 
 def test_custom_base_inventory_guard_fires(extended, tmp_path):
-    """The r16 corrupt-entry guard must protect custom-base entries: a
+    """The corrupt-entry guard must protect custom-base entries: a
     part file deleted after commit degrades to a clean miss, never a
     partial hit; a rewrite through the same base heals in place."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
@@ -104,52 +101,49 @@ def test_custom_base_inventory_guard_fires(extended, tmp_path):
         "hit — the inventory guard did not cover custom cache_path bases"
     )
 
-    write_cache(df, cache_path=base)  # heal: re-records a fresh inventory
+    write_cache(df, cache_path=base)  # heal: a fresh marker and inventory
     served = read_cache_if_exist(df, cache_path=base)
     assert served is not None and served.count() == expected
 
 
 def test_custom_base_writer_committer_record_is_read(extended, tmp_path):
-    """The sharp pre/post-fix discriminator for the committer half: a
-    custom-base entry whose WRITER recorded marks_success_jobs=false must
-    keep serving through the path fallback with no _SUCCESS marker. The
-    pre-fix probe missed the custom-base sidecar and fell back to this
-    reader's conf (marker-writing in local tests) — a spurious miss."""
+    """A custom-base entry written by a committer that writes no
+    ``_SUCCESS`` (marksuccessfuljobs=false) hits in a later session with
+    no record of the writer's committer: its commit marker is the
+    writer's own, written on every committer."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
-    from dbfs_spark_cache_spark import fs
 
     base = f"{tmp_path}/custom_cache/"
     df = _multi_part_df(extended, "committer")
     expected = df.count()
-    write_cache(df, cache_path=base)
+    hconf = extended.sparkContext._jsc.hadoopConfiguration()
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    prev = hconf.get(key, "true")
+    try:
+        hconf.set(key, "false")
+        write_cache(df, cache_path=base)
+    finally:
+        hconf.set(key, prev)
     h = core.resolve_table_hash(df)
     loc = layout.table_location(extended, h).replace("file:", "")
+    assert not os.path.exists(f"{loc}/_SUCCESS")
+    assert os.listdir(f"{base}{h}") == [layout.METADATA_FILE]
 
-    # Simulate a markerless-committer writer + a later session: rewrite
-    # the record, drop the catalog entry (in-memory catalog death — the
-    # managed-table files are snapshotted around the DROP, which deletes
-    # them), and strip the marker the committer would not have written.
-    fs.write_text(f"{base}{h}/{layout.COMMITTER_FILE}",
-                  "marks_success_jobs=false")
+    # a later session: its in-memory catalog does not know the table
     snapshot = f"{tmp_path}/loc_snapshot"
     shutil.copytree(loc, snapshot)
     extended.sql(f"DROP TABLE IF EXISTS {core.table_name_for_hash(h)}")
     shutil.copytree(snapshot, loc)
-    success = f"{loc}/_SUCCESS"
-    if os.path.exists(success):
-        os.remove(success)
 
     served = read_cache_if_exist(df, cache_path=base)
     assert served is not None and served.count() == expected, (
-        "recorded writer discipline (markerless) was ignored for a "
-        "custom-base entry — reader-conf fallback forced a rewrite"
+        "an entry written without _SUCCESS missed: a rewrite per session"
     )
 
 
 def test_default_base_guards_unchanged(extended):
-    """Regression guard: the default-base probes still find their
-    sidecars (the r16 lens tests cover the full behavior; this pins that
-    the r17 signature change kept the default path identical)."""
+    """Regression guard: a default-base entry carries its commit marker
+    in the data location, and a part file lost after commit is a miss."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
 
     df = _multi_part_df(extended, "default")
@@ -157,9 +151,7 @@ def test_default_base_guards_unchanged(extended):
     write_cache(df)
     h = core.resolve_table_hash(df)
     loc = layout.table_location(extended, h).replace("file:", "")
-    assert os.path.exists(
-        layout.inventory_path(layout.sidecar_dir(h)).replace("file:", "")
-    )
+    assert os.path.exists(layout.commit_marker_path(loc))
     served = read_cache_if_exist(df)
     assert served is not None and served.count() == expected
     os.remove(_parts(loc)[0])

@@ -349,7 +349,7 @@ def test_stats_and_scans_tolerate_entry_vanishing_between_phases(extended):
     shutil.rmtree(f"{config.SPARK_CACHE_DIR}{h}", ignore_errors=True)
 
     assert mgmt._entry_bytes(extended, h) == 0
-    assert layout.inventory_ok(extended, h) is None
+    assert layout.inventory_ok(loc) is None
     stats = mgmt.cache_stats(extended)
     assert h not in stats["corrupt_entries"]
     assert mgmt.find_corrupt_entries(extended) == []

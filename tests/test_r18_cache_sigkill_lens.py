@@ -1,7 +1,7 @@
 """r18 cache-write SIGKILL lens: whole-JVM death inside ``write_cache``,
 real processes, shared cache + warehouse dirs.
 
-The r14 crossproc lens proved the `_SUCCESS`-gated path fallback against
+The r14 crossproc lens proved the commit-marker-gated read against
 a HAND-CONSTRUCTED mid-rewrite state (marker removed after a committed
 write). This lens produces the torn state the real way: a child JVM is
 SIGKILLed (no shutdown hooks) at two points of an actual cache
@@ -9,9 +9,9 @@ materialization —
 
 * ``during-save`` — mid ``saveAsTable`` (a pandas-UDF-throttled frame
   keeps the distributed write in flight for seconds): whatever partial
-  part files exist carry no job-commit marker and no metadata sidecar;
-* ``pre-metadata`` — after the table write and the committer/inventory
-  sidecars, stalled at the ``cache_metadata.txt`` write: a fully
+  part files exist carry no commit marker and no metadata sidecar;
+* ``pre-metadata`` — after the table write and its commit marker,
+  stalled at the ``cache_metadata.txt`` write: a fully
   committed table that the cache identity layer never learned about.
 
 In both states the parent session (own catalog, shared filesystem —
@@ -150,7 +150,7 @@ def test_cache_write_sigkill_is_clean_miss_then_heals(
         )
         if placement == "during-save":
             # below the gate too: the dead JVM's partial table must not
-            # satisfy the path fallback (no catalog entry, no _SUCCESS)
+            # satisfy the read (no catalog entry, no commit marker)
             assert core._read_cache_table(spark, key) is None, (
                 "partial rows served through the path fallback"
             )

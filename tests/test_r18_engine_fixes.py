@@ -9,12 +9,11 @@
    #4): ``dbfs:sink/../..`` was returned verbatim and compared raw —
    the same evasion class the r17 dot-segment fix closed for absolute
    scheme'd URIs. Hadoop's Path refuses the form too.
-3. ``find_corrupt_entries`` / CLI ``--scan-corrupt`` cover custom
-   ``cache_path`` bases via ``extra_bases`` / ``--scan-corrupt-base``
-   (ADVICE r17 #3): the r17 read-path fix made reads refuse corrupt
-   custom-base entries, but the operator scan walked only
-   SPARK_CACHE_DIR, so the cron alert never fired for exactly the class
-   the fix targeted.
+3. ``find_corrupt_entries`` / CLI ``--scan-corrupt`` cover entries
+   written with a custom ``cache_path``: reads refuse a corrupt
+   custom-base entry, so the operator scan must flag it too, or the cron
+   alert never fires for it. The scan walks the data directories, where
+   every entry's commit marker lives, so no base needs naming.
 4. The two r17 fresh-eyes ``fs.py`` edges, pinned as contracts
    (VERDICT r17 #5): bare-relative-filename ``write_text`` fails
    loudly; the local no-overwrite ``rename`` probe refuses an existing
@@ -84,61 +83,44 @@ def test_containment_norm_rejects_schemed_relative_paths():
 
 # ------------------------------------------------------------------ scan 3
 
-def _make_entry(base: str, hash_name: str, *, corrupt: bool) -> None:
-    """A minimal cache entry under ``base``: metadata + inventory
-    sidecars in the <base>/<hash>/ layout. ``corrupt`` records an
-    inventory naming a file the (empty) table dir does not hold."""
+def _make_entry(base: str, hash_name: str) -> None:
+    """A minimal sidecar: the metadata file in the <base>/<hash>/ layout."""
     side = os.path.join(base, hash_name)
     os.makedirs(side, exist_ok=True)
     with open(os.path.join(side, "cache_metadata.txt"), "w") as fh:
         fh.write("doc")
-    # recorded inventory vs the EMPTY table dir the test points at:
-    # files=1 can't be satisfied (corrupt), files=0 matches (healthy)
-    inv = "files=1\nbytes=12345" if corrupt else "files=0\nbytes=0"
-    with open(os.path.join(side, "data_inventory.txt"), "w") as fh:
-        fh.write(inv)
 
 
-def test_find_corrupt_entries_covers_custom_bases(spark, tmp_path, monkeypatch):
-    """A corrupt custom-cache_path entry is invisible to the default
-    registry walk but flagged once its base is passed via extra_bases —
-    the ADVICE r17 #3 operator-signal gap."""
-    from dbfs_spark_cache_spark import config, core, layout, management
+def test_find_corrupt_entries_covers_custom_bases(spark, clean_cache, tmp_path):
+    """A corrupt entry written under a custom cache_path is flagged by the
+    plain scan, with no base passed; a healthy one beside it is not."""
+    import glob
 
-    default_base = str(tmp_path / "default_cache") + "/"
-    custom_base = str(tmp_path / "custom_cache")
-    os.makedirs(default_base, exist_ok=True)
-    monkeypatch.setattr(config, "SPARK_CACHE_DIR", default_base)
+    from pyspark.sql import functions as F
 
-    h = "deadbeef" * 4
-    _make_entry(custom_base, h, corrupt=True)
+    from dbfs_spark_cache_spark import core, layout, management, write_cache
 
-    # the table location must EXIST for the inventory check to run (a
-    # missing dir is the orphan scan's finding) — point it at an empty dir
-    loc = tmp_path / "warehouse" / h
-    loc.mkdir(parents=True)
-    monkeypatch.setattr(
-        layout, "table_location", lambda _spark, _h: str(loc)
-    )
-
+    custom_base = str(tmp_path / "custom_cache") + "/"
+    frames = [
+        spark.range(40).repartition(2).withColumn("probe", F.lit(tag))
+        for tag in ("corrupt", "healthy")
+    ]
+    for df in frames:
+        write_cache(df, cache_path=custom_base)
+    h, h2 = (core.resolve_table_hash(df) for df in frames)
     assert management.find_corrupt_entries(spark) == []
-    got = management.find_corrupt_entries(
-        spark, extra_bases=[custom_base]
-    )
-    assert got == [h]
 
-    # a HEALTHY custom entry under a second base does not false-positive
-    h2 = "cafebabe" * 4
-    _make_entry(custom_base, h2, corrupt=False)
-    got = management.find_corrupt_entries(spark, extra_bases=[custom_base])
-    assert got == [h]
+    loc = layout.table_location(spark, h).replace("file:", "")
+    os.remove(sorted(glob.glob(f"{loc}/part-*"))[0])
+    assert management.find_corrupt_entries(spark) == [h]
+    assert h2 not in management.cache_stats(spark)["corrupt_entries"]
 
 
 def test_custom_base_entries_walks_layout(tmp_path):
     from dbfs_spark_cache_spark.management import _sidecar_entries
 
     base = str(tmp_path / "b")
-    _make_entry(base, "aa" * 16, corrupt=False)
+    _make_entry(base, "aa" * 16)
     os.makedirs(os.path.join(base, "not_an_entry"))  # no metadata file
     (tmp_path / "b" / "stray.txt").write_text("x")
     pairs = _sidecar_entries(base)
@@ -146,25 +128,6 @@ def test_custom_base_entries_walks_layout(tmp_path):
     assert pairs[0][1].endswith("aa" * 16)
     # missing base: no pairs, no raise (ENOENT contract of fs.list_dir)
     assert _sidecar_entries(str(tmp_path / "missing")) == []
-
-
-def test_cli_scan_corrupt_base_requires_scan_corrupt():
-    """argparse stage-exclusivity guard: the base flag without the scan
-    stage is a usage error (exit 2), caught before any Spark startup."""
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, "-c",
-         "import sys;"
-         f"sys.path.insert(0, {repo!r});"
-         "sys.argv = ['clear_old_caches', '--scan-corrupt-base', '/tmp/b'];"
-         "from dbfs_spark_cache_spark.maintenance_cli import main;"
-         "main()"],
-        capture_output=True, text=True,
-    )
-    assert proc.returncode == 2
-    assert "--scan-corrupt-base requires --scan-corrupt" in proc.stderr
 
 
 # ------------------------------------------------------------------- fs 4
