@@ -54,4 +54,4 @@ from .tiering import (  # noqa: F401
     should_prefer_spark_cache,
 )
 
-__version__ = "0.1.0"
+__version__ = "0.6.0"

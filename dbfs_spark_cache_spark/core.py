@@ -184,7 +184,7 @@ def _scan_entry(
     reads an entry this way, so the entry, and every frame built on it,
     prints one plan and keys one way whichever session wrote it; the
     input walk recognises the entry by its directory
-    (``layout.cached_input_patterns``). A parquet scan takes ``schema``,
+    (``layout.cached_input_pattern``). A parquet scan takes ``schema``,
     the schema of the frame whose key names the entry, rather than
     inferring one: inference types a ``partition_by`` column from its
     directory names (a ``bigint`` column reads back as ``int``, and a

@@ -43,6 +43,36 @@ def is_local(path: str) -> bool:
     return path.startswith("file:") or "://" not in path
 
 
+def canonical_path(path: str) -> str:
+    """One spelling per location, for comparing paths as strings: strips
+    ``file:``, makes a relative local path absolute, collapses repeated
+    slashes and dot segments, and drops the trailing slash (roots keep
+    one: ``/``, ``dbfs:/``, ``s3://bucket/``). Only the path component of
+    ``scheme://authority/path`` is normalized, never the authority. A
+    scheme'd relative path (``dbfs:sink``) raises ``ValueError``: Hadoop's
+    Path refuses it too, and no working directory is known to resolve it
+    against."""
+    import posixpath
+    import re
+
+    def norm(p: str) -> str:
+        return posixpath.normpath(re.sub("/+", "/", p))
+
+    p = strip_scheme(path)
+    if "://" in p:
+        scheme, rest = p.split("://", 1)
+        authority, _, tail = rest.partition("/")
+        return f"{scheme}://{authority}{norm('/' + tail)}"
+    if ":" in p.split("/", 1)[0]:
+        scheme, rest = p.split(":", 1)
+        if rest and not rest.startswith("/"):
+            raise ValueError(
+                f"relative path in scheme'd URI {path!r}; use an absolute "
+                f"URI like {scheme}:/...")
+        return f"{scheme}:{norm('/' + rest)}"
+    return norm(p if p.startswith("/") else os.path.abspath(p))
+
+
 def _active_jvm_fs(path: str):
     """Hadoop FileSystem + Path for a non-local URI via the active session."""
     from pyspark.sql import SparkSession
@@ -427,7 +457,7 @@ def rename(src: str, dst: str) -> None:
     replaced (POSIX rename overwrites a file target; a directory renames
     over an empty directory target). The
     maintenance flows that call this are single-owner by contract — the
-    fold's uuid temp sibling and ``_FOLDED_OK`` stamp guard the racing-
+    fold's uuid temp sibling and ``_FOLDED_OK`` marker guard the racing-
     owner aftermath — so the probe's job is only to fail FAST on a
     clearly-stale target, not to arbitrate concurrent writers."""
     if is_local(src) and is_local(dst):

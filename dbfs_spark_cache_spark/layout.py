@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import logging
 import re
-from typing import List, Optional
+from typing import Optional
 
 from . import fs
 from .config import config
@@ -103,16 +103,13 @@ def inventory_ok(location: str, marker: Optional[str] = None) -> Optional[bool]:
         return None
 
 
-def cached_input_patterns() -> List["re.Pattern[str]"]:
+def cached_input_pattern() -> "re.Pattern[str]":
     """Input directories that are themselves cache entries: an entry's
-    sidecar dir or its warehouse table dir, and any partition
-    subdirectory below either (``(/.*)?``: a ``partition_by`` entry keeps
-    its data files in ``<hash>/day=.../``). Matched against
-    scheme-stripped paths; the group ``entry`` is the entry's key."""
-    cache_base = re.escape(config.SPARK_CACHE_DIR.rstrip("/"))
+    data directory in the cache database, and any partition subdirectory
+    below it (``(/.*)?``: a ``partition_by`` entry keeps its data files
+    in ``<hash>/day=.../``). Sidecar dirs hold no data, so a read of one
+    is an ordinary input, not an entry. Matched against scheme-stripped
+    paths; the group ``entry`` is the entry's key."""
     db = re.escape(config.CACHE_DATABASE)
     entry = r"(?P<entry>(?:data_)?[a-f0-9]{32})"
-    return [
-        re.compile(rf"^{cache_base}/{entry}(/.*)?$"),
-        re.compile(rf"/{db}\.db/{entry}(/.*)?$"),
-    ]
+    return re.compile(rf"/{db}\.db/{entry}(/.*)?$")

@@ -32,6 +32,12 @@ combining two of them, or combining one with an eviction-path flag it
 would ignore, is a usage error (exit 2 from argparse, before any work) —
 never a silent partial run (`--dry-run --compact-ledger` must not
 perform the real compaction).
+
+--fold-growing-index BASE --fold-out PATH folds the sink's index into the
+cumulative dataset at PATH; with --truncate-after-fold it then drops the
+sink's index, and refuses unless the dataset's `_FOLDED_OK` marker names
+BASE and covers every committed batch
+(`streaming.truncate_growing_index(BASE, PATH)`).
 """
 from __future__ import annotations
 
@@ -80,7 +86,8 @@ def main() -> int:
     ap.add_argument("--truncate-after-fold", action="store_true",
                     help="after a successful fold, drop the sink's ingested "
                          "index + ledger (refused mechanically if any "
-                         "committed batch is not covered by the fold stamp)")
+                         "committed batch is not covered by the fold's "
+                         "_FOLDED_OK marker at --fold-out)")
     ap.add_argument("--scan-corrupt", action="store_true",
                     help="list cache entries whose committed data files no "
                          "longer match their write-time inventory (partial "
@@ -200,9 +207,10 @@ def main() -> int:
             log.info("folded index at %s: %d band rows",
                      args.fold_out, folded.count())
         if args.truncate_after_fold:
-            # raises (never silently proceeds) on uncovered batch ids or a
-            # failed removal — the mechanical single-owner guard
-            removed = truncate_growing_index(args.fold_growing_index)
+            # raises (never silently proceeds) on batch ids the fold at
+            # --fold-out does not cover, or on a failed removal
+            removed = truncate_growing_index(args.fold_growing_index,
+                                             args.fold_out)
             log.info("truncated sink index at %s: %s",
                      args.fold_growing_index,
                      "removed" if removed else "nothing to remove")

@@ -82,7 +82,7 @@ SCHEMA_CHANGED_KEY = "<schema_changed_placeholder>"
 # with no warning.
 INPUT_LISTING_FAILED_KEY = "<input_listing_failed>"
 # Value recorded for input directories that are themselves cache entries
-# (``layout.cached_input_patterns``): the *path*, which embeds the entry's
+# (``layout.cached_input_pattern``): the *path*, which embeds the entry's
 # key, participates in the fingerprint; the mtime does not (cache content
 # is immutable for its key, so including mtimes would spuriously invalidate
 # derived caches on repair/re-writes). A scan of an entry prints no table
@@ -333,11 +333,8 @@ def _unmatchable(key: str) -> Dict[str, datetime]:
 
 def _entry_of(directory: str) -> Optional[str]:
     """The cache entry whose data ``directory`` holds, or None."""
-    for rx in layout.cached_input_patterns():
-        match = rx.search(fs.strip_scheme(directory))
-        if match:
-            return match.group("entry")
-    return None
+    match = layout.cached_input_pattern().search(fs.strip_scheme(directory))
+    return match.group("entry") if match else None
 
 
 def input_dir_mod_datetime(df: DataFrame) -> _InputInfo:
@@ -353,9 +350,9 @@ def input_dir_mod_datetime(df: DataFrame) -> _InputInfo:
       be read (it vanished after the plan was built) -> the
       ``INPUT_LISTING_FAILED_KEY`` sentinel: dropping the directory would
       leave a key that no longer tells this frame's data apart;
-    * directories that *are* cache entries (``data_*`` or 32-hex names under
-      the cache dir or the cache database's warehouse dir) contribute their
-      PATH but not their mtime (``CACHED_INPUT_MARKER``).
+    * directories that *are* cache entries (``data_*`` or 32-hex names in
+      the cache database's warehouse dir) contribute their PATH but not
+      their mtime (``CACHED_INPUT_MARKER``).
     """
     try:
         files = input_files(df)

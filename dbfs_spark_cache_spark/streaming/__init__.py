@@ -15,10 +15,9 @@ checkpointing; watermarks bound state so 100 TB/day streams hold steady.
 from __future__ import annotations
 
 import json
-import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EVENTS_SCHEMA = (
@@ -33,9 +32,9 @@ def read_events_stream(
     """File-source stream over the events table (one parquet = one batch).
 
     The file source needs an explicit schema; rather than hard-code one
-    fixture vintage's physical ts type (the round-4 regression: an
-    unconditional nanos ``div 1000`` against refreshed ``timestamp[us]``
-    fixtures put every event in January 1970), take the RAW schema a batch
+    fixture vintage's physical ts type (an unconditional nanos
+    ``div 1000`` against ``timestamp[us]`` fixtures puts every event in
+    January 1970), take the RAW schema a batch
     read surfaces for the same file — LONG under the nanosAsLong legacy
     conf for TIMESTAMP(NANOS) fixtures, a native timestamp column for
     ``timestamp[us]`` — and normalize through the same shared helper the
@@ -54,7 +53,7 @@ def read_events_stream(
     # below of the bigint it knows how to heal.
     raw_schema = _load_raw(spark, sf_dir, "events").schema
     reader = spark.readStream.format("parquet").schema(raw_schema)
-    # Layout detection (r10): ``events.parquet`` is a single FILE in the
+    # Layout detection: ``events.parquet`` is a single FILE in the
     # driver fixtures but a DIRECTORY of part files in the standard Spark
     # writer layout. The file source wants a directory, so the single-file
     # layout streams the PARENT filtered down to the file — but applying
@@ -180,10 +179,10 @@ def tumbling_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
     """Watermarked tumbling-window aggregation — the streaming twin of
-    operators.timeseries.window_tumbling, including its r13 bad-telemetry
-    gate (r14 streaming review): non-finite readings are excluded exactly
-    like the batch twin — a NaN/Inf value crashed the ANSI decimal sum or
-    poisoned it, per micro-batch. NULL-value rows stay (count counts
+    operators.timeseries.window_tumbling, including its bad-telemetry
+    gate: non-finite readings are excluded exactly like the batch twin —
+    a NaN/Inf value would crash the ANSI decimal sum or poison it, per
+    micro-batch. NULL-value rows stay (count counts
     them, sum skips them — three-valued semantics, same as batch)."""
     from ..operators.registry import finite_or_null
 
@@ -211,7 +210,7 @@ def sliding_counts(
     watermark: str = "4 hours",
 ) -> DataFrame:
     """Watermarked sliding-window aggregation (twin of window_sliding,
-    including its r13 finite gate — see tumbling_counts)."""
+    including its finite gate — see tumbling_counts)."""
     from ..operators.registry import finite_or_null
 
     return (
@@ -253,7 +252,7 @@ def hourly_user_counts(
     the full hour grid is a state-free batch pass over the materialized
     sink (``timeseries.densify_hourly``), because a gap row by definition
     has no event to trigger its emission in a stream. Carries the same
-    finite gate as every value-summing twin (r14 streaming review)."""
+    finite gate as every value-summing twin."""
     from ..operators.registry import finite_or_null
 
     return (
@@ -296,10 +295,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     State is one small tuple per user — bounded by the key cardinality, not
     the stream length.
 
-    Finite gate (r14 streaming review — the STICKIEST instance of the
-    r11 nonfinite class): one Inf reading made the user's running total
-    Inf for the REST OF THE STREAM (state accumulates forever, unlike a
-    per-window sum). Non-finite readings are excluded like every batch
+    Finite gate (the stickiest case of non-finite input): one Inf
+    reading would make the user's running total Inf for the REST OF THE
+    STREAM (state accumulates forever, unlike a per-window sum). Non-finite readings are excluded like every batch
     twin; NULL-value rows still count as events (pandas sum skips NaN).
     """
     from pyspark.sql.streaming.state import GroupState
@@ -392,11 +390,11 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.staging import stage_cache
     from ..sources import load_table
 
-    # NULL-text contract (r10 'nulls' lens, r14 streaming review): the
-    # registered batch dedup queries all filter NULL text at their heads,
-    # but these streaming twins signed NULL docs — split(NULL) folds to
-    # the EMPTY-shingle signature, so every NULL-text doc pairs with
-    # every other one (quadratic false matches on a NULL-heavy ingest).
+    # NULL-text contract: the registered batch dedup queries all filter
+    # NULL text at their heads, and so do their streaming twins —
+    # split(NULL) folds to the EMPTY-shingle signature, so every NULL-text
+    # doc would pair with every other one (quadratic false matches on a
+    # NULL-heavy ingest).
     # A NULL document is a fetch failure, not content to match.
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
@@ -422,8 +420,7 @@ def stream_corpus_near_dup_matches(
     colliding in multiple bands emits once per band (dedup downstream if
     exact-once matters; distinct on a stream would need a watermark).
 
-    NULL-text contract (r10 'nulls' lens, r14 streaming review): the
-    incoming stream is filtered like every batch dedup head — a
+    NULL-text contract: the incoming stream is filtered like every batch dedup head — a
     NULL-text doc would sign the empty-shingle signature and pair with
     every other NULL doc.
     """
@@ -479,7 +476,7 @@ def growing_corpus_dedup_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # NULL-text contract (r10 'nulls' lens): a NULL document is a
+        # NULL-text contract: a NULL document is a
         # fetch failure — it must neither match nor ENTER the index
         # (an unfiltered NULL would sign the empty-shingle signature
         # and pair with every later NULL arrival).
@@ -498,71 +495,18 @@ def growing_corpus_dedup_sink(
     return write_batch
 
 
-_FOLD_STAMP = "_folded.txt"  # non-digit stem: invisible to ledger readers
-
-# Commit marker the fold writes ITSELF (fs.write_commit_marker, not the
-# Spark job committer) into the dataset dir after the parquet write, the
-# way a cache entry is committed. Keyed on the committer's _SUCCESS,
-# prior-fold detection and crash recovery would break where
-# mapreduce.fileoutputcommitter.marksuccessfuljobs=false: a complete prior
-# fold would never be recognized, so every cycle would overwrite out_path
-# with only the current ledger's rows (silently destroying earlier cycles'
-# band rows) and the recovery loop would delete a complete temp.
-# Underscore prefix: parquet readers skip it as a hidden file.
+# The fold's commit record, written by the fold itself (not the Spark job
+# committer, whose _SUCCESS is absent under marksuccessfuljobs=false) into
+# the dataset after the parquet write, and carried into out_path by the
+# rename. It holds the dataset's data-file inventory, ``base=`` (the sink
+# it folded, canonical) and ``ids=`` (the ledger batch ids it absorbed):
+# the one record of what a fold covers. Underscore prefix: parquet
+# readers skip it as a hidden file.
 _FOLD_OK = "_FOLDED_OK"
 
 
-def _containment_norm(p: str) -> str:
-    """Canonical, dot-segment-free form of a path/URI for the fold
-    containment guards. Prefix containment must be decided on normalized
-    paths: a local ``<sink>/grow/../..`` names the sink's grandparent,
-    and raw-string ``startswith`` would wave it through the guard.
-    Scheme'd URIs get the same treatment on their PATH component (ADVICE
-    r16 #2 — ``dbfs:/sink/index/../..`` previously evaded both guard
-    directions): split scheme/authority, posixpath-normalize the
-    remainder, rejoin. ``normpath`` must never see the authority — on
-    ``s3://b/k`` it would collapse the double slash. Repeated slashes in
-    the PATH component are collapsed BEFORE normpath (ADVICE r17 #2:
-    POSIX normpath preserves exactly two leading slashes, so
-    ``s3://b//sink/fold`` and ``//tmp/sink/fold`` evaded prefix
-    containment against the single-slash forms the filesystem resolves
-    them to). Scheme'd RELATIVE paths (``dbfs:sink/../..``) are REJECTED
-    outright (ADVICE r17 #4): Hadoop's own Path constructor refuses a
-    relative path in an absolute URI, and any normalization we picked
-    would be a guess about a working directory this module cannot know.
-    Root forms keep a single trailing slash (``/``, ``dbfs:/``,
-    ``s3://bucket/``); non-roots carry none — :func:`_is_under` handles
-    both."""
-    import posixpath
-    import re
-
-    from .. import fs
-
-    _squash = lambda s: re.sub("/+", "/", s)  # noqa: E731
-    q = fs.strip_scheme(p).rstrip("/")
-    if "://" in q:
-        scheme, rest = q.split("://", 1)
-        authority, sep, tail = rest.partition("/")
-        norm = posixpath.normpath(_squash("/" + tail)) if sep else "/"
-        return f"{scheme}://{authority}{norm}"
-    head = q.split("/", 1)[0]
-    if ":" in head:
-        scheme, rest = q.split(":", 1)
-        if rest.startswith("/"):
-            return f"{scheme}:{posixpath.normpath(_squash(rest))}"
-        if not rest:
-            return f"{scheme}:/"
-        raise ValueError(
-            f"relative path in scheme'd URI {p!r}: the containment "
-            "guards cannot resolve what tree it names (Hadoop Path "
-            "rejects this form too). Use an absolute URI like "
-            f"{scheme}:/..."
-        )
-    return os.path.normpath(_squash(q)) if q else "/"
-
-
 def _is_under(child: str, parent: str) -> bool:
-    """True when normalized ``child`` lives strictly under normalized
+    """True when canonical ``child`` lives strictly under canonical
     ``parent`` (root-safe: a root parent already ends with ``/``)."""
     return child.startswith(parent if parent.endswith("/") else parent + "/")
 
@@ -571,14 +515,17 @@ def _check_fold_containment(out_path: str, base_path: str) -> None:
     """Raise unless the fold output and the sink tree are disjoint.
 
     ``out_path`` under ``base_path``: the truncate would delete the fold
-    output. ``base_path`` under ``out_path`` (ADVICE r15 #2): the fold
-    swap's ``remove(out_path)`` would recursively delete the whole sink
-    tree — including the matches ledger whose historical exactly-once
-    results this flow promises to leave untouched. (The stream's
-    checkpoint dir is not known here; keep it outside ``out_path`` for
-    the same reason — documented in the maintenance-flow docstring.)"""
-    out_norm = _containment_norm(out_path)
-    base_norm = _containment_norm(base_path)
+    output. ``base_path`` under ``out_path``: the fold swap's
+    ``remove(out_path)`` would recursively delete the whole sink tree,
+    including the matches ledger whose exactly-once results this flow
+    leaves untouched. Both are compared in ``fs.canonical_path`` form, so
+    a relative, dot-segment or doubled-slash spelling cannot slip past a
+    raw-string prefix test. (The stream's checkpoint dir is not known
+    here; keep it outside ``out_path`` for the same reason.)"""
+    from .. import fs
+
+    out_norm = fs.canonical_path(out_path)
+    base_norm = fs.canonical_path(base_path)
     if out_norm == base_norm or _is_under(out_norm, base_norm):
         raise ValueError(
             f"fold out_path {out_path!r} lives under the sink base "
@@ -594,28 +541,32 @@ def _check_fold_containment(out_path: str, base_path: str) -> None:
         )
 
 
-def _fold_complete(fs, path: str) -> bool:
-    """A dataset dir holds a COMPLETE fold union only when it carries the
-    fold's own marker: a dataset this package publishes is committed by
-    its own marker, never by the job committer's ``_SUCCESS``."""
-    return fs.exists(f"{path.rstrip('/')}/{_FOLD_OK}")
-
-
-def _require_intact_fold(fs, path: str, what: str) -> None:
-    """Refuse — loudly — a complete-looking fold dataset whose live data
-    listing disagrees with the inventory its marker recorded: folding
-    FROM it would bake the loss into every future cycle as silent dedup
-    misses, and recovery renaming it would publish a torn union. A marker
-    without an inventory has nothing to compare."""
-    ok = fs.inventory_matches(path, fs.read_text(f"{path.rstrip('/')}/{_FOLD_OK}"))
-    if ok is False:
+def _read_fold_marker(fs, path: str) -> Optional[str]:
+    """The ``_FOLDED_OK`` text of the fold dataset at ``path``; None when
+    there is none (no dataset, or a write that never committed). Raises
+    when the live data listing disagrees with the marker's inventory:
+    folding from such a dataset, publishing it, or truncating on its word
+    would bake the lost band rows into every later cycle as silent dedup
+    misses."""
+    marker = fs.read_text(f"{path.rstrip('/')}/{_FOLD_OK}")
+    if marker is not None and fs.inventory_matches(path, marker) is False:
         raise RuntimeError(
-            f"{what} at {path!r} fails its recorded data-file inventory "
-            "— part files lost or altered after the fold committed "
-            "(partial restore? copy truncation?). Restore the dataset "
-            "from backup, or remove it to explicitly accept losing the "
-            "band rows it held."
+            f"fold dataset at {path!r} fails its recorded data-file "
+            "inventory — part files lost or altered after the fold "
+            "committed (partial restore? copy truncation?). Restore the "
+            "dataset from backup, or remove it to explicitly accept "
+            "losing the band rows it held."
         )
+    return marker
+
+
+def _marker_field(marker: Optional[str], key: str) -> Optional[str]:
+    """The value of the first ``key=`` line of a marker, or None."""
+    for line in (marker or "").splitlines():
+        k, sep, value = line.strip().partition("=")
+        if sep and k == key:
+            return value.strip()
+    return None
 
 
 def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
@@ -624,44 +575,42 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     maintenance the sink's scale note prescribes (the growing sink bounds
     what accumulates BETWEEN folds, not forever).
 
-    ``out_path`` is CUMULATIVE across maintenance cycles:
-    a fold unions any previous fold's committed content at ``out_path``
-    with the sink's committed batches, distinct-collapses the copies,
-    writes the union to a temp sibling, and SWAPS it into place — so
-    reusing one ``out_path`` every cycle is the intended call pattern and
-    never destroys band rows folded earlier (the old overwrite-only fold
-    silently dropped every pre-previous-truncate document: silent dedup
-    misses). Returns the re-read frame (the committed view is LAZY —
-    unioning it directly into the next sink's corpus index would leave
-    that index reading directories :func:`truncate_growing_index` is
-    about to delete); returns the previous fold (or None) when the sink
-    has no committed index batches. ``out_path`` must not live under
-    ``base_path`` (the truncate would delete the fold output) and must
-    not be an ancestor of it (the fold's swap would delete the sink tree);
-    both directions raise. Keep the stream's checkpoint dir outside
-    ``out_path`` too — the swap removes ``out_path`` recursively.
-    Completeness of a fold dataset is tracked by the fold's OWN
-    ``_FOLDED_OK`` marker, which every committer configuration leaves in
-    place (``_SUCCESS`` is absent under marksuccessfuljobs=false, where
-    every cycle would then overwrite the accumulated union with just the
-    current ledger's rows). An ``out_path`` holding data files but no
-    marker (a fold published before the marker existed) raises rather
-    than being overwritten; the message says how to adopt it.
+    ``out_path`` is CUMULATIVE across maintenance cycles: a fold unions
+    any previous fold's committed content at ``out_path`` with the sink's
+    committed batches, distinct-collapses the copies, writes the union to
+    a temp sibling, and SWAPS it into place — so reusing one ``out_path``
+    every cycle is the intended call pattern and never destroys band rows
+    folded earlier (an overwrite-only fold would drop every document
+    ingested before the previous truncate: silent dedup misses). Returns
+    the re-read frame (the committed view is LAZY — unioning it directly
+    into the next sink's corpus index would leave that index reading
+    directories :func:`truncate_growing_index` is about to delete);
+    returns the previous fold (or None) when the sink has no committed
+    index batches. ``out_path`` must not live under ``base_path`` (the
+    truncate would delete the fold output) and must not be an ancestor of
+    it (the fold's swap would delete the sink tree); both directions
+    raise. Keep the stream's checkpoint dir outside ``out_path`` too —
+    the swap removes ``out_path`` recursively.
 
-    After the swap, the fold stamps the ledger batch ids it absorbed
-    (``index/_committed/_folded.txt``); :func:`truncate_growing_index`
-    REFUSES to drop a ledger carrying ids the stamp doesn't cover, which
-    mechanically enforces the flow's "stream stopped, fold completed"
-    contract instead of trusting the docstring (a batch committed
-    mid-fold, or a truncate called without any fold, now raises instead
-    of silently forgetting documents).
+    The fold commits its dataset with its own ``_FOLDED_OK`` marker: the
+    inventory, the sink it folded (``base=``) and the ledger batch ids it
+    absorbed (``ids=``). The marker is written in the temp sibling and
+    rides the rename, so the dataset at ``out_path`` and its coverage
+    record can never disagree. :func:`truncate_growing_index` reads it
+    and REFUSES to drop a ledger carrying ids it does not cover, which
+    enforces the flow's "stream stopped, fold completed" contract (a
+    batch committed mid-fold, or a truncate called without any fold,
+    raises instead of silently forgetting documents). An ``out_path``
+    holding data files but no marker (a fold published before the marker
+    existed) raises rather than being overwritten; the message says how
+    to adopt it.
 
     Maintenance flow (single owner, stream STOPPED — the same contract
     as :func:`compact_commit_ledger`):
       1. ``folded = fold_growing_index(spark, base, out)``  (idempotent:
          re-running unions + distincts to the same set);
-      2. ``truncate_growing_index(base)``  (idempotent delete, guarded
-         by the fold stamp);
+      2. ``truncate_growing_index(base, out)``  (idempotent delete,
+         guarded by the marker at ``out``);
       3. restart the stream, SAME checkpoint, with
          ``corpus_index.unionByName(folded)`` — committed batches never
          redeliver (Spark's commit log marks them done), so the truncated
@@ -669,11 +618,12 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     Crash safety: mid-write leaves a partial temp dir (no ``_FOLDED_OK``)
     that the next run removes; between remove-old and swap the complete
     union survives in the temp dir (marker inside) and the next run
-    finishes the swap before folding; between swap and stamp the re-run
-    unions the already-folded rows back in and distinct collapses them.
-    In every window the truncate guard still sees an uncovered ledger and
-    refuses, so no committed document can be forgotten.
+    finishes the swap before folding. In both windows ``out_path`` holds
+    no marker, so the truncate guard refuses and no committed document
+    can be forgotten.
     """
+    import uuid
+
     from .. import fs
 
     index_path = f"{base_path}/index"
@@ -685,35 +635,28 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
     # second owner could have its half-written temp renamed into place by
     # the first (torn data published); unique names mean any publish is a
     # COMPLETE union — the accident degrades to last-writer-wins.
-    import uuid as _uuid
-
     out_stripped = out_path.rstrip("/")
-    tmp = f"{out_stripped}.__folding__.{_uuid.uuid4().hex[:8]}"
+    tmp = f"{out_stripped}.__folding__.{uuid.uuid4().hex[:8]}"
     # Recovery from a crash in a previous fold's swap window: any
     # completed temp sibling is a full union — finish its swap if
     # out_path is missing; discard every other leftover temp.
     parent, base = out_stripped.rsplit("/", 1) if "/" in out_stripped else (".", out_stripped)
-    leftovers = [
-        s.path
-        for s in fs.list_dir(parent or "/")
-        if s.is_dir and s.name.startswith(f"{base}.__folding__")
-    ]
-    for left in leftovers:
-        if _fold_complete(fs, left) and not fs.exists(out_path):
-            _require_intact_fold(fs, left, "recovered fold temp")
-            fs.rename(left, out_path)  # died between remove-old and rename
+    for left in fs.list_dir(parent or "/"):
+        if not (left.is_dir and left.name.startswith(f"{base}.__folding__")):
+            continue
+        if not fs.exists(out_path) and _read_fold_marker(fs, left.path) is not None:
+            fs.rename(left.path, out_path)  # died between remove-old and rename
         else:
-            fs.remove(left)  # partial write (no completion marker) or stale twin
+            fs.remove(left.path)  # partial write (no marker) or stale twin
 
     # Ledger snapshot BEFORE reading data: a batch committing mid-fold
-    # lands in neither the stamp nor (necessarily) the union — the
+    # lands in neither the marker's ids nor (necessarily) the union — the
     # truncate guard then refuses until the next fold absorbs it.
     manifest_ids, marker_ids = _ledger_state(fs, index_path)
     folded_ids = sorted(manifest_ids | marker_ids)
 
     prior = None
-    if _fold_complete(fs, out_path):
-        _require_intact_fold(fs, out_path, "previous fold")
+    if _read_fold_marker(fs, out_path) is not None:
         prior = spark.read.parquet(out_path)
     elif fs.data_file_inventory(out_path)[0]:
         # Data without the marker: a fold published before the marker
@@ -732,73 +675,38 @@ def fold_growing_index(spark: SparkSession, base_path: str, out_path: str):
         prior.unionByName(ingested).distinct()
     )
     folded.write.mode("overwrite").parquet(tmp)
-    # The fold's OWN completion marker (committer-independent; see
-    # _FOLD_OK): written only after the full union landed, it rides the
-    # rename into out_path, so completeness survives marksuccessfuljobs=
-    # false sessions. A crash between the parquet write and this marker
-    # discards the temp on the next run — safe, out_path (or the prior
-    # fold) is still intact at that point. The marker carries the
-    # dataset's data-file inventory so later cycles and recoveries can
-    # refuse a fold corrupted AFTER commit (_require_intact_fold).
-    # The marker also records WHICH ledger ids this dataset absorbed, and
-    # the stamp records where the dataset lives: truncate cross-checks the
-    # two, which closes the crash-between-swap-and-stamp window and the
-    # dual-owner race aftermath (a stale union renamed over a fresher one
-    # leaves a stamp claiming coverage the published dataset doesn't
-    # carry — without the cross-check, truncation would silently forget
-    # those documents).
-    if not fs.write_commit_marker(
-        tmp, _FOLD_OK, "\nids=" + ",".join(str(i) for i in folded_ids)
-    ):
+    # Written only after the full union landed; a crash before it leaves
+    # a markerless temp that the next run discards.
+    coverage = (f"\nbase={fs.canonical_path(base_path)}"
+                f"\nids={','.join(str(i) for i in folded_ids)}")
+    if not fs.write_commit_marker(tmp, _FOLD_OK, coverage):
         raise RuntimeError(f"fold temp {tmp!r} lost its output before commit")
     if fs.exists(out_path):
         fs.remove(out_path)
     fs.rename(tmp, out_path)
-    fs.write_text(
-        f"{index_path}/_committed/{_FOLD_STAMP}",
-        "\n".join(str(i) for i in folded_ids) + f"\nout={out_path}",
-    )
     return spark.read.parquet(out_path)
 
 
-def _fold_marker_ids(fs, path: str):
-    """The ledger batch ids a fold dataset's own marker says it absorbed;
-    None when there is nothing to read (missing dataset or marker,
-    pre-ids marker) — callers skip the cross-check then."""
-    marker = fs.read_text(f"{path.rstrip('/')}/{_FOLD_OK}")
-    if not marker:
-        return None
-    for line in marker.splitlines():
-        line = line.strip()
-        if line.startswith("ids="):
-            body = line[len("ids="):].strip()
-            if not body:
-                return set()
-            try:
-                return {int(tok) for tok in body.split(",")}
-            except ValueError:
-                return None
-    return None
-
-
-def truncate_growing_index(base_path: str) -> bool:
+def truncate_growing_index(base_path: str, out_path: str) -> bool:
     """Step 2 of the fold: drop the sink's ingested-index data AND its
     commit ledger (the matches sink is untouched — historical match
-    results stay exactly-once). Idempotent; True when something was
-    removed, False when there was nothing to remove. Raises instead of
-    proceeding in the two dangerous states:
+    results stay exactly-once). ``out_path`` is the fold output that
+    :func:`fold_growing_index` published. Idempotent; True when something
+    was removed, False when there was nothing to remove. Raises instead
+    of proceeding in the two dangerous states:
 
-    * the ledger carries committed batch ids the last completed fold's
-      stamp does not cover (no fold ran, or the stream wrote a batch
-      after the fold) — truncating would FORGET those documents
-      (mechanical guard for the flow's "stream stopped, fold first"
-      contract; refusal is advisory against operator mistakes, not
-      atomic against a sink racing the removal itself);
+    * the ledger carries committed batch ids that the ``_FOLDED_OK``
+      marker at ``out_path`` does not cover — no fold ran, the stream
+      wrote a batch after the fold, the marker names another sink, or a
+      crash left ``out_path`` without a published fold. Truncating would
+      FORGET those documents; one re-fold heals every case. The refusal
+      is advisory against operator mistakes, not atomic against a sink
+      racing the removal itself;
     * the removal FAILED while the path exists (permission denied,
-      partially-completed rmtree) — returning False there was
-      indistinguishable from "nothing to remove" (ADVICE r14 #5), and
-      an operator restarting on that belief leaves a ledger referencing
-      half-deleted batch dirs.
+      partially-completed rmtree) — returning False there would be
+      indistinguishable from "nothing to remove", and an operator
+      restarting on that belief leaves a ledger referencing half-deleted
+      batch dirs.
     """
     from .. import fs
 
@@ -808,46 +716,20 @@ def truncate_growing_index(base_path: str) -> bool:
     manifest_ids, marker_ids = _ledger_state(fs, index_path)
     committed = manifest_ids | marker_ids
     if committed:
-        stamp = fs.read_text(f"{index_path}/_committed/{_FOLD_STAMP}")
-        folded: set = set()
-        stamp_out = None
-        for line in (stamp or "").splitlines():
-            line = line.strip()
-            if line.isdigit():
-                folded.add(int(line))
-            elif line.startswith("out="):
-                stamp_out = line[len("out="):]
+        marker = _read_fold_marker(fs, out_path)
+        folded = set()
+        if _marker_field(marker, "base") == fs.canonical_path(base_path):
+            ids = _marker_field(marker, "ids") or ""
+            folded = {int(t) for t in ids.split(",") if t.strip().isdigit()}
         uncovered = sorted(committed - folded)
         if uncovered:
             raise RuntimeError(
                 f"refusing to truncate {index_path!r}: committed batch "
-                f"ids {uncovered} are not covered by a completed fold "
-                "stamp — truncating would forget their documents. Run "
-                "fold_growing_index (stream stopped) first."
+                f"ids {uncovered} are not covered by a completed fold of "
+                f"this sink at {out_path!r} — truncating would forget "
+                "their documents. Run fold_growing_index (stream stopped) "
+                "first."
             )
-        # Cross-check the PUBLISHED dataset, not just the stamp (r16): a
-        # crash between the fold's swap and its stamp write — or a second
-        # maintenance owner's stale union renamed over a fresher one —
-        # leaves a stamp whose coverage the dataset at out= does not
-        # actually carry. Truncating on the stamp alone would silently
-        # forget those documents; refusing costs one re-fold (which
-        # unions the dataset with the still-intact ledger and heals).
-        # Pre-cross-check stamps/markers carry no out=/ids= lines and
-        # skip this (the coverage check above still applies).
-        if stamp_out is not None:
-            dataset_ids = _fold_marker_ids(fs, stamp_out)
-            if dataset_ids is not None:
-                unpublished = sorted(committed - dataset_ids)
-                if unpublished:
-                    raise RuntimeError(
-                        f"refusing to truncate {index_path!r}: the fold "
-                        f"stamp covers batch ids {sorted(committed)} but "
-                        f"the published dataset at {stamp_out!r} absorbed "
-                        f"only {sorted(dataset_ids)} (missing "
-                        f"{unpublished}) — a fold crashed mid-swap or a "
-                        "second maintenance owner raced it. Re-run "
-                        "fold_growing_index (stream stopped) to heal."
-                    )
     if not fs.remove(index_path) and fs.exists(index_path):
         raise OSError(
             f"failed to remove {index_path!r} (permissions? partial "
@@ -862,7 +744,7 @@ def robust_outlier_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the historical events table, materialized through the cache engine:
     a changed history recomputes it, an unchanged one is a table scan. The
     static side of the stream-static outlier screen below — the batch twin
-    of the screen is the (pending-r8) ``events_anomaly_mad`` query, built
+    of the screen is the ``events_anomaly_mad`` query, built
     on the same banded-median helper.
     """
     from ..operators.registry import finite_or_null
@@ -870,12 +752,10 @@ def robust_outlier_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.staging import stage_cache
     from ..sources import load_table
 
-    # Finite-only, exactly like the batch twin events_anomaly_mad (r11
-    # nonfinite lens; r14 streaming review found this twin had only the
-    # NULL half of the guard): an Inf reading makes the banded median's
-    # bucket math degenerate (step = inf) and a NaN deviation poisons
-    # the MAD — bad telemetry must not corrupt the baseline the whole
-    # stream screens against.
+    # Finite-only, exactly like the batch twin events_anomaly_mad: an Inf
+    # reading makes the banded median's bucket math degenerate (step =
+    # inf) and a NaN deviation poisons the MAD — bad telemetry must not
+    # corrupt the baseline the whole stream screens against.
     ev = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull() & finite_or_null("value")
     )
@@ -1043,7 +923,7 @@ def _infer_output_mode(df: DataFrame) -> str:
     return "append"
 
 
-def exactly_once_append_sink(base_path: str):
+def exactly_once_append_sink(base_path: str, valid: Optional[Column] = None):
     """foreachBatch function with a per-batch commit ledger: Spark's
     checkpoint redelivers a batch id at-least-once after a sink-side
     crash; this sink collapses redelivery to exactly-once file output
@@ -1058,29 +938,75 @@ def exactly_once_append_sink(base_path: str):
          simply overwrites (same id, same checkpointed content);
       3. the marker commits LAST, via the atomic rename in
          ``fs.write_text``, so a marker's existence always means complete
-         data.
+         data. It records the batch's data-file inventory, so a part file
+         lost after commit (partial restore, copy truncation) is found by
+         :func:`find_corrupt_batches` instead of scanning as fewer rows.
     One marker file per batch id — no read-modify-write on a shared
     ledger document, so concurrent sinks on disjoint ids never conflict.
     Readers that want the exactly-once view go through
     :func:`read_exactly_once_output`, which lists the ledger and reads
     only committed batch directories.
+
+    ``valid`` adds a per-batch QUALITY GATE: rows where it is TRUE land
+    in the batch directory; the rest are quarantined to
+    ``_quarantine/batch_id=N`` (read back with :func:`read_quarantine`)
+    instead of poisoning the corpus or failing the stream — the streaming
+    twin of a batch ingest's expectations gate, with the same
+    not-TRUE-is-invalid semantics as ``quality.expectations_report``. The
+    flagged batch is persisted for the commit, so the source is computed
+    ONCE across the clean write, the quarantine count and the quarantine
+    write, and the marker also records ``quarantined: <n>`` as a
+    per-batch quality audit trail.
     """
     from .. import fs
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if _already_committed(fs, base_path, batch_id):
             return
-        batch_df.write.mode("overwrite").parquet(f"{base_path}/batch_id={batch_id}")
+        data_dir = f"{base_path}/batch_id={batch_id}"
+        status = f"batch {batch_id} committed\n"
+        if valid is None:
+            batch_df.write.mode("overwrite").parquet(data_dir)
+        else:
+            # withColumn silently OVERWRITES an existing column: a source
+            # batch already carrying __valid would have its data replaced
+            # by the gate flag and then dropped from BOTH outputs. Refuse;
+            # the caller renames first.
+            if "__valid" in batch_df.columns:
+                raise ValueError(
+                    "exactly_once_append_sink(valid=...): the batch already "
+                    "has a __valid column — it would be clobbered by the "
+                    "gate flag; rename it before the sink"
+                )
+            quarantine_dir = f"{base_path}/_quarantine/batch_id={batch_id}"
+            flagged = batch_df.withColumn(
+                "__valid", F.coalesce(valid, F.lit(False))
+            ).persist()
+            try:
+                flagged.where("__valid").drop("__valid").write.mode(
+                    "overwrite"
+                ).parquet(data_dir)
+                bad = flagged.where("NOT __valid").drop("__valid")
+                n_bad = bad.count()
+                if n_bad:
+                    bad.write.mode("overwrite").parquet(quarantine_dir)
+                else:
+                    # A crashed PRIOR attempt (e.g. under an older gate
+                    # predicate, before a redeploy) may have left a partial
+                    # quarantine dir for this id with no marker. Redelivery
+                    # with zero bad rows writes nothing over it, so without
+                    # this sweep its stale rows would surface in
+                    # read_quarantine once the marker lands.
+                    fs.remove(quarantine_dir)
+            finally:
+                flagged.unpersist()
+            status += f"quarantined: {n_bad}\n"
+        # a gated write drops only its own __valid column, so the
+        # recorded schema is the source batch schema either way
         _record_sink_schema(fs, base_path, batch_df)
-        # The marker records the batch's data-file inventory (r16
-        # corrupt-committed-data contract): a part file lost AFTER commit
-        # (partial restore, copy truncation) leaves a dir that scans
-        # cleanly with fewer rows; find_corrupt_batches compares markers
-        # against live listings so that loss is detectable, not silent.
         fs.write_text(
             f"{base_path}/_committed/{batch_id}.txt",
-            f"batch {batch_id} committed\n"
-            + fs.render_inventory(*_batch_inventory(fs, base_path, batch_id)),
+            status + fs.render_inventory(*_batch_inventory(fs, base_path, batch_id)),
         )
 
     return write_batch
@@ -1088,7 +1014,7 @@ def exactly_once_append_sink(base_path: str):
 
 def _batch_inventory(fs_mod, base_path: str, batch_id: int) -> tuple:
     """One batch's combined data-file inventory: its committed data dir
-    plus (for validated sinks) its quarantine dir — the same definition
+    plus (for gated sinks) its quarantine dir — the same definition
     the commit markers record and :func:`find_corrupt_batches` checks."""
     clean = fs_mod.data_file_inventory(f"{base_path}/batch_id={batch_id}")
     quar = fs_mod.data_file_inventory(
@@ -1138,17 +1064,17 @@ def claim_sink_checkpoint(base_path: str, checkpoint_dir: str) -> None:
     checkpoint dir genuinely moved) means deleting the stamp.
 
     ``write_stream_exactly_once`` calls this automatically. Pipelines
-    driving :func:`exactly_once_append_sink`,
-    :func:`validated_exactly_once_sink` or
+    driving :func:`exactly_once_append_sink` or
     :func:`growing_corpus_dedup_sink` through their OWN ``writeStream``
     should call it once before ``start()`` with the same base they hand
     the sink (for the growing sink: the parent base — its two
     sub-ledgers share the parent's batch ids by construction).
 
-    Checkpoint paths are NORMALIZED before comparing (trailing slash,
-    ``file:`` scheme, relative-vs-absolute for local paths — ADVICE r14
-    #2): the same physical checkpoint passed as ``ckpt`` vs ``ckpt/``
-    vs ``file:/.../ckpt`` is the same owner, not a foreign pipeline.
+    Checkpoint paths are compared in ``fs.canonical_path`` form: the
+    same physical checkpoint passed as ``ckpt``, ``ckpt/``,
+    ``file:/.../ckpt`` or ``/x//ckpt`` is the same owner, not a foreign
+    pipeline, and a scheme'd URI (``dbfs:/ckpt``) never picks up the
+    driver's working directory.
     The claim is ADVISORY, against configuration mistakes: the
     read-then-write stamp is not atomic, so two pipelines racing the
     very FIRST claim can both pass — what it reliably catches is the
@@ -1156,27 +1082,12 @@ def claim_sink_checkpoint(base_path: str, checkpoint_dir: str) -> None:
     the stamped value)."""
     from .. import fs
 
-    def _norm(p: str) -> str:
-        q = fs.strip_scheme(p).rstrip("/") or "/"
-        # Absolutize ONLY a genuinely relative local path — one carrying
-        # no scheme at all (ADVICE r15 #3). Single-slash scheme'd URIs
-        # (``dbfs:/ckpt``, ``s3:/b/k``) have no '://', so fs.is_local
-        # called them local and os.path.abspath embedded the driver's CWD
-        # into the stored stamp ('/cwd/dbfs:/ckpt') — a later start from
-        # a different working directory then raised a spurious
-        # foreign-checkpoint error for the same physical checkpoint. A
-        # ':' before the first '/' marks a scheme; leave those untouched.
-        head = q.split("/", 1)[0]
-        if not q.startswith("/") and ":" not in head:
-            q = os.path.abspath(q)
-        return q
-
     owner_path = f"{base_path}/_committed/_owner.txt"
     recorded = fs.read_text(owner_path)
-    checkpoint_norm = _norm(checkpoint_dir)
+    checkpoint_norm = fs.canonical_path(checkpoint_dir)
     if recorded is None:
         fs.write_text(owner_path, checkpoint_norm)
-    elif _norm(recorded) != checkpoint_norm:
+    elif fs.canonical_path(recorded) != checkpoint_norm:
         raise ValueError(
             f"exactly-once sink {base_path!r} already belongs to "
             f"checkpoint {recorded!r}; writing it from checkpoint "
@@ -1219,19 +1130,19 @@ def read_exactly_once_output(
 ) -> Optional[DataFrame]:
     """The exactly-once view of an :func:`exactly_once_append_sink`
     output: only batch directories whose ledger marker committed. Returns
-    None when nothing has committed yet; an all-empty-batches sink (every
-    committed micro-batch wrote only ``_SUCCESS``) returns an EMPTY
-    DataFrame with the sink's recorded schema — committed-but-empty is a
-    different answer from "no sink exists" (ADVICE r7 #4). Partial
-    directories from a crashed batch are invisible until their redelivery
-    commits.
+    None when nothing has committed yet. A committed empty micro-batch
+    holds one zero-row part file (Spark 4.1.2 writes one for an empty
+    frame, with or without ``_SUCCESS``), so an all-empty sink reads as
+    an EMPTY DataFrame of the written schema; committed batch dirs that
+    hold no part file at all fall back to the sink's recorded schema —
+    committed-but-empty is a different answer from "no sink exists".
+    Partial directories from a crashed batch are invisible until their
+    redelivery commits.
 
-    ``include_batch_id=True`` appends a ``batch_id: long`` column
-    (ADVICE r8 #4): the default view is schema-pure — exactly what the
-    sink wrote, the batch id being ledger metadata — but consumers that
-    audit per-batch provenance opt back in explicitly. Implemented via
-    the ``basePath`` partition-discovery read, so a ``WHERE batch_id``
-    filter partition-prunes instead of scanning every committed batch."""
+    ``include_batch_id=True`` appends a ``batch_id: long`` column: the
+    default view is schema-pure — exactly what the sink wrote, the batch
+    id being ledger metadata — but consumers that audit per-batch
+    provenance opt back in explicitly (see :func:`_read_committed_dirs`)."""
     from .. import fs
 
     manifest_ids, marker_ids = _ledger_state(fs, base_path)
@@ -1241,15 +1152,12 @@ def read_exactly_once_output(
     dirs = [f"{base_path}/batch_id={i}" for i in committed]
     # Empty-vs-data is decided by LISTING for part files, not by matching
     # Spark's "Unable to infer schema" exception text, which is
-    # version-fragile (ADVICE r7 #4). Readers are off the hot sink loop,
-    # so one listing per committed dir is fine; genuine read errors
-    # propagate instead of being swallowed as None.
+    # version-fragile. Readers are off the hot sink loop, so one listing
+    # per committed dir is fine; genuine read errors propagate.
     listings = {d: fs.list_dir(d) for d in dirs}
-    # Every committed batch dir contains at least _SUCCESS (a no-data
-    # micro-batch still writes the marker file). A committed id whose
-    # directory lists EMPTY means the data was deleted out from under the
-    # ledger — surface the inconsistency (the pre-r8 basePath read raised
-    # here too) instead of reporting a silently-empty sink.
+    # A committed batch dir always holds at least its part file. One that
+    # lists EMPTY means the data was deleted out from under the ledger —
+    # surface the inconsistency instead of reporting a silently-empty sink.
     missing = [d for d, entries in listings.items() if not entries]
     if missing:
         raise FileNotFoundError(
@@ -1262,47 +1170,9 @@ def read_exactly_once_output(
         for st in entries
     )
     if has_data:
-        if include_batch_id:
-            # basePath makes partition discovery synthesize batch_id
-            # from the dir names (int-inferred — pin long for a stable
-            # cross-branch type). Refuse when the sink's own data
-            # already carries a batch_id column: partition discovery
-            # silently SHADOWS the data column (verified on Spark 4.1 —
-            # every row's value replaced by the dir number), which is
-            # silent corruption, not a merge. The check consults the
-            # RECORDED sink schema — one tiny ledger file, already on
-            # disk — instead of a second full listing/footer
-            # schema-inference pass over every committed dir
-            # (ADVICE r9 #3); only legacy pre-schema-record ledgers
-            # fall back to the inference read.
-            if "batch_id" in _sink_data_columns(spark, fs, base_path, dirs):
-                raise ValueError(
-                    "include_batch_id=True but the sink's data already "
-                    "has a batch_id column — the synthesized partition "
-                    "column would silently overwrite it; read with the "
-                    "default include_batch_id=False"
-                )
-            return (
-                spark.read.option("basePath", base_path)
-                .option("mergeSchema", True)  # same evolution contract
-                .parquet(*dirs)               # as the schema-pure view
-                .withColumn("batch_id", F.col("batch_id").cast("long"))
-            )
-        # The leaf dirs are read WITHOUT basePath so partition discovery
-        # does not synthesize a batch_id column: the committed view is
-        # schema-pure — exactly what the sink wrote, identical to the
-        # recorded-schema empty view below. The batch id is ledger
-        # metadata, not data. mergeSchema because a redeployed pipeline
-        # evolves the sink schema across committed dirs (r13 review; the
-        # r12 evolve lens established the recipe): a plain read infers
-        # from ONE footer, so whether an added column appeared — or a
-        # dropped one vanished, silently truncating historic batches —
-        # was a footer lottery. The union is deterministic: evolved
-        # columns surface with NULL backfill, and a genuine type
-        # conflict across batches fails loudly instead of serving
-        # whichever footer won. Identical footers (the normal
-        # population) read identically to before.
-        return spark.read.option("mergeSchema", True).parquet(*dirs)
+        return _read_committed_dirs(
+            spark, fs, base_path, base_path, dirs, include_batch_id
+        )
     schema_path = f"{base_path}/_committed/{_LEDGER_SCHEMA}"
     schema_txt = fs.read_text(schema_path)
     if schema_txt is None:
@@ -1339,35 +1209,59 @@ _LEDGER_MANIFEST = "manifest.txt"
 _LEDGER_SCHEMA = "_schema.json"
 
 
+def _read_committed_dirs(spark, fs_mod, base_path: str, root: str,
+                         dirs: list, include_batch_id: bool) -> DataFrame:
+    """Read a sink's committed batch dirs (``<root>/batch_id=N``), the
+    one read behind :func:`read_exactly_once_output` and
+    :func:`read_quarantine`.
+
+    mergeSchema, because a redeployed pipeline evolves the sink schema
+    across committed dirs: a plain read infers from ONE footer, so
+    whether an added column appeared — or a dropped one vanished,
+    silently truncating historic batches — would be a footer lottery.
+    The union is deterministic: evolved columns surface with NULL
+    backfill, and a type conflict across batches fails loudly.
+
+    Without ``include_batch_id`` the leaf dirs are read without
+    ``basePath``, so partition discovery adds no column. With it, the
+    ``basePath`` read synthesizes ``batch_id`` from the dir names (cast to
+    long for a stable type) and a ``WHERE batch_id`` filter
+    partition-prunes. That read is refused when the sink's rows already
+    carry a ``batch_id`` column: partition discovery silently SHADOWS the
+    data column (every row's value replaced by the dir number)."""
+    if not include_batch_id:
+        return spark.read.option("mergeSchema", True).parquet(*dirs)
+    if "batch_id" in _sink_data_columns(spark, fs_mod, base_path, dirs):
+        raise ValueError(
+            "include_batch_id=True but the sink's data already has a "
+            "batch_id column — the synthesized partition column would "
+            "silently overwrite it; read with the default "
+            "include_batch_id=False"
+        )
+    return (
+        spark.read.option("basePath", root)
+        .option("mergeSchema", True)
+        .parquet(*dirs)
+        .withColumn("batch_id", F.col("batch_id").cast("long"))
+    )
+
+
 def _sink_data_columns(spark, fs_mod, base_path: str, dirs: list) -> list:
     """Column names of the rows a sink WROTE (no synthesized partition
-    columns), for the include_batch_id shadow refusal.
-
-    The recorded sink schema (``_record_sink_schema``) tracks the LATEST
-    committed batch — by design, so a redeployed pipeline's evolved
-    schema wins — which makes it sound only in the REFUSE direction: if
-    the latest schema carries batch_id, refusal is correct and costs one
-    tiny ledger read (ADVICE r9 #3). It is NOT sound in the ALLOW
-    direction (ADVICE r10 #4): a redeploy that DROPPED a batch_id column
-    earlier commits carried would pass the recorded-schema check, and
-    partition discovery would then silently shadow those older dirs'
-    data column — the exact corruption this check refuses. Allowing
-    therefore requires the union of every committed dir's schema: a
-    mergeSchema footer-inference read (plain ``read.parquet`` infers
-    from a SINGLE footer, which has the same historic blind spot).
-    Reader-side, include_batch_id=True only — never the per-batch sink
-    hot path."""
+    columns), for the include_batch_id shadow refusal. The recorded sink
+    schema tracks the LATEST batch, so it suffices to refuse cheaply;
+    allowing needs the mergeSchema union of every committed dir, since a
+    redeploy that DROPPED a batch_id column leaves older dirs still
+    carrying it (a plain read infers from one footer and has the same
+    blind spot)."""
     recorded = fs_mod.read_text(f"{base_path}/_committed/{_LEDGER_SCHEMA}")
-    if recorded is not None:
-        try:
-            cols = [f["name"] for f in json.loads(recorded)["fields"]]
-            if "batch_id" in cols:
-                return cols  # refuse cheaply — the latest schema suffices
-        except (ValueError, KeyError, TypeError):
-            pass  # corrupt record: the inference read decides
-    return (
-        spark.read.option("mergeSchema", True).parquet(*dirs).columns
-    )
+    try:
+        cols = [f["name"] for f in json.loads(recorded)["fields"]]
+    except (ValueError, KeyError, TypeError):
+        cols = []  # no or corrupt record: the inference read decides
+    if "batch_id" in cols:
+        return cols
+    return spark.read.option("mergeSchema", True).parquet(*dirs).columns
 
 
 def _record_sink_schema(fs_mod, base_path: str, batch_df: DataFrame) -> None:
@@ -1480,11 +1374,10 @@ def compact_commit_ledger(base_path: str) -> int:
     the same single-operator contract every registry maintenance op in
     ``management.py`` carries.
 
-    Interplay notes (r16, pinned in tests/test_r16_engine_fixes.py):
-    compaction touches ONLY digit-stem marker files, so the fold stamp
-    (``_folded.txt``) and owner stamp survive it, and the truncate
-    guard's committed-vs-folded comparison sees compacted ids through
-    the manifest — a batch committed post-fold then compacted still
+    Interplay notes: compaction touches ONLY digit-stem marker files, so
+    the owner stamp survives it, and the truncate guard's
+    committed-vs-folded comparison sees compacted ids through the
+    manifest — a batch committed post-fold then compacted still
     refuses truncation. Each marker's data-file inventory is PRESERVED
     in the manifest (v2 ``id=N files=F bytes=B`` lines; bare-digit
     legacy lines keep parsing), so :func:`find_corrupt_batches` keeps
@@ -1603,17 +1496,15 @@ def stateful_session_flush(
     open and is NOT emitted (same boundary as the left-outer join's
     unmatched rows); the parity test pins that boundary.
 
-    Late-data contract (r14 'disorder' lens — the eager form this
-    replaces emitted a session the moment a later event split it by
-    gap, so an in-watermark straggler belonging to the ALREADY-EMITTED
-    session merged into the wrong one, bloating its span backward
-    across the silence; arrival order changed the result): sessions are
-    now held until the WATERMARK closes them, and every event — however
+    Late-data contract: emitting a session the moment a later event
+    splits it by gap would let an in-watermark straggler belonging to the
+    ALREADY-EMITTED session merge into the wrong one, bloating its span
+    backward across the silence, so arrival order would change the
+    result. Sessions are therefore held until the WATERMARK closes them, and every event — however
     disordered within the watermark — merges by gap-adjacency into the
     interval set (bridging two intervals re-unifies them). Result:
     session output is ARRIVAL-ORDER-INDEPENDENT for in-watermark data,
-    which is exactly the promise a watermark makes; pinned by
-    ``tests/test_r14_disorder_lens.py``.
+    which is exactly the promise a watermark makes.
 
     Beyond-horizon boundary (probed, Spark 4.1): unlike windowed
     aggregation, Spark does NOT drop late input rows for
@@ -1694,117 +1585,27 @@ def attach_progress_collector(spark: SparkSession):
     return records, listener
 
 
-def validated_exactly_once_sink(base_path: str, valid: "Column"):
-    """Exactly-once sink with a per-batch QUALITY GATE: rows where
-    ``valid`` is TRUE land in the committed batch directory; the rest are
-    quarantined to ``_quarantine/batch_id=N`` for inspection instead of
-    poisoning the corpus or failing the stream (the streaming twin of a
-    batch ingest's expectations gate — same not-TRUE-is-invalid
-    semantics as ``quality.expectations_report``).
-
-    The flagged batch is persisted for the duration of the commit, so the
-    source batch is computed ONCE even though the clean write, the
-    quarantine count, and the quarantine write are three separate actions
-    (each action re-reads the cached flagged rows, not the source). The
-    ledger marker commits LAST and
-    records the per-batch clean/quarantined row counts, so the marker
-    doubles as a per-batch quality audit trail; redelivery
-    short-circuits exactly like :func:`exactly_once_append_sink`.
-    """
-    from .. import fs
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if _already_committed(fs, base_path, batch_id):
-            return
-        # withColumn silently OVERWRITES an existing column (r13 review —
-        # the same silent-clobber class operators/scale's reserved-name
-        # guard closes): a source batch already carrying __valid would
-        # have its data replaced by the gate flag and then dropped from
-        # BOTH outputs. Refuse loudly; the caller renames first.
-        if "__valid" in batch_df.columns:
-            raise ValueError(
-                "validated_exactly_once_sink: the batch already has a "
-                "__valid column — it would be clobbered by the gate "
-                "flag; rename it before the sink"
-            )
-        marker = f"{base_path}/_committed/{batch_id}.txt"
-        flagged = batch_df.withColumn(
-            "__valid", F.coalesce(valid, F.lit(False))
-        ).persist()
-        try:
-            clean = flagged.where("__valid").drop("__valid")
-            bad = flagged.where("NOT __valid").drop("__valid")
-            clean.write.mode("overwrite").parquet(
-                f"{base_path}/batch_id={batch_id}"
-            )
-            n_bad = bad.count()
-            if n_bad:
-                bad.write.mode("overwrite").parquet(
-                    f"{base_path}/_quarantine/batch_id={batch_id}"
-                )
-            else:
-                # A crashed PRIOR attempt (e.g. under an older gate
-                # predicate, before a redeploy) may have left a partial
-                # quarantine dir for this id with no marker. Redelivery
-                # with zero bad rows writes nothing over it, so without
-                # this sweep the stale partial rows would surface in
-                # read_quarantine as committed quarantine the moment the
-                # marker below lands. One metadata delete (no-op when
-                # absent), only on the n_bad == 0 branch.
-                fs.remove(f"{base_path}/_quarantine/batch_id={batch_id}")
-            # clean drops only the gate's own __valid column, so the
-            # recorded schema equals the source batch schema
-            _record_sink_schema(fs, base_path, batch_df)
-            fs.write_text(
-                marker,
-                f"batch {batch_id} committed\nquarantined: {n_bad}\n"
-                + fs.render_inventory(
-                    *_batch_inventory(fs, base_path, batch_id)
-                ),
-            )
-        finally:
-            flagged.unpersist()
-
-    return write_batch
-
-
 def read_quarantine(
     spark: SparkSession, base_path: str, include_batch_id: bool = False
 ) -> Optional[DataFrame]:
-    """Quarantined rows of a :func:`validated_exactly_once_sink` output —
-    only from COMMITTED batches (a crash mid-batch leaves no marker, and
-    its partial quarantine dir is overwritten on redelivery just like the
-    data dir). Returns None when nothing is quarantined. The re-ingest
-    path: fix upstream, then feed these rows back through the gate.
-    ``include_batch_id=True`` appends ``batch_id: long`` (ADVICE r8 #4)
-    — useful here to trace WHICH batch produced the bad rows."""
+    """Quarantined rows of a gated :func:`exactly_once_append_sink`
+    output — only from COMMITTED batches (a crash mid-batch leaves no
+    marker, and its partial quarantine dir is overwritten on redelivery
+    just like the data dir). Returns None when nothing is quarantined.
+    The re-ingest path: fix upstream, then feed these rows back through
+    the gate. ``include_batch_id=True`` appends ``batch_id: long`` —
+    useful here to trace WHICH batch produced the bad rows."""
     from .. import fs
 
     manifest_ids, marker_ids = _ledger_state(fs, base_path)
+    root = f"{base_path}/_quarantine"
     dirs = [
-        f"{base_path}/_quarantine/batch_id={i}"
+        f"{root}/batch_id={i}"
         for i in sorted(manifest_ids | marker_ids)
-        if fs.exists(f"{base_path}/_quarantine/batch_id={i}")
+        if fs.exists(f"{root}/batch_id={i}")
     ]
     if not dirs:
         return None
-    if include_batch_id:
-        # same shadowing refusal as the committed view, against the same
-        # recorded schema (quarantine rows share the sink's row schema —
-        # the gate drops only __valid from both branches)
-        if "batch_id" in _sink_data_columns(spark, fs, base_path, dirs):
-            raise ValueError(
-                "include_batch_id=True but the quarantined data already "
-                "has a batch_id column — the synthesized partition "
-                "column would silently overwrite it; read with the "
-                "default include_batch_id=False"
-            )
-        return (
-            spark.read.option("basePath", f"{base_path}/_quarantine")
-            .option("mergeSchema", True)
-            .parquet(*dirs)
-            .withColumn("batch_id", F.col("batch_id").cast("long"))
-        )
-    # No basePath: schema-pure rows, same contract as the committed view
-    # (mergeSchema — see read_exactly_once_output's evolution note).
-    return spark.read.option("mergeSchema", True).parquet(*dirs)
+    return _read_committed_dirs(
+        spark, fs, base_path, root, dirs, include_batch_id
+    )

@@ -177,6 +177,20 @@ def test_recaching_a_cached_frame_writes_nothing(spark, clean_cache, tmp_path):
     ]
 
 
+def test_sidecar_dir_read_is_not_a_cache_entry(spark, clean_cache, tmp_path):
+    """An entry's sidecar dir holds only its metadata document, so a
+    frame reading it is an ordinary input: it names no entry, and
+    re-caching it is not refused as a pure scan of the entry."""
+    from dbfs_spark_cache_spark import core, layout, write_cache
+
+    src = _source(spark, tmp_path)
+    write_cache(_agg(spark, src))
+    h = core.resolve_table_hash(_agg(spark, src))
+    side = spark.read.text(layout.sidecar_dir(h))
+    assert core.resolve_table_hash(side) != h
+    assert "pure scan" not in (core.admit(side).refusal or "")
+
+
 def test_cache_dataframe_fs_call_budget(spark, clean_cache, tmp_path):
     """A miss plus write lists the new entry's data files once (the
     inventory of its commit marker) and serves the committed files

@@ -16,10 +16,10 @@ def _reads_cache_entry(df) -> bool:
     from dbfs_spark_cache_spark import fs, layout
     from dbfs_spark_cache_spark.plans.fingerprint import input_files
 
-    patterns = layout.cached_input_patterns()
+    pattern = layout.cached_input_pattern()
     return any(
-        rx.search(fs.strip_scheme(os.path.dirname(f)))
-        for f in input_files(df) for rx in patterns
+        pattern.search(fs.strip_scheme(os.path.dirname(f)))
+        for f in input_files(df)
     )
 
 

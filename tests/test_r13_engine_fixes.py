@@ -116,7 +116,7 @@ def test_percentiles_reject_output_name_collisions(spark):
 # r13 fresh-eyes review of streaming/__init__.py (VERDICT r12 #6: the
 # module's exactly-once ledger and gate paths, last deep-reviewed r7).
 # Two real defects found and fixed:
-#   4. validated_exactly_once_sink silently CLOBBERED a source batch's
+#   4. the quality-gated sink silently CLOBBERED a source batch's
 #      own __valid column (withColumn overwrites) — the gate flag
 #      replaced the data and was then dropped from BOTH outputs.
 #   5. the committed/quarantine views inferred their schema from ONE
@@ -130,11 +130,11 @@ def test_percentiles_reject_output_name_collisions(spark):
 
 
 def test_validated_sink_refuses_valid_column_collision(spark, tmp_path):
-    from dbfs_spark_cache_spark.streaming import validated_exactly_once_sink
+    from dbfs_spark_cache_spark.streaming import exactly_once_append_sink
 
     base = str(tmp_path / "eo")
     batch = spark.range(4).withColumn("__valid", F.lit(True))
-    sink = validated_exactly_once_sink(base, F.col("id") > 1)
+    sink = exactly_once_append_sink(base, valid=F.col("id") > 1)
     with pytest.raises(ValueError, match="__valid"):
         sink(batch, 0)
     # and nothing was committed
@@ -173,13 +173,13 @@ def test_exactly_once_reader_serves_evolved_schema(spark, tmp_path):
 
 def test_quarantine_reader_serves_evolved_schema(spark, tmp_path):
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         read_quarantine,
-        validated_exactly_once_sink,
     )
 
     base = str(tmp_path / "eo_q_evolve")
     gate = F.col("id") % 2 == 0
-    sink = validated_exactly_once_sink(base, gate)
+    sink = exactly_once_append_sink(base, valid=gate)
     sink(spark.range(4).withColumn("a", F.col("id") * 2), 0)
     sink(
         spark.range(4, 8)

@@ -292,9 +292,9 @@ def test_validated_sink_crash_before_marker_restart(spark, tmp_path):
     quarantine count."""
     from dbfs_spark_cache_spark import fs
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         read_exactly_once_output,
         read_quarantine,
-        validated_exactly_once_sink,
     )
 
     src = str(tmp_path / "src")
@@ -303,7 +303,7 @@ def test_validated_sink_crash_before_marker_restart(spark, tmp_path):
     rows = [(1, "a", 1.0), (2, "a", -5.0), (3, "b", 2.0), (4, "b", None)]
     _write_rows(spark, f"{src}/b=1", rows, mtime=time.time() - 600)
 
-    sink = validated_exactly_once_sink(base, F.col("value") > 0)
+    sink = exactly_once_append_sink(base, valid=F.col("value") > 0)
     with _CrashWriteText(fs, "/_committed/") as crash:
         with pytest.raises(Exception):
             _drain(_stream(spark, src), sink, ckpt)
@@ -382,7 +382,7 @@ def test_fold_and_truncate_growing_index_across_restart(spark, tmp_path):
 
     # nothing committed yet: fold is a no-op, truncate says so
     assert fold_growing_index(spark, base, out) is None
-    assert truncate_growing_index(base) is False
+    assert truncate_growing_index(base, out) is False
 
     write_docs(f"{src}/b=1", [novel], now - 600)
     drain(corpus_index)
@@ -391,8 +391,8 @@ def test_fold_and_truncate_growing_index_across_restart(spark, tmp_path):
     folded = fold_growing_index(spark, base, out)
     assert folded is not None and folded.count() > 0
     n_folded = folded.count()
-    assert truncate_growing_index(base) is True
-    assert truncate_growing_index(base) is False  # idempotent
+    assert truncate_growing_index(base, out) is True
+    assert truncate_growing_index(base, out) is False  # idempotent
     assert read_exactly_once_output(spark, f"{base}/index") is None
     # materialization: the folded frame survives the deletion it enables
     assert folded.count() == n_folded

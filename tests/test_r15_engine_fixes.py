@@ -10,9 +10,10 @@
    refuses an ``out_path`` under ``base_path`` (the truncate would
    delete the fold output).
 2. (guard) ``truncate_growing_index`` refuses — loudly — a ledger
-   carrying committed batch ids the last completed fold's stamp does
-   not cover: the mechanical form of the "stream stopped, fold first"
-   contract that previously lived only in the docstring.
+   carrying committed batch ids the fold's ``_FOLDED_OK`` marker at
+   ``out_path`` does not cover: the mechanical form of the "stream
+   stopped, fold first" contract that previously lived only in the
+   docstring.
 3. (low) ``truncate_growing_index`` raises when the removal FAILS while
    the path exists — fs.remove's swallowed-OSError False was
    indistinguishable from "nothing to remove".
@@ -89,7 +90,7 @@ def test_fold_is_cumulative_across_cycles(spark, tmp_path):
     folded1 = fold_growing_index(spark, base, out)
     ids1 = {r.corpus_doc_id for r in folded1.select("corpus_doc_id").distinct().collect()}
     assert d_a[0] in ids1
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
     # cycle 2: the restarted stream continues batch ids; SAME out_path
     sink2 = growing_corpus_dedup_sink(
@@ -103,7 +104,7 @@ def test_fold_is_cumulative_across_cycles(spark, tmp_path):
         "the second fold destroyed the first cycle's band rows — "
         "documents ingested before the prior fold stop matching"
     )
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
     # idempotence: re-folding with an empty sink returns the same set
     folded3 = fold_growing_index(spark, base, out)
@@ -206,17 +207,17 @@ def test_truncate_refuses_unfolded_batches(spark, tmp_path):
 
     # no fold at all -> refuse
     with pytest.raises(RuntimeError, match="not covered by a completed fold"):
-        truncate_growing_index(base)
+        truncate_growing_index(base, out)
 
     fold_growing_index(spark, base, out)
     # a batch commits AFTER the fold (stream not actually stopped)
     sink(_docs_df(spark, [_doc(6_000_002, "guardB")]), 1)
     with pytest.raises(RuntimeError, match=r"\[1\]"):
-        truncate_growing_index(base)
+        truncate_growing_index(base, out)
 
     # re-fold absorbs it; truncate now proceeds
     fold_growing_index(spark, base, out)
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
 
 # ---------------------------------------------------------------------------
@@ -234,9 +235,10 @@ def test_truncate_raises_on_failed_removal(spark, tmp_path, monkeypatch):
 
     corpus_index = corpus_band_index_frame(_docs_df(spark, [_doc(1, "cs4")]))
     base = str(tmp_path / "grow")
+    out = str(tmp_path / "folded")
     sink = growing_corpus_dedup_sink(base, corpus_index, threshold=0.5)
     sink(_docs_df(spark, [_doc(7_000_001, "failA")]), 0)
-    fold_growing_index(spark, base, str(tmp_path / "folded"))
+    fold_growing_index(spark, base, out)
 
     real_remove = fs.remove
 
@@ -247,11 +249,11 @@ def test_truncate_raises_on_failed_removal(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(fs, "remove", failing_remove)
     with pytest.raises(OSError, match="failed to remove"):
-        truncate_growing_index(base)
+        truncate_growing_index(base, out)
 
     monkeypatch.setattr(fs, "remove", real_remove)
-    assert truncate_growing_index(base) is True
-    assert truncate_growing_index(base) is False  # absent stays False
+    assert truncate_growing_index(base, out) is True
+    assert truncate_growing_index(base, out) is False  # absent stays False
 
 
 # ---------------------------------------------------------------------------

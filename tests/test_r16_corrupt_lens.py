@@ -218,12 +218,12 @@ def test_find_corrupt_batches_covers_quarantine(spark, tmp_path):
     loss is the same silent-forget class as clean-data loss (those rows
     are the re-ingest queue)."""
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         find_corrupt_batches,
-        validated_exactly_once_sink,
     )
 
     base = str(tmp_path / "vsink")
-    sink = validated_exactly_once_sink(base, F.col("text").isNotNull())
+    sink = exactly_once_append_sink(base, valid=F.col("text").isNotNull())
     sink(_docs_df(spark, [(1, "good"), (2, None)]), 0)
     assert find_corrupt_batches(base) == []
     victim = sorted(glob.glob(f"{base}/_quarantine/batch_id=0/part-*"))[0]

@@ -106,7 +106,7 @@ def test_fold_cumulative_under_markerless_committer(markerless, tmp_path):
         "the markerless scenario is what this test exists to cover"
     )
     assert os.path.exists(f"{out}/_FOLDED_OK")
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
     sink2 = growing_corpus_dedup_sink(
         base, corpus_index.unionByName(folded1), threshold=0.5
@@ -204,7 +204,7 @@ def test_fold_refuses_markerless_prior_dataset(spark, tmp_path):
     sink = growing_corpus_dedup_sink(base, corpus_index, threshold=0.5)
     sink(_docs_df(spark, [d_a]), 0)
     fold_growing_index(spark, base, out)
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
     os.remove(f"{out}/_FOLDED_OK")  # as a pre-marker fold left it
 
     sink2 = growing_corpus_dedup_sink(base, corpus_index, threshold=0.5)
@@ -351,14 +351,15 @@ def test_writer_record_closes_markerless_reader_quadrant(extended):
 
 
 # ---------------------------------------------------------------------------
-# 5. fold stamp <-> ledger compaction interplay (VERDICT r15 #5)
+# 5. fold coverage <-> ledger compaction interplay
 
 
 def test_fold_stamp_survives_ledger_compaction(spark, tmp_path):
     """compact_commit_ledger on the growing sink's index sub-ledger must
-    fold only digit-stem markers: the fold stamp (_folded.txt) survives,
-    compacted ids stay visible through the manifest, and a truncate of a
-    fully-folded ledger still succeeds after compaction."""
+    fold only digit-stem markers: compacted ids stay visible through the
+    manifest, and a truncate of a fully-folded ledger still succeeds
+    after compaction (the fold's coverage lives in its own marker at
+    out_path, which compaction never touches)."""
     from dbfs_spark_cache_spark.operators.dedup import corpus_band_index_frame
     from dbfs_spark_cache_spark.streaming import (
         compact_commit_ledger,
@@ -378,14 +379,9 @@ def test_fold_stamp_survives_ledger_compaction(spark, tmp_path):
     assert 8_000_001 in ids
 
     assert compact_commit_ledger(f"{base}/index") == 1
-    ledger = f"{base}/index/_committed"
-    assert os.path.exists(f"{ledger}/_folded.txt"), (
-        "compaction deleted the fold stamp — every later truncate would "
-        "refuse (or worse, a stampless path would forget documents)"
-    )
-    assert not os.path.exists(f"{ledger}/0.txt")
+    assert not os.path.exists(f"{base}/index/_committed/0.txt")
     # fully folded + compacted: truncate proceeds
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
 
 def test_compact_then_truncate_refuses_post_fold_batch(spark, tmp_path):
@@ -411,14 +407,14 @@ def test_compact_then_truncate_refuses_post_fold_batch(spark, tmp_path):
 
     assert compact_commit_ledger(f"{base}/index") == 2
     with pytest.raises(RuntimeError, match="not covered"):
-        truncate_growing_index(base)
+        truncate_growing_index(base, out)
     # the next fold absorbs the compacted id (manifest-visible) and the
     # flow completes
     folded = fold_growing_index(spark, base, out)
     ids = {r.corpus_doc_id for r in
            folded.select("corpus_doc_id").distinct().collect()}
     assert {8_100_001, 8_100_002} <= ids
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
 
 # ---------------------------------------------------------------------------
@@ -457,17 +453,15 @@ def test_cache_if_triggered_respects_gate_and_caches_when_cleared(extended):
 
 
 # ---------------------------------------------------------------------------
-# 7. stamp <-> published-dataset cross-check (fold race / mid-swap crash
-#    aftermath — the one window the stamp alone could not see)
+# 7. the published dataset's own marker is the one coverage record
 
 
 def test_truncate_refuses_stamp_dataset_mismatch(spark, tmp_path):
-    """Dual-owner race aftermath (or a crash between swap and stamp): the
-    stamp claims coverage of ids the PUBLISHED dataset never absorbed —
-    e.g. owner B's stamp {0,1} survives while owner A's stale union
-    (ids {0} only) was renamed into place last. Truncating on the stamp
-    alone would silently forget batch 1's documents; the cross-check
-    refuses, and a re-fold heals (the ledger is still intact)."""
+    """Dual-owner race aftermath (or a stale union renamed into place
+    last): the published dataset's marker says it absorbed only batch 0
+    while the ledger holds {0,1}. Truncating would silently forget batch
+    1's documents; the guard refuses, and a re-fold heals (the ledger is
+    still intact)."""
     from dbfs_spark_cache_spark import fs
     from dbfs_spark_cache_spark.operators.dedup import corpus_band_index_frame
     from dbfs_spark_cache_spark.streaming import (
@@ -484,8 +478,6 @@ def test_truncate_refuses_stamp_dataset_mismatch(spark, tmp_path):
     sink(_docs_df(spark, [_doc(8_200_002, "rcB")]), 1)
     fold_growing_index(spark, base, out)
 
-    # simulate the stale-union-renamed-last aftermath: the dataset's own
-    # marker says it absorbed only batch 0, while the stamp covers {0,1}
     marker = fs.read_text(f"{out}/_FOLDED_OK")
     fs.write_text(
         f"{out}/_FOLDED_OK",
@@ -494,21 +486,21 @@ def test_truncate_refuses_stamp_dataset_mismatch(spark, tmp_path):
             for line in marker.splitlines()
         ),
     )
-    with pytest.raises(RuntimeError, match="absorbed"):
-        truncate_growing_index(base)
+    with pytest.raises(RuntimeError, match=r"\[1\] are not covered"):
+        truncate_growing_index(base, out)
 
-    # re-fold heals: fresh union + fresh marker/stamp, truncate proceeds
+    # re-fold heals: fresh union + fresh marker, truncate proceeds
     folded = fold_growing_index(spark, base, out)
     ids = {r.corpus_doc_id for r in
            folded.select("corpus_doc_id").distinct().collect()}
     assert {8_200_001, 8_200_002} <= ids
-    assert truncate_growing_index(base) is True
+    assert truncate_growing_index(base, out) is True
 
 
-def test_truncate_backcompat_with_pre_crosscheck_stamp(spark, tmp_path):
-    """Stamps written before the out= line existed (and markers without
-    ids=) skip the cross-check — the original coverage guard still
-    applies, old deployments keep truncating."""
+def test_truncate_refuses_ids_less_marker_until_refold(spark, tmp_path):
+    """A fold marker without the ``ids=`` line (written before the marker
+    carried coverage) covers nothing: truncate refuses, and the next
+    fold writes a full marker that lets it proceed."""
     from dbfs_spark_cache_spark import fs
     from dbfs_spark_cache_spark.operators.dedup import corpus_band_index_frame
     from dbfs_spark_cache_spark.streaming import (
@@ -524,8 +516,6 @@ def test_truncate_backcompat_with_pre_crosscheck_stamp(spark, tmp_path):
     sink(_docs_df(spark, [_doc(8_300_001, "bcA")]), 0)
     fold_growing_index(spark, base, out)
 
-    # rewrite both artifacts to their pre-upgrade shapes
-    fs.write_text(f"{base}/index/_committed/_folded.txt", "0")
     marker = fs.read_text(f"{out}/_FOLDED_OK")
     fs.write_text(
         f"{out}/_FOLDED_OK",
@@ -534,4 +524,11 @@ def test_truncate_backcompat_with_pre_crosscheck_stamp(spark, tmp_path):
             if not line.startswith("ids=")
         ),
     )
-    assert truncate_growing_index(base) is True
+    with pytest.raises(RuntimeError, match="not covered"):
+        truncate_growing_index(base, out)
+
+    folded = fold_growing_index(spark, base, out)
+    assert 8_300_001 in {
+        r.corpus_doc_id for r in folded.select("corpus_doc_id").collect()
+    }
+    assert truncate_growing_index(base, out) is True

@@ -1,5 +1,5 @@
 """Two-process concurrent-fold hammer (r16 late; process-level twin of
-the in-process stamp/cross-check pins in test_r16_engine_fixes.py).
+the in-process fold-coverage pins in test_r16_engine_fixes.py).
 
 The fold flow's contract is SINGLE owner, stream stopped — this lens
 certifies what happens when that contract is violated for real: two child
@@ -10,7 +10,7 @@ allowed failures), but the system-level invariant must hold:
 
     TRUNCATION NEVER SUCCEEDS WHILE THE PUBLISHED DATASET IS MISSING A
     COMMITTED BATCH'S DOCUMENTS — it either succeeds with everything
-    present, or refuses (coverage guard / stamp-dataset cross-check) and
+    present, or refuses (the published marker's coverage guard) and
     one healing re-fold restores completeness.
 
 The race is genuinely nondeterministic; the assertions are written to be
@@ -104,7 +104,7 @@ def test_concurrent_folds_never_silently_forget(spark, tmp_path):
         }
 
     try:
-        removed = truncate_growing_index(base)
+        removed = truncate_growing_index(base, out)
     except RuntimeError:
         # a guard refused — the ledger is intact, one re-fold heals
         folded = fold_growing_index(spark, base, out)
@@ -116,7 +116,7 @@ def test_concurrent_folds_never_silently_forget(spark, tmp_path):
             f"healing re-fold lost documents: {sorted(ids)} "
             f"(children rc={codes}, out={results})"
         )
-        assert truncate_growing_index(base) is True
+        assert truncate_growing_index(base, out) is True
     else:
         # truncation was ALLOWED: the published dataset must already
         # carry every committed batch's band rows — this assert is the

@@ -8,8 +8,9 @@
    ``_CACHE_COMMITTED`` marker with its data-file inventory, now lives in
    the data location, which no ``cache_path`` moves.
 
-2. ``_containment_norm`` normalizes dot segments in scheme'd URIs too
-   (ADVICE r16 #2): ``dbfs:/sink/index/../..`` previously evaded the
+2. The fold-containment normalization (``fs.canonical_path``)
+   normalizes dot segments in scheme'd URIs too (ADVICE r16 #2):
+   ``dbfs:/sink/index/../..`` previously evaded the
    fold containment guards that protect the sink tree from the swap's
    recursive remove.
 
@@ -163,21 +164,21 @@ def test_default_base_guards_unchanged(extended):
 
 
 def test_containment_norm_schemed_uri_dot_segments():
-    from dbfs_spark_cache_spark.streaming import _containment_norm
+    from dbfs_spark_cache_spark.fs import canonical_path
 
     # scheme'd URIs must normalize their path component like local paths
-    assert _containment_norm("dbfs:/sink/index/../..") == _containment_norm(
+    assert canonical_path("dbfs:/sink/index/../..") == canonical_path(
         "dbfs:/"
     )
-    assert _containment_norm("s3://bucket/sink/./index/..") == (
-        _containment_norm("s3://bucket/sink")
+    assert canonical_path("s3://bucket/sink/./index/..") == (
+        canonical_path("s3://bucket/sink")
     )
     # and authority must be preserved, never collapsed into the path
-    assert _containment_norm("s3://bucket-a/x") != _containment_norm(
+    assert canonical_path("s3://bucket-a/x") != canonical_path(
         "s3://bucket-b/x"
     )
     # local behavior unchanged
-    assert _containment_norm("/sink/index/../..") == _containment_norm("/")
+    assert canonical_path("/sink/index/../..") == canonical_path("/")
 
 
 def test_fold_rejects_escaping_schemed_out_path(tmp_path):

@@ -1,13 +1,13 @@
 """r18 slot-free engine fixes + pinned contracts.
 
-1. ``_containment_norm`` collapses repeated slashes before normpath
-   (ADVICE r17 #2): POSIX normpath preserves exactly two leading
-   slashes, so ``s3://b//sink/fold`` / ``//tmp/sink/fold`` evaded both
+1. The fold-containment normalization (``fs.canonical_path``)
+   collapses repeated slashes before normpath (ADVICE r17 #2): POSIX
+   normpath preserves exactly two leading slashes, so ``s3://b//sink/fold`` / ``//tmp/sink/fold`` evaded both
    fold-containment guards while the filesystem resolves them into the
    guarded tree.
-2. ``_containment_norm`` rejects scheme'd RELATIVE paths (ADVICE r17
-   #4): ``dbfs:sink/../..`` was returned verbatim and compared raw —
-   the same evasion class the r17 dot-segment fix closed for absolute
+2. The fold-containment normalization (``fs.canonical_path``) rejects
+   scheme'd RELATIVE paths (ADVICE r17 #4): ``dbfs:sink/../..`` was
+   returned verbatim and compared raw — the same evasion class the r17 dot-segment fix closed for absolute
    scheme'd URIs. Hadoop's Path refuses the form too.
 3. ``find_corrupt_entries`` / CLI ``--scan-corrupt`` cover entries
    written with a custom ``cache_path``: reads refuse a corrupt
@@ -32,20 +32,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # ---------------------------------------------------------------- lens 1+2
 
 def test_containment_norm_collapses_duplicate_slashes():
-    from dbfs_spark_cache_spark.streaming import _containment_norm
+    from dbfs_spark_cache_spark.fs import canonical_path
 
-    assert _containment_norm("s3://b//sink/fold") == _containment_norm(
+    assert canonical_path("s3://b//sink/fold") == canonical_path(
         "s3://b/sink/fold"
     )
-    assert _containment_norm("//tmp/sink/fold") == _containment_norm(
+    assert canonical_path("//tmp/sink/fold") == canonical_path(
         "/tmp/sink/fold"
     )
-    assert _containment_norm("dbfs://a//b///c") == _containment_norm(
+    assert canonical_path("dbfs://a//b///c") == canonical_path(
         "dbfs://a/b/c"
     )
-    assert _containment_norm("dbfs://x//..") == "dbfs://x/"
+    assert canonical_path("dbfs://x//..") == "dbfs://x/"
     # the authority's own double slash must SURVIVE (s3://b/k is not s3:/b/k)
-    assert _containment_norm("s3://bucket/k").startswith("s3://bucket")
+    assert canonical_path("s3://bucket/k").startswith("s3://bucket")
 
 
 def test_duplicate_slash_fold_evasion_is_caught():
@@ -65,20 +65,18 @@ def test_duplicate_slash_fold_evasion_is_caught():
 
 
 def test_containment_norm_rejects_schemed_relative_paths():
-    from dbfs_spark_cache_spark.streaming import (
-        _check_fold_containment,
-        _containment_norm,
-    )
+    from dbfs_spark_cache_spark.fs import canonical_path
+    from dbfs_spark_cache_spark.streaming import _check_fold_containment
 
     for bad in ("dbfs:sink/../..", "s3:relative/tail", "hdfs:a"):
         with pytest.raises(ValueError):
-            _containment_norm(bad)
+            canonical_path(bad)
     # guards propagate the rejection instead of comparing raw strings
     with pytest.raises(ValueError):
         _check_fold_containment("dbfs:sink/../..", "dbfs:/sink")
     # bare-scheme and absolute forms keep working
-    assert _containment_norm("dbfs:") == "dbfs:/"
-    assert _containment_norm("dbfs:/sink/x/..") == "dbfs:/sink"
+    assert canonical_path("dbfs:") == "dbfs:/"
+    assert canonical_path("dbfs:/sink/x/..") == "dbfs:/sink"
 
 
 # ------------------------------------------------------------------ scan 3

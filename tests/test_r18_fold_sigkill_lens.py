@@ -1,12 +1,13 @@
 """r18 fold-maintenance SIGKILL lens: whole-JVM death inside
-``fold_growing_index``'s three documented crash windows, real processes.
+``fold_growing_index``'s two documented crash windows, real processes.
 
-The fold docstring claims crash safety for three windows — (A) after the
-union's parquet write but before the ``_FOLDED_OK`` marker, (B) after
-the swap but before the coverage stamp, (C) between removing the old
-``out_path`` and renaming the temp in — and the r15 FS-fault lens
-proved them with in-process exception injection. This lens upgrades
-that to process-level: a child JVM is SIGKILLed (no atexit, no JVM
+The fold docstring claims crash safety for two windows — (A) after the
+union's parquet write but before the ``_FOLDED_OK`` marker, (C) between
+removing the old ``out_path`` and renaming the temp in — and the r15
+FS-fault lens proved them with in-process exception injection. (The
+marker, coverage included, rides the rename, so there is no window
+between publishing the dataset and recording what it covers.) This lens
+upgrades that to process-level: a child JVM is SIGKILLed (no atexit, no JVM
 shutdown hooks, no Python finally) while stalled at each window, the
 parent asserts the window's documented intermediate state (including
 that ``truncate_growing_index`` REFUSES while coverage is broken), and
@@ -49,7 +50,7 @@ from pyspark.sql import SparkSession
 from dbfs_spark_cache_spark import fs
 from dbfs_spark_cache_spark import streaming as st
 
-mode = {mode!r}          # "kill-marker" | "kill-stamp" | "kill-rename" | "finish"
+mode = {mode!r}          # "kill-marker" | "kill-rename" | "finish"
 base = {base!r}
 out = {out!r}
 sentinel = {sentinel!r}
@@ -63,13 +64,6 @@ if mode == "kill-marker":
     real = fs.write_text
     def patched(path, content):
         if path.endswith("_FOLDED_OK"):
-            _stall()
-        real(path, content)
-    fs.write_text = patched
-elif mode == "kill-stamp":
-    real = fs.write_text
-    def patched(path, content):
-        if path.endswith("_folded.txt"):
             _stall()
         real(path, content)
     fs.write_text = patched
@@ -146,7 +140,7 @@ _DOCS = [
 ]
 
 
-@pytest.mark.parametrize("window", ["kill-marker", "kill-stamp", "kill-rename"])
+@pytest.mark.parametrize("window", ["kill-marker", "kill-rename"])
 def test_fold_sigkill_window_heals(spark, tmp_path, window):
     from dbfs_spark_cache_spark import streaming as st
 
@@ -188,9 +182,6 @@ def test_fold_sigkill_window_heals(spark, tmp_path, window):
     if window == "kill-marker":
         # union written to a temp, marker missing, dataset not published
         assert not os.path.exists(out)
-    elif window == "kill-stamp":
-        # swap done: the dataset IS published and complete...
-        assert os.path.exists(os.path.join(out, "_FOLDED_OK"))
     elif window == "kill-rename":
         # old dataset removed, new one not renamed in: out is ABSENT but
         # a complete marker-carrying temp survives
@@ -199,10 +190,10 @@ def test_fold_sigkill_window_heals(spark, tmp_path, window):
         temps = [d for d in os.listdir(parent) if "__folding__" in d]
         assert temps, "no fold temp survived the kill"
 
-    # ...but in EVERY window the truncate guard must refuse: coverage is
-    # not provably stamped for the committed ledger ids
+    # in EVERY window the truncate guard must refuse: no published fold
+    # at out covers the committed ledger ids
     with pytest.raises(RuntimeError):
-        st.truncate_growing_index(base)
+        st.truncate_growing_index(base, out)
 
     # --- fresh JVM converges ---
     _run_child("finish", base, out, sentinel)
@@ -213,4 +204,4 @@ def test_fold_sigkill_window_heals(spark, tmp_path, window):
         f"missing={len(want - got)} extra={len(got - want)}"
     )
     # and with coverage restored the truncate proceeds
-    assert st.truncate_growing_index(base) is True
+    assert st.truncate_growing_index(base, out) is True

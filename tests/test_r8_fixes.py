@@ -171,16 +171,16 @@ def test_validated_sink_records_schema_for_all_quarantined_batch(spark, tmp_path
     from pyspark.sql import functions as F
 
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         read_exactly_once_output,
         read_quarantine,
-        validated_exactly_once_sink,
     )
 
     base = str(tmp_path / "eo_gated")
     batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
         "event_id", "user_id", "value"
     ).limit(6)
-    sink = validated_exactly_once_sink(base, F.lit(False))
+    sink = exactly_once_append_sink(base, valid=F.lit(False))
     sink(batch, 0)
     _strip_part_files(f"{base}/batch_id=0")
 

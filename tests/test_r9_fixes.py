@@ -150,7 +150,6 @@ def test_exactly_once_readers_opt_in_batch_id(spark, tmp_path):
         exactly_once_append_sink,
         read_exactly_once_output,
         read_quarantine,
-        validated_exactly_once_sink,
     )
 
     base = str(tmp_path / "eo_bid")
@@ -195,7 +194,7 @@ def test_exactly_once_readers_opt_in_batch_id(spark, tmp_path):
 
     # quarantine view: trace WHICH batch produced the bad rows
     gated = str(tmp_path / "eo_bid_gated")
-    gate = validated_exactly_once_sink(gated, F.lit(False))
+    gate = exactly_once_append_sink(gated, valid=F.lit(False))
     gate(batch.limit(2), 0)
     gate(batch.limit(4), 1)
     q = read_quarantine(spark, gated, include_batch_id=True)

@@ -206,8 +206,8 @@ def test_clean_redelivery_sweeps_stale_quarantine(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         read_quarantine,
-        validated_exactly_once_sink,
     )
     from tests.conftest import SF_SMOKE
 
@@ -218,7 +218,7 @@ def test_clean_redelivery_sweeps_stale_quarantine(spark, tmp_path):
     # the stale partial quarantine dir from the crashed attempt
     ev.limit(5).write.parquet(f"{base}/_quarantine/batch_id=0")
 
-    sink = validated_exactly_once_sink(base, F.lit(True))  # all rows valid
+    sink = exactly_once_append_sink(base, valid=F.lit(True))  # all rows valid
     sink(ev, 0)
 
     assert not os.path.exists(f"{base}/_quarantine/batch_id=0"), (

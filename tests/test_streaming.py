@@ -3,6 +3,7 @@ must produce the same aggregates as their batch twins once the stream is
 fully processed."""
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, TESTDATA
@@ -645,8 +646,8 @@ def test_exactly_once_sink_end_to_end_and_redelivery(spark, tmp_path):
     marker) is invisible to readers and healed by redelivery overwrite."""
     from dbfs_spark_cache_spark.streaming import (
         exactly_once_append_sink,
-        read_exactly_once_output,
         read_events_stream,
+        read_exactly_once_output,
         write_stream_exactly_once,
     )
 
@@ -982,16 +983,16 @@ def test_validated_sink_quarantines_invalid_rows(spark, tmp_path):
     NULL predicate results — not-TRUE semantics) land in quarantine, the
     marker records the audit count, and redelivery stays a no-op."""
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         read_events_stream,
         read_exactly_once_output,
-        validated_exactly_once_sink,
     )
 
     base = str(tmp_path / "gated")
     stream = read_events_stream(spark, SF_SMOKE).select(
         "event_id", "user_id", "event_type", "value"
     )
-    sink = validated_exactly_once_sink(base, F.col("value") >= 20)
+    sink = exactly_once_append_sink(base, valid=F.col("value") >= 20)
     (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "gated_ckpt"))
@@ -1019,14 +1020,14 @@ def test_read_quarantine_returns_committed_bad_rows(spark, tmp_path):
     """read_quarantine surfaces exactly the gated-out rows of committed
     batches, and returns None for a sink with no quarantined data."""
     from dbfs_spark_cache_spark.streaming import (
+        exactly_once_append_sink,
         read_events_stream,
         read_quarantine,
-        validated_exactly_once_sink,
     )
 
     base = str(tmp_path / "gated2")
     stream = read_events_stream(spark, SF_SMOKE).select("event_id", "value")
-    sink = validated_exactly_once_sink(base, F.col("value") >= 20)
+    sink = exactly_once_append_sink(base, valid=F.col("value") >= 20)
     (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "gated2_ckpt"))
@@ -1040,7 +1041,7 @@ def test_read_quarantine_returns_committed_bad_rows(spark, tmp_path):
     assert q.where("value >= 20").count() == 0
 
     clean_base = str(tmp_path / "gated3")
-    sink_all = validated_exactly_once_sink(clean_base, F.lit(True))
+    sink_all = exactly_once_append_sink(clean_base, valid=F.lit(True))
     (
         read_events_stream(spark, SF_SMOKE).select("event_id", "value")
         .writeStream.foreachBatch(sink_all)
@@ -1468,3 +1469,72 @@ def test_streaming_aggs_survive_nonfinite_values(spark, tmp_path):
     assert len(t) == 1
     assert t[0].n_events == 2
     assert math.isfinite(t[0].total_value) and t[0].total_value == 15.0
+
+
+# ---------------------------------------------------------------------------
+# Fold coverage and path identity
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_truncate_refuses_another_sinks_fold(spark, tmp_path):
+    """The fold's own marker is its one coverage record: it names the
+    sink it folded (``base=``) and the ledger ids it absorbed (``ids=``),
+    and no stamp is left in the ledger. Another sink with the same batch
+    ids is not covered by it."""
+    from dbfs_spark_cache_spark.operators.dedup import corpus_band_index_frame
+    from dbfs_spark_cache_spark.streaming import (
+        fold_growing_index,
+        growing_corpus_dedup_sink,
+        truncate_growing_index,
+    )
+
+    corpus_index = corpus_band_index_frame(
+        _docs(spark, [(1, "static corpus document text")])
+    )
+    base_a, base_b = str(tmp_path / "grow_a"), str(tmp_path / "grow_b")
+    out = str(tmp_path / "folded")
+    growing_corpus_dedup_sink(base_a, corpus_index)(
+        _docs(spark, [(2, "first sink document body")]), 0
+    )
+    growing_corpus_dedup_sink(base_b, corpus_index)(
+        _docs(spark, [(3, "second sink document body")]), 0
+    )
+    fold_growing_index(spark, base_b, out)
+
+    with open(f"{out}/_FOLDED_OK") as fh:
+        marker = fh.read().splitlines()
+    assert f"base={base_b}" in marker and "ids=0" in marker
+    ledger = sorted(os.listdir(f"{base_b}/index/_committed"))
+    assert ledger == ["0.txt", "_schema.json"]  # no stamp beside the markers
+
+    with pytest.raises(RuntimeError, match="not covered"):
+        truncate_growing_index(base_a, out)
+    assert truncate_growing_index(base_b, out) is True
+
+
+def test_fold_containment_resolves_relative_paths(tmp_path, monkeypatch):
+    """A relative path is resolved against the working directory before
+    the containment check: ``a`` is an ancestor of ``<cwd>/a/sink``, so
+    the fold swap's ``remove("a")`` would delete the sink tree."""
+    from dbfs_spark_cache_spark.streaming import _check_fold_containment
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="lives under fold out_path"):
+        _check_fold_containment("a", f"{tmp_path}/a/sink")
+    with pytest.raises(ValueError, match="under the sink base"):
+        _check_fold_containment(f"{tmp_path}/a/sink/out", "a/sink")
+    _check_fold_containment("folds/out", f"{tmp_path}/a/sink")
+
+
+def test_claim_accepts_doubled_slash_and_dot_segment_spellings(tmp_path):
+    from dbfs_spark_cache_spark.streaming import claim_sink_checkpoint
+
+    base = str(tmp_path / "sink")
+    claim_sink_checkpoint(base, f"{tmp_path}/x/ckpt")
+    for same in ("x//ckpt", "x/./ckpt", "x/y/../ckpt"):
+        claim_sink_checkpoint(base, f"{tmp_path}/{same}")
+    with pytest.raises(ValueError, match="already belongs"):
+        claim_sink_checkpoint(base, f"{tmp_path}/x/other")
