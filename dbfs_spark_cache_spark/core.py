@@ -6,7 +6,12 @@ dbfs_spark_cache/core_caching.py) Spark-first:
 * materialized caches are written as managed tables in
   ``config.CACHE_DATABASE`` (parquet, or delta when ``CACHE_FORMAT`` asks
   for it and its jars are present); a parquet entry's one commit record is
-  the writer's own marker in its data directory (``layout``);
+  the writer's own marker in its data directory, which also records the
+  written schema (``layout``);
+* a direct-data entry from a pandas frame that ``createDataFrame`` would
+  convert through Arrow is written on the driver instead: one Parquet file
+  from PySpark's own conversion (``direct_data``), no Spark job and no
+  catalog table;
 * the metadata sidecar lives under ``config.SPARK_CACHE_DIR/<hash>/`` via
   the engine's FS layer (local os / Hadoop FS) instead of ``dbutils``;
 * a cache hit replaces the user's whole logical plan with a columnar scan
@@ -28,11 +33,13 @@ from datetime import datetime
 from typing import Any, Callable, List, Mapping, NamedTuple, Optional, Tuple, Union
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from . import fs, layout
 from .config import config
+from .direct_data import driver_table, write_parquet
 from .hashing import hash_input_data
 from .layout import table_name_for_hash
 from .plans.fingerprint import (
@@ -146,8 +153,6 @@ def _save_as_cache_table(
     scan of the entry's files carries no bucket spec, so it would buy
     nothing (``operators.scale.write_bucketed`` writes bucketed tables).
     """
-    ensure_cache_database(df.sparkSession)
-
     def save(fmt: str) -> str:
         writer = df.write.mode("overwrite").format(fmt)
         if partition_by:
@@ -185,8 +190,9 @@ def _scan_entry(
     prints one plan and keys one way whichever session wrote it; the
     input walk recognises the entry by its directory
     (``layout.cached_input_pattern``). A parquet scan takes ``schema``,
-    the schema of the frame whose key names the entry, rather than
-    inferring one: inference types a ``partition_by`` column from its
+    the schema of the frame whose key names the entry or the one its
+    commit marker records, rather than inferring one: inference reads
+    every file footer, and types a ``partition_by`` column from its
     directory names (a ``bigint`` column reads back as ``int``, and a
     frame filtered on it would key differently)."""
     reader = spark.read.format(fmt)
@@ -201,7 +207,9 @@ def _read_cache_table(
     schema: Optional[StructType] = None,
 ) -> Optional[DataFrame]:
     """Scan a cache entry's data location, or None when no committed,
-    intact data is there. ``schema``: see ``_scan_entry``.
+    intact data is there. ``schema``: see ``_scan_entry``; when the caller
+    passes none, a parquet scan takes the schema its commit marker
+    records, and only a marker without one leaves it to inference.
 
     A parquet location is committed when it holds its commit marker
     (``layout.COMMIT_MARKER``). The write is remove-then-rewrite and
@@ -225,6 +233,8 @@ def _read_cache_table(
             )
             return None
         fmt = "parquet"
+        if schema is None:
+            schema = layout.recorded_schema(marker)
     elif layout.is_transactional(location):
         fmt = "delta"
     else:
@@ -239,22 +249,27 @@ def _read_cache_table(
 
 
 def _materialize(
-    df: DataFrame,
+    spark: SparkSession,
     key: str,
     sidecars: str,
     metadata_txt: str,
-    partition_by: Optional[List[str]] = None,
-) -> DataFrame:
+    schema: StructType,
+    write: Callable[[str, str], str],
+) -> Optional[DataFrame]:
     """The write protocol shared by ``write_cache`` and
     ``create_cached_dataframe``; the caller holds ``key``'s lock.
+    ``write(table, location)`` writes data of ``schema`` and returns the
+    format written: Spark's ``saveAsTable`` (``_save_as_cache_table``),
+    or the driver's one Parquet file for a direct-data entry
+    (``_write_on_driver``).
 
     1. Clear the data location: files another session left there would
        block ``saveAsTable``, and for a table this session wrote the
        overwrite drops its files anyway. The old commit marker goes with
        them.
-    2. Write the table.
+    2. Write the data.
     3. Commit parquet data with its marker (``layout.write_commit_marker``,
-       the data-file inventory); a Delta log commits itself.
+       the data-file inventory and ``schema``); a Delta log commits itself.
     4. Write the metadata sidecar LAST: it is the entry's liveness signal,
        so a write that dies earlier leaves no sidecar and the next call
        retries it.
@@ -262,21 +277,24 @@ def _materialize(
     Returns a scan of the files just committed, the read every later hit
     makes. The lock serializes this driver only: when another process
     removed the location or is rewriting it before step 3, the marker is
-    refused, nothing is committed and ``df`` itself is returned.
+    refused, nothing is committed and None is returned (the caller serves
+    its frame uncached).
     """
-    spark = df.sparkSession
     table = table_name_for_hash(key)
     location = layout.table_location(spark, key)
+    # The database is created even for an entry no catalog table names:
+    # DROP DATABASE ... CASCADE removes its directory only when it exists.
+    ensure_cache_database(spark)
     if fs.exists(location):
         fs.remove(location)
-    fmt = _save_as_cache_table(df, table, partition_by=partition_by)
-    if fmt == "parquet" and not layout.write_commit_marker(location):
+    fmt = write(table, location)
+    if fmt == "parquet" and not layout.write_commit_marker(location, schema):
         log.warning("Cache location %s lost this write's output before its "
                     "commit (another process removed or is rewriting it); "
                     "%s not cached", location, key)
-        return df
+        return None
     fs.write_text(layout.metadata_path(sidecars), metadata_txt)
-    return _scan_entry(spark, location, fmt, df.schema)
+    return _scan_entry(spark, location, fmt, schema)
 
 
 def read_cache_if_exist(
@@ -391,8 +409,11 @@ def write_cache(
             if existing is not None and existing != metadata_txt:
                 log.info("Cache %s metadata changed; rewriting", key)
             cached = _materialize(
-                df, key, sidecars, metadata_txt, partition_by=partition_by
+                spark, key, sidecars, metadata_txt, df.schema,
+                lambda table, _: _save_as_cache_table(df, table, partition_by),
             )
+            if cached is None:
+                cached = df
             _bump("writes")
     return cached if replace else df
 
@@ -623,7 +644,15 @@ def create_cached_dataframe(
             log.info("Direct-data cache hit: %s", cache_hash_name)
         else:
             log.info("Direct-data cache miss; creating %s", cache_hash_name)
-            source = spark.createDataFrame(data, schema=schema, **kwargs)
+            converted = driver_table(spark, data, schema, kwargs, _effective_cache_format())
+            source: Optional[DataFrame] = None
+            if converted is not None:
+                arrow, written_schema = converted
+                write = _write_on_driver(arrow, spark.sparkContext.defaultParallelism)
+            else:
+                source = spark.createDataFrame(data, schema=schema, **kwargs)
+                written_schema = source.schema
+                write = lambda table, _: _save_as_cache_table(source, table)  # noqa: E731
             # Deterministic document — NO wall-clock line: every racer on
             # this key must produce byte-identical content, because both
             # the per-key lock's re-probe and fs.write_text's lost-rename
@@ -633,10 +662,27 @@ def create_cached_dataframe(
             metadata_txt = (
                 "CACHE TYPE: Direct Data Input\n"
                 f"DATA HASH: {data_hash}\n"
-                f"SCHEMA: {source.schema.simpleString()}"
+                f"SCHEMA: {written_schema.simpleString()}"
             )
-            cached = _materialize(source, cache_hash_name, sidecars, metadata_txt)
+            cached = _materialize(spark, cache_hash_name, sidecars, metadata_txt,
+                                  written_schema, write)
+            if cached is None:
+                cached = source if source is not None else spark.createDataFrame(
+                    data, schema=schema, **kwargs)
 
     setattr(cached, "_is_direct_data_cache", True)
     setattr(cached, "_direct_data_cache_hash", cache_hash_name)
     return cached
+
+
+def _write_on_driver(arrow: pa.Table, parallelism: int) -> Callable[[str, str], str]:
+    """``_materialize``'s writer for a converted pandas frame: one Parquet
+    file of ``parallelism`` row groups, written on the driver and put at
+    the entry location; no Spark job and no catalog table (nothing reads
+    the catalog)."""
+    def write(table: str, location: str) -> str:
+        fs.put_file(f"{location}/{layout.DRIVER_DATA_FILE}",
+                    lambda path: write_parquet(arrow, path, parallelism))
+        return "parquet"
+
+    return write

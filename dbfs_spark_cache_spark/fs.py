@@ -2,8 +2,9 @@
 
 The reference talks to DBFS through ``dbutils.fs`` (reference:
 core_caching.py:47-62, cache_management.py); this engine needs the same four
-primitives (stat/list, read text, write text, remove) against whatever
-filesystem the Spark cluster uses. Strategy:
+primitives (stat/list, read text, write text, remove), plus putting a file
+written on the driver at a store path, against whatever filesystem the
+Spark cluster uses. Strategy:
 
 * local paths (``/...`` or ``file:/...``) -> plain ``os`` calls — fast, no JVM
   round-trip, correct for local[] testing;
@@ -17,7 +18,7 @@ import os
 import shutil
 from dataclasses import dataclass
 from datetime import datetime
-from typing import Dict, Iterable, Iterator, List, Optional
+from typing import Callable, Dict, Iterable, Iterator, List, Optional
 
 
 @dataclass
@@ -234,8 +235,9 @@ def write_commit_marker(path: str, name: str, extra: str = "") -> bool:
     (False, nothing written) when ``path`` lists empty, as it does once
     the data was removed, or holds a job committer's ``_temporary``, the
     in-flight output of another writer that removed ``path`` and is
-    rewriting it. Either way a marker would publish an empty or partial
-    dataset as committed."""
+    rewriting it (:func:`put_file` stages outside ``path``, so its
+    in-flight state lists empty). Either way a marker would publish an
+    empty or partial dataset as committed."""
     listing = list_dir(path)
     if not listing or any(stat.name == "_temporary" for stat in listing):
         return False
@@ -477,6 +479,58 @@ def rename(src: str, dst: str) -> None:
     jfs.mkdirs(jdst.getParent())
     if not jfs.rename(jsrc, jdst):
         raise OSError(f"rename {src} -> {dst} failed")
+
+
+def put_file(dst: str, write: Callable[[str], None]) -> None:
+    """Write a file on the driver with ``write(local_path)`` and publish
+    it at ``dst``, overwriting. The file is staged under a hidden name
+    (``.``-prefixed: listings of entries skip it) BESIDE ``dst``'s
+    directory, never in it, and renamed into place, so that directory
+    lists the whole file or none. A commit marker is written from that
+    listing (:func:`write_commit_marker`): a writer that cleared the
+    directory and is still staging its file leaves it empty, and the
+    marker is refused rather than recording a file that may never land.
+    A Hadoop-scheme ``dst`` is written in the local temp directory,
+    uploaded to its staged name with ``copyFromLocalFile`` (which deletes
+    the local copy) and renamed there. The staged files never outlive
+    the call."""
+    directory, name = dst.rstrip("/").rsplit("/", 1)
+    parent, base = directory.rsplit("/", 1)
+    staged = _temp_sibling(f"{parent}/.{base}-{name}")
+    if is_local(dst):
+        staged, directory = strip_scheme(staged), strip_scheme(directory)
+        os.makedirs(os.path.dirname(staged), exist_ok=True)
+        try:
+            write(staged)
+            os.makedirs(directory, exist_ok=True)
+            os.replace(staged, f"{directory}/{name}")
+        finally:
+            if os.path.exists(staged):
+                os.remove(staged)
+        return
+    import tempfile
+
+    from pyspark.sql import SparkSession
+
+    jvm = SparkSession.getActiveSession()._jvm  # type: ignore[union-attr]
+    jfs, jdst = _active_jvm_fs(dst)
+    jstaged = jvm.org.apache.hadoop.fs.Path(staged)
+    fd, local = tempfile.mkstemp(prefix=".put-")
+    os.close(fd)
+    try:
+        write(local)
+        jfs.copyFromLocalFile(True, True, jvm.org.apache.hadoop.fs.Path(f"file://{local}"), jstaged)
+        jfs.mkdirs(jdst.getParent())
+        # Hadoop rename does not overwrite: clear the target first.
+        if jfs.exists(jdst):
+            jfs.delete(jdst, False)
+        if not jfs.rename(jstaged, jdst):
+            raise OSError(f"rename {staged} -> {dst} failed")
+    finally:
+        if os.path.exists(local):
+            os.remove(local)
+        if jfs.exists(jstaged):
+            jfs.delete(jstaged, False)
 
 
 def remove(path: str, recursive: bool = True) -> bool:

@@ -4,15 +4,17 @@ An entry keyed ``<hash>`` (32-hex plan key, ``data_<32-hex>`` direct-data
 key, or a caller's custom ``hash_name``) has two halves:
 
 * its data: the files at ``<spark.sql.warehouse.dir>/<CACHE_DATABASE>.db/
-  <hash>``, written as the managed table ``<CACHE_DATABASE>.<hash>`` so
-  the cache database stays browsable. Nothing reads the catalog table:
-  every read of the entry scans the location, in every session, and
-  ``management`` lists the database directory as its registry. A parquet
-  location holds one commit record, the writer's own marker
-  ``_CACHE_COMMITTED`` with the data-file inventory
-  (``fs.write_commit_marker``): written after the data, on every
-  committer, and removed with the old data by a rewrite. A Delta
-  location's log is its commit record instead;
+  <hash>``. Spark's writer writes them as the managed table
+  ``<CACHE_DATABASE>.<hash>``; a direct-data entry written on the driver
+  is one file, ``DRIVER_DATA_FILE``, with no catalog table. Nothing reads
+  the catalog table: every read of the entry scans the location, in every
+  session, and ``management`` lists the database directory as its
+  registry. A parquet location holds one commit record, the writer's own
+  marker ``_CACHE_COMMITTED`` with the data-file inventory
+  (``fs.write_commit_marker``) and a ``schema=<StructType JSON>`` line
+  that hits scan with: written after the data, on every committer, and
+  removed with the old data by a rewrite. A Delta location's log is its
+  commit record instead;
 * its metadata sidecar, ``<base>/<hash>/cache_metadata.txt`` where
   ``base`` is ``SPARK_CACHE_DIR`` or the caller's ``cache_path``: the
   metadata document the key is the MD5 of (direct-data entries record
@@ -24,15 +26,20 @@ orphans every existing entry.
 """
 from __future__ import annotations
 
+import json
 import logging
 import re
 from typing import Optional
+
+from pyspark.sql.types import StructType
 
 from . import fs
 from .config import config
 
 METADATA_FILE = "cache_metadata.txt"
 COMMIT_MARKER = "_CACHE_COMMITTED"
+SCHEMA_LINE = "schema="
+DRIVER_DATA_FILE = "data.parquet"
 
 log = logging.getLogger(__name__)
 
@@ -78,11 +85,27 @@ def commit_marker_path(location: str) -> str:
     return f"{location.rstrip('/')}/{COMMIT_MARKER}"
 
 
-def write_commit_marker(location: str) -> bool:
-    """Commit the parquet data just written at ``location``; False when
-    the location no longer holds this write's output
-    (``fs.write_commit_marker``)."""
-    return fs.write_commit_marker(location, COMMIT_MARKER)
+def write_commit_marker(location: str, schema: StructType) -> bool:
+    """Commit the parquet data just written at ``location``, recording
+    its ``schema`` as a ``schema=<StructType JSON>`` line beside the
+    inventory; False when the location no longer holds this write's
+    output (``fs.write_commit_marker``)."""
+    return fs.write_commit_marker(
+        location, COMMIT_MARKER, f"\n{SCHEMA_LINE}{schema.json()}"
+    )
+
+
+def recorded_schema(marker: str) -> Optional[StructType]:
+    """The schema a commit marker records; None for a marker without the
+    line (written before it existed) or with one that does not parse, so
+    the reader infers the schema from the files instead."""
+    for line in marker.splitlines():
+        if line.startswith(SCHEMA_LINE):
+            try:
+                return StructType.fromJson(json.loads(line[len(SCHEMA_LINE):]))
+            except (ValueError, TypeError, KeyError):
+                return None
+    return None
 
 
 def inventory_ok(location: str, marker: Optional[str] = None) -> Optional[bool]:

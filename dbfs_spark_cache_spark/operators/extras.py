@@ -334,6 +334,10 @@ def banded_edit_pairs(
             "be missed by the 3-band fan-out"
         )
     spark = df.sparkSession
+    # A NULL name has a NULL band, which never matches in the equi-join,
+    # so dropping NULL names changes no result; it lets the scan push
+    # IsNotNull(name) down and skip those rows before the fan-out.
+    df = df.where(F.col(name_col).isNotNull())
     # The byte fold is HOISTED into the row projections — folded once per
     # row (3x on the exploded probe side) instead of once per candidate
     # pair inside the join condition, where it re-ran for every comparison

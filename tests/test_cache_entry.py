@@ -24,6 +24,7 @@ from tests.conftest import SF_SMOKE
 _FS_CALLS = (
     "exists", "list_dir", "file_size", "tree_size", "data_file_inventory",
     "dir_summary", "max_mtime", "read_text", "write_text", "rename", "remove",
+    "put_file",
 )
 
 
@@ -111,10 +112,19 @@ def test_no_commit_when_location_lost_before_marker(
     removed it and is rewriting it (its files still under
     ``_temporary``), no marker and no metadata sidecar are written: the
     write returns the frame itself and the entry stays a miss. A marker
-    there would record ``files=0`` and serve an empty hit."""
+    there would record ``files=0`` and serve an empty hit. The driver
+    writer's case: the other process is still staging its one file."""
     import shutil
+    import threading
 
-    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import (
+        core,
+        create_cached_dataframe,
+        fs,
+        layout,
+        read_cache_if_exist,
+        write_cache,
+    )
 
     src = _source(spark, tmp_path)
     real_save = core._save_as_cache_table
@@ -151,6 +161,51 @@ def test_no_commit_when_location_lost_before_marker(
     hit = read_cache_if_exist(_agg(spark, src))
     assert hit is not None
     assert sorted(hit.collect()) == sorted(_agg(spark, src).collect())
+
+    # The driver writer: another process removed the location after this
+    # write put its file there, and is still staging its own file when
+    # this write lists the location for its marker. Its staging must not
+    # show in that listing: that process may die before its file lands.
+    pdf = pd.DataFrame({"k": range(50)})
+    real_put = fs.put_file
+    staging, release = threading.Event(), threading.Event()
+
+    def racer(dst):
+        def write(path):
+            with open(path, "wb") as fh:
+                fh.write(b"PAR1")  # a Parquet writer's first bytes
+            staging.set()
+            release.wait(60)
+            raise OSError("racing writer died")
+
+        try:
+            real_put(dst, write)
+        except OSError:
+            pass
+
+    def put_then_lose(dst, write):
+        real_put(dst, write)
+        seen["key"] = os.path.basename(os.path.dirname(dst))
+        shutil.rmtree(os.path.dirname(dst).replace("file:", ""))
+        seen["racer"] = threading.Thread(target=racer, args=(dst,))
+        seen["racer"].start()
+        assert staging.wait(60)
+
+    monkeypatch.setattr(fs, "put_file", put_then_lose)
+    try:
+        got = create_cached_dataframe(spark, pdf)
+    finally:
+        release.set()
+        seen["racer"].join(60)
+    assert sorted(got.collect()) == sorted(spark.createDataFrame(pdf).collect())
+    loc = layout.table_location(spark, seen["key"])
+    assert not os.path.exists(layout.commit_marker_path(loc).replace("file:", ""))
+    assert not os.path.exists(layout.metadata_path(layout.sidecar_dir(seen["key"])))
+    assert core._read_cache_table(spark, seen["key"]) is None
+
+    monkeypatch.setattr(fs, "put_file", real_put)
+    create_cached_dataframe(spark, pdf)
+    assert core._read_cache_table(spark, seen["key"]).count() == 50
 
 
 def test_recaching_a_cached_frame_writes_nothing(spark, clean_cache, tmp_path):
@@ -231,6 +286,7 @@ def test_create_cached_dataframe_fs_call_budget(spark, clean_cache):
     assert _fs_calls(run) == {
         "read_text": 1,  # commit marker
         "exists": 2,  # transactional check, stale data location
+        "put_file": 1,  # the driver-written Parquet file
         "list_dir": 1, "data_file_inventory": 1,
         "write_text": 2,  # commit marker, metadata sidecar
     }

@@ -507,7 +507,7 @@ def test_write_text_is_atomic_under_concurrent_reads(tmp_path):
 def test_concurrent_direct_data_cache_single_materialization(spark, clean_cache):
     """createCachedDataFrame racers on identical driver-local data share
     one materialization: the content hash is the key, so the lock +
-    in-lock re-probe gives one save and N hits."""
+    in-lock re-probe gives one write (on either writer) and N hits."""
     from concurrent.futures import ThreadPoolExecutor
 
     import pandas as pd
@@ -517,13 +517,13 @@ def test_concurrent_direct_data_cache_single_materialization(spark, clean_cache)
     pdf = pd.DataFrame({"k": [1, 2, 3], "v": ["x", "y", "z"]})
 
     writes = []
-    real_save = core._save_as_cache_table
+    real_materialize = core._materialize
 
-    def counting_save(*a, **kw):
+    def counting_materialize(*a, **kw):
         writes.append(1)
-        return real_save(*a, **kw)
+        return real_materialize(*a, **kw)
 
-    core._save_as_cache_table = counting_save
+    core._materialize = counting_materialize
     try:
         with ThreadPoolExecutor(4) as ex:
             results = list(
@@ -535,7 +535,7 @@ def test_concurrent_direct_data_cache_single_materialization(spark, clean_cache)
                 )
             )
     finally:
-        core._save_as_cache_table = real_save
+        core._materialize = real_materialize
 
     assert len(writes) == 1
     assert all(r == [(1, "x"), (2, "y"), (3, "z")] for r in results)

@@ -400,7 +400,7 @@ def test_cache_format_degradation_roundtrip(extended):
         # managed-table DROP removes files; rewrite them as parquet
         os.makedirs(loc.replace("file:", ""), exist_ok=True)
         df.write.mode("overwrite").parquet(loc)
-        layout.write_commit_marker(loc)  # as the engine's write leaves it
+        layout.write_commit_marker(loc, df.schema)  # as the engine's write leaves it
         core._FORMAT_FALLBACK.clear()  # fresh session: memo gone
         hit = read_cache_if_exist(_agg_query(extended))
         assert hit is not None, "path fallback must try parquet after the configured format"

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -218,3 +219,79 @@ def test_write_text_rename_failure_without_target_still_raises(
     fake_fs.rename = broken_rename
     with pytest.raises(OSError):
         fs.write_text("s3a://bucket/cache/other.meta.txt", "content")
+
+
+def test_put_file_uploads_the_staged_file_and_removes_it(fake_fs, monkeypatch):
+    """A Hadoop-scheme target gets the driver-written file through one
+    ``copyFromLocalFile`` to a hidden name beside the target's directory
+    (deleting the local copy), then a rename into place; nothing staged
+    is left locally or in the store, also when the upload or the rename
+    fails."""
+    _install_fake_jvm(monkeypatch, fake_fs)
+    uploads = []
+
+    def copy_from_local(del_src, overwrite, src, dst):
+        local = src.toString()[len("file://"):]
+        with open(local) as fh:
+            fake_fs.files[dst.toString()] = fh.read()
+        uploads.append((del_src, overwrite, local, dst.toString()))
+        if del_src:
+            os.remove(local)
+
+    fake_fs.copyFromLocalFile = copy_from_local
+    target = "s3a://bucket/wh/db.db/data_x/data.parquet"
+
+    def write(path):
+        with open(path, "w") as fh:
+            fh.write("rows")
+
+    fs.put_file(target, write)
+    ((del_src, overwrite, local, staged),) = uploads
+    assert (del_src, overwrite) == (True, True)
+    assert staged.startswith("s3a://bucket/wh/db.db/.data_x-data.parquet.tmp.")
+    assert fake_fs.files == {target: "rows"}
+    assert not os.path.exists(local)
+
+    fake_fs.rename_results.append(False)
+    with pytest.raises(OSError):
+        fs.put_file(target, write)
+    assert fake_fs.files == {}  # the target was cleared before the rename
+    assert not os.path.exists(uploads[-1][2])
+
+    def failing(del_src, overwrite, src, dst):
+        uploads.append(src.toString()[len("file://"):])
+        raise RuntimeError("java.io.IOException: upload failed")
+
+    fake_fs.copyFromLocalFile = failing
+    with pytest.raises(RuntimeError):
+        fs.put_file(target, write)
+    assert not os.path.exists(uploads[-1])
+    assert fake_fs.files == {}
+
+
+def test_put_file_local_target_is_renamed_into_place(tmp_path):
+    """A local target is staged under a hidden name beside its directory
+    and renamed over it: the directory ends with the one file,
+    overwritten, and nothing staged is left beside it."""
+    target = tmp_path / "entry" / "data.parquet"
+    for content in ("old", "new"):
+        fs.put_file(str(target), lambda path, c=content: Path(path).write_text(c))
+    assert os.listdir(target.parent) == ["data.parquet"]
+    assert os.listdir(tmp_path) == ["entry"]
+    assert target.read_text() == "new"
+
+
+def test_put_file_directory_never_lists_the_file_in_flight(tmp_path):
+    """While the file is being written, its directory does not list it:
+    a commit marker written from that listing then sees an empty
+    directory and is refused."""
+    target = tmp_path / "entry" / "data.parquet"
+    seen = []
+
+    def write(path):
+        Path(path).write_text("rows")
+        seen.append(fs.write_commit_marker(str(target.parent), "_M"))
+
+    fs.put_file(str(target), write)
+    assert seen == [False]
+    assert os.listdir(target.parent) == ["data.parquet"]

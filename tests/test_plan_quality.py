@@ -181,6 +181,15 @@ def test_edit_distance_blocking_is_composite(spark, queries):
     )
 
 
+def test_edit_distance_scan_pushes_name_not_null(spark, queries):
+    """banded_edit_pairs drops NULL names before the fan-out (a NULL name
+    has a NULL band and matches nothing), so the part scan pushes
+    IsNotNull(p_name) along with the join keys' filters."""
+    plan = plan_text(queries["fn_edit_distance"](spark, SF_ORACLE))
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert pushed and all("IsNotNull(p_name)" in p for p in pushed), pushed
+
+
 def test_flagship_no_forced_broadcast_on_growing_dim(spark, queries):
     """flagship_wide may hint-broadcast only the BOUNDED dim (nation, 25
     rows at every SF). The customer leg grows with the corpus (~GBs at
