@@ -23,11 +23,11 @@ from .core import (  # noqa: F401
     ensure_cache_database,
     read_cache_if_exist,
     reset_cache_session_stats,
-    table_name_for_hash,
     write_cache,
 )
 from .extensions import extend_dataframe_methods  # noqa: F401
 from .hashing import hash_input_data  # noqa: F401
+from .layout import table_name_for_hash  # noqa: F401
 from .management import (  # noqa: F401
     cache_stats,
     clear_cache_for_hash,

@@ -3,26 +3,26 @@
 Re-implements the reference's caching subsystem (reference:
 dbfs_spark_cache/core_caching.py) Spark-first:
 
-* materialized caches are written as managed tables in
-  ``config.CACHE_DATABASE`` (parquet, or delta when ``CACHE_FORMAT`` asks
-  for it and its jars are present); a parquet entry's one commit record is
-  the writer's own marker in its data directory, which also records the
-  written schema (``layout``);
+* a materialized cache is written by path into its entry directory under
+  the ``config.CACHE_DATABASE`` directory (parquet, or delta when
+  ``CACHE_FORMAT`` asks for it and its jars are present), and registers
+  no catalog table; a parquet entry's one commit record is the writer's
+  own marker in its data directory, which also records the written schema
+  (``layout``);
 * a direct-data entry from a pandas frame that ``createDataFrame`` would
   convert through Arrow is written on the driver instead: one Parquet file
-  from PySpark's own conversion (``direct_data``), no Spark job and no
-  catalog table;
+  from PySpark's own conversion (``direct_data``), no Spark job;
 * the metadata sidecar lives under ``config.SPARK_CACHE_DIR/<hash>/`` via
   the engine's FS layer (local os / Hadoop FS) instead of ``dbutils``;
 * a cache hit replaces the user's whole logical plan with a columnar scan
   of the entry's files — Catalyst then gets predicate pushdown + column
-  pruning on the materialized result for free. The reference reads the
-  catalog table instead; a catalog that dies with the session (Spark's
-  in-memory one) cannot serve that read, and a second read form would
-  give an entry, and every frame built on it, a different plan in the
-  writing session than in later ones.
+  pruning on the materialized result for free. The reference registers
+  each entry as a catalog table and reads that; a catalog that dies with
+  the session (Spark's in-memory one) cannot serve the read, and a table
+  write lands wherever the catalog puts the table (a database created
+  with its own ``LOCATION``), not where every read looks.
 
-The reference's double-write bug (saveAsTable called twice per miss,
+The reference's double-write bug (the table written twice per miss,
 core_caching.py:113-114) is intentionally NOT reproduced.
 """
 from __future__ import annotations
@@ -41,7 +41,6 @@ from . import fs, layout
 from .config import config
 from .direct_data import driver_table, write_parquet
 from .hashing import hash_input_data
-from .layout import table_name_for_hash
 from .plans.fingerprint import (
     INPUT_LISTING_FAILED_KEY,
     SCHEMA_CHANGED_KEY,
@@ -141,11 +140,12 @@ def _is_format_missing(exc: Exception) -> bool:
 
 
 def _save_as_cache_table(
-    df: DataFrame, table: str, partition_by: Optional[List[str]] = None
+    df: DataFrame, location: str, partition_by: Optional[List[str]] = None
 ) -> str:
-    """Materialize a DataFrame as a managed columnar table and return the
-    format written. The catalog entry serves the registry (``management``
-    lists the cache database); hits read the files (``_scan_entry``).
+    """Write a DataFrame's columnar files at an entry's ``location`` and
+    return the format written. No catalog table names them: hits scan
+    the location (``_scan_entry``) and ``management`` lists the cache
+    database's directory.
 
     Unpartitioned overwrite, like the reference. At 100 TB callers should
     pre-``repartition`` on a natural key before caching; the write itself is
@@ -160,7 +160,7 @@ def _save_as_cache_table(
             # full scan; partitioning on a natural key turns filtered
             # re-reads into partition-pruned scans.
             writer = writer.partitionBy(*partition_by)
-        writer.saveAsTable(table)
+        writer.save(location)
         return fmt
 
     try:
@@ -254,19 +254,18 @@ def _materialize(
     sidecars: str,
     metadata_txt: str,
     schema: StructType,
-    write: Callable[[str, str], str],
+    write: Callable[[str], str],
 ) -> Optional[DataFrame]:
     """The write protocol shared by ``write_cache`` and
     ``create_cached_dataframe``; the caller holds ``key``'s lock.
-    ``write(table, location)`` writes data of ``schema`` and returns the
-    format written: Spark's ``saveAsTable`` (``_save_as_cache_table``),
-    or the driver's one Parquet file for a direct-data entry
-    (``_write_on_driver``).
+    ``write(location)`` writes data of ``schema`` at the entry's location
+    and returns the format written: Spark's writer
+    (``_save_as_cache_table``), or the driver's one Parquet file for a
+    direct-data entry (``_write_on_driver``).
 
-    1. Clear the data location: files another session left there would
-       block ``saveAsTable``, and for a table this session wrote the
-       overwrite drops its files anyway. The old commit marker goes with
-       them.
+    1. Clear the data location, and the old commit marker with it: under
+       dynamic partition overwrite a ``partition_by`` rewrite replaces
+       only the partitions it writes, and would keep stale ones.
     2. Write the data.
     3. Commit parquet data with its marker (``layout.write_commit_marker``,
        the data-file inventory and ``schema``); a Delta log commits itself.
@@ -280,14 +279,13 @@ def _materialize(
     refused, nothing is committed and None is returned (the caller serves
     its frame uncached).
     """
-    table = table_name_for_hash(key)
     location = layout.table_location(spark, key)
-    # The database is created even for an entry no catalog table names:
-    # DROP DATABASE ... CASCADE removes its directory only when it exists.
+    # No catalog table names the entry, but DROP DATABASE ... CASCADE
+    # removes the entry directories only while the database exists.
     ensure_cache_database(spark)
     if fs.exists(location):
         fs.remove(location)
-    fmt = write(table, location)
+    fmt = write(location)
     if fmt == "parquet" and not layout.write_commit_marker(location, schema):
         log.warning("Cache location %s lost this write's output before its "
                     "commit (another process removed or is rewriting it); "
@@ -322,7 +320,7 @@ def read_cache_if_exist(
         info, plan, hash_name=hash_name, cache_path_base=cache_path
     )
     # The probe runs UNDER the key's write lock: writers hold it across
-    # saveAsTable + sidecar write, and a custom-keyed REWRITE ("metadata
+    # data write + sidecar write, and a custom-keyed REWRITE ("metadata
     # changed; rewriting") overwrites the table location non-atomically —
     # an unserialized probe could read the old sidecar and scan a
     # half-written directory: partial part-files served as a valid hit
@@ -380,10 +378,10 @@ def write_cache(
     )
     if verbose:
         # the reference's verbose flag prints the resolved identity; here
-        # it surfaces the key/table plus the metadata document driving it
+        # it surfaces the key/location plus the metadata document driving it
         log.info(
-            "write_cache: key=%s table=%s; metadata document:\n%s",
-            key, table_name_for_hash(key), metadata_txt,
+            "write_cache: key=%s location=%s; metadata document:\n%s",
+            key, layout.table_location(spark, key), metadata_txt,
         )
 
     with _lock_for_key(key):
@@ -410,7 +408,7 @@ def write_cache(
                 log.info("Cache %s metadata changed; rewriting", key)
             cached = _materialize(
                 spark, key, sidecars, metadata_txt, df.schema,
-                lambda table, _: _save_as_cache_table(df, table, partition_by),
+                lambda location: _save_as_cache_table(df, location, partition_by),
             )
             if cached is None:
                 cached = df
@@ -626,15 +624,26 @@ def create_cached_dataframe(
     the declared schema, so ``schema='a INT'`` and ``schema='b BIGINT'``
     over the same rows would otherwise collide on one table and the
     second call would return the first call's column names and types.
+    So do the session time zone and timestamp type for a pandas frame
+    with a naive ``datetime64`` column: ``createDataFrame`` localizes its
+    values in the session zone (or keeps them naive under
+    ``TIMESTAMP_NTZ``), so the same frame holds other instants in another
+    session.
     """
     data_hash = hash_input_data(data)
+    salt = ""
     if schema is not None:
         schema_repr = (
             schema.simpleString() if hasattr(schema, "simpleString") else str(schema)
         )
-        data_hash = hashlib.md5(
-            f"{data_hash};schema={schema_repr}".encode("utf-8")
-        ).hexdigest()
+        salt += f";schema={schema_repr}"
+    if isinstance(data, pd.DataFrame) and any(
+        pd.api.types.is_datetime64_dtype(dtype) for dtype in data.dtypes
+    ):
+        salt += "".join(f";{name}={spark.conf.get(name)}" for name in (
+            "spark.sql.session.timeZone", "spark.sql.timestampType"))
+    if salt:
+        data_hash = hashlib.md5(f"{data_hash}{salt}".encode("utf-8")).hexdigest()
     cache_hash_name = f"data_{data_hash}"
     sidecars = layout.sidecar_dir(cache_hash_name)
 
@@ -652,7 +661,7 @@ def create_cached_dataframe(
             else:
                 source = spark.createDataFrame(data, schema=schema, **kwargs)
                 written_schema = source.schema
-                write = lambda table, _: _save_as_cache_table(source, table)  # noqa: E731
+                write = lambda location: _save_as_cache_table(source, location)  # noqa: E731
             # Deterministic document — NO wall-clock line: every racer on
             # this key must produce byte-identical content, because both
             # the per-key lock's re-probe and fs.write_text's lost-rename
@@ -675,12 +684,11 @@ def create_cached_dataframe(
     return cached
 
 
-def _write_on_driver(arrow: pa.Table, parallelism: int) -> Callable[[str, str], str]:
+def _write_on_driver(arrow: pa.Table, parallelism: int) -> Callable[[str], str]:
     """``_materialize``'s writer for a converted pandas frame: one Parquet
     file of ``parallelism`` row groups, written on the driver and put at
-    the entry location; no Spark job and no catalog table (nothing reads
-    the catalog)."""
-    def write(table: str, location: str) -> str:
+    the entry location; no Spark job."""
+    def write(location: str) -> str:
         fs.put_file(f"{location}/{layout.DRIVER_DATA_FILE}",
                     lambda path: write_parquet(arrow, path, parallelism))
         return "parquet"

@@ -4,12 +4,14 @@ An entry keyed ``<hash>`` (32-hex plan key, ``data_<32-hex>`` direct-data
 key, or a caller's custom ``hash_name``) has two halves:
 
 * its data: the files at ``<spark.sql.warehouse.dir>/<CACHE_DATABASE>.db/
-  <hash>``. Spark's writer writes them as the managed table
-  ``<CACHE_DATABASE>.<hash>``; a direct-data entry written on the driver
-  is one file, ``DRIVER_DATA_FILE``, with no catalog table. Nothing reads
-  the catalog table: every read of the entry scans the location, in every
-  session, and ``management`` lists the database directory as its
-  registry. A parquet location holds one commit record, the writer's own
+  <hash>``, the entry's only home. Spark's writer writes them by path; a
+  direct-data entry written on the driver is one file,
+  ``DRIVER_DATA_FILE``. No catalog table names an entry: every read scans
+  the location, in every session, ``management`` lists the database
+  directory as its registry and evicts by removing the directory, and
+  ``DROP DATABASE ... CASCADE`` removes every entry with the database's
+  directory. ``table_name_for_hash`` is a display name only. A parquet
+  location holds one commit record, the writer's own
   marker ``_CACHE_COMMITTED`` with the data-file inventory
   (``fs.write_commit_marker``) and a ``schema=<StructType JSON>`` line
   that hits scan with: written after the data, on every committer, and
@@ -45,6 +47,8 @@ log = logging.getLogger(__name__)
 
 
 def table_name_for_hash(hash_name: str) -> str:
+    """``<CACHE_DATABASE>.<hash>``: the name the registry shows for an
+    entry. No catalog table has it."""
     return f"{config.CACHE_DATABASE}.{hash_name}"
 
 

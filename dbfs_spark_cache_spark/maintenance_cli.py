@@ -3,8 +3,8 @@
 Evict aged entries, optionally repair half-present ones, or print the
 cache health summary — the cron-able twin of the reference's maintenance
 notebook (reference: scripts/clear_old_caches.py). All the work is
-driver-side listings of entry directories, DROP TABLEs and removals of
-those directories — safe to run while jobs are reading caches (entries
+driver-side listings and removals of entry directories and their
+metadata sidecars — safe to run while jobs are reading caches (entries
 are immutable for their key; a reader of a just-removed entry
 re-computes and re-writes it).
 
@@ -290,8 +290,8 @@ def main() -> int:
     ):
         # These stages have no database scope: they operate on the
         # CONFIGURED cache database's registries. Running them under a
-        # scoped invocation would DROP tables and delete files from the
-        # exact namespace the operator scoped away from — refuse instead
+        # scoped invocation would delete entry directories and sidecars from
+        # the exact namespace the operator scoped away from — refuse instead
         # of silently widening the blast radius.
         log.warning(
             "--size-budget-bytes/--repair-inconsistent operate on the "

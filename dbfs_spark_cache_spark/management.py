@@ -5,9 +5,9 @@ Same surface as the reference (reference: dbfs_spark_cache/cache_management.py:
 half has one registry: its sidecars (one walk over a sidecar base,
 :func:`_sidecar_entries`) and its data directory (one listing of the cache
 database's directory, :func:`get_tables_from_database`), the half a read
-needs. The reference reads the metastore for the table side; here the
-catalog is Spark's in-memory one, which knows only the current session's
-writes, so nothing here reads it to decide about an entry. Scans that
+needs. The reference registers each entry as a metastore table and reads
+the metastore for the table side; here no entry is registered in the
+catalog, so an entry is its directory and eviction removes it. Scans that
 join the two registries read them in one place (:func:`_registries`), and
 every eviction goes through :func:`_evict`, which reports only what was
 actually evicted. Per-entry work (directory times, sidecar listings,
@@ -61,8 +61,7 @@ def get_tables_from_database(
     configured cache database), one row per non-hidden directory under
     ``layout.database_dir``: the directory every read of an entry scans.
 
-    The listing, not the catalog, is the registry: Spark's in-memory
-    catalog holds only the tables the current session wrote, while an
+    The listing is the registry: no catalog table names an entry, and an
     entry written by any session is read from its directory. A name
     starting with ``_`` or ``.`` is a writer's scratch, never an entry.
     ``creationTime`` is the newest modification time inside the directory
@@ -143,74 +142,43 @@ def _registries(spark: SparkSession, num_threads: Optional[int]) -> tuple:
 def clear_cache_for_hash(
     spark: SparkSession, hash_name: str, database: Optional[str] = None
 ) -> bool:
-    """Drop the cache table and remove its data and metadata directories.
-    Returns True when the entry was actually evicted, False when the DROP
-    failed with the entry possibly still live (sweep skipped for a later
-    retry) — callers aggregating eviction results must not report a False
-    as evicted.
+    """Remove an entry's data directory, then its metadata sidecar.
+    Returns True when the entry was evicted, False when its data directory
+    is still there afterwards: the removal failed, and the sidecar is kept
+    so the age sweep, which lists sidecars, retries the entry. Callers
+    aggregating eviction results must not report a False as evicted.
 
-    ``database`` scopes the DROP and the data directory, so an entry the
-    scoped listing shows is the entry removed; the metadata sidecar is removed only
-    when clearing the CONFIGURED database, because sidecars live in the
-    single ``SPARK_CACHE_DIR`` namespace and the cache key excludes the
-    database name — an equivalent query cached in two databases shares
-    the hash, so a scoped eviction deleting the shared sidecar would
-    orphan the other database's (still live) entry. Deviation from the
-    reference, which restores ``config.CACHE_DATABASE`` before deleting
-    and therefore drops scoped evictions from the DEFAULT database
-    (reference: cache_management.py:163-173 lists the scoped database but
-    290-311 deletes via the restored config)."""
+    ``database`` scopes the data directory, so an entry the scoped listing
+    shows is the entry removed; the metadata sidecar is removed only when
+    clearing the CONFIGURED database, because sidecars live in the single
+    ``SPARK_CACHE_DIR`` namespace and the cache key excludes the database
+    name — an equivalent query cached in two databases shares the hash, so
+    a scoped eviction deleting the shared sidecar would orphan the other
+    database's (still live) entry. Deviation from the reference, which
+    restores ``config.CACHE_DATABASE`` before deleting and therefore drops
+    scoped evictions from the DEFAULT database (reference:
+    cache_management.py:163-173 lists the scoped database but 290-311
+    deletes via the restored config)."""
     if not hash_name:
         return False
     # Serialize against an in-process write_cache/create_cached_dataframe
-    # on the SAME key (they hold this lock across table write + sidecar
-    # write): an unserialized eviction could interleave drop/remove with
-    # the writer's saveAsTable/write_text and leave a half-pair — e.g.
-    # sidecar removed after the writer's in-lock probe passed, so the
-    # writer skips the write it now needs, and the "hit" scan has no
-    # table behind it. Same Spark driver only; cross-process evictions
-    # race exactly like the reference's.
+    # on the SAME key (they hold this lock across data write + sidecar
+    # write): an unserialized eviction could interleave its removals with
+    # the writer's and leave a half-pair — e.g. sidecar removed after the
+    # writer's in-lock probe passed, so the writer skips the write it now
+    # needs, and the "hit" scan has no data behind it. Same Spark driver
+    # only; cross-process evictions race exactly like the reference's.
     from .core import _lock_for_key
 
-    with _lock_for_key(hash_name):
-        return _clear_cache_for_hash_locked(spark, hash_name, database)
-
-
-def _clear_cache_for_hash_locked(
-    spark: SparkSession, hash_name: str, database: Optional[str] = None
-) -> bool:
     db = (database or config.CACHE_DATABASE).lower()
-    table = f"{db}.{hash_name}"
-    dropped = False
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        dropped = True
-    except Exception as exc:
-        log.warning("DROP TABLE %s failed: %s", table, exc)
-        # A transient metastore error must NOT cascade into deleting the
-        # data files out from under a still-registered table: sweep below
-        # only if the table verifiably does not exist. An unanswerable
-        # catalog stays conservative (skip).
-        try:
-            dropped = not spark.catalog.tableExists(table)
-        except Exception:
-            dropped = False
-    if not dropped:
-        # Leave sidecar AND warehouse files intact: the entry is still
-        # live in the catalog, and removing the sidecar would hide it
-        # from every future eviction scan — a permanent leak instead of
-        # a retry on the next sweep.
-        log.warning(
-            "skipping sidecar+warehouse sweep for %s: DROP failed and "
-            "the catalog entry may still be live", table
-        )
-        return False
-    if db == config.CACHE_DATABASE:
-        fs.remove(layout.sidecar_dir(hash_name))
-    # The DROP is a no-op for an entry another session wrote (this
-    # session's catalog never held its table), so the data directory is
-    # removed here; a no-op when the managed DROP already removed it.
-    fs.remove(layout.table_location(spark, hash_name, db))
+    location = layout.table_location(spark, hash_name, db)
+    with _lock_for_key(hash_name):
+        if not fs.remove(location) and fs.exists(location):
+            log.warning("Removing %s failed; keeping its metadata sidecar so "
+                        "a later sweep retries it", location)
+            return False
+        if db == config.CACHE_DATABASE.lower():
+            fs.remove(layout.sidecar_dir(hash_name))
     return True
 
 
@@ -221,8 +189,8 @@ def _evict(
     database: Optional[str] = None,
 ) -> List[str]:
     """Evict ``hashes`` in parallel and return, in order, only those
-    :func:`clear_cache_for_hash` reports as evicted: a DROP-failure skip
-    (entry left live for a later retry) must not be reported as freed."""
+    :func:`clear_cache_for_hash` reports as evicted: an entry whose data
+    directory survived its removal must not be reported as freed."""
     results = _pmap(
         lambda h: clear_cache_for_hash(spark, h, database=database),
         hashes,
@@ -230,7 +198,7 @@ def _evict(
     )
     evicted = [h for h, ok in zip(hashes, results) if ok]
     if len(evicted) < len(hashes):
-        log.warning("%d entries skipped (DROP failed, still live)",
+        log.warning("%d entries skipped (removal failed, data still present)",
                     len(hashes) - len(evicted))
     return evicted
 

@@ -11,6 +11,7 @@ admission guard.
 from __future__ import annotations
 
 import os
+import shutil
 from collections import Counter
 
 import pandas as pd
@@ -107,14 +108,13 @@ def test_no_commit_when_location_lost_before_marker(
     spark, clean_cache, tmp_path, monkeypatch
 ):
     """The commit marker must list this write's own output. When another
-    process removes the location between the table write and the marker
+    process removes the location between the data write and the marker
     (a repair evicting a directory that has no metadata sidecar yet), or
     removed it and is rewriting it (its files still under
     ``_temporary``), no marker and no metadata sidecar are written: the
     write returns the frame itself and the entry stays a miss. A marker
     there would record ``files=0`` and serve an empty hit. The driver
     writer's case: the other process is still staging its one file."""
-    import shutil
     import threading
 
     from dbfs_spark_cache_spark import (
@@ -131,10 +131,10 @@ def test_no_commit_when_location_lost_before_marker(
     seen = {}
 
     def lose_output(aftermath):
-        def save(frame, table, partition_by=None):
-            fmt = real_save(frame, table, partition_by=partition_by)
-            seen["key"] = table.split(".")[-1]
-            loc = layout.table_location(spark, seen["key"]).replace("file:", "")
+        def save(frame, location, partition_by=None):
+            fmt = real_save(frame, location, partition_by=partition_by)
+            seen["key"] = location.rstrip("/").rsplit("/", 1)[-1]
+            loc = location.replace("file:", "")
             shutil.rmtree(loc)
             if aftermath == "rewriting":
                 os.makedirs(f"{loc}/_temporary/0")
@@ -210,26 +210,82 @@ def test_no_commit_when_location_lost_before_marker(
 
 def test_recaching_a_cached_frame_writes_nothing(spark, clean_cache, tmp_path):
     """cache_dataframe on a pure scan of an existing entry returns the
-    frame unchanged: one table and one sidecar dir, not two."""
-    from dbfs_spark_cache_spark import cache_dataframe, cache_session_stats, layout
+    frame unchanged: one data directory and one sidecar dir, not two."""
+    from dbfs_spark_cache_spark import (
+        cache_dataframe, cache_session_stats, layout, resolve_table_hash,
+    )
     from dbfs_spark_cache_spark.config import config
 
     src = _source(spark, tmp_path)
     cached = cache_dataframe(_agg(spark, src), override_prefer_spark_cache=True)
     writes = cache_session_stats()["writes"]
+    key = resolve_table_hash(cached)
 
     again = cache_dataframe(cached, override_prefer_spark_cache=True)
 
     assert again is cached
     assert cache_session_stats()["writes"] == writes
-    tables = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter(
-        "isTemporary = false"
-    ).collect()
-    assert len(tables) == 1
-    assert os.listdir(config.SPARK_CACHE_DIR) == [tables[0].tableName]
-    assert os.listdir(layout.database_dir(spark).replace("file:", "")) == [
-        tables[0].tableName
-    ]
+    assert os.listdir(config.SPARK_CACHE_DIR) == [key]
+    assert os.listdir(layout.database_dir(spark).replace("file:", "")) == [key]
+
+
+def test_no_cache_write_registers_a_catalog_table(spark, clean_cache, tmp_path):
+    """Spark's writer writes the entry's directory by path, for
+    ``write_cache`` and for ``create_cached_dataframe`` input it does not
+    write on the driver: the cache database holds no table, the registry
+    lists every entry, and ``DROP DATABASE ... CASCADE`` removes every
+    entry directory with the database's own. The driver writer's twin is
+    ``test_direct_data.py::test_driver_entry_has_no_catalog_table``."""
+    from dbfs_spark_cache_spark import (
+        create_cached_dataframe, get_cached_tables, layout, resolve_table_hash,
+        write_cache,
+    )
+    from dbfs_spark_cache_spark.config import config
+
+    src = _source(spark, tmp_path)
+    keys = {
+        resolve_table_hash(write_cache(_agg(spark, src))),
+        create_cached_dataframe(
+            spark, [(1, "a")], "k INT, v STRING")._direct_data_cache_hash,
+    }
+    assert len(keys) == 2
+    assert [t.name for t in spark.catalog.listTables(config.CACHE_DATABASE)
+            if not t.isTemporary] == []
+    assert set(get_cached_tables(spark)["hash_name"]) == keys
+
+    spark.sql(f"DROP DATABASE {config.CACHE_DATABASE} CASCADE")
+    for key in keys:
+        assert not os.path.exists(layout.table_location(spark, key).replace("file:", ""))
+    assert not os.path.exists(layout.database_dir(spark).replace("file:", ""))
+
+
+def test_database_with_its_own_location_caches_and_hits(
+    spark, clean_cache, tmp_path, monkeypatch
+):
+    """A cache database created with its own ``LOCATION`` does not move
+    the entries: they are written where every read looks, under the
+    warehouse, so the second identical call hits."""
+    from dbfs_spark_cache_spark import cache_dataframe, cache_session_stats, layout
+    from dbfs_spark_cache_spark.config import config
+
+    src = _source(spark, tmp_path)
+    db = "own_location_db"
+    monkeypatch.setattr(config, "CACHE_DATABASE", db)
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path}/elsewhere'")
+    try:
+        before = cache_session_stats()
+        first = cache_dataframe(_agg(spark, src), override_prefer_spark_cache=True)
+        second = cache_dataframe(_agg(spark, src), override_prefer_spark_cache=True)
+        after = cache_session_stats()
+        assert after["writes"] - before["writes"] == 1
+        assert after["hits"] - before["hits"] == 1
+        assert sorted(second.collect()) == sorted(first.collect()) == sorted(
+            _agg(spark, src).collect())
+        assert len(os.listdir(layout.database_dir(spark).replace("file:", ""))) == 1
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        shutil.rmtree(layout.database_dir(spark, db).replace("file:", ""),
+                      ignore_errors=True)
 
 
 def test_sidecar_dir_read_is_not_a_cache_entry(spark, clean_cache, tmp_path):
@@ -310,27 +366,11 @@ def test_cache_dataframe_rejects_unknown_options(spark, clean_cache):
         df.cacheToStorage(override_prefer_spark_cache=True, hash_nmae="x")
 
 
-def _drop_catalog_entry_keep_files(spark, key):
-    """What a later session sees under an in-memory catalog: the entry's
-    files and sidecars without its catalog table."""
-    import shutil
-    import tempfile
-
-    from dbfs_spark_cache_spark import layout
-
-    loc = layout.table_location(spark, key).replace("file:", "")
-    stash = tempfile.mkdtemp(prefix="entry_stash_")
-    shutil.copytree(loc, f"{stash}/data")
-    spark.sql(f"DROP TABLE IF EXISTS {layout.table_name_for_hash(key)}")
-    shutil.copytree(f"{stash}/data", loc, dirs_exist_ok=True)
-    shutil.rmtree(stash, ignore_errors=True)
-
-
 def test_partitioned_entry_reads_back_its_schema(spark, clean_cache, tmp_path):
-    """A hit on a ``partition_by`` entry has the written frame's schema,
-    with or without the entry's catalog table: the partition column does
-    not read back typed from its directory names (bigint as int), so a
-    frame filtered on it keys the same in both cases."""
+    """A hit on a ``partition_by`` entry has the written frame's schema:
+    the partition column does not read back typed from its directory
+    names (bigint as int), so a frame filtered on it keys the same as on
+    the write's own scan."""
     from dbfs_spark_cache_spark import read_cache_if_exist, resolve_table_hash, write_cache
 
     src = _source(spark, tmp_path)
@@ -344,18 +384,13 @@ def test_partitioned_entry_reads_back_its_schema(spark, clean_cache, tmp_path):
         )
 
     key = resolve_table_hash(q())
-    write_cache(q(), partition_by=["part"])
+    written = write_cache(q(), partition_by=["part"])
+    derived = resolve_table_hash(written.where(F.col("part") == 1))
     hit = read_cache_if_exist(q())
     assert hit.dtypes == q().dtypes
     assert resolve_table_hash(hit) == key
-    derived = resolve_table_hash(hit.where(F.col("part") == 1))
-
-    _drop_catalog_entry_keep_files(spark, key)
-    later = read_cache_if_exist(q())
-    assert later.dtypes == q().dtypes
-    assert resolve_table_hash(later) == key
-    assert resolve_table_hash(later.where(F.col("part") == 1)) == derived
-    assert sorted(map(tuple, later.collect())) == sorted(map(tuple, q().collect()))
+    assert resolve_table_hash(hit.where(F.col("part") == 1)) == derived
+    assert sorted(map(tuple, hit.collect())) == sorted(map(tuple, q().collect()))
 
 
 _WRITER_PROCESS = r"""

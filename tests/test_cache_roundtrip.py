@@ -182,6 +182,7 @@ def test_clear_cache_lifecycle(spark, clean_cache, lineitem_copy):
         clear_cache_for_hash,
         clear_inconsistent_cache,
         get_cached_dataframe_metadata,
+        layout,
         resolve_table_hash,
         write_cache,
     )
@@ -194,8 +195,10 @@ def test_clear_cache_lifecycle(spark, clean_cache, lineitem_copy):
     h = registry.iloc[0]["hash_name"]
     assert h == resolve_table_hash(df)
 
+    location = layout.table_location(spark, h)
+    assert os.path.exists(layout.commit_marker_path(location).replace("file:", ""))
     clear_cache_for_hash(spark, h)
-    assert not spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
+    assert not os.path.exists(location.replace("file:", ""))
     assert get_cached_dataframe_metadata().empty
 
     # Orphan repair: a metadata dir without a table is removed — but only
@@ -253,11 +256,10 @@ def test_derived_ops_never_short_circuit_to_parent_hash(spark, clean_cache, line
 
 def test_path_fallback_derived_frames_do_not_collide(spark, clean_cache, tmp_path):
     """ADVICE r1 (high): two cache entries with identical schema, read back
-    via the path fallback (session-restart story, no table name in the plan),
-    then derived identically — their fingerprints must differ. The cache-dir
-    path (which embeds the hash) participates in the metadata document."""
+    by a scan of their locations (no table name in the plan), then derived
+    identically — their fingerprints must differ. The entry's location
+    (which embeds the hash) participates in the metadata document."""
     from dbfs_spark_cache_spark import resolve_table_hash, write_cache
-    from dbfs_spark_cache_spark.config import config
     from dbfs_spark_cache_spark.core import _read_cache_table
     from dbfs_spark_cache_spark.plans.fingerprint import resolve_table_hash as resolve
 
@@ -273,16 +275,6 @@ def test_path_fallback_derived_frames_do_not_collide(spark, clean_cache, tmp_pat
         h[label] = resolve_table_hash(cached)
     assert h["a"] != h["b"]
 
-    # Simulate a session restart: catalog entries gone, files remain.
-    # (DROP TABLE on a managed table deletes its files, so stash them.)
-    from dbfs_spark_cache_spark import fs
-    from dbfs_spark_cache_spark.layout import table_location
-
-    for entry in (h["a"], h["b"]):
-        loc = fs.strip_scheme(table_location(spark, entry))
-        shutil.move(loc, f"{loc}__stash")
-        spark.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{entry}")
-        shutil.move(f"{loc}__stash", loc)
     reread = {k: _read_cache_table(spark, v) for k, v in h.items()}
     assert all(df is not None for df in reread.values())
 

@@ -16,31 +16,34 @@ from tests.conftest import SF_SMOKE
 
 
 def test_scoped_clear_leaves_default_namespace_alone(spark, clean_cache):
-    """clear_cache_for_hash(database=X) must drop from X, not from the
-    configured database — and must NOT delete the shared metadata sidecar
+    """clear_cache_for_hash(database=X) must remove X's entry directory,
+    not the configured database's — and must NOT delete the shared metadata sidecar
     (the cache key excludes the database name, so an equivalent query
     cached in two databases shares the hash; deleting the sidecar would
     orphan the configured database's live entry)."""
-    from dbfs_spark_cache_spark import fs, write_cache
+    from dbfs_spark_cache_spark import fs, layout, resolve_table_hash, write_cache
     from dbfs_spark_cache_spark.config import config
     from dbfs_spark_cache_spark.management import clear_cache_for_hash
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
-    write_cache(df)
-    row = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter("isTemporary = false").collect()[0]
-    h = row.tableName
+    h = resolve_table_hash(write_cache(df))
     sidecar = f"{config.SPARK_CACHE_DIR}{h}/cache_metadata.txt"
+    marker = layout.commit_marker_path(layout.table_location(spark, h))
+    scoped = layout.table_location(spark, h, "scoped_evict_db")
     assert fs.read_text(sidecar) is not None
+    assert fs.exists(marker)
 
     spark.sql("CREATE DATABASE IF NOT EXISTS scoped_evict_db")
     try:
-        clear_cache_for_hash(spark, h, database="scoped_evict_db")
-        # default-namespace table AND sidecar both survive
-        assert spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
+        fs.write_text(f"{scoped}/part-00000.parquet", "scoped copy")
+        assert clear_cache_for_hash(spark, h, database="scoped_evict_db")
+        assert not fs.exists(scoped)
+        # default-namespace data AND sidecar both survive
+        assert fs.exists(marker)
         assert fs.read_text(sidecar) is not None
         # default-scoped clear still removes both
         clear_cache_for_hash(spark, h)
-        assert not spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
+        assert not fs.exists(layout.table_location(spark, h))
         assert fs.read_text(sidecar) is None
     finally:
         spark.sql("DROP DATABASE IF EXISTS scoped_evict_db CASCADE")

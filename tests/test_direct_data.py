@@ -5,7 +5,7 @@ takes a frame, and that the driver writer's entry reads back exactly as
 A pandas frame that ``createDataFrame`` converts through Arrow is
 converted on the driver with PySpark's own code and written as one
 Parquet file (``direct_data``); every other input keeps Spark's
-``createDataFrame`` + ``saveAsTable`` writer.
+``createDataFrame`` + path writer.
 """
 from __future__ import annotations
 
@@ -95,6 +95,31 @@ def test_driver_entry_equals_create_dataframe(spark, clean_cache, session_zone, 
     hit = create_cached_dataframe(spark, pdf, schema=schema)
     _same(hit, want)
     assert _entry_files(spark, hit) == [layout.COMMIT_MARKER, layout.DRIVER_DATA_FILE]
+
+
+def test_naive_datetimes_key_by_session_time_zone(spark, clean_cache):
+    """``createDataFrame`` localizes naive datetimes in the session zone,
+    so a frame cached under UTC is another entry under New York: the
+    call there equals ``spark.createDataFrame`` in that zone. The zone
+    and timestamp type join the key only for a frame with a naive
+    ``datetime64`` column."""
+    from dbfs_spark_cache_spark import create_cached_dataframe
+
+    pdf = pd.DataFrame({"t": pd.to_datetime(["2024-01-01 10:00:00"])})
+    plain = pd.DataFrame({"k": [1]})
+    before = spark.conf.get("spark.sql.session.timeZone")
+    keys = {}
+    try:
+        for zone in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            got = create_cached_dataframe(spark, pdf)
+            _same(got, spark.createDataFrame(pdf))
+            keys[zone] = (got._direct_data_cache_hash,
+                          create_cached_dataframe(spark, plain)._direct_data_cache_hash)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    assert keys["UTC"][0] != keys["America/New_York"][0]
+    assert keys["UTC"][1] == keys["America/New_York"][1]
 
 
 def test_hit_reads_the_schema_its_marker_records(spark, clean_cache):

@@ -350,28 +350,22 @@ def test_token_shingles_accepts_awkward_column_names(spark):
 
 
 def test_registry_warehouse_fallback(extended):
-    """get_cached_tables finds cache tables from warehouse files even when
-    the catalog lost its entries (non-persistent catalog restart)."""
-    from dbfs_spark_cache_spark import get_cached_tables, write_cache
+    """get_cached_tables finds cache entries from their warehouse
+    directories: no catalog table names them, so a session that wrote
+    nothing (a non-persistent catalog restart) sees the same registry."""
+    from dbfs_spark_cache_spark import (
+        fs, get_cached_tables, layout, resolve_table_hash, write_cache,
+    )
     from dbfs_spark_cache_spark.config import config
 
-    write_cache(_agg_query(extended))
+    written = write_cache(_agg_query(extended))
+    assert [t for t in extended.catalog.listTables(config.CACHE_DATABASE)
+            if not t.isTemporary] == []
     registry = get_cached_tables(extended)
-    assert len(registry) == 1
-    h = registry.iloc[0]["hash_name"]
-
-    # Simulate a catalog that forgot the table (files stay on disk).
-    extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{h}")
-    # DROP TABLE on a managed table removes files too — recreate the shape:
-    import os
-
-    warehouse = extended.conf.get("spark.sql.warehouse.dir")
-    loc = f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db/{h}".replace("file:", "")
-    os.makedirs(loc, exist_ok=True)
-    with open(f"{loc}/part-0.parquet", "wb") as fh:
-        fh.write(b"x")
-    fallback = get_cached_tables(extended)
-    assert list(fallback["hash_name"]) == [h]
+    h = resolve_table_hash(written)
+    assert list(registry["hash_name"]) == [h]
+    assert fs.strip_scheme(registry.iloc[0]["directory_path"]).rstrip("/") == (
+        fs.strip_scheme(layout.table_location(extended, h)))
 
 
 def test_cache_format_degradation_roundtrip(extended):
@@ -390,20 +384,12 @@ def test_cache_format_degradation_roundtrip(extended):
         assert sorted(map(tuple, cached.collect())) == sorted(map(tuple, df.collect()))
         assert core._FORMAT_FALLBACK.get("parquet") is True  # memoized
 
-        # Simulate the next session's path-fallback read: catalog entry
-        # dropped externally, files remain, broken format still configured.
-        registry_hash = core.resolve_table_hash(df)
-        loc = layout.table_location(extended, registry_hash)
-        extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{registry_hash}")
-        import shutil
-
-        # managed-table DROP removes files; rewrite them as parquet
-        os.makedirs(loc.replace("file:", ""), exist_ok=True)
-        df.write.mode("overwrite").parquet(loc)
-        layout.write_commit_marker(loc, df.schema)  # as the engine's write leaves it
-        core._FORMAT_FALLBACK.clear()  # fresh session: memo gone
+        # The next session's read: broken format still configured, memo gone.
+        loc = layout.table_location(extended, core.resolve_table_hash(df))
+        assert os.path.exists(layout.commit_marker_path(loc).replace("file:", ""))
+        core._FORMAT_FALLBACK.clear()
         hit = read_cache_if_exist(_agg_query(extended))
-        assert hit is not None, "path fallback must try parquet after the configured format"
+        assert hit is not None, "the read must scan the parquet entry whatever format is configured"
         assert sorted(map(tuple, hit.collect())) == sorted(map(tuple, df.collect()))
     finally:
         config.CACHE_FORMAT = original
@@ -483,19 +469,19 @@ def test_delta_cache_roundtrip_when_jars_present(extended):
     runs on any Delta-enabled cluster."""
     import pytest
 
-    from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
+    from dbfs_spark_cache_spark import core, fs, layout, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.config import config
 
-    probe = extended.range(1).toDF("x")
+    probe_location = layout.table_location(extended, "_delta_probe")
     try:
-        probe.write.format("delta").mode("overwrite").saveAsTable(
-            f"{config.CACHE_DATABASE}.__delta_probe"
-        )
+        extended.range(1).toDF("x").write.format("delta").mode("overwrite").save(
+            probe_location)
     except Exception as exc:
         if core._is_format_missing(exc):
             pytest.skip("delta-spark jars not on the classpath")
         raise
-    extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.__delta_probe")
+    finally:
+        fs.remove(probe_location)
 
     original = config.CACHE_FORMAT
     core._FORMAT_FALLBACK.clear()
@@ -529,29 +515,15 @@ def test_delta_log_guard_blocks_stale_parquet_path_read(extended):
     import os as _os
 
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
-    from dbfs_spark_cache_spark.config import config
 
     df = _agg_query(extended)
     write_cache(df)
     h = core.resolve_table_hash(df)
     loc = layout.table_location(extended, h).replace("file:", "")
 
-    # Simulate a catalog death with surviving files (the in-memory-catalog
-    # scenario the path fallback exists for): stash the data dir, DROP the
-    # managed table (which deletes the files), restore the files.
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    stash = _tempfile.mkdtemp(prefix="delta_guard_stash_")
-    _shutil.copytree(loc, f"{stash}/data")
-    extended.sql(
-        f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{core.table_name_for_hash(h).split('.')[-1]}"
-    )
-    _shutil.copytree(f"{stash}/data", loc, dirs_exist_ok=True)
-    _shutil.rmtree(stash, ignore_errors=True)
     served = read_cache_if_exist(_agg_query(extended))
     assert served is not None and served.count() == df.count(), (
-        "path-read parquet fallback should serve a plain cache dir"
+        "the parquet scan should serve a plain cache dir"
     )
 
     # Same directory now looks transactional: the parquet fallback must

@@ -65,6 +65,7 @@ def test_backup_skips_schema_changed_inputs(spark, clean_cache, monkeypatch):
     """A SCHEMA_CHANGE failure from the input listing yields a key embedding
     now() — unmatchable forever. Backup must skip, like the
     listing-failure guard next to it, instead of orphaning a full write."""
+    from dbfs_spark_cache_spark import get_cached_tables
     from dbfs_spark_cache_spark.config import config
     from dbfs_spark_cache_spark.plans import fingerprint
     from dbfs_spark_cache_spark.tiering import backup_spark_cached_to_storage
@@ -77,33 +78,27 @@ def test_backup_skips_schema_changed_inputs(spark, clean_cache, monkeypatch):
     monkeypatch.setattr(fingerprint, "input_files", boom)
     backed = backup_spark_cached_to_storage([df])
     assert backed == []
-    # nothing materialized: the cache database was never even created
-    if spark.catalog.databaseExists(config.CACHE_DATABASE):
-        tables = spark.sql(
-            f"SHOW TABLES IN {config.CACHE_DATABASE}"
-        ).filter("isTemporary = false").count()
-        assert tables == 0, "schema-changed frame must not materialize"
+    # nothing materialized: no data directory, no sidecar
+    assert get_cached_tables(spark).empty, "schema-changed frame must not materialize"
+    assert os.listdir(config.SPARK_CACHE_DIR) == []
 
 
 def test_backup_skips_pure_scan_of_existing_entry(spark, clean_cache):
-    """A frame that IS a scan of a cache table already lives in the
+    """A frame that IS a scan of a cache entry already lives in the
     persistent tier under that key; backing it up again wrote the whole
-    table a second time under a different (stranded) key."""
-    from dbfs_spark_cache_spark import write_cache
-    from dbfs_spark_cache_spark.config import config
+    entry a second time under a different (stranded) key."""
+    from dbfs_spark_cache_spark import get_cached_tables, read_cache_if_exist, write_cache
     from dbfs_spark_cache_spark.tiering import backup_spark_cached_to_storage
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
     write_cache(df)
-    listing = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter(
-        "isTemporary = false"
-    )
-    h = listing.collect()[0].tableName
-    scan = spark.table(f"{config.CACHE_DATABASE}.{h}")
+    assert len(get_cached_tables(spark)) == 1
+    scan = read_cache_if_exist(df)
+    assert scan is not None
 
     backed = backup_spark_cached_to_storage([scan])
     assert backed == []
-    assert listing.count() == 1, "pure-scan backup must not create a twin entry"
+    assert len(get_cached_tables(spark)) == 1, "pure-scan backup must not create a twin entry"
 
 
 class _NoStopSession:
@@ -130,15 +125,11 @@ def test_cli_refuses_unscoped_destructive_stages(
     The scoped stages (the --database count and
     ``clear_caches_older_than(specific_database=...)``) both see the
     scoped database's data directory."""
-    from dbfs_spark_cache_spark import maintenance_cli, management, write_cache
-    from dbfs_spark_cache_spark.config import config
+    from dbfs_spark_cache_spark import layout, maintenance_cli, management, write_cache
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
     write_cache(df)
-    default_db_tables = spark.sql(
-        f"SHOW TABLES IN {config.CACHE_DATABASE}"
-    ).filter("isTemporary = false")
-    assert default_db_tables.count() == 1
+    assert len(management.get_cached_tables(spark)) == 1
 
     import dbfs_spark_cache_spark.session as session_mod
 
@@ -148,7 +139,8 @@ def test_cli_refuses_unscoped_destructive_stages(
     spark.sql("CREATE DATABASE IF NOT EXISTS cli_scoped_db")
 
     try:
-        spark.range(1).write.saveAsTable("cli_scoped_db.scoped_entry")
+        spark.range(1).write.parquet(
+            layout.table_location(spark, "scoped_entry", "cli_scoped_db"))
         monkeypatch.setattr(
             sys,
             "argv",
@@ -169,7 +161,7 @@ def test_cli_refuses_unscoped_destructive_stages(
         for when in ("before", "after"):
             assert f"1 data directories in cli_scoped_db {when} maintenance" in messages
         # the configured namespace survives untouched
-        assert default_db_tables.count() == 1
+        assert len(management.get_cached_tables(spark)) == 1
         assert management.clear_caches_older_than(
             spark, num_days=0, specific_database="cli_scoped_db",
             confirm_delete=False,
@@ -558,7 +550,7 @@ def test_cache_dataframe_skips_schema_changed_inputs(spark, clean_cache, monkeyp
     tiering twin) when the input listing reports a schema change: the sentinel
     key embeds now(), so a write would orphan a full materialization on
     EVERY call."""
-    from dbfs_spark_cache_spark import cache_dataframe
+    from dbfs_spark_cache_spark import cache_dataframe, get_cached_tables
     from dbfs_spark_cache_spark.config import config
     from dbfs_spark_cache_spark.plans import fingerprint
 
@@ -570,11 +562,8 @@ def test_cache_dataframe_skips_schema_changed_inputs(spark, clean_cache, monkeyp
     monkeypatch.setattr(fingerprint, "input_files", boom)
     out = cache_dataframe(df, override_prefer_spark_cache=True)
     assert out is df, "schema-changed frame must pass through uncached"
-    if spark.catalog.databaseExists(config.CACHE_DATABASE):
-        n = spark.sql(
-            f"SHOW TABLES IN {config.CACHE_DATABASE}"
-        ).filter("isTemporary = false").count()
-        assert n == 0
+    assert get_cached_tables(spark).empty
+    assert os.listdir(config.SPARK_CACHE_DIR) == []
 
 
 def test_output_mode_inference_honors_declared_state_mode(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Every eviction caller reports only what ``clear_cache_for_hash`` actually
-evicted: an entry whose DROP failed stays live for a later retry, so it
+evicted: an entry whose removal failed stays live for a later retry, so it
 must not appear among the evicted hashes, and the skip is logged."""
 from __future__ import annotations
 
@@ -33,9 +33,9 @@ CALLERS = {
 def test_failed_drop_is_not_reported_evicted(caller, monkeypatch, caplog):
     from dbfs_spark_cache_spark import management
 
-    # Sidecar registry {A, B}, catalog registry {C}; the scoped catalog
-    # read sees all three. Every entry is old and 1 byte, so each caller
-    # picks A, B and C, and the DROP of B fails.
+    # Sidecar registry {A, B}, data-directory registry {C}; the scoped
+    # listing sees all three. Every entry is old and 1 byte, so each caller
+    # picks A, B and C, and the removal of B fails.
     monkeypatch.setattr(management, "get_cached_dataframe_metadata",
                         lambda num_threads=None: _frame([A, B], [1, 2]))
     monkeypatch.setattr(management, "get_cached_tables",

@@ -62,15 +62,14 @@ print("SCRIPT_OK")
 
 def test_cache_stats_summary(spark, clean_cache):
     """cache_stats must report consistent counts, sizes, and ages for a
-    freshly written cache, and flag orphans after a table-only delete."""
-    from dbfs_spark_cache_spark import write_cache
-    from dbfs_spark_cache_spark.config import config
+    freshly written cache, and flag orphans after a data-only delete."""
+    from dbfs_spark_cache_spark import fs, layout, resolve_table_hash, write_cache
     from dbfs_spark_cache_spark.management import cache_stats
 
     from tests.conftest import SF_SMOKE
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
-    write_cache(df)
+    victim = resolve_table_hash(write_cache(df))
     write_cache(df.selectExpr("r_regionkey"))
 
     stats = cache_stats(spark)
@@ -82,18 +81,17 @@ def test_cache_stats_summary(spark, clean_cache):
     assert stats["largest_entry_bytes"] <= stats["total_cache_bytes"]
     assert stats["oldest_entry"] is not None
 
-    # drop one catalog table out from under its metadata -> one orphan
-    victim = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter("isTemporary = false").collect()[0]
-    spark.sql(f"DROP TABLE {config.CACHE_DATABASE}.{victim.tableName}")
+    # remove one entry's data out from under its metadata -> one orphan
+    assert fs.remove(layout.table_location(spark, victim))
     stats2 = cache_stats(spark)
     assert stats2["n_orphans"] == 1
     assert stats2["n_consistent"] == 1
     # the orphan is NAMED (operators need the hash to inspect it). Sizing
     # covers data + sidecar (it used to measure only the ~100-byte sidecar
     # dir and report a near-zero footprint for gigabytes of tables), so
-    # dropping the table genuinely reclaims its data bytes while the
-    # orphan's sidecar still counts: smaller than before, not zero.
-    assert stats2["orphans_metadata_only"] == [victim.tableName]
+    # removing the data genuinely reclaims its bytes while the orphan's
+    # sidecar still counts: smaller than before, not zero.
+    assert stats2["orphans_metadata_only"] == [victim]
     assert stats2["orphans_catalog_only"] == []
     assert 0 < stats2["total_cache_bytes"] < stats["total_cache_bytes"]
 
@@ -101,13 +99,13 @@ def test_cache_stats_summary(spark, clean_cache):
 def test_dry_run_previews_repair(spark, clean_cache):
     """--dry-run --repair-inconsistent must preview EXACTLY what a real
     run would delete — including the safety rails. With only one entry,
-    dropping its table empties the catalog registry entirely, which is a
+    removing its data empties the data-directory registry, which is a
     refused state (one-registry-empty looks like a visibility problem);
     the preview must show the refusal (empty), not advertise a delete the
     run would never perform. With a second consistent entry the rails
     pass and the single orphan previews; detection stays read-only. A
     real run then evicts exactly the previewed list, refused or forced."""
-    from dbfs_spark_cache_spark import write_cache
+    from dbfs_spark_cache_spark import fs, layout, resolve_table_hash, write_cache
     from dbfs_spark_cache_spark.config import config
     from dbfs_spark_cache_spark.management import (
         clear_inconsistent_cache,
@@ -117,21 +115,19 @@ def test_dry_run_previews_repair(spark, clean_cache):
     from tests.conftest import SF_SMOKE
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
-    write_cache(df)
-    write_cache(df.selectExpr("r_regionkey"))  # stays consistent
-    victim = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter("isTemporary = false").collect()[0]
-    spark.sql(f"DROP TABLE {config.CACHE_DATABASE}.{victim.tableName}")
+    victim = resolve_table_hash(write_cache(df))
+    other = resolve_table_hash(write_cache(df.selectExpr("r_regionkey")))  # stays consistent
+    assert fs.remove(layout.table_location(spark, victim))
 
     orphans = find_inconsistent_entries(spark)
-    assert orphans == [victim.tableName]
+    assert orphans == [victim]
     # and nothing was deleted: the metadata sidecar is still on disk
-    assert os.path.isdir(f"{config.SPARK_CACHE_DIR}{victim.tableName}")
+    assert os.path.isdir(f"{config.SPARK_CACHE_DIR}{victim}")
 
-    # Refused state: drop the remaining table too -> catalog registry
-    # empty while metadata has 2 -> preview empty, force previews both.
-    other = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter("isTemporary = false").collect()
-    for row in other:
-        spark.sql(f"DROP TABLE {config.CACHE_DATABASE}.{row.tableName}")
+    # Refused state: remove the remaining entry's data too -> data
+    # registry empty while metadata has 2 -> preview empty, force previews
+    # both.
+    assert fs.remove(layout.table_location(spark, other))
     assert find_inconsistent_entries(spark) == []
     previewed = find_inconsistent_entries(spark, force=True)
     assert len(previewed) == 2

@@ -85,8 +85,9 @@ def test_wide_plan_cache_roundtrip_serves_the_right_data(spark, clean_cache):
 def test_hash_input_data_duplicate_column_names(spark):
     """Duplicate column names hash deterministically on the fast path
     (was: opaque ValueError from the parquet fallback), value-sensitive
-    per position, and the digest for uniquely-named frames is
-    byte-identical to the previous loop (no key-format change)."""
+    per position, and the digest's byte format is pinned: one
+    ``name:dtype;`` per column, then the row hashes as one little-endian
+    uint64 buffer."""
     import hashlib
 
     from dbfs_spark_cache_spark.hashing import hash_input_data
@@ -97,12 +98,12 @@ def test_hash_input_data_duplicate_column_names(spark):
     assert hash_input_data(dup) != hash_input_data(swapped)
 
     f = pd.DataFrame({"x": [1, 2], "y": ["a", "b"]})
-    old = hashlib.md5()
+    want = hashlib.md5()
     for col in f.columns:
-        old.update(f"{col}:{f[col].dtype};".encode("utf-8"))
-    for v in pd.util.hash_pandas_object(f, index=True).values:
-        old.update(str(v).encode("utf-8"))
-    assert hash_input_data(f) == old.hexdigest()
+        want.update(f"{col}:{f[col].dtype};".encode("utf-8"))
+    rows = pd.util.hash_pandas_object(f, index=True).values
+    want.update(b"".join(int(v).to_bytes(8, "little") for v in rows))
+    assert hash_input_data(f) == want.hexdigest()
 
 
 @pytest.mark.parametrize(

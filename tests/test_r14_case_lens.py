@@ -113,10 +113,10 @@ def test_mixed_case_cache_database_is_normalized():
 
 def test_mixed_case_database_survives_catalog_death(spark):
     """End-to-end under the normalized name: a cache written under a
-    mixed-case configured database lands where _table_location expects
-    it, so the session-restart story (catalog gone, files survive)
-    serves the hit via the path fallback instead of silently
-    recomputing — the exact drift the probe demonstrated."""
+    mixed-case configured database lands where ``layout.table_location``
+    expects it, so the next probe (every probe scans that location, in
+    every session) serves the hit instead of silently recomputing — the
+    exact drift the probe demonstrated."""
     from pyspark.sql import functions as F
 
     from dbfs_spark_cache_spark import core, layout, fs, read_cache_if_exist, write_cache
@@ -133,20 +133,8 @@ def test_mixed_case_database_survives_catalog_death(spark):
         write_cache(df)
         h = core.resolve_table_hash(df)
         loc = layout.table_location(spark, h)
-        assert fs.exists(loc), "location must agree with the catalog's dir"
+        assert "/casedrift_db.db/" in loc
         assert fs.exists(layout.commit_marker_path(loc))
-        # simulate a catalog death with surviving files (managed-table
-        # DROP deletes them, so stash and restore around it)
-        import shutil
-        import tempfile
-
-        local = loc.replace("file:", "")
-        stash = tempfile.mkdtemp(prefix="case_drift_stash_")
-        shutil.copytree(local, f"{stash}/data")
-        spark.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{h}")
-        shutil.copytree(f"{stash}/data", local, dirs_exist_ok=True)
-        shutil.rmtree(stash, ignore_errors=True)
-        # catalog dead, files alive: the fallback must serve the hit
         hit = read_cache_if_exist(df)
         assert hit is not None
         assert sorted(map(tuple, hit.collect())) == sorted(

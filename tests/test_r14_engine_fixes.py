@@ -66,11 +66,11 @@ def test_cache_engine_concurrent_triangle(spark, clean_cache, tmp_path):
     raises (a probe racing an eviction is a clean miss, a write racing a
     write is a skip-if-identical, an eviction racing a write waits for
     the lock), and at quiescence the entry is either a consistent PAIR
-    (sidecar + table, correct values) or consistently ABSENT — never a
+    (sidecar + committed data, correct values) or consistently ABSENT — never a
     half-pair."""
-    import dbfs_spark_cache_spark.core as core
     from dbfs_spark_cache_spark import (
         cache_dataframe,
+        layout,
         read_cache_if_exist,
         resolve_table_hash,
         write_cache,
@@ -132,9 +132,9 @@ def test_cache_engine_concurrent_triangle(spark, clean_cache, tmp_path):
         _fs.read_text(f"{config.SPARK_CACHE_DIR}{key}/cache_metadata.txt")
         is not None
     )
-    has_table = spark.catalog.tableExists(core.table_name_for_hash(key))
-    assert has_sidecar == has_table, (
-        f"half-pair after quiescence: sidecar={has_sidecar} table={has_table}"
+    has_data = _fs.exists(layout.commit_marker_path(layout.table_location(spark, key)))
+    assert has_sidecar == has_data, (
+        f"half-pair after quiescence: sidecar={has_sidecar} data={has_data}"
     )
     # and the engine still serves correct values from whatever state
     final = cache_dataframe(fresh(), override_prefer_spark_cache=True)

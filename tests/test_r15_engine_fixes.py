@@ -32,7 +32,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import tempfile
 
 import pandas as pd
 import pytest
@@ -300,7 +299,6 @@ def test_success_guard_gated_on_committer_conf(extended):
     hits under ANY reader conf. The missing-marker miss is pinned by the
     crossproc test."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
-    from dbfs_spark_cache_spark.config import config
 
     df = (
         extended.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -315,13 +313,6 @@ def test_success_guard_gated_on_committer_conf(extended):
         write_cache(df)
         h = core.resolve_table_hash(df)
         loc = layout.table_location(extended, h).replace("file:", "")
-
-        # survive a catalog death so the probe must use the path fallback
-        stash = tempfile.mkdtemp(prefix="confgate_stash_")
-        shutil.copytree(loc, f"{stash}/data")
-        extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{h}")
-        shutil.copytree(f"{stash}/data", loc, dirs_exist_ok=True)
-        shutil.rmtree(stash, ignore_errors=True)
         success = f"{loc}/_SUCCESS"
         if os.path.exists(success):  # markerless committer's output
             os.remove(success)

@@ -187,28 +187,16 @@ def test_sidecar_enospc_degrades_to_miss_then_heals(extended, monkeypatch):
 def test_half_written_data_dir_recomputes_never_partial(extended):
     """The inverse torn state: sidecar committed, data dir half-written
     (some part files gone, no commit marker — what an ENOSPC mid-job leaves
-    after its partial cleanup). The path fallback must refuse the
+    after its partial cleanup). The read must refuse the
     partial dir; write_cache must rewrite and heal to the FULL row
     count — never serve the partial rows as a hit."""
     from dbfs_spark_cache_spark import core, layout, read_cache_if_exist, write_cache
-    from dbfs_spark_cache_spark.config import config
 
     df = _agg_query(extended)
     expected = df.count()
     write_cache(df)
     h = core.resolve_table_hash(df)
     loc = layout.table_location(extended, h).replace("file:", "")
-
-    # survive a catalog death so the probe must use the path fallback
-    # (managed DROP deletes the files — stash and restore them)
-    import shutil
-    import tempfile
-
-    stash = tempfile.mkdtemp(prefix="fsfault_stash_")
-    shutil.copytree(loc, f"{stash}/data")
-    extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{h}")
-    shutil.copytree(f"{stash}/data", loc, dirs_exist_ok=True)
-    shutil.rmtree(stash, ignore_errors=True)
 
     # simulate the ENOSPC-mid-job residue: drop the commit marker and
     # half the part files

@@ -303,20 +303,12 @@ def _cached_agg(extended):
 
 
 def _path_only_entry(extended, df):
-    """Write df through the engine, then kill the catalog entry so reads
-    must take the path fallback. Returns (hash, location)."""
+    """Write df through the engine. Returns (hash, local location)."""
     from dbfs_spark_cache_spark import core, layout, write_cache
-    from dbfs_spark_cache_spark.config import config
 
     write_cache(df)
     h = core.resolve_table_hash(df)
-    loc = layout.table_location(extended, h).replace("file:", "")
-    stash = tempfile.mkdtemp(prefix="wcommit_stash_")
-    shutil.copytree(loc, f"{stash}/data")
-    extended.sql(f"DROP TABLE IF EXISTS {config.CACHE_DATABASE}.{h}")
-    shutil.copytree(f"{stash}/data", loc, dirs_exist_ok=True)
-    shutil.rmtree(stash, ignore_errors=True)
-    return h, loc
+    return h, layout.table_location(extended, h).replace("file:", "")
 
 
 def test_writer_record_closes_markerless_reader_quadrant(extended):

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 import sys
 
 import pytest
@@ -129,12 +128,6 @@ def test_custom_base_writer_committer_record_is_read(extended, tmp_path):
     loc = layout.table_location(extended, h).replace("file:", "")
     assert not os.path.exists(f"{loc}/_SUCCESS")
     assert os.listdir(f"{base}{h}") == [layout.METADATA_FILE]
-
-    # a later session: its in-memory catalog does not know the table
-    snapshot = f"{tmp_path}/loc_snapshot"
-    shutil.copytree(loc, snapshot)
-    extended.sql(f"DROP TABLE IF EXISTS {core.table_name_for_hash(h)}")
-    shutil.copytree(snapshot, loc)
 
     served = read_cache_if_exist(df, cache_path=base)
     assert served is not None and served.count() == expected, (

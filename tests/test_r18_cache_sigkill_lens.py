@@ -7,7 +7,7 @@ write). This lens produces the torn state the real way: a child JVM is
 SIGKILLed (no shutdown hooks) at two points of an actual cache
 materialization —
 
-* ``during-save`` — mid ``saveAsTable`` (a pandas-UDF-throttled frame
+* ``during-save`` — mid Spark write (a pandas-UDF-throttled frame
   keeps the distributed write in flight for seconds): whatever partial
   part files exist carry no commit marker and no metadata sidecar;
 * ``pre-metadata`` — after the table write and its commit marker,
@@ -18,7 +18,7 @@ In both states the parent session (own catalog, shared filesystem —
 the documented DBFS layout) must read a CLEAN MISS, never partial rows;
 a finishing child's rewrite then heals the entry and the parent serves
 exact values through the path fallback. This is the process-level proxy
-for the env-blocked executor-disk-full-mid-saveAsTable idea.
+for the env-blocked executor-disk-full-mid-write idea.
 """
 from __future__ import annotations
 
@@ -78,7 +78,7 @@ if mode == "pre-metadata":
     fs.write_text = patched
 elif mode == "during-save":
     with open(sentinel, "w") as fh:
-        fh.write(mode)       # parent kills ~2s in, mid-saveAsTable
+        fh.write(mode)       # parent kills ~2s in, mid-write
 
 write_cache(df)
 print("CHILD_OK", flush=True)
@@ -155,7 +155,7 @@ def test_cache_write_sigkill_is_clean_miss_then_heals(
                 "partial rows served through the path fallback"
             )
         else:
-            # pre-metadata: saveAsTable fully committed before the kill,
+            # pre-metadata: the data write fully committed before the kill,
             # so the LOW-LEVEL primitive can see a complete table — by
             # design; every caller sits behind the metadata gate above.
             # Nothing to assert beyond the gate itself.

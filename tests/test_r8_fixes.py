@@ -1,6 +1,6 @@
 """Regression pins for the round-8 ADVICE findings: UDF content tags
-blind to default-value edits, eviction sweeping warehouse files after a
-failed DROP, and the exactly-once reader collapsing committed-but-empty
+blind to default-value edits, eviction reporting an entry whose removal
+failed, and the exactly-once reader collapsing committed-but-empty
 sinks to None via exception-text matching."""
 from __future__ import annotations
 
@@ -44,71 +44,6 @@ def test_udf_tag_tracks_kwonly_defaults(spark):
     b = a.replace("scale=2.0", "scale=3.0")
     assert _tag(_build_udf(a)) == _tag(_build_udf(a))
     assert _tag(_build_udf(a)) != _tag(_build_udf(b))
-
-
-class _FailingDropSession:
-    """Delegates everything to the real session except DROP TABLE, which
-    raises like a transient metastore error."""
-
-    def __init__(self, real):
-        self._real = real
-
-    def sql(self, q: str):
-        if q.strip().upper().startswith("DROP TABLE"):
-            raise RuntimeError("simulated transient metastore error")
-        return self._real.sql(q)
-
-    def __getattr__(self, name):
-        return getattr(self._real, name)
-
-
-def test_eviction_skips_sweep_when_drop_fails(spark, clean_cache):
-    """A failed DROP must leave the catalog entry, the warehouse files
-    AND the metadata sidecar intact (ADVICE r7 #3): sweeping data out
-    from under a still-registered table corrupts it, and removing the
-    sidecar hides the entry from every future eviction scan."""
-    from dbfs_spark_cache_spark import fs, write_cache
-    from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.management import clear_cache_for_hash
-
-    df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
-    write_cache(df)
-    h = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter("isTemporary = false").collect()[0].tableName
-    sidecar = f"{config.SPARK_CACHE_DIR}{h}/cache_metadata.txt"
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    table_dir = f"{warehouse.rstrip('/')}/{config.CACHE_DATABASE}.db/{h}"
-    assert fs.read_text(sidecar) is not None
-    assert fs.list_dir(table_dir), "warehouse table dir should exist"
-
-    clear_cache_for_hash(_FailingDropSession(spark), h)
-    assert spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
-    assert fs.read_text(sidecar) is not None, "sidecar must survive a failed DROP"
-    assert fs.list_dir(table_dir), "warehouse files must survive a failed DROP"
-
-    # The table still reads correctly after the failed eviction attempt.
-    assert spark.table(f"{config.CACHE_DATABASE}.{h}").count() == df.count()
-
-    # A later healthy retry completes the eviction.
-    clear_cache_for_hash(spark, h)
-    assert not spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
-    assert fs.read_text(sidecar) is None
-    assert not fs.list_dir(table_dir)
-
-
-def test_eviction_sweeps_orphan_even_when_drop_raises(spark, clean_cache):
-    """The conservative gate must not regress the r7 orphan sweep: when
-    DROP raises but the catalog verifiably has NO such table (a
-    metadata-only orphan), the sidecar and stray files are still
-    reaped."""
-    from dbfs_spark_cache_spark import fs
-    from dbfs_spark_cache_spark.config import config
-    from dbfs_spark_cache_spark.management import clear_cache_for_hash
-
-    h = "deadbeef" * 8
-    sidecar = f"{config.SPARK_CACHE_DIR}{h}/cache_metadata.txt"
-    fs.write_text(sidecar, "orphan")
-    clear_cache_for_hash(_FailingDropSession(spark), h)
-    assert fs.read_text(sidecar) is None, "orphan sidecar should be reaped"
 
 
 def _strip_part_files(batch_dir: str) -> None:
@@ -262,23 +197,27 @@ def test_schema_record_tracks_latest_batch_schema(spark, tmp_path):
     assert got.schema == v2.schema, "record must follow the latest batch"
 
 
-def test_age_eviction_reports_only_actually_evicted(spark, clean_cache):
-    """clear_caches_older_than must exclude entries whose DROP failed
-    (and which therefore survived) from its evicted-hashes return."""
-    from dbfs_spark_cache_spark import write_cache
-    from dbfs_spark_cache_spark.config import config
+def test_age_eviction_reports_only_actually_evicted(spark, clean_cache, monkeypatch):
+    """clear_caches_older_than must exclude entries whose data directory
+    survived its removal from its evicted-hashes return; a later healthy
+    run evicts them."""
+    from dbfs_spark_cache_spark import fs, layout, resolve_table_hash, write_cache
     from dbfs_spark_cache_spark.management import clear_caches_older_than
 
     df = spark.read.parquet(f"{SF_SMOKE}/region.parquet")
-    write_cache(df)
-    h = spark.sql(f"SHOW TABLES IN {config.CACHE_DATABASE}").filter("isTemporary = false").collect()[0].tableName
+    h = resolve_table_hash(write_cache(df))
+    location = layout.table_location(spark, h)
+    real_remove = fs.remove
 
-    failed = clear_caches_older_than(
-        _FailingDropSession(spark), num_days=0, confirm_delete=True
-    )
+    def failing_remove(path, recursive=True):
+        return False if path == location else real_remove(path, recursive)
+
+    monkeypatch.setattr(fs, "remove", failing_remove)
+    failed = clear_caches_older_than(spark, num_days=0, confirm_delete=True)
     assert failed == [], f"skipped entries reported as evicted: {failed}"
-    assert spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
+    assert fs.exists(layout.commit_marker_path(location))
 
+    monkeypatch.setattr(fs, "remove", real_remove)
     ok = clear_caches_older_than(spark, num_days=0, confirm_delete=True)
     assert h in ok
-    assert not spark.catalog.tableExists(f"{config.CACHE_DATABASE}.{h}")
+    assert not fs.exists(location)

@@ -144,10 +144,10 @@ def test_age_cutoff_immune_to_driver_timezone(tmp_path, monkeypatch):
 
 def test_eviction_serializes_with_writer_key_lock(tmp_path, monkeypatch):
     """clear_cache_for_hash must block while a writer holds the same
-    cache key's lock (write_cache holds it across table write + sidecar
+    cache key's lock (write_cache holds it across data write + sidecar
     write): an unserialized eviction interleaving that critical section
     can remove the sidecar AFTER the writer's in-lock probe passed,
-    leaving a table the registry scan never sees again."""
+    leaving data the sidecar registry never sees again."""
     from dbfs_spark_cache_spark.config import config
     from dbfs_spark_cache_spark.core import _lock_for_key
     from dbfs_spark_cache_spark.management import clear_cache_for_hash
@@ -158,20 +158,11 @@ def test_eviction_serializes_with_writer_key_lock(tmp_path, monkeypatch):
     (sidecar_dir / "cache_metadata.txt").write_text("CACHE TYPE: test")
     monkeypatch.setattr(config, "SPARK_CACHE_DIR", f"{tmp_path}/cache/")
 
-    class _StubSession:
-        class catalog:
-            @staticmethod
-            def tableExists(name):
-                return False
-
+    class _StubSession:  # eviction reads the warehouse conf, nothing else
         class conf:
             @staticmethod
             def get(key, default=None):
                 return f"{tmp_path}/wh"
-
-        @staticmethod
-        def sql(q):
-            return None
 
     done = threading.Event()
     result: list = []

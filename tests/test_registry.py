@@ -1,7 +1,7 @@
 """Data-directory registry (``management.get_tables_from_database``): one
 listing of the cache database's directory in the warehouse, the directory
-every read scans. It sees the entries of every session, where Spark's
-in-memory catalog holds only the current session's writes."""
+every read scans. No catalog table names an entry, so it sees the
+entries of every session."""
 from __future__ import annotations
 
 import json
@@ -23,8 +23,10 @@ _LATER = ("l_tax", "l_suppkey", "l_partkey")
 
 
 def _fill(spark, db: str, stop: int, start: int = 0) -> None:
+    from dbfs_spark_cache_spark import layout
+
     for i in range(start, stop):
-        spark.range(1).write.saveAsTable(f"{db}.entry_{i:02d}")
+        spark.range(1).write.parquet(layout.table_location(spark, f"entry_{i:02d}", db))
 
 
 def test_registry_scan_issues_no_describe(spark, clean_cache, monkeypatch):
@@ -170,8 +172,7 @@ def test_fresh_process_scoped_eviction_removes_earlier_entries(
 
 def test_scoped_eviction_removes_other_database_data(spark, clean_cache, src):
     """Evicting from a database other than the configured one removes the
-    entry's data directory there, even when this session's catalog never
-    held the table, and leaves the sidecar the configured database's
+    entry's data directory there, and leaves the sidecar the configured database's
     entry shares (the key excludes the database name)."""
     from dbfs_spark_cache_spark import layout, read_cache_if_exist, resolve_table_hash, write_cache
     from dbfs_spark_cache_spark.management import clear_caches_older_than
